@@ -26,12 +26,8 @@ def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0.
 
     3-table chained left-deep join through the JoinExecutor façade with
-    projection + condition-algebra filter (J10 + P1 + F1).
-
-    Resolved through the registry (NOT a direct ``queries.core``
-    import): registration order is the driver's grading window, and a
-    direct module import here would reorder it whenever ``entry()``
-    runs before ``queries()``."""
+    projection + condition-algebra filter (J10 + P1 + F1), looked up by
+    name in the registry."""
     return all_queries()["join_chain3"](spark, SF0001)
 
 

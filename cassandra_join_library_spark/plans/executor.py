@@ -48,6 +48,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import NumericType
 
+from ..sources import sinks
 from ..sources.catalog import Catalog, ParquetCatalog, qualify
 from .condition import Condition
 from .table_info import TableInfo
@@ -555,7 +556,7 @@ class JoinExecutor:
         coalesce(1) — never use it at scale."""
         df = self.to_df()
         t0 = time.time()
-        (df.coalesce(1) if single_file else df).write.mode(mode).json(path)
+        sinks.write_json_lines(df, path, mode=mode, single_file=single_file)
         dt = time.time() - t0
         # Spark pipelines scan+join+write in one job, so the reference's
         # data_fetch/join split (join_executor.py:214-231) collapses.

@@ -1,4 +1,4 @@
-"""Corpus-preparation queries (driver-graded) — the LLM-training-data
+"""Corpus-preparation queries — the LLM-training-data
 pipeline surface beyond the reference: term weighting, splitting,
 quality filtering, decontamination, composition stats, chunking,
 clustering.  All but k-means carry exact DuckDB oracles.

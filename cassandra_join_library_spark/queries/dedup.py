@@ -1,4 +1,4 @@
-"""Dedup queries over the ``documents`` table (driver-graded).
+"""Dedup queries over the ``documents`` table.
 
 ``dedup_jaccard_exact`` and ``dedup_minhash_lsh`` share one oracle: the
 exact 5-gram-Jaccard pair set at threshold 0.5.  The MinHash query's

@@ -1,4 +1,4 @@
-"""Multimodal-column queries (driver-graded).
+"""Multimodal-column queries.
 
 Both are oracle-checked: the binary plumbing (encode → octet_length /
 sha256) is pure SQL in DuckDB too, and the fake-decode derives all

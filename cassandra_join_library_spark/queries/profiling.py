@@ -1,4 +1,4 @@
-"""Data-quality profiling queries (driver-graded)."""
+"""Data-quality profiling queries."""
 
 from __future__ import annotations
 

@@ -1,4 +1,4 @@
-"""Streaming queries (driver-graded).
+"""Streaming queries.
 
 ``stream_tumbling`` runs a REAL Structured Streaming job
 (Trigger.AvailableNow → memory sink) and returns the materialized

@@ -1,4 +1,4 @@
-"""Text-analysis queries over ``documents`` (driver-graded), each with
+"""Text-analysis queries over ``documents``, each with
 an exact DuckDB oracle mirroring the Spark expression 1:1.
 """
 

@@ -15,9 +15,9 @@ from ..sources.catalog import load_table
 from .wave9 import _rdiv_sql
 from ..operators.stats import _RDIV, staged_ppm
 
-# curation registers before this module in _load_all, so its oracle
-# strings are available for composition at import time
-from . import curation  # noqa: F401  (forces registration order)
+# this module composes curation's oracle strings at import time, so
+# curation must register first
+from . import curation  # noqa: F401
 
 
 def _t(spark, sf_dir, name):

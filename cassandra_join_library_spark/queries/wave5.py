@@ -3,8 +3,7 @@ dataset splitting, behavioral Markov transitions, embedding
 standardization, readability scoring, and RFM quintile scoring.
 
 All extension surface (SURVEY.md §2.6); every query carries an
-exact-value DuckDB oracle.  Registered after wave4, so these sit just
-behind the round-7 graded window and rotate in next round.
+exact-value DuckDB oracle.
 """
 
 from __future__ import annotations

@@ -2,9 +2,9 @@
 
 Every implemented operator registers (a) a Spark callable
 ``(spark, sf_dir) -> DataFrame`` and (b) optionally an equivalent ANSI
-SQL string that DuckDB runs on the same parquet tables.  The driver
-compares the two at sf=0.01 (row count + schema + order-insensitive
-value hash), so both sides must agree EXACTLY:
+SQL string that DuckDB runs on the same parquet tables.  The parity
+gate compares the two (row count + schema + order-insensitive value
+hash), so both sides must agree EXACTLY:
 
 Parity conventions (applied on BOTH sides):
 - money/double aggregates: sum over ``CAST(x AS DECIMAL(18,6))`` (exact,
@@ -14,10 +14,16 @@ Parity conventions (applied on BOTH sides):
   ``epoch(...)``) — sidesteps ms-vs-ns parquet precision;
 - every computed column aliased identically in Spark and SQL;
 - LIMIT/top-k queries carry a total order (tiebreak on a key column).
+
+Registration order carries no meaning: consumers look queries up by
+name (the parity gate iterates ``sorted(all_oracles())``).
 """
 
 from __future__ import annotations
 
+import functools
+import importlib
+import pkgutil
 from typing import Callable, Dict, Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -26,33 +32,25 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 
 _QUERIES: Dict[str, QueryFn] = {}
 _ORACLES: Dict[str, str] = {}
-# Raw registration order, appended in register() BEFORE _reorder()
-# permutes _QUERIES — so scripts/compute_front.py can pin the
-# never-graded segment's ordering non-circularly (reading it back
-# from the reordered dict would let a permuted hand-edit of a
-# _ROUND*_FRONT reproduce itself through the pin test).
-_REG_ORDER: "list[str]" = []
 
 
 def register(name: str, oracle: Optional[str] = None):
     """Decorator: register a query, optionally with its DuckDB oracle.
 
-    Queries without an oracle get the driver's weaker rows-only check
+    Queries without an oracle get the weaker rows-only check
     (genuinely non-SQL-expressible ops: LSH candidate generation,
     stateful streaming, stubs)."""
 
     def deco(fn: QueryFn) -> QueryFn:
-        import functools
-
         if name in _QUERIES:
             raise ValueError(
                 f"duplicate query registration: {name!r} — a silent "
-                "overwrite would hide a graded query from the driver"
+                "overwrite would hide a registered query"
             )
 
         @functools.wraps(fn)
         def wrapped(spark, sf_dir):
-            # the driver passes its own (bare) session — pin the
+            # callers may pass their own (bare) session — pin the
             # runtime confs results depend on, for EVERY query,
             # regardless of which loader the query module uses
             from .sources.catalog import ensure_session_confs
@@ -61,7 +59,6 @@ def register(name: str, oracle: Optional[str] = None):
             return fn(spark, sf_dir)
 
         _QUERIES[name] = wrapped
-        _REG_ORDER.append(name)
         if oracle is not None:
             _ORACLES[name] = oracle
         return wrapped
@@ -79,514 +76,12 @@ def all_oracles() -> Dict[str, str]:
     return dict(_ORACLES)
 
 
-_loaded = False
-
-
-# REGISTRATION ORDER IS LOAD-BEARING: the driver's correctness gate
-# samples the FIRST 50 registered queries in registration order, one
-# round at a time.  Rather than relying on coarse module-import order,
-# `_load_all` imports everything and then REORDERS the registry against
-# the two explicit lists below.  Invariants (enforced at load + by
-# tests/test_executor.py::test_registry_integrity):
-#   - every listed name exists and carries a DuckDB oracle — the graded
-#     window never wastes a slot on a rows-only query;
-#   - no query name ever disappears vs tests/registry_manifest.json;
-#   - queries WITHOUT oracles sort last (rows-only checks are free
-#     anywhere, gradable slots are not).
-#
-# ROTATION LEDGER (driver-green rows banked so far):
-#   rounds 2-4: advanced/analytic/core/corpus heads + the relational
-#     §2 surface (join_*, theta_*, filter_algebra, projection, ...) —
-#     see CORRECTNESS_r02..r04;
-#   round 5: dedup, similarity, text, multimodal, streaming, events,
-#     profiling heads + string_similarity, explode_tokens, agg_cube —
-#     see CORRECTNESS_r05 (47 oracled green, 3 no_oracle);
-#   round 6: the 50 names in _BANKED_ROUND6 below — the whole
-#     `curation` and `wave3` modules, the two stream-final value-oracle
-#     twins, the TPC-H tails (Q7/8/13/14/15/17/19/22),
-#     corpus_e2e_pipeline, band/interval joins — CORRECTNESS_r06:
-#     50/50 green (rows + schema + hash, zero err);
-#   round 7: the 50 names in _ROUND7_FRONT below — the scalar/setop/
-#     window/agg tails, the round-6 operator additions (CDC ×2, BPE ×2,
-#     gram, PageRank, IVM, k-anonymity, cluster balance, as-of
-#     tolerance, skew/FK audits), kmeans_clusters, and 12 round-7
-#     wave-4 queries — CORRECTNESS_r07: 50/50 green.
-#   round 8: NOT GRADED — no CORRECTNESS_r08.json was delivered, so
-#     the _ROUND8_FRONT below (21 round-7 wave-5/6/7/8 queries + 29
-#     oldest-first regression re-grades) banked nothing.  Round 8
-#     also added 48 wave-9..14 queries, widening the never-graded
-#     pool to 69.
-#   round 9 (this order): _ROUND9_FRONT below — the same 21 wave-5/8
-#     queries (still the oldest never-graded), then 29 of the round-8
-#     wave-9..12 additions.  The regression re-grades planned for r08
-#     yield their slots: with 69 zero-evidence oracled queries, first
-#     evidence outranks re-grades (they return once the never-graded
-#     pool drains — likely r11).
-#   round 9: GRADED — CORRECTNESS_r09: 50/50 green (rows + schema +
-#     hash, zero err).  Driver-green union after r09: 252 of 313
-#     oracled; 61 never-graded remained.
-#   round 10 (this order): _ROUND10_FRONT below — the 19 round-8
-#     wave-12/13/14 names (oldest never-graded) + the first 31 round-9
-#     additions in registration order (tpch3 Q9/Q11/Q12/Q20/Q21 first,
-#     completing the reference-era TPC-H driver evidence, then waves
-#     15-22 through mm_subtitle_align).
-#   round 10: GRADED — CORRECTNESS_r10: 50/50 green.  Driver-green
-#     union after r10: 302 of 313 oracled; 11 never-graded remained.
-#   round 11 (this order): _ROUND11_FRONT below — the last 11
-#     never-graded oracled queries (draining the r08 outage debt to
-#     zero), then 39 strictly oldest-graded-first re-grades computed
-#     from the CORRECTNESS_r*.json ledger (latest green round per
-#     name, registration order as tie-break): 8 names whose only
-#     driver evidence is r01 (agg_grouping_sets,
-#     regexp_extract_priority, ngram_topk, corpus_chunks,
-#     corpus_mixture, corpus_pack_sequences, events_latest_state,
-#     corpus_shuffle_shards), then the first 31 of the r04-graded
-#     relational core (join_*, theta_*, filter_algebra, projection,
-#     TPC-H heads Q2-Q6/Q10/Q16/Q18, bloom_prefilter_join,
-#     tfidf_top_terms, corpus_split/quality_quantile/contamination).
-#     Note agg_cube from the r08 re-grade tail yields its slot: its
-#     latest driver green is r05, newer than every name taken.
-#   round-11 additions: wave27 (dedup_cross_snapshot,
-#     dedup_cross_snapshot_funnel, corpus_quality_logreg) and wave28
-#     (ann_hamming_topk, ann_hamming_recall_audit) and wave29
-#     (text_boilerplate_coverage) and wave30 (approx_quantile_logbins)
-#     — oracled, registered AFTER the locked
-#     front, so they are the r12 never-graded pool.
-#   round-12 additions: wave31 (dedup_cross_snapshot_bloom,
-#     bloom_store_fp_audit) and wave32 (tokenizer_fertility_drift,
-#     tokenizer_oov_drift) — all oracled, registered AFTER the locked
-#     front, so these 4 are the r13 never-graded pool (first-evidence
-#     slots, ahead of the r05 re-grade sweep per the r13 policy).
-#   round 12 (this order): _ROUND12_FRONT below — the 7 wave-27-30
-#     never-graded oracled queries first (draining the never-graded
-#     pool to ZERO), then 43 strictly oldest-graded-first re-grades
-#     computed from the CORRECTNESS_r*.json ledger (latest green round
-#     per name, registration order as tie-break): the 16 remaining
-#     r04-graded names (corpus_contamination_capped .. percentiles_exact),
-#     then the first 27 of the r05-graded block (dedup/similarity/
-#     text/multimodal heads through stream_tumbling).
-#   r13 POLICY (written in r12 so the rotation outlives context cuts):
-#     never-graded oracled queries first (any round-12 additions
-#     registered after the locked front), then oldest-graded-first
-#     re-grades continuing the ledger sweep — next up is the rest of
-#     the r05 block (stream_sliding onward: streaming batch twins,
-#     events heads, profiling heads, string_similarity, explode_tokens,
-#     agg_cube) until the window holds 50.  First evidence outranks
-#     re-evidence; re-grades fill only leftover slots.
-#   round 13 (this order): _ROUND13_FRONT below — the 4 wave-31/32
-#     never-graded oracled queries first, then the 5 queries UPGRADED
-#     from rows-only to full value oracles this round (first VALUE
-#     evidence, outranking re-grades per the policy): the three r04
-#     sketch heads rebuilt on the portable-sketch family
-#     (approx_distinct_parts / approx_distinct_mergeable on portable
-#     HLL, approx_percentiles on the log-bin quantile sketch) and the
-#     two dedup knob variants moved to the portable md5 hash paths
-#     (dedup_minhash_lsh_r2 with verify, dedup_simhash at radius 2).
-#     Then 41 oldest-graded-first re-grades from the ledger (latest
-#     green round per name, registration order as tie-break): the 20
-#     remaining r05-graded names (agg_cube, the streaming batch
-#     twins, events heads, profiling heads, string_similarity,
-#     explode_tokens), then the first 21 of the r06-graded block
-#     (dedup_survivors .. mm_png_parse, registration order).
-#   round-13 additions: wave33 (mm_phash_dedup + mm_phash_recall_audit
-#     — image perceptual-hash dedup and its measured-quality audit)
-#     and wave34 (bloom_store_rotation — generational rotation of the
-#     Bloom membership store), all oracled, registered AFTER the
-#     locked front, so these 3 are the r14 never-graded pool.
-#   r14 POLICY: never-graded oracled queries first (the round-13
-#     additions above), then continue the oldest-first sweep — the
-#     rest of the r06 block (text_gopher_rules onward through the
-#     curation/wave3/tpch2 tails and the band/interval joins), then
-#     the r07 block.  First evidence outranks re-evidence; re-grades
-#     fill only leftover slots.
-#   round 14 (this order): _ROUND14_FRONT below — computed from the
-#     CORRECTNESS_r*.json ledger exactly per the r14 policy: the 3
-#     never-graded wave-33/34 queries first (mm_phash_dedup,
-#     mm_phash_recall_audit, bloom_store_rotation — first driver
-#     evidence), then 47 oldest-graded-first re-grades (latest green
-#     round per name, banked-list order as tie-break): the 29
-#     remaining r06-graded names (_BANKED_ROUND6 from
-#     text_gopher_rules through interval_join_facade — curation/wave3
-#     tails, the stream-final value-oracle twins, the TPC-H tails,
-#     corpus_e2e_pipeline, band/interval joins), then the first 18 of
-#     the r07-graded block (_ROUND7_FRONT order: null_handling
-#     through window_lag_lead).
-#   round-14 additions: wave35 (corpus_contamination_bloom +
-#     contamination_bloom_cut_audit — benchmark-leak screening through
-#     the benchmark's persisted Bloom store, and its measured
-#     shuffle-cut / fp audit), oracled, registered AFTER the locked
-#     front, so these 2 are the r15 never-graded pool.
-#   r15 POLICY: never-graded oracled queries first (the round-14
-#     additions above), then
-#     continue the oldest-first sweep — the rest of the r07-graded
-#     block in _ROUND7_FRONT order (setop_union onward through the
-#     scalar tails, the round-6 operator additions, kmeans_clusters,
-#     and the wave-4 tail), then the r09 block (_ROUND9_FRONT order).
-#     First evidence outranks re-evidence;
-#     re-grades fill only leftover slots.
-#   round 15 (this order): _ROUND15_FRONT below — computed by
-#     `scripts/compute_front.py --round 15` exactly per the r15
-#     policy: the 2 never-graded wave-35 queries first
-#     (corpus_contamination_bloom, contamination_bloom_cut_audit —
-#     first driver evidence), then 48 oldest-graded-first re-grades
-#     (latest green round per name, banked-list order as tie-break):
-#     the 32 remaining r07-graded names (_ROUND7_FRONT from
-#     setop_union through events_inactivity_gaps — setops, scalars,
-#     CDC/stream-upsert, BPE, graph/profile heads, kmeans, the
-#     wave-4 tail), then the first 16 of the r09-graded block
-#     (_ROUND9_FRONT order: graph_bfs_hops through events_ewma_exact).
-#   round-15 additions: wave36 (mm_audio_fingerprint_dedup +
-#     mm_audio_fp_recall_audit — audio-fingerprint dedup through the
-#     shared Hamming-band machinery, and its measured recall/precision
-#     audit), oracled, registered AFTER the locked front, so these 2
-#     are the r16 never-graded pool.
-#   round 16 (this order): _ROUND16_FRONT below — computed by
-#     `scripts/compute_front.py --round 16` at lock time, exactly per
-#     the r16 policy: the 2 never-graded wave-36 queries first
-#     (mm_audio_fingerprint_dedup, mm_audio_fp_recall_audit — first
-#     driver evidence), then the 34 remaining r09-graded names
-#     (_ROUND9_FRONT[16:], asof_interpolate_value through
-#     profile_order_reconciliation — the prior policy prose named a
-#     nonexistent "dedup_spark_minhash_crossval" as the drain start;
-#     the mechanical read-out is authoritative), then the first 14 of
-#     the r10-graded block (_ROUND10_FRONT order, events_cohort_ltv
-#     through stats_mode_per_group).
-#   r17 POLICY: never-graded oracled queries first (any round-16
-#     post-lock additions), then continue the oldest-first sweep —
-#     the rest of the r10 block (_ROUND10_FRONT order), then the r11
-#     block (_ROUND11_FRONT order — the relational §2 core comes due
-#     here) until the window holds 50.  First evidence outranks
-#     re-evidence; re-grades fill only leftover slots.  Mechanical
-#     read-out: `PYTHONPATH=. python scripts/compute_front.py
-#     --round 17` (run at lock time, before any new wave registers).
-#   banked (driver-green, regression pool): _ROUND12_FRONT,
-#     _ROUND11_FRONT, _ROUND10_FRONT, _ROUND9_FRONT, _ROUND7_FRONT and
-#     _BANKED_ROUND6 below, plus the r01/r05 heads that follow in
-#     registration order.
-# Names registered AFTER the r16 lock (the r17 never-graded pool);
-# the pin test excludes these when reproducing the r16/r15/r14 fronts
-# from the ledger (they were invisible at those lock times).
-#   round-16 additions: wave37 (mm_video_keyframe_dedup +
-#   mm_video_fp_recall_audit — MP4 box-walk keyframe aHash dedup
-#   through the shared Hamming-band machinery, completing the
-#   text/image/audio/video fingerprint quartet, and its measured
-#   recall/precision audit) and wave38 (mm_audio_snippet_pairs +
-#   mm_audio_snippet_recall_audit — overlapping-window audio
-#   sub-fingerprints and sub-clip containment detection, the
-#   deployment shape whole-clip fingerprints cannot express), all
-#   oracled, registered AFTER the locked front.
-_POST_LOCK_R16: "tuple[str, ...]" = (
-    "mm_video_keyframe_dedup", "mm_video_fp_recall_audit",
-    "mm_audio_snippet_pairs", "mm_audio_snippet_recall_audit",
-)
-
-_ROUND16_FRONT = [
-    # 2 never-graded oracled queries (wave 36, registered after the
-    # locked r15 front) — first driver evidence
-    "mm_audio_fingerprint_dedup", "mm_audio_fp_recall_audit",
-    # 34 remaining r09-graded re-grades (oldest driver evidence),
-    # _ROUND9_FRONT order from asof_interpolate_value onward
-    "asof_interpolate_value", "corpus_rendezvous_shards",
-    "profile_bucket_checksums", "events_open_order_concurrency",
-    "events_seasonal_outliers", "graph_kcore_profile",
-    "graph_edge_jaccard", "privacy_t_closeness", "stats_chi_square_cells",
-    "stats_autocorr_daily", "stats_ols_by_brand", "profile_benford_prices",
-    "skyline_pareto_parts", "events_user_lifecycle",
-    "events_ab_conversion_z", "profile_fd_violations",
-    "dedup_threshold_sweep", "events_cusum_drift", "graph_assortativity",
-    "stats_phi_features", "events_scd2_pit_join", "stats_ks_priority_price",
-    "corpus_gini_doclen", "events_interarrival_hist",
-    "dedup_cluster_size_histogram", "basket_association_pairs",
-    "events_interval_coverage", "corpus_quota_apportion",
-    "graph_local_clustering", "stats_weighted_median_brand",
-    "stats_corr_lineitem", "events_path_trigrams", "er_blocking_components",
-    "profile_order_reconciliation",
-    # first 14 of the r10-graded block, _ROUND10_FRONT order
-    "events_cohort_ltv", "text_rake_keywords", "corpus_zipf_audit",
-    "graph_rich_club", "events_did_readout", "privacy_generalize_to_k",
-    "mm_pcm_silence_runs", "ivm_join_refresh", "orders_nearest_price_topk",
-    "corpus_class_balance_downsample", "events_props_json_extract",
-    "dedup_lsh_recall_audit", "graph_two_hop_reach", "stats_mode_per_group",
-]
-
-_ROUND15_FRONT = [
-    # 2 never-graded oracled queries (wave 35, registered after the
-    # locked r14 front) — first driver evidence
-    "corpus_contamination_bloom", "contamination_bloom_cut_audit",
-    # 32 remaining r07-graded re-grades (oldest driver evidence),
-    # _ROUND7_FRONT order from setop_union onward
-    "setop_union", "setop_intersect", "setop_except", "scalar_string",
-    "scalar_datetime", "scalar_math", "scalar_json", "cdc_merge_upsert",
-    "stream_upsert_foreachbatch", "corpus_bpe_merges", "corpus_bpe_encode",
-    "embedding_gram_matrix", "corpus_cluster_balance",
-    "asof_click_next_purchase_tol", "privacy_k_anonymity",
-    "ivm_orders_by_month_refresh", "graph_pagerank_copurchase",
-    "profile_key_skew", "profile_fk_integrity", "kmeans_clusters",
-    "graph_triangle_count", "graph_degree_distribution",
-    "mm_image_patch_plan", "mm_audio_frame_plan", "text_code_detect",
-    "corpus_length_histogram", "corpus_mixture_temperature",
-    "window_cume_percent", "asof_nearest_event", "dedup_prefix_key",
-    "ann_mutual_knn", "events_inactivity_gaps",
-    # first 16 of the r09-graded block, _ROUND9_FRONT order
-    "graph_bfs_hops", "privacy_l_diversity", "mm_wav_pcm_stats",
-    "text_cdc_chunks", "corpus_vocab_coverage", "profile_snapshot_drift",
-    "layout_zonemap_skipping", "corpus_leakage_safe_split",
-    "events_markov_transitions", "embedding_standardize",
-    "text_readability_score", "events_rfm_scores", "corpus_chunk_overlap",
-    "text_line_dedup_within_doc", "events_linear_attribution",
-    "events_ewma_exact",
-]
-
-_ROUND14_FRONT = [
-    # 3 never-graded oracled queries (wave 33/34, registered after the
-    # locked r13 front) — first driver evidence
-    "mm_phash_dedup", "mm_phash_recall_audit", "bloom_store_rotation",
-    # 29 remaining r06-graded re-grades (oldest driver evidence),
-    # _BANKED_ROUND6 order from text_gopher_rules onward
-    "text_gopher_rules", "dedup_semantic", "ann_range_search",
-    "corpus_token_budget_plan", "corpus_curation_report_capped",
-    "text_c4_line_filter", "corpus_vocabulary", "dedup_tf_cosine",
-    "embedding_dim_stats", "embedding_quantize_int8",
-    "events_mad_outliers", "events_first_touch", "text_langid_confusion",
-    "approx_distinct_kmv", "approx_percentiles_sampled",
-    "stream_stateful_stats_final", "stream_sessionize_final",
-    "sql_q7_volume_shipping", "sql_q8_market_share",
-    "sql_q13_customer_distribution", "sql_q14_promo_revenue",
-    "sql_q15_top_supplier", "sql_q17_small_quantity",
-    "sql_q19_discounted_revenue", "sql_q22_global_sales_opportunity",
-    "corpus_e2e_pipeline", "band_join_acctbal", "interval_join_shipdate",
-    "interval_join_facade",
-    # first 18 of the r07-graded block, _ROUND7_FRONT order
-    "null_handling", "distinct_rows", "deterministic_sample",
-    "agg_collect_sorted", "unpivot_metrics", "scalar_conditional",
-    "scalar_date_arith", "scalar_string2", "agg_pricing_summary",
-    "agg_orders_by_month", "agg_count_distinct", "agg_rollup",
-    "topk_customers", "sort_global", "window_rank", "window_running_sum",
-    "window_range_30d", "window_lag_lead",
-]
-
-_ROUND13_FRONT = [
-    # 4 never-graded oracled queries (wave 31/32, registered after the
-    # locked r12 front) — first driver evidence
-    "dedup_cross_snapshot_bloom", "bloom_store_fp_audit",
-    "tokenizer_fertility_drift", "tokenizer_oov_drift",
-    # 5 rows-only -> value-oracled upgrades (round 13) — first VALUE
-    # evidence (their only prior driver rows are r04/r05 no_oracle)
-    "approx_distinct_parts", "approx_distinct_mergeable",
-    "approx_percentiles", "dedup_minhash_lsh_r2", "dedup_simhash",
-    # 20 remaining r05-graded re-grades (oldest driver evidence),
-    # ledger order (registration order within the r05 cohort)
-    "agg_cube", "stream_stream_join", "stream_session", "stream_sliding",
-    "stream_static_enrich", "events_tumbling", "events_sliding",
-    "events_session", "events_enrich_join", "asof_purchase_click",
-    "events_retention_cohorts", "events_funnel", "events_rollup_daily",
-    "events_gap_fill", "events_scd2_history", "profile_orders",
-    "text_pii_flags", "text_repetition", "string_similarity",
-    "explode_tokens",
-    # first 21 of the r06-graded block, registration order
-    "dedup_survivors", "corpus_source_cap", "corpus_bm25_topk",
-    "embedding_label_centroids", "dedup_near_exact", "text_ngram_novelty",
-    "ann_hard_negatives", "stream_incremental_dedup", "corpus_global_index",
-    "dedup_multi_signal", "corpus_curation_report", "text_word_entropy",
-    "text_bigram_perplexity", "events_value_outliers",
-    "corpus_pmi_collocations", "corpus_snapshot_diff", "corpus_hybrid_rrf",
-    "text_pii_redact", "mm_bmp_parse", "mm_wav_parse", "mm_png_parse",
-]
-
-_ROUND12_FRONT = [
-    # 7 never-graded oracled queries (wave 27-30, registered after the
-    # locked r11 front) — first driver evidence
-    "dedup_cross_snapshot", "dedup_cross_snapshot_funnel",
-    "corpus_quality_logreg", "ann_hamming_topk",
-    "ann_hamming_recall_audit", "text_boilerplate_coverage",
-    "approx_quantile_logbins",
-    # 16 remaining r04-graded re-grades (oldest driver evidence)
-    "corpus_contamination_capped", "corpus_stats", "window_ntile_dist",
-    "window_first_last", "array_token_ops", "layout_zorder",
-    "value_histogram", "setop_except_all", "setop_intersect_all",
-    "stratified_sample", "window_ratio_to_report", "argmax_per_group",
-    "winsorized_stats", "weighted_sample", "pivot_status_by_year",
-    "percentiles_exact",
-    # first 27 of the r05-graded block, registration order
-    "dedup_exact", "dedup_jaccard_exact", "dedup_jaccard_capped",
-    "dedup_minhash_lsh", "dedup_simhash_md5", "dedup_clusters",
-    "dedup_incremental", "dedup_passages", "dedup_containment",
-    "ann_topk_bruteforce", "embedding_cosine_pairs",
-    "dedup_embedding_cosine", "ann_ivf_topk", "ann_ivf_kmeans_topk",
-    "ann_lsh_cosine", "ann_pq_topk", "text_token_stats",
-    "text_bpe_pretokens", "text_quality", "text_lang_id",
-    "text_fingerprint", "text_model_score", "mm_binary_metadata",
-    "mm_decode_features", "mm_resize", "mm_frame_sample",
-    "stream_tumbling",
-]
-
-_ROUND11_FRONT = [
-    # 11 never-graded oracled queries (r08 outage debt, final tranche)
-    "corpus_span_corruption", "ann_ivf_recall_audit",
-    "profile_histogram_l1_drift", "stats_cohens_kappa",
-    "text_hashing_trick_audit", "mm_id3_tag_parse",
-    "dedup_prefix_filter_jaccard", "dedup_prefix_filter_funnel",
-    "stats_bootstrap_ci", "stats_randomization_test",
-    "graph_hyperball_reach",
-    # 8 names whose only driver evidence is round 1
-    "agg_grouping_sets", "regexp_extract_priority", "ngram_topk",
-    "corpus_chunks", "corpus_mixture", "corpus_pack_sequences",
-    "events_latest_state", "corpus_shuffle_shards",
-    # 31 oldest r04-graded re-grades (relational core + TPC-H heads)
-    "join_inner", "join_left", "join_right", "join_full", "join_cross",
-    "join_semi", "join_anti", "join_self_alias", "join_chain3",
-    "join_composite", "join_skew_salted", "theta_lt", "theta_neq",
-    "theta_left_outer", "theta_right_outer", "theta_full_outer",
-    "filter_algebra", "projection", "sql_q2_min_cost",
-    "sql_q3_shipping_priority", "sql_q4_order_priority",
-    "sql_q5_local_volume", "sql_q6_forecast_revenue",
-    "sql_q10_returned_items", "sql_q16_supplier_variety",
-    "sql_q18_large_orders", "bloom_prefilter_join", "tfidf_top_terms",
-    "corpus_split", "corpus_quality_quantile", "corpus_contamination",
-]
-
-_ROUND10_FRONT = [
-    # 19 round-8 wave-12/13/14 names — never driver-graded (r08 outage)
-    "events_cohort_ltv", "text_rake_keywords", "corpus_zipf_audit",
-    "graph_rich_club", "events_did_readout", "privacy_generalize_to_k",
-    "mm_pcm_silence_runs", "ivm_join_refresh", "orders_nearest_price_topk",
-    "corpus_class_balance_downsample", "events_props_json_extract",
-    "dedup_lsh_recall_audit", "graph_two_hop_reach", "stats_mode_per_group",
-    "events_segment_overlap", "corpus_quality_calibration",
-    "corpus_bpe_fertility", "lineitem_abc_analysis",
-    "dedup_survivor_bias_audit",
-    # first 31 round-9 additions, registration order: tpch3 ×5 first
-    "sql_q9_product_profit", "sql_q11_important_stock",
-    "sql_q12_late_shipments", "sql_q20_potential_promotion",
-    "sql_q21_waiting_suppliers",
-    # waves 15-22 (through mm_subtitle_align)
-    "text_winnowing_fingerprints", "dedup_winnowing_pairs",
-    "corpus_stratified_sample", "er_match_scores", "stats_rank_corr",
-    "events_user_streaks", "events_rolling_median_daily", "mm_gif_parse",
-    "mm_pcm_zero_crossings", "approx_distinct_hll_portable",
-    "approx_distinct_hll_merge", "graph_knn_degree_curve",
-    "stream_hll_final", "events_pivot_daily_types", "mm_jpeg_parse",
-    "profile_equidepth_price", "approx_topk_cms", "stream_cms_final",
-    "layout_compaction_bins", "stats_mannwhitney_u", "mm_mp4_box_parse",
-    "text_url_parse", "dedup_url_canonical", "graph_label_propagation",
-    "embedding_jl_projection", "mm_subtitle_align",
-]
-
-_ROUND9_FRONT = [
-    # the 21 round-7 wave-5/6/7/8 queries — never driver-graded
-    "graph_bfs_hops", "privacy_l_diversity", "mm_wav_pcm_stats",
-    "text_cdc_chunks", "corpus_vocab_coverage", "profile_snapshot_drift",
-    "layout_zonemap_skipping", "corpus_leakage_safe_split",
-    "events_markov_transitions", "embedding_standardize",
-    "text_readability_score", "events_rfm_scores", "corpus_chunk_overlap",
-    "text_line_dedup_within_doc", "events_linear_attribution",
-    "events_ewma_exact", "asof_interpolate_value",
-    "corpus_rendezvous_shards", "profile_bucket_checksums",
-    "events_open_order_concurrency", "events_seasonal_outliers",
-    # 29 round-8 additions (waves 9-12, registration order) — never
-    # driver-graded
-    "graph_kcore_profile", "graph_edge_jaccard", "privacy_t_closeness",
-    "stats_chi_square_cells", "stats_autocorr_daily", "stats_ols_by_brand",
-    "profile_benford_prices", "skyline_pareto_parts",
-    "events_user_lifecycle", "events_ab_conversion_z",
-    "profile_fd_violations", "dedup_threshold_sweep", "events_cusum_drift",
-    "graph_assortativity", "stats_phi_features", "events_scd2_pit_join",
-    "stats_ks_priority_price", "corpus_gini_doclen",
-    "events_interarrival_hist", "dedup_cluster_size_histogram",
-    "basket_association_pairs", "events_interval_coverage",
-    "corpus_quota_apportion", "graph_local_clustering",
-    "stats_weighted_median_brand", "stats_corr_lineitem",
-    "events_path_trigrams", "er_blocking_components",
-    "profile_order_reconciliation",
-]
-
-_ROUND8_FRONT = [
-    # the 21 round-7 wave-5/6/7/8 queries — never driver-graded
-    "graph_bfs_hops", "privacy_l_diversity", "mm_wav_pcm_stats",
-    "text_cdc_chunks", "corpus_vocab_coverage", "profile_snapshot_drift",
-    "layout_zonemap_skipping", "corpus_leakage_safe_split",
-    "events_markov_transitions", "embedding_standardize",
-    "text_readability_score", "events_rfm_scores", "corpus_chunk_overlap",
-    "text_line_dedup_within_doc", "events_linear_attribution",
-    "events_ewma_exact", "asof_interpolate_value",
-    "corpus_rendezvous_shards", "profile_bucket_checksums",
-    "events_open_order_concurrency", "events_seasonal_outliers",
-    # 29 oldest-graded regression re-grades (first green r01/r02,
-    # nothing has re-checked them under the driver since)
-    "join_inner", "join_left", "join_right", "join_full", "join_cross",
-    "join_semi", "join_anti", "join_self_alias", "join_chain3",
-    "join_composite", "join_skew_salted", "theta_lt", "theta_neq",
-    "theta_left_outer", "theta_right_outer", "theta_full_outer",
-    "filter_algebra", "projection", "sql_q2_min_cost",
-    "sql_q3_shipping_priority", "sql_q4_order_priority",
-    "sql_q5_local_volume", "sql_q6_forecast_revenue",
-    "sql_q10_returned_items", "sql_q16_supplier_variety",
-    "sql_q18_large_orders", "agg_cube", "agg_grouping_sets",
-    "bloom_prefilter_join",
-]
-
-_ROUND7_FRONT = [
-    # the 25 pre-r06 never-graded relational tails
-    "null_handling", "distinct_rows", "deterministic_sample",
-    "agg_collect_sorted", "unpivot_metrics", "scalar_conditional",
-    "scalar_date_arith", "scalar_string2", "agg_pricing_summary",
-    "agg_orders_by_month", "agg_count_distinct", "agg_rollup",
-    "topk_customers", "sort_global", "window_rank", "window_running_sum",
-    "window_range_30d", "window_lag_lead", "setop_union",
-    "setop_intersect", "setop_except", "scalar_string", "scalar_datetime",
-    "scalar_math", "scalar_json",
-    # the 12 round-6 operator additions
-    "cdc_merge_upsert", "stream_upsert_foreachbatch", "corpus_bpe_merges",
-    "corpus_bpe_encode", "embedding_gram_matrix", "corpus_cluster_balance",
-    "asof_click_next_purchase_tol", "privacy_k_anonymity",
-    "ivm_orders_by_month_refresh", "graph_pagerank_copurchase",
-    "profile_key_skew", "profile_fk_integrity",
-    # oracled in r03 but only ever graded as a r01 no_oracle row
-    "kmeans_clusters",
-    # round-7 additions (queries/wave4.py) — fill the window to 50
-    "graph_triangle_count", "graph_degree_distribution",
-    "mm_image_patch_plan", "mm_audio_frame_plan", "text_code_detect",
-    "corpus_length_histogram", "corpus_mixture_temperature",
-    "window_cume_percent", "asof_nearest_event", "dedup_prefix_key",
-    "ann_mutual_knn", "events_inactivity_gaps",
-]
-
-_BANKED_ROUND6 = [
-    # queries/curation.py — round-5 wave with zero driver evidence
-    "dedup_survivors", "corpus_source_cap", "corpus_bm25_topk",
-    "embedding_label_centroids", "dedup_near_exact", "text_ngram_novelty",
-    "ann_hard_negatives", "stream_incremental_dedup", "corpus_global_index",
-    "dedup_multi_signal", "corpus_curation_report", "text_word_entropy",
-    "text_bigram_perplexity", "events_value_outliers",
-    "corpus_pmi_collocations", "corpus_snapshot_diff", "corpus_hybrid_rrf",
-    "text_pii_redact", "mm_bmp_parse", "mm_wav_parse", "mm_png_parse",
-    "text_gopher_rules", "dedup_semantic", "ann_range_search",
-    "corpus_token_budget_plan", "corpus_curation_report_capped",
-    "text_c4_line_filter",
-    # queries/wave3.py
-    "corpus_vocabulary", "dedup_tf_cosine", "embedding_dim_stats",
-    "embedding_quantize_int8", "events_mad_outliers", "events_first_touch",
-    "text_langid_confusion", "approx_distinct_kmv",
-    "approx_percentiles_sampled",
-    # round-6 additions: stateful-streaming batch twins with full
-    # value oracles (exact-microunit state)
-    "stream_stateful_stats_final", "stream_sessionize_final",
-    # TPC-H tails (queries/tpch2.py)
-    "sql_q7_volume_shipping", "sql_q8_market_share",
-    "sql_q13_customer_distribution", "sql_q14_promo_revenue",
-    "sql_q15_top_supplier", "sql_q17_small_quantity",
-    "sql_q19_discounted_revenue", "sql_q22_global_sales_opportunity",
-    # capstone + band/interval joins
-    "corpus_e2e_pipeline", "band_join_acctbal", "interval_join_shipdate",
-    "interval_join_facade",
-]
-
 # Rows-only adjudication (every query registered WITHOUT a DuckDB
 # oracle must either name the oracled query that supersedes it or
 # document why no oracle can exist — enforced by
 # tests/test_executor.py::test_registry_integrity).  Superseded
 # entries stay registered because the committed manifest forbids
-# removing names (banked driver evidence would be lost).
+# removing names.
 ROWS_ONLY = {
     "stream_dedup": {
         "reason": "emission ORDER depends on micro-batch arrival order "
@@ -596,106 +91,20 @@ ROWS_ONLY = {
     },
     "stream_stateful_stats": {"superseded_by": "stream_stateful_stats_final"},
     "stream_sessionize_custom": {"superseded_by": "stream_sessionize_final"},
-    # round 13 removed five entries by giving the queries full value
-    # oracles: approx_distinct_parts / approx_distinct_mergeable
-    # (portable HLL), approx_percentiles (log-bin sketch),
-    # dedup_minhash_lsh_r2 / dedup_simhash (portable md5 hash paths).
 }
 
 
-def _reorder() -> None:
-    """Rebuild _QUERIES in graded-window order: _ROUND16_FRONT, then
-    the banked (already driver-green) _ROUND15_FRONT/_ROUND14_FRONT/
-    _ROUND13_FRONT/_ROUND12_FRONT/_ROUND11_FRONT/_ROUND10_FRONT/
-    _ROUND9_FRONT/_ROUND8_FRONT/_ROUND7_FRONT/_BANKED_ROUND6, then the
-    rest of the oracled queries in registration order, then the
-    no-oracle queries last."""
-    seen = set(_ROUND16_FRONT)
-    front = _ROUND16_FRONT + [
-        n for n in _ROUND15_FRONT + _ROUND14_FRONT + _ROUND13_FRONT
-        + _ROUND12_FRONT + _ROUND11_FRONT + _ROUND10_FRONT + _ROUND9_FRONT
-        + _ROUND8_FRONT + _ROUND7_FRONT + _BANKED_ROUND6
-        if n not in seen and not seen.add(n)
-    ]
-    missing = [n for n in front if n not in _QUERIES]
-    if missing:
-        raise ValueError(f"rotation lists name unknown queries: {missing}")
-    unoracled = [n for n in front if n not in _ORACLES]
-    if unoracled:
-        raise ValueError(
-            f"rotation front-loads oracle-less queries (wasted gradable "
-            f"slots): {unoracled}"
-        )
-    ordered = {n: _QUERIES[n] for n in front}
-    for n, fn in _QUERIES.items():
-        if n not in ordered and n in _ORACLES:
-            ordered[n] = fn
-    for n, fn in _QUERIES.items():
-        if n not in ordered:
-            ordered[n] = fn
-    _QUERIES.clear()
-    _QUERIES.update(ordered)
+_loaded = False
 
 
 def _load_all() -> None:
-    """Import every query-defining module exactly once, then apply the
-    rotation ordering."""
+    """Import every module of the ``queries`` package exactly once, in
+    name order; each registers its queries on import."""
     global _loaded
     if _loaded:
         return
-    from .queries import (  # noqa: F401
-        dedup,
-        similarity,
-        text,
-        multimodal,
-        streaming,
-        events,
-        profiling,
-        extras,
-        relational,
-        core,
-        corpus,
-        analytic,
-        advanced,
-        tpch2,
-        curation,
-        wave3,
-        wave4,
-        wave5,
-        wave6,
-        wave7,
-        wave8,
-        wave9,
-        wave10,
-        wave11,
-        wave12,
-        wave13,
-        wave14,
-        tpch3,
-        wave15,
-        wave16,
-        wave17,
-        wave18,
-        wave19,
-        wave20,
-        wave21,
-        wave22,
-        wave23,
-        wave24,
-        wave25,
-        wave26,
-        wave27,
-        wave28,
-        wave29,
-        wave30,
-        wave31,
-        wave32,
-        wave33,
-        wave34,
-        wave35,
-        wave36,
-        wave37,
-        wave38,
-    )
-    _reorder()
+    from . import queries
+
+    for mod in sorted(m.name for m in pkgutil.iter_modules(queries.__path__)):
+        importlib.import_module(f"{queries.__name__}.{mod}")
     _loaded = True

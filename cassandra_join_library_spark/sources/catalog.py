@@ -16,6 +16,7 @@ spark-cassandra-connector jar, so it is import-gated and untested here.
 from __future__ import annotations
 
 import os
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -253,14 +254,24 @@ def read_parquet_cached(spark: SparkSession, path: str) -> DataFrame:
 #: per table load (several times per query build), and each conf
 #: set/get is a py4j round-trip; once pinned for a session there is
 #: nothing left to do.  Keyed by applicationId like _SCHEMA_CACHE.
+#: An app is added only after its confs are set, under _CONFS_LOCK, so
+#: no thread builds a query while another is still pinning them.
 _CONFS_PINNED: "set[str]" = set()
+_CONFS_LOCK = threading.Lock()
 
 
 def ensure_session_confs(spark: SparkSession) -> SparkSession:
     app = spark.sparkContext.applicationId
     if app in _CONFS_PINNED:
         return spark
-    _CONFS_PINNED.add(app)
+    with _CONFS_LOCK:
+        if app not in _CONFS_PINNED:
+            _pin_session_confs(spark)
+            _CONFS_PINNED.add(app)
+    return spark
+
+
+def _pin_session_confs(spark: SparkSession) -> None:
     for k, v in RUNTIME_PARITY_CONFS.items():
         try:
             spark.conf.set(k, v)
@@ -280,11 +291,10 @@ def ensure_session_confs(spark: SparkSession) -> SparkSession:
                 "could not pin it; TIMESTAMP_NTZ normalization and "
                 "epoch-based oracles will disagree by the TZ offset",
                 RuntimeWarning,
-                stacklevel=2,
+                stacklevel=3,
             )
     except Exception:
         pass
-    return spark
 
 
 def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:

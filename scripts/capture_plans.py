@@ -15,7 +15,7 @@ facts we assert (exchange count upper bound, join strategy, pushdown)
 are all initial-plan facts).
 
 Usage:
-    python scripts/capture_plans.py --tag before [--only a,b] [--sf DIR]
+    python scripts/capture_plans.py --tag before --only a,b [--sf DIR]
 """
 
 from __future__ import annotations
@@ -56,7 +56,8 @@ def summarize(txt: str) -> dict:
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--tag", required=True)
-    ap.add_argument("--only", default=None)
+    ap.add_argument("--only", required=True,
+                    help="comma-separated registered query names")
     ap.add_argument("--sf", default="/root/testdata/sf0.1")
     ap.add_argument("--outdir", default="plans/r16")
     args = ap.parse_args()
@@ -64,11 +65,9 @@ def main() -> int:
     from cassandra_join_library_spark import get_spark
     from cassandra_join_library_spark.registry import all_queries
 
-    import bench
-
     spark = get_spark(app_name="capture-plans")
     queries = all_queries()
-    names = (args.only.split(",") if args.only else bench.HEADLINE)
+    names = args.only.split(",")
     os.makedirs(args.outdir, exist_ok=True)
 
     for name in names:

@@ -303,16 +303,12 @@ def test_hll_mergeable_rollup_accuracy(spark):
 
 
 def test_registry_integrity():
-    """The rotation must never lose banked driver evidence or waste a
-    gradable slot:
+    """The registry must never silently lose a query or leave a
+    rows-only query unexplained:
       (a) every name in the committed manifest still exists (a refactor
-          that silently drops a query would un-grant its banked
-          CORRECTNESS rows);
-      (b) the driver-graded window (first 50 registered) contains only
-          queries WITH a DuckDB oracle — rows-only queries can never
-          hash-match and would burn a slot;
-      (c) the explicit rotation lists match what the registry actually
-          serves, so the ledger comment can't drift from reality."""
+          that silently drops a query fails here);
+      (b) every query without a DuckDB oracle has a ROWS_ONLY entry
+          that names its oracled twin or says why no oracle exists."""
     import json
     import pathlib
 
@@ -327,44 +323,12 @@ def test_registry_integrity():
     missing = sorted(set(manifest) - set(qs))
     assert not missing, (
         f"queries disappeared from the registry vs the committed "
-        f"manifest (banked driver evidence lost): {missing}"
-    )
-
-    names = list(qs)
-    window = names[:50]
-    unoracled = [n for n in window if n not in ors]
-    assert not unoracled, (
-        f"oracle-less queries occupy gradable driver slots: {unoracled}"
-    )
-
-    seen = set(registry._ROUND16_FRONT)
-    declared = registry._ROUND16_FRONT + [
-        n for n in (registry._ROUND15_FRONT + registry._ROUND14_FRONT
-                    + registry._ROUND13_FRONT + registry._ROUND12_FRONT
-                    + registry._ROUND11_FRONT + registry._ROUND10_FRONT
-                    + registry._ROUND9_FRONT + registry._ROUND8_FRONT
-                    + registry._ROUND7_FRONT + registry._BANKED_ROUND6)
-        if n not in seen and not seen.add(n)
-    ]
-    assert window == declared[:50], (
-        "registry order drifted from the declared rotation front"
-    )
-    assert names[:len(declared)] == declared, (
-        "post-window order drifted from the declared rotation lists"
-    )
-
-    # no-oracle queries must sort strictly after every oracled one
-    first_unoracled = min(
-        (i for i, n in enumerate(names) if n not in ors), default=len(names)
-    )
-    last_oracled = max(i for i, n in enumerate(names) if n in ors)
-    assert last_oracled < first_unoracled, (
-        "a rows-only query is registered ahead of an oracled one"
+        f"manifest: {missing}"
     )
 
     # every rows-only query must be adjudicated: either it names the
     # oracled query that supersedes it, or it documents why no oracle
-    # can exist (r06 verdict ask #5)
+    # can exist
     rows_only = {n for n in qs if n not in ors}
     unadjudicated = sorted(rows_only - set(registry.ROWS_ONLY))
     assert not unadjudicated, (
@@ -386,43 +350,3 @@ def test_registry_integrity():
             assert meta.get("reason"), (
                 f"ROWS_ONLY[{n!r}] has neither superseded_by nor reason"
             )
-
-
-def test_front_matches_policy():
-    """The locked `_ROUND16_FRONT` must equal what the mechanical
-    rotation policy (scripts/compute_front.py) derives from the
-    correctness ledger — never-graded first, then oldest-latest-green
-    with banked-list tie-break.  The r16 exclude names are any
-    post-lock round-16 additions (invisible at lock time; they head
-    the r17 pool); the r15/r14 retro-checks exclude each round's own
-    post-lock additions for the same reason.  A future front
-    hand-edited against the policy fails here instead of surprising
-    the judge."""
-    import sys
-
-    sys.path.insert(0, str(__import__("pathlib").Path(
-        __file__).parent.parent))
-    from scripts.compute_front import compute_front
-
-    from cassandra_join_library_spark import registry
-
-    # Names registered AFTER the r16 lock (the r17 never-graded pool).
-    post_lock_r16 = frozenset(getattr(registry, "_POST_LOCK_R16", ()))
-    got16 = [n for n, _ in compute_front(16, exclude=post_lock_r16)]
-    assert got16 == registry._ROUND16_FRONT
-
-    # retro-check: the r15 lock still reproduces from the ledger
-    got15 = [n for n, _ in compute_front(
-        15, exclude=frozenset({"mm_audio_fingerprint_dedup",
-                               "mm_audio_fp_recall_audit"})
-        | post_lock_r16)]
-    assert got15 == registry._ROUND15_FRONT
-
-    # retro-check: the r14 lock still reproduces from the ledger
-    got14 = [n for n, _ in compute_front(
-        14, exclude=frozenset({"corpus_contamination_bloom",
-                               "contamination_bloom_cut_audit",
-                               "mm_audio_fingerprint_dedup",
-                               "mm_audio_fp_recall_audit"})
-        | post_lock_r16)]
-    assert got14 == registry._ROUND14_FRONT

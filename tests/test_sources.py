@@ -82,8 +82,6 @@ def test_multi_split_input_same_results(spark, tmp_path):
     e = load_events(spark, SF_SMOKE)
     multi = str(tmp_path / "events_multi")
     e.repartition(8).write.parquet(multi)
-    e8 = spark.read.parquet(multi)
-    assert e8.rdd.getNumPartitions() >= 8
 
     def tumbling(df):
         return {
@@ -96,7 +94,66 @@ def test_multi_split_input_same_results(spark, tmp_path):
             )
         }
 
-    assert tumbling(e8) == tumbling(e)
+    # Spark packs small files into about defaultParallelism splits; an
+    # open cost above maxPartitionBytes (128 MB by default) gives every
+    # file its own split on any host.
+    key = "spark.sql.files.openCostInBytes"
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, "1t")
+    try:
+        e8 = spark.read.parquet(multi)
+        assert e8.rdd.getNumPartitions() >= 8
+        multi_split = tumbling(e8)
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
+    assert multi_split == tumbling(e)
+
+
+def test_session_confs_pinned_before_a_second_thread_returns(spark, monkeypatch):
+    """A thread must not return from ensure_session_confs while another
+    is still pinning the confs: it would build a query under a non-UTC
+    timezone and its timestamps would shift without an error."""
+    import threading
+    import time
+    import types
+
+    from cassandra_join_library_spark.sources import catalog
+
+    tz_key = "spark.sql.session.timeZone"
+    conf = spark.newSession().conf
+    conf.set(tz_key, "America/New_York")
+    pinning = threading.Event()
+    fast_set = conf.set
+
+    def slow_set(k, v):
+        pinning.set()
+        time.sleep(0.2)
+        fast_set(k, v)
+
+    monkeypatch.setattr(conf, "set", slow_set)
+    # its own application key, so the shared test session's pin and any
+    # background thread using that session stay out of the race
+    bare = types.SimpleNamespace(
+        sparkContext=types.SimpleNamespace(applicationId="conf-race"),
+        conf=conf)
+    monkeypatch.setattr(catalog, "_CONFS_PINNED", set(catalog._CONFS_PINNED))
+    seen = []
+
+    def build():
+        catalog.ensure_session_confs(bare)
+        seen.append(conf.get(tz_key))
+
+    first = threading.Thread(target=build)
+    first.start()
+    assert pinning.wait(30)
+    second = threading.Thread(target=build)
+    second.start()
+    first.join(30)
+    second.join(30)
+    assert seen == ["UTC", "UTC"]
 
 
 def test_orc_catalog_roundtrip_through_facade(spark, tmp_path):
