@@ -4,15 +4,21 @@ Beyond the reference's surface (it has no dedup); designed for the
 100 TB training-data path:
 
 - exact dedup: hash-groupBy on content — one shuffle, map-side combine;
-- MinHash + LSH: shingle → k minhashes → band-bucket join → verify.
-  Candidate generation touches only bucket-colliding pairs, never the
-  full O(n^2) cross product;
-- exact n-gram Jaccard via a posting-list (inverted-index) join:
-  pairs are generated per shared shingle, so cost is proportional to
-  actual overlap, and a document-frequency cap drops degenerate
-  stop-shingles (the classic scale trick);
+- MinHash + LSH (:func:`minhash_lsh_pairs`, one operator): shingle →
+  k minhashes → band join → exact-Jaccard verify.  Candidate
+  generation touches only band-colliding pairs, never the full O(n^2)
+  cross product;
+- exact n-gram Jaccard and containment via one posting-list
+  (inverted-index) co-occurrence join: pairs are generated per shared
+  shingle, so cost is proportional to actual overlap, and a
+  document-frequency cap drops degenerate stop-shingles (the classic
+  scale trick);
 - SimHash: 64-bit signatures + pigeonhole chunk-join for Hamming
   radius search — exact for radius <= chunks-1, no cross product.
+
+``portable=True`` (MinHash and SimHash alike) swaps the JVM-only
+xxhash64 for 60-bit md5-prefix hashes that any SQL engine reproduces
+bit-for-bit, so a DuckDB oracle can check the full output.
 
 All operators are pure DataFrame pipelines (JVM-side, no Python UDFs,
 no driver collects).
@@ -116,19 +122,44 @@ def jaccard_pairs_exact(
 
     Returns (doc_a, doc_b, jaccard) with doc_a < doc_b.
     """
+    pairs = _cooccurrence(df, id_col, text_col, n, max_doc_freq)
+    jac = (F.col("common") * F.lit(1.0)) / (F.col("na") + F.col("nb") - F.col("common"))
+    return (
+        pairs.filter(jac >= threshold)
+        .select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
+    )
+
+
+def _drop_hot(postings: DataFrame, key: str,
+              max_doc_freq: "int | None") -> DataFrame:
+    """The stop-shingle cap: drop the postings of every ``key`` value
+    that occurs in more than ``max_doc_freq`` rows (one row per (doc,
+    key), so rows are documents).  None leaves ``postings`` as is."""
+    if max_doc_freq is None:
+        return postings
+    # broadcast the DROP list (stop-shingles over the cap) and
+    # anti-join: it is tiny by construction, while the keep-list is
+    # nearly the whole vocabulary — broadcasting that would ship the
+    # corpus's shingle space to every executor
+    hot = (
+        postings.groupBy(key).agg(F.count(F.lit(1)).alias("df"))
+        .filter(F.col("df") > max_doc_freq).select(key)
+    )
+    return postings.join(F.broadcast(hot), key, "left_anti")
+
+
+def _cooccurrence(df: DataFrame, id_col: str, text_col: str, n: int,
+                  max_doc_freq: "int | None") -> DataFrame:
+    """The posting-list self-join shared by the set-overlap operators:
+    (doc_a, doc_b, common, na, nb) with doc_a < doc_b for every pair
+    sharing at least one n-gram shingle, ``common`` = |A ∩ B| and
+    ``na``/``nb`` the two shingle-set sizes, all after the
+    ``max_doc_freq`` stop-shingle cap.  Cost ∝ Σ df(shingle)², never
+    n²."""
     # eager localCheckpoint (module docstring: materialization
-    # pattern) — three consumers below re-read the shingle set
+    # pattern) — the cap, the sizes and both join sides re-read it
     sh = shingles(df, id_col, text_col, n).localCheckpoint(eager=True)
-    if max_doc_freq is not None:
-        # broadcast the DROP list (stop-shingles over the cap) and
-        # anti-join: it is tiny by construction, while the keep-list is
-        # nearly the whole vocabulary — broadcasting that would ship
-        # the corpus's shingle space to every executor
-        hot = (
-            sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
-            .filter(F.col("df") > max_doc_freq).select("shingle")
-        )
-        sh = sh.join(F.broadcast(hot), "shingle", "left_anti")
+    sh = _drop_hot(sh, "shingle", max_doc_freq)
     sizes = sh.groupBy("doc").agg(F.count(F.lit(1)).alias("n_sh"))
     a, b = sh.alias("a"), sh.alias("b")
     common = (
@@ -139,12 +170,7 @@ def jaccard_pairs_exact(
     )
     sa = sizes.select(F.col("doc").alias("doc_a"), F.col("n_sh").alias("na"))
     sb = sizes.select(F.col("doc").alias("doc_b"), F.col("n_sh").alias("nb"))
-    jac = (F.col("common") * F.lit(1.0)) / (F.col("na") + F.col("nb") - F.col("common"))
-    return (
-        common.join(sa, "doc_a").join(sb, "doc_b")
-        .filter(jac >= threshold)
-        .select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
-    )
+    return common.join(sa, "doc_a").join(sb, "doc_b")
 
 
 def positional_grams(
@@ -256,41 +282,22 @@ def containment_pairs_exact(
 
     Returns (doc_a, doc_b, containment): doc_a's shingle set is
     ``containment``-contained in doc_b's (directional — both
-    orientations of a pair can appear)."""
-    sh = shingles(df, id_col, text_col, n).localCheckpoint(eager=True)
-    if max_doc_freq is not None:
-        hot = (
-            sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
-            .filter(F.col("df") > max_doc_freq).select("shingle")
-        )
-        sh = sh.join(F.broadcast(hot), "shingle", "left_anti")
-    sizes = sh.groupBy("doc").agg(F.count(F.lit(1)).alias("n_sh"))
-    a, b = sh.alias("a"), sh.alias("b")
-    common = (
-        a.join(b, (F.col("a.shingle") == F.col("b.shingle"))
-               & (F.col("a.doc") != F.col("b.doc")))
-        .groupBy(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("common"))
+    orientations of a pair can appear).  Both directions come from the
+    one doc_a < doc_b co-occurrence row of the pair."""
+    pairs = _cooccurrence(df, id_col, text_col, n, max_doc_freq)
+    c = F.col("common") * F.lit(1.0)
+    directions = F.array(
+        F.struct(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"),
+                 (c / F.col("na")).alias("cont")),
+        F.struct(F.col("doc_b").alias("a"), F.col("doc_a").alias("b"),
+                 (c / F.col("nb")).alias("cont")),
     )
-    sa = sizes.select(F.col("doc").alias("doc_a"), F.col("n_sh").alias("na"))
-    cont = (F.col("common") * F.lit(1.0)) / F.col("na")
     return (
-        common.join(sa, "doc_a")
-        .filter(cont >= threshold)
-        .select("doc_a", "doc_b", F.round(cont, 6).alias("containment"))
+        pairs.select(F.explode(directions).alias("d"))
+        .filter(F.col("d.cont") >= threshold)
+        .select(F.col("d.a").alias("doc_a"), F.col("d.b").alias("doc_b"),
+                F.round("d.cont", 6).alias("containment"))
     )
-
-
-def minhash_signatures(sh: DataFrame, num_hashes: int = 24) -> DataFrame:
-    """k minhashes per doc from (doc, shingle) rows.
-
-    Hash family: ``xxhash64(i, shingle)`` — k independent seeded
-    64-bit hashes, all computed JVM-side in one aggregate pass."""
-    aggs = [
-        F.min(F.xxhash64(F.lit(i), F.col("shingle"))).alias(f"h{i}")
-        for i in range(num_hashes)
-    ]
-    return sh.groupBy("doc").agg(*aggs)
 
 
 def minhash_lsh_pairs(
@@ -301,76 +308,97 @@ def minhash_lsh_pairs(
     num_hashes: int = 24,
     rows_per_band: int = 1,
     threshold: float = 0.5,
+    portable: bool = False,
+    verify: bool = True,
 ) -> DataFrame:
     """MinHash + LSH near-duplicate pairs, verified by exact Jaccard.
 
-    Bands of ``rows_per_band`` minhashes are bucket keys; documents
-    sharing any band bucket become candidates (the only pairs ever
-    joined), then candidates are verified with exact shingle-set
-    Jaccard so the output contains no false positives.  With r=1, b=24
-    the candidate recall at j=0.5 is 1 - (1-j)^24 ≈ 1 - 6e-8 —
+    ``num_hashes`` min-hashes per document, computed JVM-side in one
+    tall (doc, i, min-hash) aggregate.  Band ``b`` holds the
+    ``rows_per_band`` consecutive min-hashes starting at ``b * r`` and
+    its r-tuple of min-hashes is the join key; documents sharing any
+    band become candidates (the only pairs ever joined).  With r=1,
+    b=24 the candidate recall at j=0.5 is 1 - (1-j)^24 ≈ 1 - 6e-8 —
     statistically indistinguishable from exact.  At larger scale raise
     ``rows_per_band`` to 2-4 to keep buckets sparse (fewer, better
     candidates) at a small recall cost.
 
-    Returns (doc_a, doc_b, jaccard) with doc_a < doc_b.
+    ``portable=False`` hashes with ``xxhash64(i, shingle)`` (JVM-only);
+    ``portable=True`` with the 60-bit md5 prefix
+    ``conv(substr(md5(i || ':' || shingle), 1, 15), 16, 10)``, which any
+    SQL engine reproduces — so even the r > 1 output, whose candidate
+    recall is genuinely < 1, is a deterministic set a SQL oracle checks
+    and LSH quality can be audited against the exact pair set.
+
+    ``verify=True`` checks every candidate against exact shingle-set
+    Jaccard >= ``threshold`` (no false positives) and returns (doc_a,
+    doc_b, jaccard); ``verify=False`` returns the unverified candidate
+    pairs (doc_a, doc_b).  Always doc_a < doc_b, distinct.
     """
     if num_hashes % rows_per_band:
         raise ValueError("num_hashes must be divisible by rows_per_band")
-    sh = shingles(df, id_col, text_col, n).localCheckpoint(eager=True)
-    if rows_per_band == 1:
-        # fast path: each minhash IS a band key, so skip the wide
-        # 24-buffer signature aggregate (expensive to codegen-compile)
-        # and keep the data tall: (doc, band, minhash) via explode +
-        # a plain 2-key min aggregate
-        hash_structs = F.array(*[
-            F.struct(F.lit(i).alias("i"),
-                     F.xxhash64(F.lit(i), F.col("shingle")).alias("h"))
-            for i in range(num_hashes)
-        ])
-        bands = (
-            sh.select("doc", F.explode(hash_structs).alias("x"))
-            .groupBy("doc", F.col("x.i").alias("band"))
-            .agg(F.min("x.h").alias("bucket"))
-        )
+    sh = shingles(df, id_col, text_col, n)
+    if verify:
+        # shingles feed both the band build and the verify join
+        sh = sh.localCheckpoint(eager=True)
+    if portable:
+        hashes = [F.expr(f"conv(substr(md5(concat('{i}', ':', shingle)), 1, 15),"
+                         " 16, 10)").cast("bigint")
+                  for i in range(num_hashes)]
     else:
-        sig = minhash_signatures(sh, num_hashes)
-        n_bands = num_hashes // rows_per_band
-        band_structs = [
-            F.struct(
-                F.lit(b).alias("band"),
-                F.xxhash64(
-                    *[F.col(f"h{b * rows_per_band + r}") for r in range(rows_per_band)]
-                ).alias("bucket"),
-            )
-            for b in range(n_bands)
-        ]
-        bands = sig.select(
-            F.col("doc"), F.explode(F.array(*band_structs)).alias("bh")
-        ).select("doc", F.col("bh.band").alias("band"), F.col("bh.bucket").alias("bucket"))
-
+        hashes = [F.xxhash64(F.lit(i), F.col("shingle"))
+                  for i in range(num_hashes)]
+    structs = F.array(*[F.struct(F.lit(i).alias("i"), h.alias("h"))
+                        for i, h in enumerate(hashes)])
+    # the tall (doc, i, min-hash) aggregate, i named band: a plain 2-key
+    # min, cheap to codegen-compile at any num_hashes.  At r == 1 each
+    # min-hash is its own band, so this already is the band table; at
+    # r > 1, band i // r pivots r consecutive min-hashes into h0..h{r-1}
+    bands = (
+        sh.select("doc", F.explode(structs).alias("x"))
+        .groupBy("doc", F.col("x.i").alias("band"))
+        .agg(F.min("x.h").alias("bucket"))
+    )
+    keys = ["bucket"]
+    r = rows_per_band
+    if r > 1:
+        keys = [f"h{j}" for j in range(r)]
+        bands = bands.groupBy(
+            "doc", (F.col("band") / r).cast("int").alias("band")
+        ).agg(*[
+            F.min(F.when(F.col("band") % r == j, F.col("bucket"))).alias(k)
+            for j, k in enumerate(keys)
+        ])
     a, b = bands.alias("a"), bands.alias("b")
+    cond = F.col("a.band") == F.col("b.band")
+    for k in keys:
+        cond = cond & (F.col(f"a.{k}") == F.col(f"b.{k}"))
+    cand = (
+        a.join(b, cond & (F.col("a.doc") < F.col("b.doc")))
+        .select(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
+        .distinct()
+    )
+    if not verify:
+        return cand
     # eager localCheckpoint: cand feeds the candidate-doc projection
     # AND the final verify join — without the cut the band self-join
     # (the expensive stage) would run twice; candidates are
     # band-bounded, so the materialization is small by construction
-    cand = (
-        a.join(b, (F.col("a.band") == F.col("b.band"))
-               & (F.col("a.bucket") == F.col("b.bucket"))
-               & (F.col("a.doc") < F.col("b.doc")))
-        .select(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    return _verify_jaccard(cand.localCheckpoint(eager=True), sh, threshold)
 
-    # verify candidates with exact shingle-set jaccard (no false
-    # positives).  Build shingle SETS for CANDIDATE docs only — the
-    # full-corpus collect_set shuffled every doc's shingle strings
-    # through the aggregate even though the verify join immediately
-    # discarded all non-candidates; semi-joining the postings down to
-    # candidate docs first moves only the verified sliver (guide §2.3:
-    # shuffle fewer bytes — at 100 TB the candidate fraction of a
-    # healthy corpus is tiny, and it is band-bounded by construction)
+
+def _verify_jaccard(cand: DataFrame, sh: DataFrame,
+                    threshold: float) -> DataFrame:
+    """Candidate pairs (doc_a, doc_b) whose exact shingle-set Jaccard
+    over ``sh`` (doc, shingle) is >= ``threshold``, as (doc_a, doc_b,
+    jaccard)."""
+    # Build shingle SETS for CANDIDATE docs only — the full-corpus
+    # collect_set shuffled every doc's shingle strings through the
+    # aggregate even though the verify join immediately discarded all
+    # non-candidates; semi-joining the postings down to candidate docs
+    # first moves only the verified sliver (guide §2.3: shuffle fewer
+    # bytes — at 100 TB the candidate fraction of a healthy corpus is
+    # tiny, and it is band-bounded by construction)
     cand_docs = (
         cand.select(F.explode(F.array("doc_a", "doc_b")).alias("doc"))
         .distinct()
@@ -583,125 +611,21 @@ def hamming_band_pairs(fps: DataFrame, bits: int,
     way.  Near-unique fingerprint spaces (text SimHash) should keep
     the default: the value table would be corpus-sized and the
     expansion joins pure overhead."""
-    if by_value:
-        return _hamming_band_pairs_by_value(
-            fps, bits, max_hamming, group_col)
-    n_chunks = max_hamming + 1
-    base_w = bits // n_chunks
-    widths = [base_w + (1 if c < bits % n_chunks else 0)
-              for c in range(n_chunks)]
-    offsets = [sum(widths[:c]) for c in range(n_chunks)]
+    if not by_value:
+        return _band_join(fps, "doc", bits, max_hamming, group_col)
     extra = [group_col] if group_col else []
-    chunks = fps.select(
-        "doc", "fp", *extra,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(c).alias("chunk"),
-                        F.shiftright(F.col("fp"), offsets[c])
-                        .bitwiseAND(F.lit((1 << widths[c]) - 1))
-                        .alias("key"),
-                    )
-                    for c in range(n_chunks)
-                ]
-            )
-        ).alias("ck"),
-    ).select("doc", "fp", *extra, F.col("ck.chunk").alias("chunk"),
-             F.col("ck.key").alias("key"))
-    # rename per side instead of alias(): a self-join over an alias
-    # pair can resolve a.chunk == b.chunk to the SAME attribute id
-    # (Spark warns "trivially true equals") and silently drop the
-    # chunk key from the join — output stays exact (the hamming
-    # filter guarantees it) but candidates then collide across ALL
-    # chunks, n_chunks x the intended work
-    a = chunks.select(F.col("doc").alias("doc_a"),
-                      F.col("fp").alias("fp_a"), *extra, "chunk", "key")
-    b_cols = [F.col("doc").alias("doc_b"), F.col("fp").alias("fp_b"),
-              F.col("chunk").alias("chunk_b"), F.col("key").alias("key_b")]
-    if group_col:
-        b_cols.append(F.col(group_col).alias("_grp_b"))
-    b = chunks.select(*b_cols)
-    cond = ((F.col("chunk") == F.col("chunk_b"))
-            & (F.col("key") == F.col("key_b"))
-            & (F.col("doc_a") < F.col("doc_b")))
-    if group_col:
-        cond = cond & (F.col(group_col) == F.col("_grp_b"))
-    ham = F.bit_count(F.col("fp_a").bitwiseXOR(F.col("fp_b")))
-    return (
-        a.join(b, cond)
-        .filter(ham <= max_hamming)
-        .select(*extra, "doc_a", "doc_b",
-                ham.cast("bigint").alias("hamming"))
-        .distinct()
-    )
-
-
-def _hamming_band_pairs_by_value(fps: DataFrame, bits: int,
-                                 max_hamming: int,
-                                 group_col: "str | None") -> DataFrame:
-    """:func:`hamming_band_pairs` with the band join run at
-    fingerprint-VALUE granularity (see its ``by_value`` doc).  Two
-    branches, unioned:
-
-    - cross-value pairs: banded self-join over the distinct (fp[,
-      group]) table (fp_a < fp_b orders each unordered value pair
-      once), broadcast back onto the doc table twice — each qualifying
-      doc pair materializes exactly once, ordered by least/greatest;
-    - same-value pairs (hamming 0): a plain equi-self-join on fp[,
-      group] with doc_a < doc_b — the exact-duplicate expansion never
-      touches the band machinery.
-
-    The branches are disjoint (fp_a < fp_b vs fp_a = fp_b) and each is
-    duplicate-free given one row per (doc[, group]), so no trailing
-    distinct is needed."""
-    n_chunks = max_hamming + 1
-    base_w = bits // n_chunks
-    widths = [base_w + (1 if c < bits % n_chunks else 0)
-              for c in range(n_chunks)]
-    offsets = [sum(widths[:c]) for c in range(n_chunks)]
-    extra = [group_col] if group_col else []
-    vals = fps.select("fp", *extra).distinct()
-    vchunks = vals.select(
-        "fp", *extra,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(c).alias("chunk"),
-                        F.shiftright(F.col("fp"), offsets[c])
-                        .bitwiseAND(F.lit((1 << widths[c]) - 1))
-                        .alias("key"),
-                    )
-                    for c in range(n_chunks)
-                ]
-            )
-        ).alias("ck"),
-    ).select("fp", *extra, F.col("ck.chunk").alias("chunk"),
-             F.col("ck.key").alias("key"))
-    # per-side renames, not alias() — the self-join attribute-id trap
-    # documented in hamming_band_pairs
-    va = vchunks.select(F.col("fp").alias("fp_a"), *extra,
-                        "chunk", "key")
-    vb_cols = [F.col("fp").alias("fp_b"),
-               F.col("chunk").alias("chunk_b"),
-               F.col("key").alias("key_b")]
-    if group_col:
-        vb_cols.append(F.col(group_col).alias("_grp_b"))
-    vb = vchunks.select(*vb_cols)
-    vcond = ((F.col("chunk") == F.col("chunk_b"))
-             & (F.col("key") == F.col("key_b"))
-             & (F.col("fp_a") < F.col("fp_b")))
-    if group_col:
-        vcond = vcond & (F.col(group_col) == F.col("_grp_b"))
-    vham = F.bit_count(F.col("fp_a").bitwiseXOR(F.col("fp_b")))
-    vpairs = (
-        va.join(vb, vcond)
-        .filter(vham <= max_hamming)
-        .select(*extra, "fp_a", "fp_b",
-                vham.cast("bigint").alias("hamming"))
-        .distinct()
-    )
+    # by value, two disjoint branches, each duplicate-free given one
+    # row per (doc[, group]), so no trailing distinct is needed:
+    # - cross-value pairs: the band join over the distinct (fp[,
+    #   group]) table (fp_a < fp_b orders each unordered value pair
+    #   once), broadcast back onto the doc table twice — each
+    #   qualifying doc pair materializes once, ordered by
+    #   least/greatest;
+    # - same-value pairs (hamming 0): a plain equi-self-join on fp[,
+    #   group] with doc_a < doc_b — the exact-duplicate expansion never
+    #   touches the band machinery.
+    vpairs = _band_join(fps.select("fp", *extra).distinct(), "fp", bits,
+                        max_hamming, group_col)
     left = fps.select(F.col("doc").alias("_da"),
                       F.col("fp").alias("fp_a"), *extra)
     right_cols = [F.col("doc").alias("_db"),
@@ -732,6 +656,64 @@ def _hamming_band_pairs_by_value(fps: DataFrame, bits: int,
                 F.lit(0).cast("bigint").alias("hamming"))
     )
     return cross.unionByName(same)
+
+
+def _band_join(t: DataFrame, key: str, bits: int, max_hamming: int,
+               group_col: "str | None") -> DataFrame:
+    """The pigeonhole chunk self-join of :func:`hamming_band_pairs`
+    over ``t`` (``key``, fp[, group]), ``key`` either ``doc`` or ``fp``
+    itself.  Returns distinct ([group,] key_a, key_b, hamming) with
+    key_a < key_b and hamming <= ``max_hamming``."""
+    n_chunks = max_hamming + 1
+    base_w = bits // n_chunks
+    widths = [base_w + (1 if c < bits % n_chunks else 0)
+              for c in range(n_chunks)]
+    offsets = [sum(widths[:c]) for c in range(n_chunks)]
+    extra = [group_col] if group_col else []
+    cols = [key] if key == "fp" else [key, "fp"]
+    chunks = t.select(
+        *cols, *extra,
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(c).alias("chunk"),
+                        F.shiftright(F.col("fp"), offsets[c])
+                        .bitwiseAND(F.lit((1 << widths[c]) - 1))
+                        .alias("key"),
+                    )
+                    for c in range(n_chunks)
+                ]
+            )
+        ).alias("ck"),
+    ).select(*cols, *extra, F.col("ck.chunk").alias("chunk"),
+             F.col("ck.key").alias("key"))
+    # rename per side instead of alias(): a self-join over an alias
+    # pair can resolve a.chunk == b.chunk to the SAME attribute id
+    # (Spark warns "trivially true equals") and silently drop the
+    # chunk key from the join — output stays exact (the hamming
+    # filter guarantees it) but candidates then collide across ALL
+    # chunks, n_chunks x the intended work
+    a = chunks.select(*[F.col(c).alias(f"{c}_a") for c in cols], *extra,
+                      "chunk", "key")
+    b_cols = [*[F.col(c).alias(f"{c}_b") for c in cols],
+              F.col("chunk").alias("chunk_b"), F.col("key").alias("key_b")]
+    if group_col:
+        b_cols.append(F.col(group_col).alias("_grp_b"))
+    b = chunks.select(*b_cols)
+    cond = ((F.col("chunk") == F.col("chunk_b"))
+            & (F.col("key") == F.col("key_b"))
+            & (F.col(f"{key}_a") < F.col(f"{key}_b")))
+    if group_col:
+        cond = cond & (F.col(group_col) == F.col("_grp_b"))
+    ham = F.bit_count(F.col("fp_a").bitwiseXOR(F.col("fp_b")))
+    return (
+        a.join(b, cond)
+        .filter(ham <= max_hamming)
+        .select(*extra, f"{key}_a", f"{key}_b",
+                ham.cast("bigint").alias("hamming"))
+        .distinct()
+    )
 
 
 def hamming_band_selfcheck(fps: DataFrame, bits: int, max_hamming: int,
@@ -967,17 +949,6 @@ def overlap_pair_signals(
     direction qualifying emits the (doc_a < doc_b) pair.  Returns
     (doc_a, doc_b) for the multi-signal union.
     """
-    sh = shingles(df, id_col, text_col, n).localCheckpoint(eager=True)
-    sizes = sh.groupBy("doc").agg(F.count(F.lit(1)).alias("n_sh"))
-    a, b = sh.alias("a"), sh.alias("b")
-    common = (
-        a.join(b, (F.col("a.shingle") == F.col("b.shingle"))
-               & (F.col("a.doc") < F.col("b.doc")))
-        .groupBy(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("common"))
-    )
-    sa = sizes.select(F.col("doc").alias("doc_a"), F.col("n_sh").alias("na"))
-    sb = sizes.select(F.col("doc").alias("doc_b"), F.col("n_sh").alias("nb"))
     c = F.col("common") * F.lit(1.0)
     jac = c / (F.col("na") + F.col("nb") - F.col("common"))
     keep = (
@@ -986,7 +957,7 @@ def overlap_pair_signals(
         | (c / F.col("nb") >= containment_threshold)
     )
     return (
-        common.join(sa, "doc_a").join(sb, "doc_b")
+        _cooccurrence(df, id_col, text_col, n, None)
         .filter(keep)
         .select("doc_a", "doc_b")
     )
@@ -1029,12 +1000,7 @@ def tf_cosine_pairs(
         .agg(F.count(F.lit(1)).cast("bigint").alias("tf"))
         .localCheckpoint(eager=True)
     )
-    if max_doc_freq is not None:
-        hot = (
-            tf.groupBy("gram").agg(F.count(F.lit(1)).alias("df"))
-            .filter(F.col("df") > max_doc_freq).select("gram")
-        )
-        tf = tf.join(F.broadcast(hot), "gram", "left_anti")
+    tf = _drop_hot(tf, "gram", max_doc_freq)
     norms = tf.groupBy("doc").agg(F.sum(F.col("tf") * F.col("tf")).alias("ss"))
     a, b = tf.alias("a"), tf.alias("b")
     dots = (
@@ -1050,105 +1016,6 @@ def tf_cosine_pairs(
         dots.join(na, "doc_a").join(nb, "doc_b")
         .filter(cos >= threshold)
         .select("doc_a", "doc_b", F.round(cos, 6).alias("cosine_tf"))
-    )
-
-
-def minhash_lsh_pairs_portable(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int = 5,
-    num_hashes: int = 24,
-    rows_per_band: int = 2,
-    threshold: float = 0.5,
-    verify: bool = False,
-) -> DataFrame:
-    """MinHash + LSH candidate pairs with PORTABLE hashing: 60-bit
-    md5-prefix hashes (``conv(substr(md5(i || ':' || shingle), 1,
-    15), 16, 10)``) that any SQL engine reproduces bit-for-bit — the
-    oracle-able sibling of :func:`minhash_lsh_pairs` (whose xxhash64
-    is JVM-only), and the variant whose ``rows_per_band > 1``
-    candidate recall is genuinely < 1, so LSH quality can be AUDITED
-    against the exact pair set.
-
-    Bands of ``rows_per_band`` consecutive minhashes join directly on
-    their value tuple (no second-level bucket hash needed — the tuple
-    IS the key).  By default candidates are returned UNVERIFIED
-    (doc_a < doc_b, distinct); with ``verify=True`` each candidate is
-    checked against exact shingle-set Jaccard >= ``threshold`` (no
-    false positives — output is exactly {band-colliding pairs} ∩
-    {Jaccard >= t}, a deterministic set any SQL engine reproduces,
-    which is what makes the r>1 banding knob value-oracle-able).
-    Same posting-list shape as the fast path: tall (doc, hash-index,
-    minhash) aggregate, band pivot, self-join on band key — never the
-    n² pair space."""
-    if num_hashes % rows_per_band:
-        raise ValueError("num_hashes must be divisible by rows_per_band")
-    sh = shingles(df, id_col, text_col, n)
-    if verify:
-        # shingles feed both the band build and the verify join
-        sh = sh.localCheckpoint(eager=True)
-    hash_structs = F.array(*[
-        F.struct(
-            F.lit(i).alias("i"),
-            F.expr(
-                f"conv(substr(md5(concat('{i}', ':', shingle)), 1, 15),"
-                " 16, 10)"
-            ).cast("bigint").alias("h"),
-        )
-        for i in range(num_hashes)
-    ])
-    mh = (
-        sh.select("doc", F.explode(hash_structs).alias("x"))
-        .groupBy("doc", F.col("x.i").alias("i"))
-        .agg(F.min("x.h").alias("h"))
-    )
-    bands = mh.groupBy(
-        "doc", (F.col("i") / rows_per_band).cast("int").alias("band")
-    ).agg(*[
-        F.min(F.when(F.col("i") % rows_per_band == r, F.col("h")))
-        .alias(f"h{r}")
-        for r in range(rows_per_band)
-    ])
-    a, b = bands.alias("a"), bands.alias("b")
-    key = [F.col(f"a.h{r}") == F.col(f"b.h{r}")
-           for r in range(rows_per_band)]
-    cond = (F.col("a.band") == F.col("b.band"))
-    for k in key:
-        cond = cond & k
-    cand = (
-        a.join(b, cond & (F.col("a.doc") < F.col("b.doc")))
-        .select(F.col("a.doc").alias("doc_a"),
-                F.col("b.doc").alias("doc_b"))
-        .distinct()
-    )
-    if not verify:
-        return cand
-    # exact-Jaccard verification of candidates only (same tail as
-    # minhash_lsh_pairs): candidate count is band-bounded, never n².
-    # cand feeds the candidate-doc projection AND the verify join —
-    # checkpoint so the band self-join runs once, and build shingle
-    # sets for CANDIDATE docs only (the full-corpus collect_set
-    # shuffled every doc's shingles; see minhash_lsh_pairs)
-    cand = cand.localCheckpoint(eager=True)
-    cand_docs = (
-        cand.select(F.explode(F.array("doc_a", "doc_b")).alias("doc"))
-        .distinct()
-    )
-    sets_a = (
-        sh.join(cand_docs, "doc", "semi")
-        .groupBy("doc").agg(F.collect_set("shingle").alias("set_a"))
-    )
-    sets_b = sets_a.select(F.col("doc").alias("doc_b_key"),
-                           F.col("set_a").alias("set_b"))
-    inter = F.size(F.array_intersect("set_a", "set_b"))
-    union = F.size("set_a") + F.size("set_b") - inter
-    jac = inter * F.lit(1.0) / union
-    return (
-        cand.join(sets_a.withColumnRenamed("doc", "doc_a"), "doc_a")
-        .join(sets_b, F.col("doc_b") == F.col("doc_b_key"))
-        .filter(jac >= threshold)
-        .select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
     )
 
 

@@ -27,12 +27,8 @@ from ..sources.catalog import load_table
 from ..sources.catalog import ensure_session_confs
 
 
-def _t(spark, sf_dir, name):
-    return load_table(spark, sf_dir, name)
-
-
 def _view(spark, sf_dir, name):
-    df = _t(spark, sf_dir, name)
+    df = load_table(spark, sf_dir, name)
     df.createOrReplaceTempView(name)
     return df
 
@@ -124,7 +120,7 @@ GROUP BY 1
 def pivot_status_by_year(spark, sf_dir):
     """Pivot (explicit value list for a deterministic schema — at scale
     never let pivot infer its columns with an extra pass)."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return (
         o.groupBy(F.year("o_orderdate").cast("bigint").alias("order_year"))
         .pivot("o_orderstatus", ["F", "O", "P"])
@@ -149,7 +145,7 @@ GROUP BY l_returnflag
 def percentiles_exact(spark, sf_dir):
     """Exact interpolated percentiles (Spark ``percentile`` ==
     DuckDB ``quantile_cont``, both 1-based linear interpolation)."""
-    l = _t(spark, sf_dir, "lineitem")
+    l = load_table(spark, sf_dir, "lineitem")
     return l.groupBy("l_returnflag").agg(
         F.round(F.percentile("l_extendedprice", F.lit(0.5)), 6).alias("p50"),
         F.round(F.percentile("l_extendedprice", F.lit(0.9)), 6).alias("p90"),
@@ -177,7 +173,7 @@ def approx_distinct_parts(spark, sf_dir):
     rides along as the audit column.  Same scale story as the native
     HLL++: one (group, bucket) MAX aggregate, map-side combined,
     constant 64-register state per group."""
-    l = _t(spark, sf_dir, "lineitem")
+    l = load_table(spark, sf_dir, "lineitem")
     hll = hll_registers(l, "l_returnflag", "l_partkey")
     exact = l.groupBy(F.col("l_returnflag").alias("grp")).agg(
         F.countDistinct("l_partkey").cast("bigint").alias("n_exact"))
@@ -239,7 +235,7 @@ def approx_distinct_mergeable(spark, sf_dir):
     bit-for-bit, the property that makes the rollup valid at 100 TB
     where the monthly sketches are persisted and coarser rollups are
     register merges, not scans."""
-    l = _t(spark, sf_dir, "lineitem")
+    l = load_table(spark, sf_dir, "lineitem")
     src = l.select(
         F.struct(
             F.col("l_returnflag").alias("flag"),
@@ -318,7 +314,7 @@ def approx_percentiles(spark, sf_dir):
     exact percentiles (percentiles_exact, the exact twin) need a full
     value-domain sort.  Prices are binned in exact DECIMAL-derived
     integer cents so both engines bin identically."""
-    l = _t(spark, sf_dir, "lineitem")
+    l = load_table(spark, sf_dir, "lineitem")
     cents = l.select(
         F.col("l_returnflag"),
         F.expr("CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100"

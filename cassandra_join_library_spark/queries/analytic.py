@@ -18,10 +18,6 @@ from ..registry import register
 from ..sources.catalog import load_table
 
 
-def _t(spark, sf_dir, name):
-    return load_table(spark, sf_dir, name)
-
-
 @register("window_ntile_dist", oracle="""
 SELECT c_custkey,
        CAST(ntile(4) OVER w AS BIGINT) AS quartile,
@@ -35,7 +31,7 @@ def window_ntile_dist(spark, sf_dir):
     per market segment.  The ORDER BY includes the key as a tiebreak so
     every row has a unique rank — without it cume_dist over tied
     acctbals would still agree, but ntile's tie placement would not."""
-    c = _t(spark, sf_dir, "customer")
+    c = load_table(spark, sf_dir, "customer")
     w = Window.partitionBy("c_mktsegment").orderBy("c_acctbal", "c_custkey")
     return c.select(
         "c_custkey",
@@ -57,7 +53,7 @@ def window_first_last(spark, sf_dir):
     """first_value/last_value with an explicit full frame — the default
     frame stops at CURRENT ROW, which makes last_value a no-op; the
     explicit ROWS UNBOUNDED frame is the portable (and useful) form."""
-    c = _t(spark, sf_dir, "customer")
+    c = load_table(spark, sf_dir, "customer")
     w = (
         Window.partitionBy("c_mktsegment")
         .orderBy("c_acctbal", "c_custkey")
@@ -83,7 +79,7 @@ def array_token_ops(spark, sf_dir):
     """Array-function surface over tokenized text: size, distinct
     count, slice, containment — all JVM collection expressions (the
     building blocks the dedup/text operators compose)."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     toks = F.split("text", " ")
     return d.filter(F.col("doc_id") % 7 == 0).select(
         "doc_id",
@@ -115,7 +111,7 @@ def layout_zorder(spark, sf_dir):
     evaluates the identical bit-interleave formula in SQL."""
     from ..operators.layout import zorder_value
 
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     day = F.floor(F.unix_timestamp("o_orderdate") / 86400).cast("bigint")
     return o.select(
         "o_orderkey",
@@ -141,9 +137,9 @@ def bloom_prefilter_join(spark, sf_dir):
     oracle) while the fact shuffle carries only ~matching rows."""
     from ..operators.bloom import bloom_prefilter
 
-    l = _t(spark, sf_dir, "lineitem").select(
+    l = load_table(spark, sf_dir, "lineitem").select(
         "l_suppkey", "l_extendedprice", "l_discount")
-    s = _t(spark, sf_dir, "supplier").filter(F.col("s_nationkey") < 5) \
+    s = load_table(spark, sf_dir, "supplier").filter(F.col("s_nationkey") < 5) \
         .select("s_suppkey")
     pruned = bloom_prefilter(l, "l_suppkey", s, "s_suppkey")
     return (
@@ -173,7 +169,7 @@ def value_histogram(spark, sf_dir):
     extra pass and make bins non-reproducible across runs/appends).
     Partial-aggregate shape: shuffle carries one row per (partition,
     bin)."""
-    l = _t(spark, sf_dir, "lineitem")
+    l = load_table(spark, sf_dir, "lineitem")
     bin_ = F.least(F.floor(F.col("l_extendedprice") / 5000.0), F.lit(24)) \
         .cast("bigint")
     return (
@@ -202,9 +198,9 @@ def join_skew_salted(spark, sf_dir):
     scatter without hashing every column."""
     from ..operators.skew import salted_join
 
-    l = _t(spark, sf_dir, "lineitem").select(
+    l = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber", "l_partkey", "l_quantity")
-    p = _t(spark, sf_dir, "part").filter(F.col("p_size") <= 25) \
+    p = load_table(spark, sf_dir, "part").filter(F.col("p_size") <= 25) \
         .select("p_partkey", "p_name", "p_brand")
     out = salted_join(
         l.withColumn("_sk", F.concat_ws("|", "l_orderkey", "l_linenumber")),
@@ -224,8 +220,8 @@ def join_cross(spark, sf_dir):
     with no predicate, ``cassandra_joinlib/nested_join.py`` shape) —
     Spark requires the explicit crossJoin call, and the planner uses
     BroadcastNestedLoopJoin when one side is small."""
-    r = _t(spark, sf_dir, "region").select("r_name")
-    n = _t(spark, sf_dir, "nation").select("n_name")
+    r = load_table(spark, sf_dir, "region").select("r_name")
+    n = load_table(spark, sf_dir, "nation").select("n_name")
     return r.crossJoin(n)
 
 
@@ -238,7 +234,7 @@ def setop_except_all(spark, sf_dir):
     """Multiset difference — keeps surplus duplicate counts, unlike
     EXCEPT (DISTINCT); the pattern behind incremental-corpus
     subtraction (remove one occurrence per matched row)."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     a = o.filter(F.col("o_orderstatus") == "O").select("o_orderpriority")
     b = o.filter(F.col("o_orderstatus") == "F").select("o_orderpriority")
     return a.exceptAll(b)
@@ -251,7 +247,7 @@ SELECT o_orderpriority FROM orders WHERE o_orderstatus = 'F'
 """)
 def setop_intersect_all(spark, sf_dir):
     """Multiset intersection (min of per-side duplicate counts)."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     a = o.filter(F.col("o_orderstatus") == "O").select("o_orderpriority")
     b = o.filter(F.col("o_orderstatus") == "F").select("o_orderpriority")
     return a.intersectAll(b)
@@ -280,7 +276,7 @@ def stratified_sample(spark, sf_dir):
     window is the oracle."""
     from ..operators.skew import stratified_topk
 
-    c = _t(spark, sf_dir, "customer")
+    c = load_table(spark, sf_dir, "customer")
     out = stratified_topk(
         c,
         "c_mktsegment",
@@ -303,7 +299,7 @@ def window_ratio_to_report(spark, sf_dir):
     spend — an unordered window aggregate (no sort inside partitions,
     one hash shuffle on the partition key).  The denominator sums
     decimal-exactly so both engines divide identical doubles."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey")
     denom = F.sum(F.col("o_totalprice").cast("decimal(18,6)")).over(w).cast("double")
     return o.select(
@@ -330,7 +326,7 @@ def argmax_per_group(spark, sf_dir):
     top-1 per map partition would push this map-side at scale; the
     rank-and-filter form is what Catalyst already optimizes to a
     WindowGroupLimit (top-k pushdown), no full sort of each group."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy(
         F.col("o_totalprice").desc(), F.col("o_orderkey")
     )
@@ -367,7 +363,7 @@ def winsorized_stats(spark, sf_dir):
     for 100 TB quality filtering: the expensive pass is a plain
     partial aggregate; the bounds join is broadcast (no fact shuffle
     beyond the group agg)."""
-    l = _t(spark, sf_dir, "lineitem")
+    l = load_table(spark, sf_dir, "lineitem")
     bounds = l.groupBy("l_returnflag").agg(
         F.percentile("l_extendedprice", F.lit(0.05)).alias("lo"),
         F.percentile("l_extendedprice", F.lit(0.95)).alias("hi"),
@@ -403,7 +399,7 @@ def weighted_sample(spark, sf_dir):
     the sample is engine- and rerun-reproducible (the PPS analog of
     deterministic_sample).  The max is a scalar broadcast; the filter
     is map-only."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     mx = o.agg(F.max("o_totalprice").alias("mx"))
     u = (
         F.conv(F.substring(F.md5(F.col("o_orderkey").cast("string")), 1, 15),

@@ -14,10 +14,6 @@ from ..registry import register
 from ..sources.catalog import load_table
 
 
-def _docs(spark, sf_dir):
-    return load_table(spark, sf_dir, "documents")
-
-
 @register("tfidf_top_terms", oracle="""
 WITH tok AS (
   SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents
@@ -41,7 +37,8 @@ SELECT doc_id, term, tf, df, tfidf, rk FROM r WHERE rk <= 5
 def tfidf_top_terms(spark, sf_dir):
     """Top-5 TF-IDF terms per document (smoothed idf, rounded-then-
     ranked so ordering is engine-portable)."""
-    return C.tfidf_top_terms(_docs(spark, sf_dir), "doc_id", "text", k=5)
+    return C.tfidf_top_terms(
+        load_table(spark, sf_dir, "documents"), "doc_id", "text", k=5)
 
 
 @register("corpus_split", oracle="""
@@ -59,7 +56,7 @@ def corpus_split(spark, sf_dir):
     """Deterministic stratified train/test split (hash-mod buckets —
     reproducible across engines, runs, and appends; map-only)."""
     return C.stratified_split(
-        _docs(spark, sf_dir), "doc_id", "lang", test_per_mille=100
+        load_table(spark, sf_dir, "documents"), "doc_id", "lang", test_per_mille=100
     )
 
 
@@ -80,7 +77,7 @@ def corpus_quality_quantile(spark, sf_dir):
     """Keep the longest half of each language (percent_rank over a
     total order — deterministic per-group quantile filter)."""
     return C.quality_quantile_filter(
-        _docs(spark, sf_dir), "doc_id", "text", "lang", keep_frac=0.5
+        load_table(spark, sf_dir, "documents"), "doc_id", "text", "lang", keep_frac=0.5
     )
 
 
@@ -112,7 +109,7 @@ def corpus_contamination(spark, sf_dir):
     """Benchmark decontamination: 3-gram overlap of every document
     against a deterministic benchmark subset (doc_id % 20 = 0),
     inverted-index join — never n²."""
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     bench = docs.filter(F.col("doc_id") % 20 == 0)
     return C.contamination_overlap(docs, "doc_id", "text", bench, n=3)
 
@@ -154,7 +151,7 @@ def corpus_contamination_capped(spark, sf_dir):
     exactly like Jaccard's ``max_doc_freq``.  Load-bearing at sf0.01
     (cross-bench-doc shingles exist, so the pair set differs from the
     uncapped query); denominators stay uncapped by design."""
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     bench = docs.filter(F.col("doc_id") % 20 == 0)
     return C.contamination_overlap(docs, "doc_id", "text", bench, n=3,
                                    max_bench_doc_freq=1)
@@ -176,7 +173,8 @@ FROM ag
 def corpus_stats(spark, sf_dir):
     """Corpus composition report per (source, language) — partial-
     aggregate shape, the cheapest full-corpus pass."""
-    return C.corpus_stats(_docs(spark, sf_dir), "text", ["source", "lang"])
+    return C.corpus_stats(
+        load_table(spark, sf_dir, "documents"), "text", ["source", "lang"])
 
 
 @register("corpus_chunks", oracle="""
@@ -197,7 +195,7 @@ FROM s
 def corpus_chunks(spark, sf_dir):
     """Fixed-size overlapping character chunks (size 200 / stride 150)
     — sequence-window preparation; map-only row expansion."""
-    return C.chunk_documents(_docs(spark, sf_dir), "doc_id", "text",
+    return C.chunk_documents(load_table(spark, sf_dir, "documents"), "doc_id", "text",
                              size=200, stride=150)
 
 
@@ -217,7 +215,8 @@ def corpus_mixture(spark, sf_dir):
     """Temperature-0.5 data-mixture rebalancing: deterministically
     downsample each source by sqrt(min_count/count) so small sources
     stop being drowned — one map-side filter pass."""
-    return C.mixture_rebalance(_docs(spark, sf_dir), "doc_id", "source")
+    return C.mixture_rebalance(
+        load_table(spark, sf_dir, "documents"), "doc_id", "source")
 
 
 @register("corpus_pack_sequences", oracle="""
@@ -249,7 +248,7 @@ def corpus_pack_sequences(spark, sf_dir):
     """Pack document chunks into 512-token training sequences by
     global offset — two-level distributed prefix sum, oracle-checked
     against the flat window-sum definition."""
-    chunks = C.chunk_documents(_docs(spark, sf_dir), "doc_id", "text",
+    chunks = C.chunk_documents(load_table(spark, sf_dir, "documents"), "doc_id", "text",
                                size=200, stride=150)
     return C.pack_sequences(chunks, budget_tokens=512)
 
@@ -344,7 +343,7 @@ def corpus_e2e_pipeline(spark, sf_dir):
     identical pipeline in SQL CTEs."""
     from pyspark.sql import Window
 
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     kept = C.quality_quantile_filter(docs, "doc_id", "text", "lang",
                                      keep_frac=0.5)
     surv = docs.join(kept.select("doc_id"), "doc_id", "semi")
@@ -423,7 +422,8 @@ def corpus_shuffle_shards(spark, sf_dir):
     """Deterministic training-order shuffle: hash-route documents to
     64 shards, order within each shard (parallel per-shard sorts — no
     global sort at any scale)."""
-    return C.shuffle_shards(_docs(spark, sf_dir), "doc_id", n_shards=64)
+    return C.shuffle_shards(
+        load_table(spark, sf_dir, "documents"), "doc_id", n_shards=64)
 
 
 def _kmeans_oracle():

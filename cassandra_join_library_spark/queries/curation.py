@@ -22,10 +22,6 @@ from ..registry import register
 from ..sources.catalog import load_table, spread_input
 
 
-def _docs(spark, sf_dir):
-    return load_table(spark, sf_dir, "documents")
-
-
 @register("dedup_survivors", oracle="""
 WITH RECURSIVE words AS (
   SELECT doc_id, string_split(text, ' ') AS w FROM documents
@@ -77,7 +73,7 @@ def dedup_survivors(spark, sf_dir):
     on lowest id) per cluster, singletons pass through.  The op a
     pipeline actually runs after near-dup detection; oracle recomputes
     clusters via a recursive transitive-closure CTE."""
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     pairs = D.jaccard_pairs_exact(docs, "doc_id", "text", n=5, threshold=0.5)
     clusters = D.duplicate_clusters(pairs)
     surv = D.dedup_survivors(
@@ -99,7 +95,7 @@ def corpus_source_cap(spark, sf_dir):
     """Per-source quota cap: at most 20 docs per source, preferring
     the longest (deterministic tiebreak) — the anti-domination knob of
     every crawl pipeline; WindowGroupLimit keeps it skew-safe."""
-    docs = _docs(spark, sf_dir).select("doc_id", "source", "n_chars")
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "source", "n_chars")
     return C.cap_per_group(docs, "source", "n_chars", "doc_id", k=20)
 
 
@@ -147,7 +143,7 @@ def corpus_bm25_topk(spark, sf_dir):
     per-term contributions rounded then DECIMAL-summed so the score is
     order-independent and oracle-exact."""
     return C.bm25_search(
-        _docs(spark, sf_dir), "doc_id", "text",
+        load_table(spark, sf_dir, "documents"), "doc_id", "text",
         query_terms=["join", "hash", "vector", "spark"],
         k1=1.2, b=0.75, k=20,
     )
@@ -211,7 +207,7 @@ def dedup_near_exact(spark, sf_dir):
     uppercased, punctuation-injected variant — normalization provably
     collapses every (original, variant) pair into one group, which the
     oracle reproduces value-for-value (digest included)."""
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     variants = docs.select(
         (F.col("doc_id") + 1000000).alias("doc_id"),
         F.concat(F.upper("text"), F.lit(" !! ")).alias("text"),
@@ -243,7 +239,8 @@ def text_ngram_novelty(spark, sf_dir):
     """Per-doc 5-gram novelty (fraction of shingles unique to the doc)
     — the content-originality signal; posting-list shape, exact BIGINT
     counts, ratio rounded to 6 dp."""
-    return D.ngram_novelty(_docs(spark, sf_dir), "doc_id", "text", n=5)
+    return D.ngram_novelty(
+        load_table(spark, sf_dir, "documents"), "doc_id", "text", n=5)
 
 
 @register("ann_hard_negatives", oracle="""
@@ -318,7 +315,7 @@ def corpus_global_index(spark, sf_dir):
     per-bucket rank + offset join, NEVER a global sort or
     unpartitioned data-sized window; the oracle's row_number() over
     the total order must match exactly."""
-    docs = _docs(spark, sf_dir).select("doc_id", "n_chars")
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "n_chars")
     return C.global_row_numbers(
         docs,
         order_cols=[F.desc("n_chars"), F.asc("doc_id")],
@@ -406,7 +403,7 @@ def dedup_multi_signal(spark, sf_dir):
     dedup_jaccard_exact / dedup_containment / dedup_simhash_md5), and
     the slice keeps the three-detector + transitive-closure gate cost
     inside the correctness-gate time budget."""
-    docs = _docs(spark, sf_dir).filter(F.col("doc_id") < 250)
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 250)
     # Jaccard + containment share one posting-list pass (the expensive
     # stages would otherwise run twice); SimHash is the third signal
     overlap = D.overlap_pair_signals(
@@ -488,7 +485,7 @@ def corpus_curation_report(spark, sf_dir):
     hands to reviewers.  Three doc_id-keyed left joins over operators
     that are each individually graded; co-partitioned on the join key,
     so the composition adds no new wide shuffles beyond its parts."""
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     quality = T.quality_scores(docs, "doc_id", "text").select(
         "doc_id", "n_tokens", "uniq_ratio", "stopword_ratio", "is_quality"
     )
@@ -513,7 +510,7 @@ def corpus_curation_report(spark, sf_dir):
 
 # --- at-scale knob variants of the dedup pair generators.  Both were
 # rows-only until round 13; they now run the PORTABLE md5 hash paths
-# (operators/dedup.py minhash_lsh_pairs_portable / simhash_pairs
+# (operators/dedup.py minhash_lsh_pairs / simhash_pairs, both
 # portable=True) so the knob semantics themselves — r=2 banding,
 # Hamming<=2 pigeonhole — carry full value oracles.  The xxhash64 JVM
 # fast paths remain the operators' defaults for production use. ---
@@ -573,9 +570,9 @@ def dedup_minhash_lsh_r2(spark, sf_dir):
     posting-list Jaccard restricted to candidate pairs.  Subset +
     recall floor vs the exact pair set asserted in
     tests/test_dedup_edges.py."""
-    return D.minhash_lsh_pairs_portable(
-        _docs(spark, sf_dir), "doc_id", "text",
-        n=5, num_hashes=24, rows_per_band=2, threshold=0.5, verify=True)
+    return D.minhash_lsh_pairs(
+        load_table(spark, sf_dir, "documents"), "doc_id", "text",
+        n=5, num_hashes=24, rows_per_band=2, threshold=0.5, portable=True)
 
 
 @register("dedup_simhash", oracle="""
@@ -608,7 +605,7 @@ def dedup_simhash(spark, sf_dir):
     so the radius-2 semantics carry a full value oracle; the oracle
     recomputes fingerprints bit-by-bit and brute-forces pairs, while
     the Spark side stays pigeonhole-banded — never O(n²)."""
-    return D.simhash_pairs(_docs(spark, sf_dir), "doc_id", "text",
+    return D.simhash_pairs(load_table(spark, sf_dir, "documents"), "doc_id", "text",
                            max_hamming=2, portable=True)
 
 
@@ -633,7 +630,7 @@ def text_word_entropy(spark, sf_dir):
     """Per-doc unigram Shannon entropy (nats): gibberish/repetition
     signal; decimal-summed so the fold is order-independent and
     oracle-exact."""
-    return T.word_entropy(_docs(spark, sf_dir), "doc_id", "text")
+    return T.word_entropy(load_table(spark, sf_dir, "documents"), "doc_id", "text")
 
 
 @register("text_bigram_perplexity", oracle="""
@@ -667,7 +664,7 @@ def text_bigram_perplexity(spark, sf_dir):
     """Perplexity filtering: each doc scored under an add-one bigram
     LM trained on the corpus itself — keyed model joins, decimal-exact
     NLL fold, fully value-oracled."""
-    return T.bigram_perplexity(_docs(spark, sf_dir), "doc_id", "text")
+    return T.bigram_perplexity(load_table(spark, sf_dir, "documents"), "doc_id", "text")
 
 
 @register("events_value_outliers", oracle="""
@@ -731,7 +728,7 @@ LIMIT 50
 def corpus_pmi_collocations(spark, sf_dir):
     """Top-50 collocations by PMI (min count 5): exact counts,
     rounded-then-ranked score, TakeOrderedAndProject top-k."""
-    return C.pmi_collocations(_docs(spark, sf_dir), "doc_id", "text",
+    return C.pmi_collocations(load_table(spark, sf_dir, "documents"), "doc_id", "text",
                               min_count=5, k=50)
 
 
@@ -762,7 +759,7 @@ def corpus_snapshot_diff(spark, sf_dir):
     deterministically in-query: every 10th doc removed, every 7th
     edited, every 25th re-added under a new id) — digest-keyed FULL
     OUTER join, only the delta survives."""
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     v2 = (
         docs.filter(F.col("doc_id") % 10 != 0)
         .select(
@@ -853,7 +850,7 @@ def corpus_hybrid_rrf(spark, sf_dir):
     normalization; decimal-summed contributions, TakeOrdered top-20."""
     from pyspark.sql import Window
 
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     sparse = C.bm25_search(
         docs, "doc_id", "text",
         query_terms=["join", "hash", "vector", "spark"], k=100,
@@ -903,7 +900,7 @@ def text_pii_redact(spark, sf_dir):
     oracled."""
     from ..operators.profiling import pii_redact
 
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     injected = docs.select(
         "doc_id",
         F.when(
@@ -962,7 +959,7 @@ def mm_bmp_parse(spark, sf_dir):
     actual format parser, byte-for-byte oracled."""
     from ..operators import multimodal as M
 
-    docs = _docs(spark, sf_dir).select("doc_id")
+    docs = load_table(spark, sf_dir, "documents").select("doc_id")
     built = M.synthesize_bmp(docs, "doc_id")
     return M.parse_bmp_metadata(built, "doc_id", "payload")
 
@@ -1016,7 +1013,7 @@ def mm_wav_parse(spark, sf_dir):
     libraries, byte-for-byte oracled."""
     from ..operators import multimodal as M
 
-    docs = _docs(spark, sf_dir).select("doc_id")
+    docs = load_table(spark, sf_dir, "documents").select("doc_id")
     built = M.synthesize_wav(docs, "doc_id")
     return M.parse_wav_metadata(built, "doc_id", "payload")
 
@@ -1055,7 +1052,7 @@ def mm_png_parse(spark, sf_dir):
     oracled."""
     from ..operators import multimodal as M
 
-    docs = _docs(spark, sf_dir).select("doc_id")
+    docs = load_table(spark, sf_dir, "documents").select("doc_id")
     built = M.synthesize_png(docs, "doc_id")
     return M.parse_png_metadata(built, "doc_id", "payload")
 
@@ -1115,7 +1112,7 @@ def text_gopher_rules(spark, sf_dir):
     top-word fold is O(distinct·n) per doc — real corpora get this
     parallelism from file splits, the operator itself stays
     map-only)."""
-    docs = spread_input(_docs(spark, sf_dir))
+    docs = spread_input(load_table(spark, sf_dir, "documents"))
     return T.gopher_rules(docs, "doc_id", "text")
 
 
@@ -1224,7 +1221,7 @@ def corpus_token_budget_plan(spark, sf_dir):
     planning table a training-data mixer materializes before sampling.
     One tiny per-source aggregate + a one-row weight-total broadcast;
     exact to the oracle at every derived column."""
-    return C.token_budget_plan(_docs(spark, sf_dir), "doc_id", "text",
+    return C.token_budget_plan(load_table(spark, sf_dir, "documents"), "doc_id", "text",
                                "source", budget_tokens=100_000)
 
 
@@ -1304,7 +1301,7 @@ def corpus_curation_report_capped(spark, sf_dir):
     term when the uncapped report was measured at 5.2x per 10x data).
     Novelty already joins only df=1 shingles; quality is map-only.
     Same report schema, bounded joins all the way down."""
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     quality = T.quality_scores(docs, "doc_id", "text").select(
         "doc_id", "n_tokens", "uniq_ratio", "stopword_ratio", "is_quality"
     )
@@ -1372,7 +1369,7 @@ def text_c4_line_filter(spark, sf_dir):
     re-assembles the text, dropping docs with < 3 surviving lines.
     Construction, filtering, and the re-assembled bytes are all
     value-oracled."""
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     w = F.split(F.col("text"), " ")
     n_lines = F.ceil(F.size(w) / F.lit(12.0)).cast("bigint")
     lines0 = F.transform(

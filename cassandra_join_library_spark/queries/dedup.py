@@ -18,10 +18,6 @@ from ..sources.catalog import load_table
 from ..sources.catalog import ensure_session_confs
 
 
-def _docs(spark, sf_dir):
-    return load_table(spark, sf_dir, "documents")
-
-
 _JACCARD_ORACLE = """
 WITH words AS (
   SELECT doc_id, string_split(text, ' ') AS w FROM documents
@@ -57,14 +53,15 @@ GROUP BY text
 """)
 def dedup_exact(spark, sf_dir):
     """Exact duplicate grouping on document text (hash-groupBy)."""
-    return D.exact_dedup(_docs(spark, sf_dir), "doc_id", ["text"])
+    return D.exact_dedup(load_table(spark, sf_dir, "documents"), "doc_id", ["text"])
 
 
 @register("dedup_jaccard_exact", oracle=_JACCARD_ORACLE)
 def dedup_jaccard_exact(spark, sf_dir):
     """Exact 5-gram Jaccard near-dup pairs via posting-list join."""
-    return D.jaccard_pairs_exact(_docs(spark, sf_dir), "doc_id", "text",
-                                 n=5, threshold=0.5)
+    return D.jaccard_pairs_exact(
+        load_table(spark, sf_dir, "documents"), "doc_id", "text",
+        n=5, threshold=0.5)
 
 
 @register("dedup_jaccard_capped", oracle="""
@@ -107,14 +104,15 @@ def dedup_jaccard_capped(spark, sf_dir):
     pair set genuinely differs from ``dedup_jaccard_exact``.  Oracle
     mirrors the cap with a COUNT(*) OVER (PARTITION BY shingle)
     prefilter."""
-    return D.jaccard_pairs_exact(_docs(spark, sf_dir), "doc_id", "text",
-                                 n=5, threshold=0.5, max_doc_freq=2)
+    return D.jaccard_pairs_exact(
+        load_table(spark, sf_dir, "documents"), "doc_id", "text",
+        n=5, threshold=0.5, max_doc_freq=2)
 
 
 @register("dedup_minhash_lsh", oracle=_JACCARD_ORACLE)
 def dedup_minhash_lsh(spark, sf_dir):
     """MinHash-LSH candidates (24 hashes, 1-row bands) + exact verify."""
-    return D.minhash_lsh_pairs(_docs(spark, sf_dir), "doc_id", "text",
+    return D.minhash_lsh_pairs(load_table(spark, sf_dir, "documents"), "doc_id", "text",
                                n=5, num_hashes=24, rows_per_band=1,
                                threshold=0.5)
 
@@ -147,7 +145,7 @@ def dedup_simhash_md5(spark, sf_dir):
     value oracle (the oracle recomputes fingerprints bit-by-bit and
     brute-forces all pairs; the Spark side still never goes O(n²)).
     Upgrades SimHash from rows-only to hash-verified evidence."""
-    return D.simhash_pairs(_docs(spark, sf_dir), "doc_id", "text",
+    return D.simhash_pairs(load_table(spark, sf_dir, "documents"), "doc_id", "text",
                            max_hamming=3, portable=True)
 
 
@@ -192,8 +190,9 @@ def dedup_clusters(spark, sf_dir):
     """Duplicate clustering: exact-Jaccard pairs -> connected
     components (iterative min-label propagation); the oracle computes
     the same components via a recursive transitive-closure CTE."""
-    pairs = D.jaccard_pairs_exact(_docs(spark, sf_dir), "doc_id", "text",
-                                  n=5, threshold=0.5)
+    pairs = D.jaccard_pairs_exact(
+        load_table(spark, sf_dir, "documents"), "doc_id", "text",
+        n=5, threshold=0.5)
     return D.duplicate_clusters(pairs)
 
 
@@ -217,7 +216,7 @@ def dedup_incremental(spark, sf_dir):
     NULL-equality contract: the digest is NULL-safe (a NULL-text doc
     matches a NULL-text corpus doc — they ARE duplicates), so the
     oracle compares with ``IS NOT DISTINCT FROM``, not ``=``."""
-    d = _docs(spark, sf_dir)
+    d = load_table(spark, sf_dir, "documents")
     batch_no = F.substring("source", 4, 10).cast("bigint")
     new = d.filter(batch_no >= 10)
     corpus = d.filter(batch_no < 10)
@@ -258,7 +257,7 @@ def dedup_passages(spark, sf_dir):
     The oracle replays the identical algorithm in SQL (it IS
     SQL-expressible: window over (pair, diagonal), never the corpus)."""
     return D.duplicate_passages(
-        _docs(spark, sf_dir), "doc_id", "text", k=8, min_run=2
+        load_table(spark, sf_dir, "documents"), "doc_id", "text", k=8, min_run=2
     )
 
 
@@ -288,5 +287,6 @@ def dedup_containment(spark, sf_dir):
     """Directional 5-gram containment >= 0.8 (|A∩B| / |A|) — the
     subset-duplicate metric catching excerpts/quotes that Jaccard's
     union normalization hides; same posting-list join shape."""
-    return D.containment_pairs_exact(_docs(spark, sf_dir), "doc_id", "text",
-                                     n=5, threshold=0.8)
+    return D.containment_pairs_exact(
+        load_table(spark, sf_dir, "documents"), "doc_id", "text",
+        n=5, threshold=0.8)

@@ -19,10 +19,6 @@ from ..sources.catalog import ensure_session_confs
 from ..sources.catalog import load_events
 
 
-def _t(spark, sf_dir, name):
-    return load_table(spark, sf_dir, name)
-
-
 @register("events_tumbling", oracle="""
 SELECT CAST(floor(epoch(ts)/3600)*3600 AS BIGINT) AS window_start,
        event_type,
@@ -33,7 +29,7 @@ GROUP BY 1, 2
 """)
 def events_tumbling(spark, sf_dir):
     """Tumbling 1-hour windows per event type."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     return (
         e.groupBy(F.window("ts", "1 hour").alias("w"), F.col("event_type"))
         .agg(F.count(F.lit(1)).alias("n_events"), dsum("value", "total_value"))
@@ -61,7 +57,7 @@ GROUP BY 1
 def events_sliding(spark, sf_dir):
     """Sliding windows (1 h length, 30 min slide) — each event lands in
     exactly length/slide = 2 windows."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     return (
         e.groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"))
         .agg(F.count(F.lit(1)).alias("n_events"), dsum("value", "total_value"))
@@ -98,7 +94,7 @@ def events_session(spark, sf_dir):
     Spark ``session_window``; the oracle is the classic
     gaps-and-islands rewrite (sessions are half-open: a gap of exactly
     10 min starts a new session)."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     return (
         e.groupBy("user_id", F.session_window("ts", "10 minutes").alias("w"))
         .agg(F.count(F.lit(1)).alias("n_events"), dsum("value", "total_value"))
@@ -120,8 +116,8 @@ def events_enrich_join(spark, sf_dir):
     """Stream-enrichment shape: fact stream joined to a small dimension
     — the dimension is explicitly broadcast (no shuffle of the fact
     side; at 100 TB this is the only sane plan)."""
-    e = _t(spark, sf_dir, "events")
-    c = _t(spark, sf_dir, "customer")
+    e = load_table(spark, sf_dir, "events")
+    c = load_table(spark, sf_dir, "customer")
     return (
         e.filter(F.col("event_type").isin("purchase", "signup"))
         .join(F.broadcast(c), e.user_id == c.c_custkey)
@@ -150,7 +146,7 @@ def asof_purchase_click(spark, sf_dir):
     one shuffle; DuckDB's native ASOF JOIN is the oracle)."""
     from ..operators.asof import asof_join
 
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     purchases = e.filter(F.col("event_type") == "purchase").select(
         "event_id", "user_id", "ts"
     )
@@ -189,7 +185,7 @@ def events_retention_cohorts(spark, sf_dir):
     per-user collect.  The activity set is already distinct per
     (user, day), so the cell count is a plain COUNT(*), not a
     COUNT(DISTINCT) (which would need a second dedup exchange)."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     daily = e.select(
         "user_id",
         F.floor(F.unix_timestamp("ts") / 86400).cast("bigint").alias("day"),
@@ -236,7 +232,7 @@ def events_funnel(spark, sf_dir):
     became 1."""
     from pyspark.sql import Window
 
-    e = (_t(spark, sf_dir, "events")
+    e = (load_table(spark, sf_dir, "events")
          .select("user_id", "event_type", "ts")
          .filter(F.col("event_type").isin("view", "click", "purchase")))
     w = Window.partitionBy("user_id")
@@ -287,7 +283,7 @@ def events_rollup_daily(spark, sf_dir):
     built FROM the hourly aggregate (sum of partial sums — the
     continuous-aggregate pattern: coarser resolutions reuse finer ones
     instead of rescanning raw data)."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     hourly = (
         e.groupBy(F.window("ts", "1 hour").alias("w"), F.col("event_type"))
         .agg(F.count(F.lit(1)).alias("n_events"), dsum("value", "total_value"))
@@ -337,7 +333,7 @@ def events_gap_fill(spark, sf_dir):
     per-key forward-fill window, no global ops)."""
     from ..operators.timeseries import gap_fill_daily
 
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     return gap_fill_daily(e, "user_id", "ts", "value")
 
 
@@ -367,7 +363,7 @@ def events_scd2_history(spark, sf_dir):
     cdc_latest_state)."""
     from ..operators.timeseries import scd2_intervals
 
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     return scd2_intervals(e, "user_id", "ts",
                           ["event_type"], "event_id")
 

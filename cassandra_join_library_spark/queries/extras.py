@@ -13,10 +13,6 @@ from ..sources.catalog import load_table
 from ..sources.catalog import ensure_session_confs
 
 
-def _t(spark, sf_dir, name):
-    return load_table(spark, sf_dir, name)
-
-
 @register("string_similarity", oracle="""
 SELECT a.p_partkey AS key_a, b.p_partkey AS key_b,
        CAST(levenshtein(a.p_name, b.p_name) AS BIGINT) AS edit_dist
@@ -34,7 +30,7 @@ def string_similarity(spark, sf_dir):
     must (and does) carry."""
     from ..operators.edjoin import edit_distance_pairs
 
-    p = _t(spark, sf_dir, "part").filter(F.col("p_partkey") % 4 == 0)
+    p = load_table(spark, sf_dir, "part").filter(F.col("p_partkey") % 4 == 0)
     return edit_distance_pairs(p, "p_partkey", "p_name", max_dist=2)
 
 
@@ -45,7 +41,7 @@ WHERE doc_id < 10
 """)
 def explode_tokens(spark, sf_dir):
     """Array explode / unnest (token stream shape)."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     return (
         d.filter(F.col("doc_id") < 10)
         .select("doc_id", F.explode(F.split("text", " ")).alias("token"))
@@ -61,7 +57,7 @@ GROUP BY CUBE (o_orderstatus, o_orderpriority)
 """)
 def agg_cube(spark, sf_dir):
     """CUBE: all grouping-set combinations."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return o.cube("o_orderstatus", "o_orderpriority").agg(
         F.count(F.lit(1)).alias("n_orders"),
         dsum("o_totalprice", "total"),
@@ -79,7 +75,7 @@ GROUP BY GROUPING SETS ((o_orderstatus, o_orderpriority),
 def agg_grouping_sets(spark, sf_dir):
     """Explicit GROUPING SETS (a strict subset of CUBE — one pass,
     Spark expands to a single Expand+Aggregate, not one job per set)."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return o.groupingSets(
         [["o_orderstatus", "o_orderpriority"], ["o_orderstatus"], []],
         "o_orderstatus", "o_orderpriority",
@@ -98,7 +94,7 @@ FROM orders
 """)
 def regexp_extract_priority(spark, sf_dir):
     """Regex extraction and matching."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return o.select(
         "o_orderkey",
         F.regexp_extract("o_orderpriority", r"^(\d+)-(\w+)", 1).alias("prio_num"),
@@ -123,7 +119,7 @@ LIMIT 20
 """)
 def ngram_topk(spark, sf_dir):
     """Corpus-level bigram frequency top-k (vocabulary analysis)."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     w = d.select(F.split("text", " ").alias("w"))
     # short-doc guard (sequence(0, -1) counts down; w[i+1] OOB crashes
     # under ANSI) — mirrors shingles() in operators/dedup.py
@@ -153,8 +149,8 @@ FROM padded
 def null_handling(spark, sf_dir):
     """NULL handling: fillna/coalesce + null flags over outer-join
     padding."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders")
     padded = c.join(o, c.c_custkey == o.o_custkey, "left")
     return padded.select(
         "c_custkey",
@@ -168,7 +164,7 @@ SELECT DISTINCT c_nationkey, c_mktsegment FROM customer
 """)
 def distinct_rows(spark, sf_dir):
     """Row-level DISTINCT."""
-    return _t(spark, sf_dir, "customer").select("c_nationkey", "c_mktsegment").distinct()
+    return load_table(spark, sf_dir, "customer").select("c_nationkey", "c_mktsegment").distinct()
 
 
 @register("deterministic_sample", oracle="""
@@ -180,7 +176,7 @@ def deterministic_sample(spark, sf_dir):
     """Deterministic systematic sampling (hash/mod) — at 100 TB,
     mod-sampling on a key is reproducible across runs and engines,
     unlike Bernoulli TABLESAMPLE."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return (
         o.filter(F.col("o_orderkey") % 20 == 3)
         .select("o_orderkey", "o_custkey", "o_totalprice")
@@ -197,8 +193,8 @@ def band_join_acctbal(spark, sf_dir):
     join on quantized buckets."""
     from ..operators.range_join import band_join
 
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_acctbal")
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_acctbal")
+    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_acctbal")
+    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_acctbal")
     return band_join(s, "s_acctbal", c, "c_acctbal", width=25.0)
 
 
@@ -218,11 +214,11 @@ def interval_join_shipdate(spark, sf_dir):
     within 7 days of (a sampled set of) order dates."""
     from ..operators.range_join import interval_join
 
-    l = _t(spark, sf_dir, "lineitem").select(
+    l = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber",
         F.unix_timestamp("l_shipdate").cast("bigint").alias("ship_epoch"),
     )
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 100 == 0).select(
+    o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 100 == 0).select(
         "o_orderkey",
         F.unix_timestamp("o_orderdate").cast("bigint").alias("order_epoch"),
     )
@@ -255,11 +251,11 @@ def interval_join_facade(spark, sf_dir):
     from ..plans.table_info import TableInfo
     from ..sources.catalog import MemoryCatalog
 
-    l = _t(spark, sf_dir, "lineitem").select(
+    l = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber",
         F.unix_timestamp("l_shipdate").cast("bigint").alias("ship_epoch"),
     )
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 100 == 0).select(
+    o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 100 == 0).select(
         F.col("o_orderkey").alias("iv_key"),
         F.unix_timestamp("o_orderdate").cast("bigint").alias("lo_epoch"),
     )
@@ -289,7 +285,7 @@ def agg_collect_sorted(spark, sf_dir):
     """Grouped collection aggregate — sorted then serialized so the
     result is deterministic under any partitioning (bare collect_list
     order is partition-dependent; never expose it raw)."""
-    s = _t(spark, sf_dir, "supplier")
+    s = load_table(spark, sf_dir, "supplier")
     return s.groupBy("s_nationkey").agg(
         F.array_join(F.sort_array(F.collect_list("s_suppkey")), ",")
         .alias("suppliers")
@@ -305,7 +301,7 @@ SELECT c_custkey, metric, value FROM (
 """)
 def unpivot_metrics(spark, sf_dir):
     """Unpivot / melt wide columns into (key, metric, value) rows."""
-    c = _t(spark, sf_dir, "customer")
+    c = load_table(spark, sf_dir, "customer")
     return c.select(
         "c_custkey",
         F.col("c_acctbal").alias("acctbal"),
@@ -326,7 +322,7 @@ FROM orders
 """)
 def scalar_conditional(spark, sf_dir):
     """Conditional expressions: searched CASE, simple CASE, boolean."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return o.select(
         "o_orderkey",
         F.when(F.col("o_totalprice") >= 150000, "large")
@@ -352,7 +348,7 @@ WHERE l_orderkey % 50 = 0
 def scalar_date_arith(spark, sf_dir):
     """Date arithmetic: datediff, interval add, quarter truncation,
     day-of-week (normalized to DuckDB's Sunday=0 convention)."""
-    l = _t(spark, sf_dir, "lineitem")
+    l = load_table(spark, sf_dir, "lineitem")
     return l.filter(F.col("l_orderkey") % 50 == 0).select(
         "l_orderkey", "l_linenumber",
         F.datediff(F.col("l_shipdate"), F.lit("1995-01-01").cast("date"))
@@ -377,7 +373,7 @@ FROM part
 """)
 def scalar_string2(spark, sf_dir):
     """String functions batch 2: pad/trim/split_part/reverse/ascii/repeat."""
-    p = _t(spark, sf_dir, "part")
+    p = load_table(spark, sf_dir, "part")
     return p.select(
         "p_partkey",
         F.lpad(F.col("p_partkey").cast("string"), 10, "0").alias("padded_key"),

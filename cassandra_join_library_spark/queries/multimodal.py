@@ -14,10 +14,6 @@ from ..sources.catalog import load_table
 from ..sources.catalog import ensure_session_confs
 
 
-def _docs(spark, sf_dir):
-    return load_table(spark, sf_dir, "documents")
-
-
 @register("mm_binary_metadata", oracle="""
 SELECT doc_id,
        CAST(octet_length(encode(text)) AS BIGINT) AS byte_len,
@@ -26,7 +22,7 @@ FROM documents
 """)
 def mm_binary_metadata(spark, sf_dir):
     """Opaque-binary metadata extraction (length + content digest)."""
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     payload = M.attach_binary(docs, "doc_id", "text")
     return M.binary_metadata(payload, "doc_id")
 
@@ -44,7 +40,7 @@ FROM documents
 def mm_decode_features(spark, sf_dir):
     """Arrow-batched (mapInPandas) stub decode of binary payloads —
     exercises the real multimodal UDF plumbing end-to-end."""
-    return M.decode_features(_docs(spark, sf_dir), "doc_id", "text")
+    return M.decode_features(load_table(spark, sf_dir, "documents"), "doc_id", "text")
 
 
 @register("mm_resize", oracle="""
@@ -66,7 +62,7 @@ FROM dims
 def mm_resize(spark, sf_dir):
     """Stubbed image-resize (letterbox to 224x224) via mapInPandas —
     integer-ratio math so the oracle is exact."""
-    return M.resize_images(_docs(spark, sf_dir), "doc_id", "text",
+    return M.resize_images(load_table(spark, sf_dir, "documents"), "doc_id", "text",
                            target_w=224, target_h=224)
 
 
@@ -93,5 +89,5 @@ def mm_frame_sample(spark, sf_dir):
     """Stubbed video frame sampling (every 10 bytes = one 'frame',
     max 8) — demonstrates the row-expanding 1->N mapInPandas shape;
     documents are ASCII so the char-indexed oracle is byte-exact."""
-    return M.sample_frames(_docs(spark, sf_dir), "doc_id", "text",
+    return M.sample_frames(load_table(spark, sf_dir, "documents"), "doc_id", "text",
                            every_n=10, max_frames=8)

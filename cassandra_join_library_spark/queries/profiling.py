@@ -9,10 +9,6 @@ from ..registry import register
 from ..sources.catalog import load_table
 
 
-def _t(spark, sf_dir, name):
-    return load_table(spark, sf_dir, name)
-
-
 @register("profile_orders", oracle="""
 SELECT 'o_orderkey' AS "column", COUNT(*) AS n_rows,
        CAST(SUM(CASE WHEN o_orderkey IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_nulls,
@@ -43,7 +39,7 @@ def profile_orders(spark, sf_dir):
     """Single-pass per-column profile (nulls/distinct/min/max), string
     and integer columns (float min/max string formats differ across
     engines, so doubles are profiled but not oracle-compared)."""
-    o = _t(spark, sf_dir, "orders").select(
+    o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderstatus", "o_orderpriority"
     )
     return P.profile_table(o)
@@ -63,7 +59,7 @@ FROM documents
 def text_pii_flags(spark, sf_dir):
     """PII pattern counts per document (email/phone/SSN-shaped) — the
     cheap first-pass redaction filter."""
-    return P.pii_flags(_t(spark, sf_dir, "documents"), "doc_id", "text")
+    return P.pii_flags(load_table(spark, sf_dir, "documents"), "doc_id", "text")
 
 
 @register("text_repetition", oracle="""
@@ -94,7 +90,7 @@ FROM tw LEFT JOIN bgs ON tw.doc_id = bgs.doc_id
 def text_repetition(spark, sf_dir):
     """Gopher-style repetition scores (top-word ratio, duplicate-bigram
     ratio) — degenerate-text filters."""
-    return P.repetition_scores(_t(spark, sf_dir, "documents"), "doc_id", "text")
+    return P.repetition_scores(load_table(spark, sf_dir, "documents"), "doc_id", "text")
 
 
 @register("privacy_k_anonymity", oracle="""
@@ -112,7 +108,7 @@ def privacy_k_anonymity(spark, sf_dir):
     quasi-identifier pair: equivalence-class sizes, at-risk flags,
     and row shares — operators/profiling.py k_anonymity."""
     return P.k_anonymity(
-        _t(spark, sf_dir, "customer"), ["c_nationkey", "c_mktsegment"], k=5)
+        load_table(spark, sf_dir, "customer"), ["c_nationkey", "c_mktsegment"], k=5)
 
 
 @register("profile_key_skew", oracle="""
@@ -134,7 +130,7 @@ def profile_key_skew(spark, sf_dir):
     customers with row share and ratio-to-mean-key-weight — the
     diagnostic that decides whether a join needs salting
     (operators/profiling.py key_skew_report)."""
-    return P.key_skew_report(_t(spark, sf_dir, "orders"), ["o_custkey"],
+    return P.key_skew_report(load_table(spark, sf_dir, "orders"), ["o_custkey"],
                              top=10)
 
 
@@ -174,13 +170,13 @@ def profile_fk_integrity(spark, sf_dir):
     join-based pipeline trusts the data."""
     out = P.fk_integrity_audit([
         ("lineitem.orderkey->orders",
-         _t(spark, sf_dir, "lineitem"), "l_orderkey",
-         _t(spark, sf_dir, "orders"), "o_orderkey"),
+         load_table(spark, sf_dir, "lineitem"), "l_orderkey",
+         load_table(spark, sf_dir, "orders"), "o_orderkey"),
         ("orders.custkey->customer",
-         _t(spark, sf_dir, "orders"), "o_custkey",
-         _t(spark, sf_dir, "customer"), "c_custkey"),
+         load_table(spark, sf_dir, "orders"), "o_custkey",
+         load_table(spark, sf_dir, "customer"), "c_custkey"),
         ("customer.nationkey->nation",
-         _t(spark, sf_dir, "customer"), "c_nationkey",
-         _t(spark, sf_dir, "nation"), "n_nationkey"),
+         load_table(spark, sf_dir, "customer"), "c_nationkey",
+         load_table(spark, sf_dir, "nation"), "n_nationkey"),
     ])
     return out

@@ -21,10 +21,6 @@ from ..sources.catalog import ensure_session_confs
 from ..sources.catalog import load_events
 
 
-def _t(spark, sf_dir, name):
-    return load_table(spark, sf_dir, name)
-
-
 @register("agg_pricing_summary", oracle="""
 SELECT l_returnflag, l_linestatus,
        CAST(SUM(CAST(l_quantity AS DECIMAL(18,6))) AS DOUBLE) AS sum_qty,
@@ -41,7 +37,7 @@ GROUP BY l_returnflag, l_linestatus
 def agg_pricing_summary(spark, sf_dir):
     """TPC-H Q1-shaped pricing summary: grouped sums/averages with the
     decimal-exact parity convention; pure map-side-combinable agg."""
-    l = _t(spark, sf_dir, "lineitem")
+    l = load_table(spark, sf_dir, "lineitem")
     disc = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     charge = disc * (1 + F.col("l_tax"))
     return (
@@ -70,7 +66,7 @@ GROUP BY 1, 2, 3
 """)
 def agg_orders_by_month(spark, sf_dir):
     """Multi-key grouped aggregation over a date dimension."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return (
         o.groupBy(
             F.year("o_orderdate").cast("bigint").alias("order_year"),
@@ -92,7 +88,7 @@ FROM lineitem GROUP BY l_returnflag
 """)
 def agg_count_distinct(spark, sf_dir):
     """Exact distinct aggregation (expand + two-phase agg in Spark)."""
-    l = _t(spark, sf_dir, "lineitem")
+    l = load_table(spark, sf_dir, "lineitem")
     return l.groupBy("l_returnflag").agg(
         F.count_distinct("l_suppkey").alias("n_suppliers"),
         F.count_distinct("l_partkey").alias("n_parts"),
@@ -110,9 +106,9 @@ GROUP BY ROLLUP (r_name, n_name)
 """)
 def agg_rollup(spark, sf_dir):
     """ROLLUP hierarchy totals (region → nation → grand total)."""
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region")
+    c = load_table(spark, sf_dir, "customer")
+    n = load_table(spark, sf_dir, "nation")
+    r = load_table(spark, sf_dir, "region")
     joined = c.join(n, c.c_nationkey == n.n_nationkey).join(
         r, n.n_regionkey == r.r_regionkey
     )
@@ -134,7 +130,7 @@ def topk_customers(spark, sf_dir):
     """Top-k with a total order (tiebreak on key) — Spark executes
     orderBy+limit as TakeOrderedAndProject: k rows per partition then a
     driver merge, no global sort; the scalable top-k shape."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return (
         o.groupBy("o_custkey")
         .agg(dsum("o_totalprice", "total_spent"), F.count(F.lit(1)).alias("n_orders"))
@@ -150,7 +146,7 @@ ORDER BY s_acctbal DESC, s_suppkey ASC
 """)
 def sort_global(spark, sf_dir):
     """Global sort (range-partitioned exchange in Spark)."""
-    s = _t(spark, sf_dir, "supplier")
+    s = load_table(spark, sf_dir, "supplier")
     return s.select("s_suppkey", "s_name", "s_acctbal").orderBy(
         F.col("s_acctbal").desc(), F.col("s_suppkey").asc()
     )
@@ -166,7 +162,7 @@ SELECT * FROM (
 """)
 def window_rank(spark, sf_dir):
     """Ranking window: top-3 customers by balance per nation."""
-    c = _t(spark, sf_dir, "customer")
+    c = load_table(spark, sf_dir, "customer")
     w = Window.partitionBy("c_nationkey").orderBy(
         F.col("c_acctbal").desc(), F.col("c_custkey").asc()
     )
@@ -191,7 +187,7 @@ FROM orders
 """)
 def window_running_sum(spark, sf_dir):
     """Cumulative window aggregate per customer over order time."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     w = (
         Window.partitionBy("o_custkey")
         .orderBy(F.col("o_orderdate").asc(), F.col("o_orderkey").asc())
@@ -219,7 +215,7 @@ def window_range_30d(spark, sf_dir):
     """RANGE-frame window: per customer, total spend over the trailing
     30 days (value-based frame — includes all peers, so the decimal
     sum is order-independent and engine-portable)."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     epoch = F.unix_timestamp("o_orderdate").cast("bigint")
     w = (
         Window.partitionBy("o_custkey")
@@ -243,7 +239,7 @@ WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate ASC, o_orderkey ASC)
 """)
 def window_lag_lead(spark, sf_dir):
     """lag/lead navigation within per-customer order history."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy(
         F.col("o_orderdate").asc(), F.col("o_orderkey").asc()
     )
@@ -261,8 +257,8 @@ SELECT s_nationkey AS nationkey FROM supplier
 """)
 def setop_union(spark, sf_dir):
     """UNION (distinct) of two key sets."""
-    c = _t(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("nationkey"))
-    s = _t(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("nationkey"))
+    c = load_table(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("nationkey"))
+    s = load_table(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("nationkey"))
     return c.union(s).distinct()
 
 
@@ -273,8 +269,8 @@ SELECT o_custkey AS k FROM orders
 """)
 def setop_intersect(spark, sf_dir):
     """INTERSECT: customers that have orders."""
-    c = _t(spark, sf_dir, "customer").select(F.col("c_custkey").alias("k"))
-    o = _t(spark, sf_dir, "orders").select(F.col("o_custkey").alias("k"))
+    c = load_table(spark, sf_dir, "customer").select(F.col("c_custkey").alias("k"))
+    o = load_table(spark, sf_dir, "orders").select(F.col("o_custkey").alias("k"))
     return c.intersect(o)
 
 
@@ -285,8 +281,8 @@ SELECT o_custkey AS k FROM orders
 """)
 def setop_except(spark, sf_dir):
     """EXCEPT: customers with no orders (anti-join shape)."""
-    c = _t(spark, sf_dir, "customer").select(F.col("c_custkey").alias("k"))
-    o = _t(spark, sf_dir, "orders").select(F.col("o_custkey").alias("k"))
+    c = load_table(spark, sf_dir, "customer").select(F.col("c_custkey").alias("k"))
+    o = load_table(spark, sf_dir, "orders").select(F.col("o_custkey").alias("k"))
     return c.subtract(o)
 
 
@@ -301,7 +297,7 @@ FROM part
 """)
 def scalar_string(spark, sf_dir):
     """String scalar functions (upper/substr/length/concat/replace/instr)."""
-    p = _t(spark, sf_dir, "part")
+    p = load_table(spark, sf_dir, "part")
     return p.select(
         "p_partkey",
         F.upper(F.substring("p_name", 1, 8)).alias("name_prefix"),
@@ -324,7 +320,7 @@ FROM orders
 """)
 def scalar_datetime(spark, sf_dir):
     """Datetime scalar functions with the epoch/bigint parity convention."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return o.select(
         "o_orderkey",
         F.year("o_orderdate").cast("bigint").alias("y"),
@@ -349,7 +345,7 @@ FROM lineitem
 def scalar_math(spark, sf_dir):
     """Math scalar functions; sqrt is IEEE-exact, products are
     deterministic row-local double ops."""
-    l = _t(spark, sf_dir, "lineitem")
+    l = load_table(spark, sf_dir, "lineitem")
     return l.select(
         "l_orderkey", "l_linenumber",
         F.abs(F.col("l_extendedprice") - 1000.0).alias("abs_delta"),
@@ -367,7 +363,7 @@ FROM events
 """)
 def scalar_json(spark, sf_dir):
     """JSON field extraction from the events props payload."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     return e.select(
         "event_id", "event_type",
         F.get_json_object("props", "$.k").cast("bigint").alias("prop_k"),

@@ -10,10 +10,6 @@ from ..sources.catalog import load_table
 from ..sources.catalog import ensure_session_confs
 
 
-def _docs(spark, sf_dir):
-    return load_table(spark, sf_dir, "documents")
-
-
 @register("text_token_stats", oracle="""
 SELECT doc_id,
        CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
@@ -24,7 +20,7 @@ FROM documents
 """)
 def text_token_stats(spark, sf_dir):
     """Token counting (whitespace + BPE-estimate)."""
-    return T.token_stats(_docs(spark, sf_dir), "doc_id", "text")
+    return T.token_stats(load_table(spark, sf_dir, "documents"), "doc_id", "text")
 
 
 @register("text_bpe_pretokens", oracle=r"""
@@ -43,7 +39,7 @@ FROM x
 def text_bpe_pretokens(spark, sf_dir):
     """BPE-ish regex pre-tokenizer count (GPT-2 pattern, RE2-safe so
     Java and RE2 regex engines count identically)."""
-    return T.bpe_pretokens(_docs(spark, sf_dir), "doc_id", "text")
+    return T.bpe_pretokens(load_table(spark, sf_dir, "documents"), "doc_id", "text")
 
 
 @register("text_quality", oracle="""
@@ -66,7 +62,7 @@ FROM x
 """)
 def text_quality(spark, sf_dir):
     """Heuristic quality scoring (length / diversity / stopword ratios)."""
-    return T.quality_scores(_docs(spark, sf_dir), "doc_id", "text")
+    return T.quality_scores(load_table(spark, sf_dir, "documents"), "doc_id", "text")
 
 
 @register("text_lang_id", oracle="""
@@ -91,7 +87,7 @@ FROM s
 """)
 def text_lang_id(spark, sf_dir):
     """Stopword-hit language-ID heuristic (priority order breaks ties)."""
-    return T.lang_id(_docs(spark, sf_dir), "doc_id", "text")
+    return T.lang_id(load_table(spark, sf_dir, "documents"), "doc_id", "text")
 
 
 @register("text_fingerprint", oracle="""
@@ -110,7 +106,7 @@ FROM x
 """)
 def text_fingerprint(spark, sf_dir):
     """Order-sensitive rolling-hash fingerprint (portable fold)."""
-    return T.fingerprints(_docs(spark, sf_dir), "doc_id", "text")
+    return T.fingerprints(load_table(spark, sf_dir, "documents"), "doc_id", "text")
 
 
 @register("text_model_score", oracle="""
@@ -149,4 +145,4 @@ def text_model_score(spark, sf_dir):
     compiled into the plan; the oracle replays the identical
     arithmetic (both engines' exp() agree to <=1 ulp, far inside the
     6-dp round)."""
-    return T.model_score(_docs(spark, sf_dir), "doc_id", "text")
+    return T.model_score(load_table(spark, sf_dir, "documents"), "doc_id", "text")

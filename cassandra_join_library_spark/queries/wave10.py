@@ -26,10 +26,6 @@ from .wave4 import _EDGE_CTE, _copurchase_edges
 from .wave9 import _rdiv_sql
 
 
-def _t(spark, sf_dir, name):
-    return load_table(spark, sf_dir, name)
-
-
 @register("events_cusum_drift", oracle=f"""
 WITH daily AS (
   SELECT CAST(o_orderdate AS DATE) AS day,
@@ -72,7 +68,7 @@ def events_cusum_drift(spark, sf_dir):
     All BIGINT; the ordering windows run over the calendar-bounded
     daily rollup, never the fact table."""
     daily = (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .groupBy(F.to_date("o_orderdate").alias("day"))
         .agg(F.sum(F.floor("o_totalprice").cast("bigint"))
              .cast("bigint").alias("v"))
@@ -306,7 +302,7 @@ def stats_ks_priority_price(spark, sf_dir):
     tiebreak.  The distribution-drift test a data pipeline runs
     between cohorts/snapshots.  The window runs over the
     distinct-value aggregate, never the fact table."""
-    o = _t(spark, sf_dir, "orders").select(
+    o = load_table(spark, sf_dir, "orders").select(
         F.when(F.col("o_orderpriority") == "1-URGENT", 0).otherwise(1)
         .alias("g"),
         F.expr(_TP_CENTS).alias("v"))
@@ -344,7 +340,7 @@ def corpus_gini_doclen(spark, sf_dir):
     balancing.  One bucket-keyed aggregate over the corpus, then the
     Lorenz trapezoid sum over the value-domain-bounded bucket table —
     all BIGINT, one final division."""
-    return gini_grouped(_t(spark, sf_dir, "documents"), "n_chars", 16)
+    return gini_grouped(load_table(spark, sf_dir, "documents"), "n_chars", 16)
 
 
 @register("events_interarrival_hist", oracle="""
@@ -408,7 +404,7 @@ def dedup_cluster_size_histogram(spark, sf_dir):
     (operators/dedup.py duplicate_clusters, pointer-jumping) -> two
     bounded aggregates.  Singleton docs count as size-1 clusters."""
     pairs = D.jaccard_pairs_exact(
-        _t(spark, sf_dir, "documents"), "doc_id", "text",
+        load_table(spark, sf_dir, "documents"), "doc_id", "text",
         n=5, threshold=0.5)
     clusters = D.duplicate_clusters(pairs)
     sizes = clusters.groupBy("cluster_id").agg(

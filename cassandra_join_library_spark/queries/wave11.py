@@ -27,10 +27,6 @@ from .wave4 import _copurchase_edges
 from .wave9 import _rdiv_sql
 
 
-def _t(spark, sf_dir, name):
-    return load_table(spark, sf_dir, name)
-
-
 @register("basket_association_pairs", oracle=f"""
 WITH baskets AS MATERIALIZED (
   SELECT DISTINCT l_orderkey AS b, l_partkey AS i FROM lineitem
@@ -69,7 +65,7 @@ def basket_association_pairs(spark, sf_dir):
     prune BEFORE pairing (downward closure — the bounded frequent-item
     table broadcasts), within-order pair counting, exact ppm
     support/confidence and one-division lift.  Top 20 by pair count."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return association_pairs(
         li, "l_orderkey", "l_partkey",
         minsup_div=2000, minsup_floor=3, top=20)
@@ -152,7 +148,7 @@ def corpus_quota_apportion(spark, sf_dir):
     plus one-each to the largest remainders, so the quotas sum to
     exactly 1,000,000 — the integer-exact property a mixture sampler
     needs.  All windows run over the #sources-sized table."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     w = docs.groupBy(F.col("source").alias("src")).agg(
         F.sum("n_chars").cast("bigint").alias("wt"))
     out = apportion_largest_remainder(w, "src", "wt", 1_000_000)
@@ -232,8 +228,8 @@ def stats_weighted_median_brand(spark, sf_dir):
     window runs per brand over that collapsed, domain-bounded table.
     Lower-median integer rule — always an observed cent value,
     identical across engines."""
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part")
+    li = load_table(spark, sf_dir, "lineitem")
+    p = load_table(spark, sf_dir, "part")
     xw = li.join(p, li.l_partkey == p.p_partkey).select(
         F.col("p_brand").alias("grp"),
         F.expr(_QTY_CENTS).alias("w"),
@@ -295,7 +291,7 @@ def stats_corr_lineitem(spark, sf_dir):
     pair per row.  Centered-form correlation keeps every integer
     inside BIGINT (no n*sum products); the divisions and sqrts are a
     fixed IEEE tree evaluated identically by DuckDB."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return corr_pairs_integer(li, {
         "qty": F.expr(_QTY_CENTS),
         "price": F.expr(_EPRICE_DOLLARS),
@@ -388,7 +384,7 @@ def er_blocking_components(spark, sf_dir):
     components with the pointer-jumping connected-components operator
     (operators/dedup.py duplicate_clusters).  cluster_id = min
     reachable doc id."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     words = docs.select(
         "doc_id", F.split("text", " ").alias("w"))
     keyed = (

@@ -25,10 +25,6 @@ from .wave7 import _PCM_N, _WAV_PCM_ORACLE
 from .wave9 import _rdiv_sql
 
 
-def _t(spark, sf_dir, name):
-    return load_table(spark, sf_dir, name)
-
-
 _EPRICE_CENTS = ("CAST(CAST(round(l_extendedprice, 2) AS DECIMAL(18,2)) "
                  "* 100 AS BIGINT)")
 _TP_CENTS = ("CAST(CAST(round(o_totalprice, 2) AS DECIMAL(18,2)) "
@@ -64,8 +60,8 @@ def profile_order_reconciliation(spark, sf_dir):
     pipeline runs before trusting either column as ground truth.
     Shape: one lineitem aggregate + a key join + a bounded histogram
     — no windows, map-side combinable throughout."""
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders")
     lo = li.groupBy(F.col("l_orderkey").alias("ok")).agg(
         F.sum(F.expr(_EPRICE_CENTS)).cast("bigint").alias("l_cents"))
     d = (
@@ -174,7 +170,7 @@ def text_rake_keywords(spark, sf_dir):
     length of its phrases (degree) against its frequency.  Stopword
     list broadcasts; phrase segmentation is a document-partitioned
     running sum — no global windows."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     return rake_keywords(docs, "doc_id", "text",
                          n_stopwords=10, top=20)
 
@@ -209,7 +205,7 @@ def corpus_zipf_audit(spark, sf_dir):
     frequency-based sampling weights.  The vocabulary aggregate is
     the only corpus-sized work; the ranking window runs over the
     vocab-bounded table.  Integer products, rounded-division mean."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     vocab = (
         docs.select(F.explode(F.split("text", " ")).alias("word"))
         .filter(F.col("word") != "")
@@ -367,7 +363,7 @@ def privacy_generalize_to_k(spark, sf_dir):
     corpus pass at the finest width, coarser widths re-aggregate the
     bucket table; the smallest width whose minimum equivalence class
     reaches k = 5 is flagged ``chosen``."""
-    c = _t(spark, sf_dir, "customer")
+    c = load_table(spark, sf_dir, "customer")
     base = c.select(
         F.col("c_nationkey").alias("cat"),
         (F.expr(_BAL_CENTS) + 100000).alias("bal"),
@@ -428,6 +424,6 @@ def mm_pcm_silence_runs(spark, sf_dir):
     ``aggregate`` fold carrying 4 integers of state per row; the SQL
     twin replays the runs with document-partitioned windows over the
     unnested samples — different plans, identical integers."""
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
+    docs = load_table(spark, sf_dir, "documents").select("doc_id")
     built = M.synthesize_wav_pcm(docs, "doc_id", n_samples=_PCM_N)
     return M.pcm_silence_runs(built, "doc_id", threshold=4096)

@@ -22,10 +22,6 @@ from .wave4 import _copurchase_edges
 from .wave9 import _rdiv_sql
 
 
-def _t(spark, sf_dir, name):
-    return load_table(spark, sf_dir, name)
-
-
 _TP_CENTS = ("CAST(CAST(round(o_totalprice, 2) AS DECIMAL(18,2)) "
              "* 100 AS BIGINT)")
 
@@ -46,9 +42,9 @@ def ivm_join_refresh(spark, sf_dir):
     ΔA⋈B₀ ∪ A₀⋈ΔB ∪ ΔA⋈ΔB — each term broadcast on its delta side,
     no fact⋈fact reshuffle — must reproduce the full join exactly,
     which the oracle checks through a nation/priority rollup."""
-    c = _t(spark, sf_dir, "customer").select(
+    c = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("ck"), "c_nationkey")
-    o = _t(spark, sf_dir, "orders").select(
+    o = load_table(spark, sf_dir, "orders").select(
         F.col("o_custkey").alias("ck"), "o_orderpriority",
         "o_orderdate", F.expr(_TP_CENTS).alias("cents"))
     da = c.filter(F.col("ck") % 97 == 0)
@@ -111,7 +107,7 @@ def orders_nearest_price_topk(spark, sf_dir):
     neighbors), so one partitioned window sort and 2k LAG/LEADs
     replace the quadratic theta self-join.  Probes are the 1/199
     orderkey residue class; neighbors still come from ALL orders."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     out = nearest_value_topk(
         o.select("o_orderpriority", "o_orderkey",
                  F.expr(_TP_CENTS).alias("cents")),
@@ -141,7 +137,7 @@ def corpus_class_balance_downsample(spark, sf_dir):
     doc id — reproducible across engines and runs, no RNG).  One
     class-partitioned ranking window + a 1-row broadcast minimum;
     the selection a multilingual trainer applies before mixing."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     counts = docs.groupBy("lang").agg(F.count(F.lit(1)).alias("c"))
     m = counts.agg(F.min("c").alias("m"))
     ranked = docs.select(
@@ -239,17 +235,18 @@ FROM ne CROSS JOIN nc CROSS JOIN nv
 def dedup_lsh_recall_audit(spark, sf_dir):
     """Measured LSH quality against ground truth: candidate pairs
     from the PORTABLE md5 MinHash with 2-row bands
-    (operators/dedup.py minhash_lsh_pairs_portable — recall < 1 by
+    (operators/dedup.py minhash_lsh_pairs, portable=True — recall < 1 by
     design, unlike the r=1 production path) versus the exact Jaccard
     pair set; recall and candidate precision in rounded ppm.  The
     audit one runs before trusting an LSH configuration at 100 TB —
     both pair generators are posting-list/band joins, never n²."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     exact = D.jaccard_pairs_exact(
         docs, "doc_id", "text", n=5, threshold=0.5
     ).select("doc_a", "doc_b")
-    cand = D.minhash_lsh_pairs_portable(
-        docs, "doc_id", "text", n=5, num_hashes=24, rows_per_band=2)
+    cand = D.minhash_lsh_pairs(
+        docs, "doc_id", "text", n=5, num_hashes=24, rows_per_band=2,
+        portable=True, verify=False)
     ne = exact.agg(F.count(F.lit(1)).cast("bigint").alias("n_exact"))
     nc = cand.agg(F.count(F.lit(1)).cast("bigint").alias("n_cand"))
     nv = cand.join(exact, ["doc_a", "doc_b"]).agg(
@@ -340,7 +337,7 @@ def stats_mode_per_group(spark, sf_dir):
     deterministic tie rule (count desc, then value): the holistic
     aggregate SQL lacks natively, as one grouped count + a
     group-partitioned rank over the domain-bounded count table."""
-    c = _t(spark, sf_dir, "customer")
+    c = load_table(spark, sf_dir, "customer")
     counts = c.groupBy(
         F.col("c_nationkey").alias("nation"),
         F.col("c_mktsegment").alias("seg"),

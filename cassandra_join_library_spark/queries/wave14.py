@@ -21,10 +21,6 @@ from .dedup import _CLUSTERS_ORACLE
 from .wave9 import _rdiv_sql
 
 
-def _t(spark, sf_dir, name):
-    return load_table(spark, sf_dir, name)
-
-
 @register("events_segment_overlap", oracle=f"""
 WITH seg AS MATERIALIZED (
   SELECT DISTINCT event_type AS t, user_id AS u FROM events
@@ -148,7 +144,7 @@ def corpus_quality_calibration(spark, sf_dir):
     a heuristic filter agree before swapping one for the other.
     Composition of two map-only scorers joined on doc id; the
     histogram is score-domain-bounded."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     scored = T.model_score(docs, "doc_id", "text").select(
         "doc_id", "score")
     rules = T.gopher_rules(docs, "doc_id", "text").select(
@@ -176,7 +172,7 @@ def corpus_bpe_fertility(spark, sf_dir):
     Encoding is the broadcast vocab join (the merge loop runs once on
     the <=2000-row vocab, never per document); the oracle replays the
     whole training unrolled."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     per_doc = bpe_encode_counts(
         spark, docs, "doc_id", "text", n_merges=8, top_words=2000)
     out = (
@@ -225,7 +221,7 @@ def lineitem_abc_analysis(spark, sf_dir):
     pure integer threshold comparisons.  The corpus collapses to the
     part-level revenue aggregate first (dimension-sized); the
     cumulative window runs over THAT, never the fact table."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     rev = li.groupBy(F.col("l_partkey").alias("p")).agg(
         F.sum(F.expr(_EPRICE_CENTS)).cast("bigint").alias("r"))
     w = Window.orderBy(F.desc("r"), F.asc("p")).rowsBetween(
@@ -278,7 +274,7 @@ def dedup_survivor_bias_audit(spark, sf_dir):
     before/merge sanity check a curation pipeline runs after any
     dedup pass.  Reuses the exact-Jaccard pairs -> pointer-jumping
     components machinery; the audit itself is one bounded aggregate."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     pairs = D.jaccard_pairs_exact(
         docs, "doc_id", "text", n=5, threshold=0.5)
     cc = D.duplicate_clusters(pairs).withColumnRenamed(

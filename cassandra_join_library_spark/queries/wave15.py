@@ -20,10 +20,6 @@ from .wave9 import _rdiv_sql
 _WINNOW_SQL = winnowing_sql("documents", "doc_id", "text")
 
 
-def _docs(spark, sf_dir):
-    return load_table(spark, sf_dir, "documents")
-
-
 @register("text_winnowing_fingerprints", oracle=_WINNOW_SQL)
 def text_winnowing_fingerprints(spark, sf_dir):
     """Winnowing (MOSS) fingerprint selection (operators/text.py
@@ -33,7 +29,8 @@ def text_winnowing_fingerprints(spark, sf_dir):
     are kept.  Map-only higher-order functions; the trailing DISTINCT
     is the lone (map-side-combined) shuffle; all-integer hashing gives
     byte-exact DuckDB parity."""
-    return winnowing_fingerprints(_docs(spark, sf_dir), "doc_id", "text")
+    return winnowing_fingerprints(
+        load_table(spark, sf_dir, "documents"), "doc_id", "text")
 
 
 _WINNOW_PAIR_DF_CAP = 50
@@ -77,7 +74,8 @@ def dedup_winnowing_pairs(spark, sf_dir):
     candidate generator is DETERMINISTIC: a shared run of >= 8 chars
     always surfaces.""".format(cap=_WINNOW_PAIR_DF_CAP,
                                minshared=_WINNOW_PAIR_MIN_SHARED)
-    fps = winnowing_fingerprints(_docs(spark, sf_dir), "doc_id", "text")
+    fps = winnowing_fingerprints(
+        load_table(spark, sf_dir, "documents"), "doc_id", "text")
     # the (doc, hash) posting list feeds FOUR plan branches (df cap,
     # sizes, both join sides) — materialize the compact distinct set
     # once instead of re-running the fingerprint scan per branch
@@ -152,7 +150,7 @@ def corpus_stratified_sample(spark, sf_dir):
     across partitions or engines).  One window per stratum, partition
     count bounded by the stratum domain; hash order makes the pick
     uniform in doc_id."""
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     w = (Window.partitionBy("lang", "source")
          .orderBy(F.md5(F.col("doc_id").cast("string")), F.col("doc_id")))
     return (
@@ -206,7 +204,7 @@ def er_match_scores(spark, sf_dir):
     threshold are emitted with their weight vector.  Block-bounded
     pair fanout; all-integer weights so the twin matches exactly.
     """.format(lo=_ER_BLOCK_MIN, hi=_ER_BLOCK_MAX)
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     keyed = (
         docs.select("doc_id", "lang", "source", "n_chars",
                     F.split("text", " ").alias("w"))

@@ -19,10 +19,6 @@ from .wave9 import _rdiv_sql
 from .wave11 import _DISC_BP, _QTY_CENTS
 
 
-def _t(spark, sf_dir, name):
-    return load_table(spark, sf_dir, name)
-
-
 @register("stats_rank_corr", oracle=f"""
 WITH m AS (
   SELECT {_QTY_CENTS} AS x, {_DISC_BP} AS y FROM lineitem
@@ -111,7 +107,7 @@ def stats_rank_corr(spark, sf_dir):
     implementation would globally sort the fact table twice.
     Continuous measures would first quantize (the standard
     tie-corrected treatment)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     m = li.select(F.expr(_QTY_CENTS).alias("x"),
                   F.expr(_DISC_BP).alias("y"))
     cells = (m.groupBy("x", "y")
@@ -341,7 +337,7 @@ def mm_gif_parse(spark, sf_dir):
     (GCT flag = byte div 128, GCT size = 2^((byte mod 8)+1)), the
     first bit-field parse in the multimodal suite.  Pure codegen,
     map-only; the oracle builds and parses the identical hex image."""
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
+    docs = load_table(spark, sf_dir, "documents").select("doc_id")
     built = M.synthesize_gif(docs, "doc_id")
     return M.parse_gif_metadata(built, "doc_id")
 
@@ -368,6 +364,6 @@ def mm_pcm_zero_crossings(spark, sf_dir):
     curation.  Array-first int16 decode (shared with
     mm_wav_pcm_stats), pair scan as a filter over positions, rate in
     rounded ppm so everything stays integer-exact.  Map-only."""
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
+    docs = load_table(spark, sf_dir, "documents").select("doc_id")
     built = M.synthesize_wav_pcm(docs, "doc_id", n_samples=_PCM_N)
     return M.pcm_zero_crossings(built, "doc_id")

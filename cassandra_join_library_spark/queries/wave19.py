@@ -14,10 +14,6 @@ from ..registry import register
 from ..sources.catalog import load_table
 
 
-def _t(spark, sf_dir, name):
-    return load_table(spark, sf_dir, name)
-
-
 def _jpeg_walk_ctes(steps: int) -> str:
     u8 = lambda off: f"('0x' || substr(h, ({off}) * 2 - 1, 2))::BIGINT"
     u16 = lambda off: f"({u8(off)} * 256 + {u8(f'({off}) + 1')})"
@@ -88,7 +84,7 @@ def mm_jpeg_parse(spark, sf_dir):
     codegen'd.  Completes the image-container family
     (BMP/PNG/GIF/JPEG).  Map-only; the oracle builds and walks the
     identical hex image."""
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
+    docs = load_table(spark, sf_dir, "documents").select("doc_id")
     built = M.synthesize_jpeg(docs, "doc_id")
     return M.parse_jpeg_metadata(built, "doc_id")
 
@@ -131,7 +127,7 @@ def profile_equidepth_price(spark, sf_dir):
     that keeps equi-depth feasible at 100 TB, where the naive ntile()
     over raw rows is a full-table sort.  Depth balance is exact up to
     tie granularity (a heavy value lands in one bucket whole)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     vf = (li.groupBy(F.floor("l_extendedprice").cast("bigint").alias("v"))
           .agg(F.count(F.lit(1)).cast("bigint").alias("f")))
     w = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, 0)

@@ -24,10 +24,6 @@ from .wave9 import _rdiv_sql
 from ..operators.stats import _RDIV, staged_ppm
 
 
-def _t(spark, sf_dir, name):
-    return load_table(spark, sf_dir, name)
-
-
 _CMS_TOPK = 20
 
 _CMS_WORDS_SQL = cms_counters_sql(
@@ -69,7 +65,7 @@ def approx_topk_cms(spark, sf_dir):
     guarantee (estimate >= truth, always).  This is the 100 TB
     frequent-items shape: the corpus pass shuffles {dw} cells, not a
     vocabulary; the exact side here is the audit, not the plan."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         F.explode(F.split(F.col("text"), " ")).alias("term"))
     counters = cms_counter_table(toks, "term")
@@ -150,7 +146,7 @@ def layout_compaction_bins(spark, sf_dir):
     boundaries rather than leaving slack, matching coalesce-style
     byte-range planning.  ``fill_ppm`` grades each bin's fill factor
     exactly."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     w = (Window.partitionBy("source")
          .orderBy(F.md5(F.col("doc_id").cast("string")), "doc_id")
          .rowsBetween(Window.unboundedPreceding, 0))
@@ -221,7 +217,7 @@ def stats_mannwhitney_u(spark, sf_dir):
     too and the sums switch to the DECIMAL(38,0) shard-mergeable form
     documented in stats_rank_corr.  The only data-sized pass is the
     first groupBy; the window runs over the dollar domain."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     vf = (orders.filter(F.col("o_orderstatus").isin("F", "O"))
           .groupBy(F.floor("o_totalprice").cast("bigint").alias("v"))
           .agg(F.sum(F.when(F.col("o_orderstatus") == "F", 1)
@@ -356,6 +352,6 @@ def mm_mp4_box_parse(spark, sf_dir):
     # parquet split -> one input task, serializing the CPU-bound
     # two-level walk; a real video corpus gets this parallelism from
     # its file splits
-    docs = spread_input(_t(spark, sf_dir, "documents").select("doc_id"))
+    docs = spread_input(load_table(spark, sf_dir, "documents").select("doc_id"))
     built = M.synthesize_mp4(docs, "doc_id")
     return M.parse_mp4_metadata(built, "doc_id")

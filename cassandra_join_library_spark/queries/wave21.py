@@ -15,10 +15,6 @@ from ..sources.catalog import load_table
 from .wave4 import _EDGE_CTE, _copurchase_edges
 
 
-def _t(spark, sf_dir, name):
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # URL synthesis (both engines build the identical string from doc_id)
 # ---------------------------------------------------------------------------
@@ -76,7 +72,7 @@ def _urls(spark, sf_dir):
         .when(did % 3 == 1, F.lit("?a=1")).otherwise(F.lit("")),
         F.when(did % 4 == 0, F.lit("#frag")).otherwise(F.lit("")),
     )
-    return (_t(spark, sf_dir, "documents")
+    return (load_table(spark, sf_dir, "documents")
             .select("doc_id", url.alias("url")))
 
 
@@ -376,7 +372,7 @@ def embedding_jl_projection(spark, sf_dir):
     posexplode), then two bounded aggregates.  The ratio landing near
     1e6 per label is the JL isometry-in-expectation, measured, not
     assumed."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     el = emb.select(
         "vec_id", "label",
         F.posexplode(F.transform(F.col("embedding"),

@@ -17,10 +17,6 @@ from .wave9 import _rdiv_sql
 from ..operators.stats import _RDIV
 
 
-def _t(spark, sf_dir, name):
-    return load_table(spark, sf_dir, name)
-
-
 # --------------------------------------------------------------------------
 # mm_subtitle_align — SRT cue parsing + per-doc range join
 # --------------------------------------------------------------------------
@@ -79,7 +75,7 @@ def mm_subtitle_align(spark, sf_dir):
     come out orphaned via the left join."""
     # repartition before the per-doc cue build (one-split fixture ->
     # one task; real corpora parallelize via file splits)
-    docs = spread_input(_t(spark, sf_dir, "documents").select("doc_id"),
+    docs = spread_input(load_table(spark, sf_dir, "documents").select("doc_id"),
                         F.col("doc_id"))
     did = F.col("doc_id")
 
@@ -181,7 +177,7 @@ def corpus_span_corruption(spark, sf_dir):
     # repartition on the doc id before the per-token md5 pass (one-
     # split fixture -> one task; hash-partitioning by doc also
     # pre-clusters the doc-keyed windows downstream)
-    docs = spread_input(_t(spark, sf_dir, "documents"), F.col("doc_id"))
+    docs = spread_input(load_table(spark, sf_dir, "documents"), F.col("doc_id"))
     tok = docs.select(
         "doc_id",
         F.posexplode(F.split("text", " ")).alias("pos", "_w"),
@@ -287,7 +283,7 @@ def ann_ivf_recall_audit(spark, sf_dir):
     list-count settings: recall is a measured property of the data,
     not a hope.  Both sides are deterministic, so the recall values
     themselves carry the full oracle."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
     ivf = S.ivf_topk(emb, queries, "vec_id", "embedding",
                      k=5, centroid_stride=32, nprobe=4) \
@@ -348,7 +344,7 @@ def profile_histogram_l1_drift(spark, sf_dir):
     cross-multiply outgrows int64 past ~3e9 rows/side).  Two grouped
     counts + one bucket-keyed outer join; the histogram is
     domain-sized."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     a = (docs.filter(F.col("doc_id") % 2 == 0)
          .groupBy(F.expr(f"n_chars div {_HIST_BUCKET}").alias("bucket"))
          .agg(F.count(F.lit(1)).cast("bigint").alias("ca")))

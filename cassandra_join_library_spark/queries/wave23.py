@@ -20,10 +20,6 @@ from ..operators.stats import _RDIV, staged_ppm
 from . import curation  # noqa: F401
 
 
-def _t(spark, sf_dir, name):
-    return load_table(spark, sf_dir, name)
-
-
 def _staged_ppm_sql(num: str, den: str) -> str:
     return staged_ppm(num, den, intdiv="//")
 
@@ -136,7 +132,7 @@ def text_hashing_trick_audit(spark, sf_dir):
     One token pass builds the bigrams (adjacent array elements — no
     self-join), one doc-keyed aggregate counts; the feature space
     never materializes anywhere, which is the point."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     tok = docs.select(
         "doc_id",
         F.posexplode(F.split("text", " ")).alias("pos", "t1"),
@@ -276,7 +272,7 @@ def mm_id3_tag_parse(spark, sf_dir):
     offset-only walks generalized to stateful parsing.  Map-only; the
     oracle synthesizes and walks the identical tag with unrolled
     column-carrying CTEs."""
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
+    docs = load_table(spark, sf_dir, "documents").select("doc_id")
     did = F.col("doc_id")
     tit_len = did % 12 + 1
     art_len = did % 7 + 1

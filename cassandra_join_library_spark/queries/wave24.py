@@ -16,10 +16,6 @@ from .wave9 import _rdiv_sql
 from ..operators.stats import _RDIV
 
 
-def _docs(spark, sf_dir):
-    return load_table(spark, sf_dir, "documents")
-
-
 @register("dedup_prefix_filter_jaccard", oracle=_JACCARD_ORACLE)
 def dedup_prefix_filter_jaccard(spark, sf_dir):
     """The exact 5-gram Jaccard pair set AGAIN — but generated through
@@ -35,7 +31,7 @@ def dedup_prefix_filter_jaccard(spark, sf_dir):
     acceptable: the rare-first order makes the joined lists the
     SHORTEST ones (the funnel audit below grades the pruning power)."""
     return D.prefix_filter_jaccard_pairs(
-        _docs(spark, sf_dir), "doc_id", "text", n=5, threshold=0.5)
+        load_table(spark, sf_dir, "documents"), "doc_id", "text", n=5, threshold=0.5)
 
 
 @register("dedup_prefix_filter_funnel", oracle=f"""
@@ -101,7 +97,7 @@ def dedup_prefix_filter_funnel(spark, sf_dir):
     # result plan instead of leaking across the shared bench session
     # (r09 ADVICE; pattern + cluster-scale caveat documented in the
     # operators/dedup.py module docstring)
-    sh = (D.shingles(_docs(spark, sf_dir), "doc_id", "text", 5)
+    sh = (D.shingles(load_table(spark, sf_dir, "documents"), "doc_id", "text", 5)
           .localCheckpoint(eager=True))
     # merge (sort-merge) hints on every corpus-sized join: the
     # checkpointed shingle set's estimated stats can sneak under the

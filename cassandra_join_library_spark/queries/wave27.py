@@ -24,10 +24,6 @@ from ..registry import register
 from ..sources.catalog import load_table
 
 
-def _docs(spark, sf_dir):
-    return load_table(spark, sf_dir, "documents")
-
-
 #: shared shingle CTEs: 5-gram word shingles, prior corpus = even
 #: doc_ids (the previous snapshot), new crawl = odd doc_ids
 _SNAPSHOT_CTE = """
@@ -78,7 +74,7 @@ def dedup_cross_snapshot(spark, sf_dir):
     it — new-crawl shingles shuffle to the store's buckets, nothing
     corpus-vs-corpus ever forms.  Integer ppm containment: exact,
     no float threshold boundary."""
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     prior = docs.filter(F.col("doc_id") % 2 == 0)
     new = docs.filter(F.col("doc_id") % 2 == 1)
     store = (D.shingles(prior, "doc_id", "text", 5)
@@ -100,7 +96,7 @@ def dedup_cross_snapshot_funnel(spark, sf_dir):
     the next snapshot's storage bill shrinks — and the regression
     canary for the store build (a store that silently loses shingles
     shows up here as n_dropped collapsing)."""
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     prior = docs.filter(F.col("doc_id") % 2 == 0)
     new = docs.filter(F.col("doc_id") % 2 == 1)
     store = (D.shingles(prior, "doc_id", "text", 5)
@@ -160,4 +156,4 @@ def corpus_quality_logreg(spark, sf_dir):
     is graded on the exact integer micro-score and no float ever
     crosses an engine boundary."""
     return logistic_quality_score(
-        _docs(spark, sf_dir), "doc_id", "text")
+        load_table(spark, sf_dir, "documents"), "doc_id", "text")

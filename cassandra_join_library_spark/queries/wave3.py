@@ -15,10 +15,6 @@ from ..registry import register
 from ..sources.catalog import load_table
 
 
-def _docs(spark, sf_dir):
-    return load_table(spark, sf_dir, "documents")
-
-
 @register("corpus_vocabulary", oracle="""
 WITH tok AS (
   SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents
@@ -47,7 +43,7 @@ def corpus_vocabulary(spark, sf_dir):
     from ..operators.corpus import vocabulary_oov
 
     return vocabulary_oov(
-        _docs(spark, sf_dir), "doc_id", "text", min_df=2, max_df_ratio=0.8
+        load_table(spark, sf_dir, "documents"), "doc_id", "text", min_df=2, max_df_ratio=0.8
     )
 
 
@@ -84,7 +80,7 @@ def dedup_tf_cosine(spark, sf_dir):
     from ..operators.dedup import tf_cosine_pairs
 
     return tf_cosine_pairs(
-        _docs(spark, sf_dir), "doc_id", "text",
+        load_table(spark, sf_dir, "documents"), "doc_id", "text",
         n=3, threshold=0.5, max_doc_freq=20,
     )
 
@@ -244,7 +240,7 @@ def text_langid_confusion(spark, sf_dir):
 
     from ..operators.text import lang_id
 
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     pred = lang_id(docs, "doc_id", "text", carry_cols=("lang",))
     return (
         pred.groupBy("lang", "lang_pred")

@@ -42,10 +42,6 @@ _B_WHERE = "doc_id % 2 = 1"
 _RETRAIN_PPM = 50_000
 
 
-def _docs(spark, sf_dir):
-    return load_table(spark, sf_dir, "documents")
-
-
 def _tagged(docs):
     return docs.withColumn(
         "snap",
@@ -62,7 +58,7 @@ def tokenizer_fertility_drift(spark, sf_dir):
     (operators/bpe.py bpe_fertility_drift).  The training corpus-pass
     is one word-count shuffle; encoding both snapshots is ONE tagged
     corpus pass against the broadcast vocab."""
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     return bpe_fertility_drift(
         spark,
         docs.filter(F.col("doc_id") % 2 == 0),
@@ -76,7 +72,7 @@ def tokenizer_oov_drift(spark, sf_dir):
     """Per-language OOV-mass drift against the prior snapshot's
     top-2000 dictionary (operators/bpe.py vocab_oov_drift) — the
     merge-free leading indicator of tokenizer_fertility_drift."""
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     return vocab_oov_drift(
         docs.filter(F.col("doc_id") % 2 == 0),
         _tagged(docs), "text", "lang", top_words=2000)

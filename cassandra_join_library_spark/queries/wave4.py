@@ -21,17 +21,13 @@ from ..registry import register
 from ..sources.catalog import load_table
 
 
-def _t(spark, sf_dir, name):
-    return load_table(spark, sf_dir, name)
-
-
 def _copurchase_edges(spark, sf_dir):
     """Undirected part co-purchase edges (u < v): parts appearing in
     the same order.  Per-order fanout is k-choose-2 in the order's
     distinct part count — bounded by order size, not corpus size; at
     100 TB cap parts-per-order (top-k by quantity) before pairing."""
     li = (
-        _t(spark, sf_dir, "lineitem")
+        load_table(spark, sf_dir, "lineitem")
         .select(F.col("l_orderkey").alias("o"),
                 F.col("l_partkey").alias("p"))
         .distinct()
@@ -143,7 +139,7 @@ def mm_image_patch_plan(spark, sf_dir):
     right/bottom padding with pure integer math.  Map-only, no
     shuffle — the planning pass that sizes a vision-encoder batch
     before any pixel is decoded."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     payload = M.synthesize_bmp(docs, "doc_id")
     parsed = M.parse_bmp_metadata(payload, "doc_id")
     px = F.expr("(bmp_width + 15) div 16")
@@ -188,7 +184,7 @@ def mm_audio_frame_plan(spark, sf_dir):
     deterministic stub n_chars*100 (no codec in the sandbox — the
     label says so).  All integer division, map-only — the pass that
     sizes an audio-feature batch before decoding a single sample."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     payload = M.synthesize_wav(docs, "doc_id").select("doc_id", "payload")
     parsed = M.parse_wav_metadata(payload, "doc_id").join(
         docs.select("doc_id", (F.col("n_chars") * 100).alias("n_samples")),
@@ -245,7 +241,7 @@ def text_code_detect(spark, sf_dir):
     share, and keyword hits, all via integer counting (occurrences =
     length delta under replace — exact in both engines, no regex
     dialect risk).  Map-only, pure codegen."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
 
     def occ(needle: str):
         esc = needle.replace("'", "\\'")
@@ -285,7 +281,7 @@ def corpus_length_histogram(spark, sf_dir):
     context length and packing strategy.  One map-side-combinable
     aggregation; bucket count is bounded (digits x sources), so the
     output is cluster-sized at any corpus size."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     return (
         docs.groupBy(
             "source",
@@ -319,7 +315,7 @@ def corpus_mixture_temperature(spark, sf_dir):
     integer micro-units so the share division is over exact integers.
     The share-of-total window runs over #sources rows (bounded,
     audit-reviewed)."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     s = docs.groupBy("source").agg(F.count(F.lit(1)).alias("n_docs"))
     w = s.select(
         "source", F.col("n_docs").cast("bigint").alias("n_docs"),
@@ -348,7 +344,7 @@ def window_cume_percent(spark, sf_dir):
     ANSI distribution window functions (both are single rational
     divisions of rank counters, so the doubles agree bit-for-bit
     across engines).  Partitioned window, segment-keyed."""
-    c = _t(spark, sf_dir, "customer")
+    c = load_table(spark, sf_dir, "customer")
     w = Window.partitionBy("c_mktsegment").orderBy("c_acctbal")
     return c.select(
         "c_custkey", "c_mktsegment", "c_acctbal",
@@ -445,7 +441,7 @@ def dedup_prefix_key(spark, sf_dir):
     — catches boilerplate/mirror-page families for one shuffle on a
     64-byte key before any shingling runs.  Window is keyed by the
     fingerprint (bucket-sized partitions)."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     norm = docs.select(
         "doc_id", "n_chars",
         F.substring(
@@ -489,7 +485,7 @@ def ann_mutual_knn(spark, sf_dir):
     baseline on the bounded slice (broadcast queries, no corpus
     shuffle); at 100 TB the candidate step swaps to the IVF/LSH
     generators and this same mutual join runs on their output."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     universe = emb.filter(F.col("vec_id") % 4 == 0)
     knn = S.cosine_topk_bruteforce(universe, universe, "vec_id",
                                    "embedding", k=5)

@@ -16,10 +16,6 @@ from ..registry import register
 from ..sources.catalog import load_events, load_table
 
 
-def _t(spark, sf_dir, name):
-    return load_table(spark, sf_dir, name)
-
-
 @register("corpus_leakage_safe_split", oracle="""
 WITH RECURSIVE words AS (
   SELECT doc_id, string_split(text, ' ') AS w FROM documents
@@ -74,7 +70,7 @@ def corpus_leakage_safe_split(spark, sf_dir):
     component representative → md5-bucket 80/10/10.  At 100 TB the
     pair step swaps to the MinHash-LSH generator; the split logic is
     unchanged."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     pairs = D.jaccard_pairs_exact(docs, "doc_id", "text",
                                   n=5, threshold=0.5)
     clusters = D.duplicate_clusters(pairs)
@@ -168,7 +164,7 @@ def embedding_standardize(spark, sf_dir):
     on both engines (IEEE ops on exact integer inputs are
     deterministic).  Stats broadcast back; the corpus never shuffles
     on data keys."""
-    emb = _t(spark, sf_dir, "embeddings").filter(
+    emb = load_table(spark, sf_dir, "embeddings").filter(
         F.col("embedding").isNotNull())
     x = emb.select(
         "vec_id",
@@ -219,7 +215,7 @@ def text_readability_score(spark, sf_dir):
     integer divisions, so both engines agree bit-for-bit with no
     float formula drift.  Map-only; the score feeds readability-band
     mixture planning next to the Gopher/C4 filters."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     counted = docs.select(
         "doc_id",
         F.expr("size(filter(split(text, '[.!?]+', -1), x -> trim(x) != ''))")

@@ -13,10 +13,6 @@ from ..registry import register
 from ..sources.catalog import load_events, load_table
 
 
-def _t(spark, sf_dir, name):
-    return load_table(spark, sf_dir, name)
-
-
 @register("corpus_chunk_overlap", oracle="""
 WITH p AS (
   SELECT doc_id, text, CAST(length(text) AS BIGINT) AS n
@@ -38,7 +34,7 @@ def corpus_chunk_overlap(spark, sf_dir):
     shape, vs the non-overlapping ``corpus_chunks``).  sequence +
     explode — map-only row expansion, no shuffle; at 100 TB chunk
     emission is embarrassingly parallel."""
-    docs = _t(spark, sf_dir, "documents").filter(F.length("text") >= 1)
+    docs = load_table(spark, sf_dir, "documents").filter(F.length("text") >= 1)
     s = docs.select(
         "doc_id", "text", F.length("text").cast("bigint").alias("n"),
         F.explode(
@@ -77,7 +73,7 @@ def text_line_dedup_within_doc(spark, sf_dir):
     via array_position == own index (Spark lambdas index from 0,
     DuckDB from 1 — both sides spell their own convention), map-only,
     re-assembled text compared byte-for-byte."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     d = docs.select(
         "doc_id",
         F.split(F.col("text"), "\n", -1).alias("lines"),

@@ -23,14 +23,6 @@ from ..registry import register
 from ..sources.catalog import load_table, spread_input
 
 
-def _t(spark, sf_dir, name):
-    return load_table(spark, sf_dir, name)
-
-
-def _docs(spark, sf_dir):
-    return _t(spark, sf_dir, "documents")
-
-
 @register("graph_bfs_hops", oracle=bfs_sql("c_custkey % 50 = 0", 3))
 def graph_bfs_hops(spark, sf_dir):
     """Multi-source BFS over the customer↔supplier co-purchase graph
@@ -40,10 +32,10 @@ def graph_bfs_hops(spark, sf_dir):
     histogram with unreached nodes at hop -1.  The reachability
     primitive under influence/contamination-spread audits; all-integer
     hops, unrolled-CTE oracle."""
-    cust = _t(spark, sf_dir, "customer")
-    supp = _t(spark, sf_dir, "supplier")
-    orders = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
+    cust = load_table(spark, sf_dir, "customer")
+    supp = load_table(spark, sf_dir, "supplier")
+    orders = load_table(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
 
     nodes = cust.select(
         F.lit("c").alias("nt"), F.col("c_custkey").cast("long").alias("id")
@@ -92,8 +84,8 @@ def privacy_l_diversity(spark, sf_dir):
     the homogeneity leak k-anonymity misses (operators/profiling.py
     l_diversity).  Customer-keyed join + two map-side-combined
     aggregates."""
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders")
     j = cust.join(orders, cust.c_custkey == orders.o_custkey).select(
         "c_nationkey", "c_mktsegment", "o_orderpriority")
     return P.l_diversity(
@@ -165,7 +157,7 @@ def mm_wav_pcm_stats(spark, sf_dir):
     as exact BIGINTs (operators/multimodal.py synthesize_wav_pcm /
     pcm_stats).  Map-only; the oracle builds and parses the identical
     hex image."""
-    docs = _docs(spark, sf_dir).select("doc_id")
+    docs = load_table(spark, sf_dir, "documents").select("doc_id")
     built = M.synthesize_wav_pcm(docs, "doc_id", n_samples=_PCM_N)
     return M.pcm_stats(built, "doc_id")
 
@@ -182,7 +174,7 @@ def text_cdc_chunks(spark, sf_dir):
     Repartitioned before the per-char hash pass (one-split fixture ->
     one task; real corpora parallelize via file splits — the operator
     itself stays map-only)."""
-    docs = spread_input(_docs(spark, sf_dir))
+    docs = spread_input(load_table(spark, sf_dir, "documents"))
     return cdc_chunks(docs, "doc_id", "text")
 
 
@@ -210,7 +202,8 @@ def corpus_vocab_coverage(spark, sf_dir):
     the audit that shows which sources a truncated vocab starves.
     Term-keyed count + TakeOrdered top-V + broadcast join; single
     integer division for the rate."""
-    return topv_coverage(_docs(spark, sf_dir), "source", "text", v=500)
+    return topv_coverage(
+        load_table(spark, sf_dir, "documents"), "source", "text", v=500)
 
 
 @register("profile_snapshot_drift", oracle="""
@@ -255,7 +248,7 @@ def profile_snapshot_drift(spark, sf_dir):
     length sum/min/max, and categorical cardinalities reported long so
     a monitor alerts on any metric (operators/profiling.py
     snapshot_drift).  Each side is ONE exact 1-row aggregate."""
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     a = docs.filter(F.col("doc_id") % 2 == 0)
     b = docs.filter(F.col("doc_id") % 3 != 1)
     return P.snapshot_drift(a, b, "n_chars", ["source", "lang"])
@@ -277,5 +270,5 @@ def layout_zonemap_skipping(spark, sf_dir):
     could prune the bucket from its footer stats alone.  The
     diagnostic that says when to re-cluster (see ``layout_zorder``).
     One bucket-keyed aggregate."""
-    return zonemap_report(_docs(spark, sf_dir), "doc_id", "n_chars",
+    return zonemap_report(load_table(spark, sf_dir, "documents"), "doc_id", "n_chars",
                           bucket_size=64, lo=450, hi=700)

@@ -21,10 +21,6 @@ from ..registry import register
 from ..sources.catalog import load_events, load_table
 
 
-def _t(spark, sf_dir, name):
-    return load_table(spark, sf_dir, name)
-
-
 _VMICRO = "CAST(CAST(round(value, 6) AS DECIMAL(18,6)) * 1000000 AS BIGINT)"
 
 
@@ -176,7 +172,7 @@ def corpus_rendezvous_shards(spark, sf_dir):
     steal (~1/17, vs near-total reshuffle under modulo sharding).
     Map-only argmax + one shard-count-sized aggregate."""
     return rendezvous_shards(
-        _t(spark, sf_dir, "documents"), "doc_id", n_shards=16)
+        load_table(spark, sf_dir, "documents"), "doc_id", n_shards=16)
 
 
 @register("profile_bucket_checksums", oracle="""
@@ -198,7 +194,7 @@ def profile_bucket_checksums(spark, sf_dir):
     relationally; cassandra_joinlib relies on the server's own
     anti-entropy).  Map-only digest + bucket-keyed aggregate."""
     return bucket_checksums(
-        _t(spark, sf_dir, "orders"), "o_orderkey",
+        load_table(spark, sf_dir, "orders"), "o_orderkey",
         ["o_orderkey", "o_custkey", "o_orderstatus", "o_orderpriority"],
         bucket_size=1024)
 
@@ -227,7 +223,7 @@ def events_open_order_concurrency(spark, sf_dir):
     the fact table, which is why the single-partition running sum is
     safe at 100 TB (the per-day aggregate before it is the
     corpus-sized, fully parallel step)."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     d = o.select(F.to_date("o_orderdate").alias("day"),
                  F.lit(1).alias("delta")).unionByName(
         o.select(F.date_add(F.to_date("o_orderdate"), 30).alias("day"),

@@ -30,10 +30,6 @@ from .dedup import _JACCARD_ORACLE
 from .wave4 import _EDGE_CTE, _copurchase_edges
 
 
-def _t(spark, sf_dir, name):
-    return load_table(spark, sf_dir, name)
-
-
 # DuckDB-side rounded non-negative integer division (same contract as
 # operators/stats._RDIV, `//` instead of `div`).  The result is
 # OUTER-PARENTHESIZED — without it, embedding the macro after a
@@ -175,7 +171,7 @@ def privacy_t_closeness(spark, sf_dir):
     the only float op is the final division.  Complements
     k-anonymity / l-diversity: those count, this compares
     distributions."""
-    o = _t(spark, sf_dir, "orders").select(
+    o = load_table(spark, sf_dir, "orders").select(
         F.year("o_orderdate").cast("bigint").alias("yr"),
         "o_orderstatus", "o_orderpriority")
     return t_closeness(o, ["yr", "o_orderstatus"], "o_orderpriority")
@@ -216,7 +212,7 @@ def stats_chi_square_cells(spark, sf_dir):
     corpus-sized aggregate + broadcast marginal joins; expected /
     contrib are a fixed IEEE tree over exact integer counts."""
     return contingency_chi_square(
-        _t(spark, sf_dir, "orders"), "o_orderstatus", "o_orderpriority")
+        load_table(spark, sf_dir, "orders"), "o_orderstatus", "o_orderpriority")
 
 
 @register("stats_autocorr_daily", oracle=f"""
@@ -254,7 +250,7 @@ def stats_autocorr_daily(spark, sf_dir):
     The ordering window runs over the calendar-bounded daily rollup,
     never the fact table."""
     daily = (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .groupBy(F.to_date("o_orderdate").alias("day"))
         .agg(F.sum(F.floor("o_totalprice").cast("bigint"))
              .cast("bigint").alias("v"))
@@ -313,8 +309,8 @@ def stats_ols_by_brand(spark, sf_dir):
     slope/intercept are a fixed two-division IEEE tree.  The
     screening regression a feature pipeline runs per segment in one
     pass."""
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part").select("p_partkey", "p_brand")
+    li = load_table(spark, sf_dir, "lineitem")
+    p = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
     xy = (
         li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
         .select(F.col("p_brand").alias("grp"),
@@ -352,7 +348,7 @@ def profile_benford_prices(spark, sf_dir):
     formatting in both engines); expected counts from the shared
     literal probabilities.  The fabricated-data screen, one 9-group
     aggregate at any scale."""
-    v = _t(spark, sf_dir, "orders").select(F.expr(_OMICRO).alias("v"))
+    v = load_table(spark, sf_dir, "orders").select(F.expr(_OMICRO).alias("v"))
     return benford_audit(v, "v")
 
 
@@ -382,7 +378,7 @@ def skyline_pareto_parts(spark, sf_dir):
     distinct-price table, one ordered window over THAT computes the
     running best size, and a broadcast semi-join brings back the
     frontier rows."""
-    p = _t(spark, sf_dir, "part").select(
+    p = load_table(spark, sf_dir, "part").select(
         "p_partkey", F.expr(_PRICE_CENTS).alias("price_c"),
         F.col("p_size").cast("bigint").alias("psize"))
     return pareto_frontier_2d(p, "p_partkey", "price_c", "psize")
@@ -549,8 +545,8 @@ def profile_fd_violations(spark, sf_dir):
     violating groups, worst distinct count, violation rate.  Three
     two-level aggregates unioned; each is one map-side-combinable
     pass."""
-    docs = _t(spark, sf_dir, "documents")
-    orders = _t(spark, sf_dir, "orders")
+    docs = load_table(spark, sf_dir, "documents")
+    orders = load_table(spark, sf_dir, "orders")
     return (
         fd_audit(docs, "source", "lang", "documents.source->lang")
         .unionByName(fd_audit(docs, "lang", "source",
@@ -586,7 +582,7 @@ def dedup_threshold_sweep(spark, sf_dir):
     re-run per threshold), then a 5-row explode + aggregate over the
     pair set."""
     pairs = D.jaccard_pairs_exact(
-        _t(spark, sf_dir, "documents"), "doc_id", "text",
+        load_table(spark, sf_dir, "documents"), "doc_id", "text",
         n=5, threshold=0.5)
     swept = pairs.select(
         "doc_b", F.expr(_JMICRO).alias("jm"),

@@ -64,20 +64,6 @@ def read_events_stream(spark: SparkSession, sf_dir: str,
     return stream
 
 
-def tumbling_counts(stream: DataFrame, window: str = "1 hour",
-                    watermark: str = "2 hours") -> DataFrame:
-    """Watermarked tumbling-window aggregation (append-safe)."""
-    return (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), F.col("event_type"))
-        .agg(F.count(F.lit(1)).alias("n_events"), dsum("value", "total_value"))
-        .select(
-            F.unix_timestamp("w.start").cast("bigint").alias("window_start"),
-            "event_type", "n_events", "total_value",
-        )
-    )
-
-
 def sliding_counts(stream: DataFrame, window: str = "1 hour",
                    slide: str = "30 minutes", watermark: str = "2 hours") -> DataFrame:
     return (

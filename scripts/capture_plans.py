@@ -1,8 +1,10 @@
 """Capture ``explain("formatted")`` for registered queries into
-``plans/r16/<name>_<tag>.txt`` plus a one-line plan-shape summary
-(Exchange count, join strategies, Python-eval nodes, scan pushdown)
-per query — the before/after evidence trail for the optimization
-round (guide §1: measure first; §7.2: read the plan).
+``<outdir>/<name>_<tag>.txt`` (default outdir: a ``capture_plans``
+directory under the system temp dir) plus a one-line plan-shape
+summary (Exchange count, join strategies, Python-eval nodes) per
+query — run it with one tag before a change and another after, then
+diff the files and the summaries (guide §1: measure first; §7.2: read
+the plan).
 
 No query RESULTS are materialized, but constructing registered
 queries does run real Spark jobs: operator-internal eager
@@ -15,7 +17,7 @@ facts we assert (exchange count upper bound, join strategy, pushdown)
 are all initial-plan facts).
 
 Usage:
-    python scripts/capture_plans.py --tag before --only a,b [--sf DIR]
+    python scripts/capture_plans.py --tag before --only a,b [--sf DIR] [--outdir DIR]
 """
 
 from __future__ import annotations
@@ -25,6 +27,7 @@ import io
 import os
 import re
 import sys
+import tempfile
 from contextlib import redirect_stdout
 
 sys.path.insert(0, ".")
@@ -59,7 +62,8 @@ def main() -> int:
     ap.add_argument("--only", required=True,
                     help="comma-separated registered query names")
     ap.add_argument("--sf", default="/root/testdata/sf0.1")
-    ap.add_argument("--outdir", default="plans/r16")
+    ap.add_argument("--outdir", default=os.path.join(tempfile.gettempdir(),
+                                                     "capture_plans"))
     args = ap.parse_args()
 
     from cassandra_join_library_spark import get_spark

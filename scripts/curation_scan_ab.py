@@ -3,10 +3,10 @@ itself in the multi-scan curation/contamination composites?
 
 The r11->r12 recompute triage left these four queries in the "benign:
 multi-pass BY DESIGN" bucket; this script settles it with numbers
-instead of adjudication prose.  Variant B monkey-patches the module's
-``_docs`` loader to return an eagerly localCheckpoint-ed two-column
-projection, so every branch (quality / novelty / contamination x2
-sides) reads the materialized frame instead of re-scanning parquet.
+instead of adjudication prose.  Variant B monkey-patches the modules'
+``load_table`` so the ``documents`` table comes back eagerly
+localCheckpoint-ed, so every branch (quality / novelty / contamination
+x2 sides) reads the materialized frame instead of re-scanning parquet.
 
 Usage: python scripts/curation_scan_ab.py [--sf /root/testdata/sf0.1]
        [--repeat 2]
@@ -57,26 +57,26 @@ def main() -> None:
         out[name] = {"baseline": _time(qs[name], spark, args.sf,
                                        args.repeat)}
 
-    def ck_docs(spark_, sf_dir):
+    from cassandra_join_library_spark.sources.catalog import load_table
+
+    def ck_load(spark_, sf_dir, name):
         # checkpoint the FULL documents schema, not a hand-picked
         # projection: the patch is module-wide while active, so any
         # benchmarked composite (or future addition to `names`) that
-        # reads source/n_chars through _docs would otherwise fail
-        # with a missing column (r12 advice)
-        from cassandra_join_library_spark.sources.catalog import load_table
-        return (load_table(spark_, sf_dir, "documents")
-                .localCheckpoint(eager=True))
+        # reads source/n_chars would otherwise fail with a missing
+        # column (r12 advice)
+        df = load_table(spark_, sf_dir, name)
+        return df.localCheckpoint(eager=True) if name == "documents" else df
 
     for mod in (corpus, curation):
-        mod._docs_orig = mod._docs  # type: ignore[attr-defined]
-        mod._docs = ck_docs
+        mod.load_table = ck_load
     try:
         for name in names:
             out[name]["checkpointed"] = _time(
                 qs[name], spark, args.sf, args.repeat)
     finally:
         for mod in (corpus, curation):
-            mod._docs = mod._docs_orig  # type: ignore[attr-defined]
+            mod.load_table = load_table
 
     print(json.dumps({"sf": args.sf, "repeat": args.repeat,
                       "timings": out}))

@@ -2,8 +2,8 @@
 
 For every registered query with an oracle, run the Spark query AND the
 DuckDB SQL at sf0.01 and compare row count, column set, and exact
-values (order-insensitive).  Stricter than the driver's hash compare —
-if this passes, CORRECTNESS_r{N}.json should be all green.
+values (order-insensitive).  Stricter than a row-count-and-hash
+compare: a query that passes here also passes that one.
 
 The comparisons run ONCE through the shared parallel engine
 (``parity.run_parity_gate`` — the same code path as the pre-commit

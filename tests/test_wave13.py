@@ -68,15 +68,16 @@ def test_portable_lsh_candidates_are_sound_and_catch_exact_dups(spark):
     """Identical texts share every band (always candidates); the
     audit invariant n_verified <= min(n_cand, n_exact) holds."""
     from cassandra_join_library_spark.operators.dedup import (
-        jaccard_pairs_exact, minhash_lsh_pairs_portable,
+        jaccard_pairs_exact, minhash_lsh_pairs,
     )
     words = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     docs = spark.createDataFrame(
         [(1, words), (2, words),
          (3, "one two three four five six seven eight nine ten")],
         "doc_id bigint, text string")
-    cand = minhash_lsh_pairs_portable(
-        docs, "doc_id", "text", n=5, num_hashes=8, rows_per_band=2)
+    cand = minhash_lsh_pairs(
+        docs, "doc_id", "text", n=5, num_hashes=8, rows_per_band=2,
+        portable=True, verify=False)
     pairs = {(r["doc_a"], r["doc_b"]) for r in cand.collect()}
     assert (1, 2) in pairs
     assert (1, 3) not in pairs and (2, 3) not in pairs

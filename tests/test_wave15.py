@@ -113,12 +113,12 @@ def test_er_match_scores_weights(spark):
         "n_chars bigint")
     import cassandra_join_library_spark.queries.wave15 as w15
 
-    orig = w15._docs
+    orig = w15.load_table
     try:
-        w15._docs = lambda spark, sf_dir: docs
+        w15.load_table = lambda spark, sf_dir, name: docs
         rows = er_match_scores(spark, "unused").collect()
     finally:
-        w15._docs = orig
+        w15.load_table = orig
     scores = {(r["doc_a"], r["doc_b"]): r["match_score"] for r in rows}
     # (1,2): lang+4, source+2, len+3, mid8+5 = 14
     assert scores.get((1, 2)) == 14
@@ -156,12 +156,12 @@ def test_rank_corr_matches_bruteforce(spark):
         "l_quantity double, l_discount double")
     import cassandra_join_library_spark.queries.wave16 as w16
 
-    orig = w16._t
+    orig = w16.load_table
     try:
-        w16._t = lambda spark, sf_dir, name: li
+        w16.load_table = lambda spark, sf_dir, name: li
         row = stats_rank_corr(spark, "unused").collect()[0]
     finally:
-        w16._t = orig
+        w16.load_table = orig
     rx, ry = _rank_avg(xs), _rank_avg(ys)
     mx = sum(rx) / len(rx)
     my = sum(ry) / len(ry)

@@ -4,6 +4,7 @@ exact pigeonhole radius cut."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import Row, functions as F
 
 from cassandra_join_library_spark.operators.dedup import hamming_band_pairs
@@ -93,9 +94,14 @@ def test_hamming_band_pairs_exact_radius(spark):
     assert got == want
 
 
-def test_hamming_band_pairs_matches_bruteforce_property(spark):
+@pytest.mark.parametrize("by_value", [False, True],
+                         ids=["by_doc", "by_value"])
+def test_hamming_band_pairs_matches_bruteforce_property(spark, by_value):
     """Property: on seeded random 60-bit fingerprints the pigeonhole
-    join equals brute force exactly, for several radii."""
+    join equals brute force exactly, for several radii, whether the
+    band join runs over docs or over distinct fingerprint values.  One
+    exact-duplicate fingerprint drives the by-value same-value
+    branch."""
     import random
 
     rng = random.Random(2026)
@@ -108,11 +114,13 @@ def test_hamming_band_pairs_matches_bruteforce_property(spark):
             for _ in range(rng.randint(0, max_h)):
                 fp ^= 1 << rng.randrange(60)
             fps.append(fp)
+        fps.append(base[1])
         rows = [Row(doc=i, fp=v) for i, v in enumerate(fps)]
         got = {(r["doc_a"], r["doc_b"]): r["hamming"]
                for r in hamming_band_pairs(
                    local_frame(spark, rows, "doc bigint, fp bigint"),
-                   bits=60, max_hamming=max_h).collect()}
+                   bits=60, max_hamming=max_h,
+                   by_value=by_value).collect()}
         want = {}
         for a in range(len(fps)):
             for b in range(a + 1, len(fps)):
