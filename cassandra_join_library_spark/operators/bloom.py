@@ -46,6 +46,15 @@ def _positions(key: Column, num_bits: int, num_hashes: int) -> "list[Column]":
     ]
 
 
+def _check_num_bits(num_bits: int) -> None:
+    if num_bits <= 0 or num_bits % 64:
+        # 0 passes a bare modulus check but makes the positions' pmod
+        # an ANSI DIVIDE_BY_ZERO at execution; negatives likewise
+        raise ValueError(
+            f"num_bits must be a positive multiple of 64, got {num_bits}"
+        )
+
+
 def bloom_build(
     df: DataFrame,
     key: "Column | str",
@@ -54,34 +63,12 @@ def bloom_build(
 ) -> "list[int]":
     """Aggregate the Bloom filter's 64-bit words over ``df[key]``.
 
-    Distributed: explode each key into (word_index, mask) pairs and
-    ``bit_or`` per word — one small shuffle of at most m/64 groups.
+    Distributed: the xxhash64 :func:`bloom_words_table` — one small
+    shuffle of at most m/64 groups — collected to the driver.
     Returns the dense word list (length m/64, missing words zero).
     """
-    if num_bits <= 0 or num_bits % 64:
-        # 0 passes a bare modulus check but makes the positions' pmod
-        # an ANSI DIVIDE_BY_ZERO at execution; negatives likewise
-        raise ValueError(
-            f"num_bits must be a positive multiple of 64, got {num_bits}"
-        )
-    key = F.col(key) if isinstance(key, str) else key
-    probes = F.array(*[
-        F.struct(
-            (p / 64).cast("int").alias("w"),
-            # F.shiftleft only takes a literal shift; call the SQL
-            # function directly to shift by a computed column
-            F.call_function(
-                "shiftleft", F.lit(1).cast("bigint"), (p % 64).cast("int")
-            ).alias("mask"),
-        )
-        for p in _positions(key, num_bits, num_hashes)
-    ])
-    words = (
-        df.select(F.explode(probes).alias("p"))
-        .groupBy(F.col("p.w").alias("w"))
-        .agg(F.bit_or("p.mask").alias("word"))
-        .collect()
-    )
+    words = bloom_words_table(df, key, num_bits, num_hashes,
+                              portable=False).collect()
     dense = [0] * (num_bits // 64)
     for row in words:
         dense[row["w"]] = row["word"]
@@ -167,8 +154,8 @@ def bloom_words_table(
     portable: bool = True,
 ) -> DataFrame:
     """The Bloom membership filter as a PERSISTABLE (w, word) table —
-    the at-rest store twin of :func:`bloom_build` (which collects the
-    words to a driver literal).
+    the at-rest store; :func:`bloom_build` collects the same table to
+    a driver literal.
 
     This is the snapshot-store shape at 100 TB: the prior corpus's
     fingerprint Bloom lives on disk as <= num_bits/64 rows (BIGINT
@@ -201,15 +188,14 @@ def bloom_words_table(
     :func:`bloom_pass_keys` or member keys probe the wrong positions
     (silent false negatives — same failure class as a wrong
     num_bits)."""
-    if num_bits <= 0 or num_bits % 64:
-        raise ValueError(
-            f"num_bits must be a positive multiple of 64, got {num_bits}"
-        )
+    _check_num_bits(num_bits)
     key = F.col(key) if isinstance(key, str) else key
     pos_fn = _portable_positions if portable else _positions
     probes = F.array(*[
         F.struct(
             (p / 64).cast("bigint").alias("w"),
+            # F.shiftleft only takes a literal shift; call the SQL
+            # function directly to shift by a computed column
             F.call_function(
                 "shiftleft", F.lit(1).cast("bigint"), (p % 64).cast("int")
             ).alias("mask"),
@@ -301,10 +287,7 @@ def bloom_flag_keys(
 def _bloom_probe(df, key_col, words, num_bits, num_hashes, portable):
     """Shared probe plumbing: chained broadcast word lookups.  Returns
     (frame with probe temp columns, the all-bits-set predicate)."""
-    if num_bits <= 0 or num_bits % 64:
-        raise ValueError(
-            f"num_bits must be a positive multiple of 64, got {num_bits}"
-        )
+    _check_num_bits(num_bits)
     words = words.localCheckpoint(eager=True)
     key = F.col(key_col)
     out = df

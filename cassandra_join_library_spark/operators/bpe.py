@@ -1,4 +1,4 @@
-"""Distributed BPE (byte-pair-encoding) tokenizer training.
+"""BPE (byte-pair-encoding) tokenizer training over a distributed vocabulary.
 
 The missing "train the tokenizer" step of an LLM data pipeline,
 re-expressed Spark-first in the word-frequency formulation (Sennrich
@@ -7,11 +7,9 @@ dictionary, not the raw corpus):
 
 1. ONE distributed pass builds the (word, freq) vocabulary — the only
    corpus-sized job; at 100 TB this is a plain word-count shuffle.
-2. Each merge iteration counts adjacent symbol pairs ACROSS the vocab
-   (distributed groupBy weighted by word freq), takes the argmax —
-   one row to the driver per iteration, the legitimate constant-size
-   driver state — and applies the merge to every word's symbol array
-   with JVM-side higher-order array functions (no Python UDFs).
+2. The merge loop runs on the driver over the collected vocabulary:
+   each iteration counts adjacent symbol pairs weighted by word freq,
+   takes the argmax and applies the merge to every word's symbols.
 
 Merge application semantics (both here and in the SQL oracle): greedy
 left-to-right, i.e. overlapping occurrences of a same-symbol pair
@@ -20,18 +18,19 @@ standard BPE behavior.  Symbols are compared as full strings, ties in
 pair counts break lexicographically on (left, right), so training is
 fully deterministic and engine-independent.
 
-Scale: the vocabulary (even at web scale, ~10^7-10^8 distinct words
-after the frequency floor) is orders of magnitude smaller than the
-corpus; per-iteration work is a pair-count aggregation over it.  The
-per-iteration ``localCheckpoint`` keeps the words frame's plan flat
-(8 nested lambda rewrites would otherwise compound analysis cost) —
-it materializes a ≤``top_words``-row frame, not corpus data.
+Scale: the vocabulary is at most ``top_words`` rows BY CONSTRUCTION,
+orders of magnitude smaller than the corpus, so the loop's state is
+constant-size driver state (the same argument as k-means centroids).
+Encoding is a broadcast equi-join of the corpus against the trained
+symbol table.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..sources.catalog import local_frame
 
 END_MARK = "</w>"
 
@@ -51,38 +50,6 @@ def build_word_vocab(df: DataFrame, text_col: str,
     )
 
 
-def _init_symbols(words: DataFrame) -> DataFrame:
-    return words.withColumn(
-        "syms",
-        F.concat(
-            F.expr("filter(split(word, ''), c -> c <> '')"),
-            F.array(F.lit(END_MARK)),
-        ),
-    )
-
-
-# positions 0..size-2, as an EMPTY array for single-symbol words:
-# sequence(0, -1) would descend to [0, -1] and syms[-1] aborts under
-# ANSI — fully-merged words must simply stop contributing pairs
-_ADJ = ("CASE WHEN size(syms) >= 2"
-        " THEN sequence(0, size(syms) - 2)"
-        " ELSE array() END")
-
-
-def _pair_counts(words: DataFrame) -> DataFrame:
-    return (
-        words.select(
-            "freq",
-            F.explode(F.expr(
-                f"transform({_ADJ},"
-                " i -> struct(syms[i] AS a, syms[i + 1] AS b))"
-            )).alias("p"),
-        )
-        .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
-        .agg(F.sum("freq").alias("cnt"))
-    )
-
-
 def bpe_train(
     spark: SparkSession,
     df: DataFrame,
@@ -99,10 +66,8 @@ def bpe_train(
 def _train_local(
     vocab: "list[tuple[str, int]]", n_merges: int,
 ) -> "tuple[list, list]":
-    """The merge loop on the collected vocabulary — bit-identical to
-    the distributed loop (same greedy rule, same tie-breaks), minus
-    per-iteration job-scheduling overhead.  Legitimate driver state:
-    the vocab is ≤ ``top_words`` rows BY CONSTRUCTION (the same
+    """The merge loop on the collected vocabulary.  Legitimate driver
+    state: the vocab is ≤ ``top_words`` rows BY CONSTRUCTION (the same
     constant-size argument as k-means centroids / PQ codebooks)."""
     words = [(list(w) + [END_MARK], f) for w, f in vocab]
     merges = []
@@ -138,100 +103,31 @@ def bpe_train_state(
     text_col: str,
     n_merges: int = 8,
     top_words: int = 2000,
-    distributed: bool = False,
 ) -> "tuple[DataFrame, DataFrame]":
     """Training returning BOTH artifacts: the merge table and the
     final (word, syms) symbol table — the trained tokenization of
     every vocabulary word, which is what encoding joins against.
 
-    The corpus-sized work (word counting) is always distributed; the
-    merge loop runs DRIVER-LOCAL by default because its input is the
+    The corpus-sized work (word counting) is distributed; the merge
+    loop runs DRIVER-LOCAL because its input is the
     ≤``top_words``-row vocabulary — per-iteration Spark jobs over a
     constant-size frame are pure scheduling overhead (measured ~13 s
-    vs <1 s at sf0.01 for identical output).  Pass
-    ``distributed=True`` for open-vocabulary training where the
-    dictionary itself exceeds driver memory; both paths implement the
-    same greedy/tie-break rules and are pinned equal by
-    tests/test_bpe.py."""
-    vocab_df = build_word_vocab(df, text_col, top_words)
-    if not distributed:
-        rows = vocab_df.collect()  # ≤ top_words rows
-        merges, words = _train_local(
-            [(r["word"], int(r["freq"])) for r in rows], n_merges)
-        words_df = spark.createDataFrame(
-            # concatenated symbols spell word + END_MARK
-            [("".join(syms)[: -len(END_MARK)], f, syms)
-             for syms, f in words],
-            "word string, freq bigint, syms array<string>",
-        )
-        merges_df = spark.createDataFrame(
-            merges,
-            "step bigint, merge_left string, merge_right string,"
-            " pair_count bigint",
-        )
-        return merges_df, words_df
-
-    words = _init_symbols(vocab_df)
-    words = words.localCheckpoint(eager=True)
-
-    merges: "list[tuple[int, str, str, int]]" = []
-    for step in range(1, n_merges + 1):
-        best = (
-            _pair_counts(words)
-            .orderBy(F.desc("cnt"), F.asc("a"), F.asc("b"))
-            .limit(1)
-            .collect()
-        )
-        if not best:
-            break
-        pa, pb, cnt = best[0]["a"], best[0]["b"], int(best[0]["cnt"])
-        merges.append((step, pa, pb, cnt))
-        # The merge pair rides in as a broadcast 1-row relation rather
-        # than literals: every iteration then generates byte-identical
-        # whole-stage code (the pair is data, not plan), so Janino's
-        # codegen cache hits from step 2 on — measured ~2 s/step of
-        # recompilation saved on constant-shape loops.
-        pair_df = spark.createDataFrame([(pa, pb)], "mpa string, mpb string")
-        a, b = F.col("mpa"), F.col("mpb")
-        words = (
-            words.crossJoin(F.broadcast(pair_df))
-            # ascending occurrence positions of the pair
-            .withColumn("occ", F.filter(
-                F.expr(_ADJ),
-                lambda i: (F.col("syms")[i] == a)
-                & (F.col("syms")[i + 1] == b),
-            ))
-            # greedy keep: skip an occurrence adjacent to the last kept
-            .withColumn("kept", F.aggregate(
-                "occ",
-                F.expr("array()").cast("array<int>"),
-                lambda acc, i: F.when(
-                    (F.size(acc) > 0) & (F.element_at(acc, -1) == i - 1),
-                    acc,
-                ).otherwise(F.concat(acc, F.array(i))),
-            ))
-            .withColumn("syms", F.filter(
-                F.transform(
-                    F.sequence(F.lit(0), F.size("syms") - 1),
-                    lambda j: F.when(
-                        F.array_contains("kept", j),
-                        F.concat(F.col("syms")[j], F.col("syms")[j + 1]),
-                    ).when(
-                        F.array_contains("kept", j - 1),
-                        F.lit(None).cast("string"),
-                    ).otherwise(F.col("syms")[j]),
-                ),
-                lambda x: x.isNotNull(),
-            ))
-            .drop("occ", "kept", "mpa", "mpb")
-            .localCheckpoint(eager=True)
-        )
-
-    merges_df = spark.createDataFrame(
-        merges,
-        "step bigint, merge_left string, merge_right string, pair_count bigint",
+    vs <1 s at sf0.01 for identical output)."""
+    rows = build_word_vocab(df, text_col, top_words).collect()
+    merges, words = _train_local(
+        [(r["word"], int(r["freq"])) for r in rows], n_merges)
+    words_df = local_frame(
+        spark,
+        # concatenated symbols spell word + END_MARK
+        [("".join(syms)[: -len(END_MARK)], f, syms) for syms, f in words],
+        "word string, freq bigint, syms array<string>",
     )
-    return merges_df, words
+    merges_df = local_frame(
+        spark, merges,
+        "step bigint, merge_left string, merge_right string,"
+        " pair_count bigint",
+    )
+    return merges_df, words_df
 
 
 def _encode_words(words: DataFrame, vocab: DataFrame) -> DataFrame:

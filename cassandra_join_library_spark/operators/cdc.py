@@ -18,12 +18,11 @@ The canonical operations:
   final snapshot as one global merge — the property that makes the
   streaming ``foreachBatch`` twin exact.
 
-Scale: the merge is ONE full-outer join on the key. At 100 TB the
-target is bucketed/partitioned by key and the daily delta is orders
-of magnitude smaller — Catalyst broadcasts it, leaving the snapshot
-unshuffled; with both sides bucketed the join is co-partitioned and
-shuffle-free.  Production table formats (Delta/Iceberg MERGE) add
-file-level pruning on top; the row-level semantics are exactly these.
+Scale: the daily delta is orders of magnitude smaller than a 100 TB
+snapshot, so the merge broadcasts the delta and only ever STREAMS the
+snapshot: two broadcast-hash joins, zero snapshot shuffles.  Production
+table formats (Delta/Iceberg MERGE) add file-level pruning on top; the
+row-level semantics are exactly these.
 """
 
 from __future__ import annotations
@@ -53,7 +52,6 @@ def merge_upsert(
     seq_cols: "list[str]",
     op_col: str = "op",
     delete_op: str = "D",
-    strategy: str = "broadcast_delta",
 ) -> DataFrame:
     """Apply a changelog onto a snapshot (MERGE INTO semantics).
 
@@ -70,22 +68,14 @@ def merge_upsert(
     re-application), making batch-wise application composition-safe in
     any batch grouping.  Output schema == target schema.
 
-    ``strategy`` picks the physical plan for the same semantics:
-
-    - ``broadcast_delta`` (default): the daily delta is orders of
-      magnitude smaller than a 100 TB snapshot, so it is BROADCAST
-      and the snapshot is only ever STREAMED — an anti join drops
-      touched keys and an inner join resolves the seq contest, both
-      broadcast-hash (a full-outer join can never broadcast in Spark,
-      so the naive formulation would shuffle the entire snapshot).
-      Cost: two snapshot scans, zero snapshot shuffles — at 100 TB
-      two sequential reads beat one full shuffle write+read by a wide
-      margin, and the second scan prunes to keys+seq via parquet
-      column pruning.
-    - ``copartitioned``: one full-outer join — the right plan when the
-      delta is COMPARABLE to the snapshot (backfills, re-keys); with
-      both sides bucketed by key it runs shuffle-free as a
-      co-partitioned sort-merge join.
+    Plan: the delta is BROADCAST and the snapshot is only ever
+    STREAMED — an anti join drops touched keys and an inner join
+    resolves the seq contest, both broadcast-hash (a full-outer join
+    can never broadcast in Spark, so the naive formulation would
+    shuffle the entire snapshot).  Cost: two snapshot scans, zero
+    snapshot shuffles — at 100 TB two sequential reads beat one full
+    shuffle write+read by a wide margin, and the second scan prunes to
+    keys+seq via parquet column pruning.
 
     Tombstone caveat: a delete drops the row AND its seq, so a STALE
     update (seq older than the delete) arriving in a LATER batch would
@@ -100,74 +90,45 @@ def merge_upsert(
     latest = compact_changelog(changes, keys, seq_cols)
     payload = [c for c in target.columns if c not in keys]
 
-    if strategy == "broadcast_delta":
-        # the delta is definitionally small here (it is about to be
-        # broadcast twice) and is consumed by two branches — eager
-        # materialization keeps each branch from re-deriving the
-        # compacted changelog (with a window-derived changelog the
-        # final plan re-scanned its source per consumer: 9 scans in
-        # the cdc_merge_upsert query, measured r12; the column-pruning
-        # specialization of shared subtrees defeats exchange reuse)
-        c = latest.select(
-            *keys, F.struct(*payload).alias("_c"),
-            F.struct(*seq_cols).alias("_cseq"), F.col(op_col).alias("_op"),
-        ).localCheckpoint(eager=True)
-        # untouched keys stream straight through (broadcast anti)
-        kept = target.join(F.broadcast(c.select(*keys)), keys, "left_anti")
-        # touched keys: small inner-join result carries both versions;
-        # consumed by the stale/update split below — also touched-keys
-        # sized under the broadcast_delta contract, also materialized
-        contested = target.select(
-            *keys, F.struct(*payload).alias("_t"),
-            F.struct(*seq_cols).alias("_tseq"),
-        ).join(F.broadcast(c), keys, "inner").localCheckpoint(eager=True)
-        change_wins: Column = F.col("_cseq") >= F.col("_tseq")
-        stale_keep = (
-            contested.filter(~change_wins)
-            .select(*keys, "_t.*").select(*target.columns)
-        )
-        updates = (
-            contested.filter(change_wins & (F.col("_op") != delete_op))
-            .select(*keys, "_c.*").select(*target.columns)
-        )
-        # inserts: delta keys that hit no target row (delta-sized
-        # anti join against the contested key set, never the
-        # snapshot).  Explicit broadcast: the checkpoint above erases
-        # contested's size estimate and Spark's stats-blind default
-        # is a sort-merge anti — contested is touched-keys-sized
-        # (<= the already-broadcast delta) by the strategy contract
-        inserts = (
-            c.join(F.broadcast(contested.select(*keys)), keys, "left_anti")
-            .filter(F.col("_op") != delete_op)
-            .select(*keys, "_c.*").select(*target.columns)
-        )
-        return kept.unionByName(stale_keep).unionByName(updates) \
-                   .unionByName(inserts)
-
-    if strategy != "copartitioned":
-        raise ValueError(f"unknown merge strategy: {strategy!r}")
-
-    t = target.select(
-        *keys, F.struct(*payload).alias("_t"),
-        F.struct(*seq_cols).alias("_tseq"),
-    )
+    # the delta is definitionally small here (it is about to be
+    # broadcast twice) and is consumed by two branches — eager
+    # materialization keeps each branch from re-deriving the
+    # compacted changelog (with a window-derived changelog the
+    # final plan re-scanned its source per consumer: 9 scans in
+    # the cdc_merge_upsert query, measured r12; the column-pruning
+    # specialization of shared subtrees defeats exchange reuse)
     c = latest.select(
         *keys, F.struct(*payload).alias("_c"),
         F.struct(*seq_cols).alias("_cseq"), F.col(op_col).alias("_op"),
+    ).localCheckpoint(eager=True)
+    # untouched keys stream straight through (broadcast anti)
+    kept = target.join(F.broadcast(c.select(*keys)), keys, "left_anti")
+    # touched keys: small inner-join result carries both versions;
+    # consumed by the stale/update split below — also touched-keys
+    # sized (at most the delta's keys), also materialized
+    contested = target.select(
+        *keys, F.struct(*payload).alias("_t"),
+        F.struct(*seq_cols).alias("_tseq"),
+    ).join(F.broadcast(c), keys, "inner").localCheckpoint(eager=True)
+    change_wins: Column = F.col("_cseq") >= F.col("_tseq")
+    stale_keep = (
+        contested.filter(~change_wins)
+        .select(*keys, "_t.*").select(*target.columns)
     )
-    j = t.join(c, keys, "full_outer")
-    # struct comparison is lexicographic over fields — exactly the
-    # multi-column seq order
-    change_wins = F.col("_c").isNotNull() & (
-        F.col("_t").isNull() | (F.col("_cseq") >= F.col("_tseq"))
+    updates = (
+        contested.filter(change_wins & (F.col("_op") != delete_op))
+        .select(*keys, "_c.*").select(*target.columns)
     )
-    deleted = change_wins & (F.col("_op") == delete_op)
-    return (
-        j.filter(~F.coalesce(deleted, F.lit(False)))
-        .select(
-            *keys,
-            F.when(change_wins, F.col("_c")).otherwise(F.col("_t")).alias("_p"),
-        )
-        .select(*keys, "_p.*")
-        .select(*target.columns)
+    # inserts: delta keys that hit no target row (delta-sized
+    # anti join against the contested key set, never the
+    # snapshot).  Explicit broadcast: the checkpoint above erases
+    # contested's size estimate and Spark's stats-blind default
+    # is a sort-merge anti — contested is touched-keys-sized
+    # (<= the already-broadcast delta) by construction
+    inserts = (
+        c.join(F.broadcast(contested.select(*keys)), keys, "left_anti")
+        .filter(F.col("_op") != delete_op)
+        .select(*keys, "_c.*").select(*target.columns)
     )
+    return kept.unionByName(stale_keep).unionByName(updates) \
+               .unionByName(inserts)

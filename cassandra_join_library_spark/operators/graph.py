@@ -104,39 +104,32 @@ def degrees(edges: DataFrame) -> DataFrame:
     )
 
 
-def per_node_triangles(edges: DataFrame) -> DataFrame:
-    """Full per-node triangle participation counts (node_id,
-    n_triangles) — node-sized, eagerly materialized; only nodes in at
-    least one triangle appear.
-
-    ``edges``: (u long, v long) with u < v, deduplicated — one row per
-    undirected edge.
-
-    Scale shape: the classic DEGREE-ORDERED orientation (node-iterator
-    / compact-forward).  Each edge is oriented from its lower-(degree,
-    id) endpoint to the higher one, so every out-neighborhood is
-    bounded by O(sqrt(|E|)) on any graph (arboricity bound) — the
-    wedge join Σ outdeg² stays near-linear in |E| instead of blowing
-    up on hub nodes, which is what makes triangle counting feasible on
-    a power-law 100 TB graph.  Three equi-joins, no cartesian; the
-    count is orientation-invariant, so the id-ordered SQL twin matches
-    exactly.  Reference has no graph surface (SURVEY.md §2.6).
-
-    The edge list and the node-sized degree table are materialized at
-    this operator's boundary (the _copurchase_edges convention: lazy
-    producers; consumers that cannot prune materialize themselves) —
-    edges feeds the degree build AND the orientation join, deg joins
-    twice, and with a lazy producer the co-purchase self-join re-ran
-    per branch (the edge_jaccard sibling measured 7.8 -> 4.3 s at
-    sf0.01 from the same cut)."""
-    edges = edges.localCheckpoint(eager=True)
-    deg = degrees(edges).localCheckpoint(eager=True)
-    e = (
+def _with_degrees(edges: DataFrame, deg: DataFrame) -> DataFrame:
+    """Annotate (u, v, ...) edges with both endpoint degrees du, dv."""
+    return (
         edges.join(deg.withColumnRenamed("n", "u")
                    .withColumnRenamed("deg", "du"), "u")
         .join(deg.withColumnRenamed("n", "v")
               .withColumnRenamed("deg", "dv"), "v")
     )
+
+
+def _triangles(edges: DataFrame):
+    """The degree-ordered wedge plan shared by :func:`per_node_triangles`
+    and :func:`edge_jaccard`.  Returns (edges, deg, oriented, tri):
+    the materialized edge list and degree table, the PERSISTED
+    oriented edge list (the caller unpersists it once its own answer
+    is materialized) and the (src, a, b) triangles, each listed once.
+
+    The edge list and the node-sized degree table are materialized
+    here (the _copurchase_edges convention: lazy producers; consumers
+    that cannot prune materialize themselves) — edges feeds the degree
+    build AND the orientation join, deg joins twice, and with a lazy
+    producer the co-purchase self-join re-ran per branch (measured
+    7.8 -> 4.3 s at sf0.01 on edge_jaccard)."""
+    edges = edges.localCheckpoint(eager=True)
+    deg = degrees(edges).localCheckpoint(eager=True)
+    e = _with_degrees(edges, deg)
     u_first = (F.col("du") < F.col("dv")) | (
         (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v")))
     # the oriented edge list feeds THREE plan branches (both wedge
@@ -166,6 +159,28 @@ def per_node_triangles(edges: DataFrame) -> DataFrame:
     closing = oriented.select(F.col("src").alias("a"),
                               F.col("dst").alias("b"))
     tri = wedges.join(closing, ["a", "b"]).select("src", "a", "b")
+    return edges, deg, oriented, tri
+
+
+def per_node_triangles(edges: DataFrame) -> DataFrame:
+    """Full per-node triangle participation counts (node_id,
+    n_triangles) — node-sized, eagerly materialized; only nodes in at
+    least one triangle appear.
+
+    ``edges``: (u long, v long) with u < v, deduplicated — one row per
+    undirected edge.
+
+    Scale shape: the classic DEGREE-ORDERED orientation (node-iterator
+    / compact-forward).  Each edge is oriented from its lower-(degree,
+    id) endpoint to the higher one, so every out-neighborhood is
+    bounded by O(sqrt(|E|)) on any graph (arboricity bound) — the
+    wedge join Σ outdeg² stays near-linear in |E| instead of blowing
+    up on hub nodes, which is what makes triangle counting feasible on
+    a power-law 100 TB graph.  Three equi-joins, no cartesian; the
+    count is orientation-invariant, so the id-ordered SQL twin matches
+    exactly.  Reference has no graph surface (SURVEY.md §2.6).
+    The wedge plan is :func:`_triangles`."""
+    _, _, oriented, tri = _triangles(edges)
     nodes = (
         tri.select(F.col("src").alias("n"))
         .unionByName(tri.select(F.col("a").alias("n")))
@@ -422,47 +437,16 @@ def edge_jaccard(edges: DataFrame, top: int = 20) -> DataFrame:
     backbone score used for Jaccard graph sparsification and
     community seeding.
 
-    Same degree-ordered wedge plan as
-    :func:`triangle_participation` (the arboricity bound keeps the
+    Same degree-ordered wedge plan (:func:`_triangles`) as
+    :func:`per_node_triangles` (the arboricity bound keeps the
     wedge join linear in |E| on power-law graphs); each closed wedge
     credits its THREE id-ordered edges, then one edge-keyed count and
     a degree join.  Top-``top`` edges by (jaccard, u, v); the score is
     a rounded integer division in micro-units — exact on both
     engines.  Reference has no graph surface (SURVEY.md §2.6).
-
-    Every branch here (degree build, orientation, closing-edge probe,
-    final score join) needs the FULL edge list, so it is materialized
-    at this operator's boundary (the _copurchase_edges convention:
-    lazy producers; consumers that cannot prune materialize
-    themselves) — with a lazy producer the co-purchase self-join
-    re-ran per branch (measured 7.8 -> 4.3 s at sf0.01).  The
-    node-sized degree table is cut too (three consumers)."""
-    edges = edges.localCheckpoint(eager=True)
-    deg = degrees(edges).localCheckpoint(eager=True)
-    e = (
-        edges.join(deg.withColumnRenamed("n", "u")
-                   .withColumnRenamed("deg", "du"), "u")
-        .join(deg.withColumnRenamed("n", "v")
-              .withColumnRenamed("deg", "dv"), "v")
-    )
-    u_first = (F.col("du") < F.col("dv")) | (
-        (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v")))
-    oriented = e.select(
-        F.when(u_first, F.col("u")).otherwise(F.col("v")).alias("src"),
-        F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("dst"),
-        F.when(u_first, F.col("dv")).otherwise(F.col("du")).alias("ddeg"),
-    ).repartition(F.col("src")).persist()
-    o1 = oriented.select("src", F.col("dst").alias("a"),
-                         F.col("ddeg").alias("da"))
-    o2 = oriented.select("src", F.col("dst").alias("b"),
-                         F.col("ddeg").alias("db"))
-    wedges = o1.join(o2, "src").filter(
-        (F.col("da") < F.col("db")) | (
-            (F.col("da") == F.col("db")) & (F.col("a") < F.col("b")))
-    )
-    closing = oriented.select(F.col("src").alias("a"),
-                              F.col("dst").alias("b"))
-    tri = wedges.join(closing, ["a", "b"]).select("src", "a", "b")
+    The final score join reuses the materialized edge list and degree
+    table from the wedge plan."""
+    edges, deg, oriented, tri = _triangles(edges)
     # explode each triangle into its three edges, normalized to the
     # input's u < v id order
     tri_edges = (
@@ -476,12 +460,8 @@ def edge_jaccard(edges: DataFrame, top: int = 20) -> DataFrame:
     cn = tri_edges.groupBy("u", "v").agg(
         F.count(F.lit(1)).cast("bigint").alias("cn"))
     scored = (
-        edges.join(cn, ["u", "v"], "left")
-        .na.fill({"cn": 0})
-        .join(deg.withColumnRenamed("n", "u")
-              .withColumnRenamed("deg", "du"), "u")
-        .join(deg.withColumnRenamed("n", "v")
-              .withColumnRenamed("deg", "dv"), "v")
+        _with_degrees(edges.join(cn, ["u", "v"], "left").na.fill({"cn": 0}),
+                      deg)
         .withColumn("den", F.col("du") + F.col("dv") - 2 - F.col("cn"))
         .withColumn(
             "jaccard_micro",
@@ -500,7 +480,7 @@ def edge_jaccard(edges: DataFrame, top: int = 20) -> DataFrame:
         .orderBy(F.desc("jaccard_micro"), F.asc("u"), F.asc("v"))
         .limit(top)
         # eager top-k materialization so the cached oriented list is
-        # released immediately (same pattern as triangle_participation)
+        # released immediately (same pattern as per_node_triangles)
         .localCheckpoint(eager=True)
     )
     oriented.unpersist()
@@ -531,13 +511,7 @@ def degree_assortativity(edges: DataFrame) -> DataFrame:
     deg = degrees(edges)
     both = edges.unionByName(
         edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    e = (
-        both.join(deg.withColumnRenamed("n", "u")
-                  .withColumnRenamed("deg", "du"), "u")
-        .join(deg.withColumnRenamed("n", "v")
-              .withColumnRenamed("deg", "dv"), "v")
-    )
-    agg = e.agg(
+    agg = _with_degrees(both, deg).agg(
         F.count(F.lit(1)).cast("bigint").alias("m"),
         F.sum(F.col("du") * F.col("dv")).cast("bigint").alias("sxy"),
         F.sum("du").cast("bigint").alias("sx"),

@@ -57,7 +57,7 @@ def refresh_view(view: DataFrame, delta: DataFrame,
     """Merge signed deltas into the view snapshot.  Both sides are
     group-cardinality-sized, so the full-outer join here is cheap by
     construction (unlike a fact-table merge — see cdc.merge_upsert's
-    strategy note); zero-count groups are dropped."""
+    plan note); zero-count groups are dropped."""
     d = delta.select(
         *group_cols, F.col("d_rows").alias("_dr"), F.col("d_total").alias("_dt"))
     merged = view.join(d, group_cols, "full_outer").select(

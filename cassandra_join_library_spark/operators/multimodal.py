@@ -17,7 +17,7 @@ from typing import Iterator
 
 import pandas as pd
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     LongType, StructField, StructType,
@@ -31,6 +31,101 @@ DECODED_SCHEMA = StructType([
     StructField("channels", LongType()),
     StructField("checksum", LongType()),
 ])
+
+
+def _hex_bytes(x, nbytes: int) -> "list[Column]":
+    """Column ``x``'s low ``nbytes`` bytes as 2-digit hex, least
+    significant first."""
+    return [
+        F.lpad(F.hex((x / (256 ** i)).cast("bigint") % 256), 2, "0")
+        for i in range(nbytes)
+    ]
+
+
+def _le(x, nbytes: int) -> Column:
+    """``x`` as an ``nbytes``-wide little-endian hex field."""
+    return F.concat(*_hex_bytes(x, nbytes))
+
+
+def _be(x, nbytes: int) -> Column:
+    """``x`` as an ``nbytes``-wide big-endian hex field."""
+    return F.concat(*reversed(_hex_bytes(x, nbytes)))
+
+
+def _le_at(hx: Column, byte_off: int, nbytes: int) -> Column:
+    """Unsigned little-endian field at 1-based ``byte_off`` of the
+    payload's hex view ``hx``."""
+    total = F.lit(0).cast("bigint")
+    for i in range(nbytes):
+        b = F.conv(
+            F.substring(hx, (byte_off - 1 + i) * 2 + 1, 2), 16, 10
+        ).cast("bigint")
+        total = total + b * (256 ** i)
+    return total
+
+
+def _wav_header_hex(rate, ch, data_size: int) -> Column:
+    """The 44-byte RIFF/WAVE header of 16-bit PCM, as hex.  ``rate``
+    and ``ch`` are ints or Columns; ``data_size`` is the data chunk's
+    byte count."""
+    return F.concat(
+        F.lit("52494646"),                   # 'RIFF'
+        _le(F.lit(36 + data_size), 4),       # chunk size
+        F.lit("57415645"),                   # 'WAVE'
+        F.lit("666d7420"),                   # 'fmt '
+        _le(F.lit(16), 4),                   # fmt chunk size
+        _le(F.lit(1), 2),                    # PCM
+        _le(F.lit(ch), 2),                   # channels
+        _le(F.lit(rate), 4),                 # sample rate
+        _le(F.lit(rate * ch * 2), 4),        # byte rate
+        _le(F.lit(ch * 2), 2),               # block align
+        _le(F.lit(16), 2),                   # bits per sample
+        F.lit("64617461"),                   # 'data'
+        _le(F.lit(data_size), 4),            # data size
+    )
+
+
+def _mono_wav(u16: str, n_samples: int) -> Column:
+    """A 16 kHz mono 16-bit PCM WAV payload whose sample ``i`` is the
+    unsigned 16-bit image ``u16`` (a SQL expression over ``i``),
+    packed little-endian after the header.  The inner transform
+    evaluates ``u16`` ONCE per sample; inlining it into both bytes
+    would evaluate it twice."""
+    pcm_hex = F.expr(
+        "array_join(transform("
+        "  transform(sequence(0, {n}), i -> {v}), u -> concat("
+        "  lpad(hex(u % 256), 2, '0'),"
+        "  lpad(hex(u div 256), 2, '0'))), '')".format(
+            n=n_samples - 1, v=u16)
+    )
+    return F.unhex(F.concat(
+        _wav_header_hex(16000, 1, n_samples * 2), pcm_hex))
+
+
+# signed int16 sample i of a WAV data chunk: the u16 at hex offset
+# 89 + 4i (data begins at byte 45, 1-based), sign-corrected by
+# subtracting 65536 when >= 32768
+_S_I = ("(conv(substring(h, 89 + 4*i, 2), 16, 10) + "
+        " 256 * conv(substring(h, 91 + 4*i, 2), 16, 10))")
+_SIGNED = (f"CAST({_S_I} AS BIGINT) - "
+           f"(CASE WHEN {_S_I} >= 32768 THEN 65536 ELSE 0 END)")
+
+
+def _pcm_samples(df: DataFrame, id_col: str, payload_col: str) -> DataFrame:
+    """(id, n_samples, _sm): the WAV data chunk decoded to its signed
+    int16 sample ARRAY, the sample count read from the declared data
+    size.  Consumers fold over the plain-integer array — inlining the
+    decode into a fold re-evaluates the conv/substring pair ~8x per
+    sample (measured 7.3 s -> ~2 s at sf1)."""
+    hx = F.hex(F.col(payload_col))
+    return df.select(
+        F.col(id_col), hx.alias("h"),
+        (_le_at(hx, 41, 4) / 2).cast("bigint").alias("n_samples"),
+    ).select(
+        F.col(id_col), "n_samples",
+        F.expr(f"transform(sequence(0, int(n_samples) - 1), i -> {_SIGNED})")
+        .alias("_sm"),
+    )
 
 
 def _group_variant_payloads(df: DataFrame, id_col: str, n_groups: int,
@@ -213,23 +308,16 @@ def synthesize_bmp(df: DataFrame, id_col: str,
     wid = width_col if width_col is not None else (F.col(id_col) % 640 + 1)
     hei = height_col if height_col is not None else (F.col(id_col) % 480 + 1)
 
-    def le(x, nbytes):
-        parts = [
-            F.lpad(F.hex((x / (256 ** i)).cast("bigint") % 256), 2, "0")
-            for i in range(nbytes)
-        ]
-        return F.concat(*parts)
-
     header_hex = F.concat(
         F.lit("424d"),          # 'BM' magic
-        le(F.lit(54), 4),       # file size (header only)
+        _le(F.lit(54), 4),      # file size (header only)
         F.lit("00000000"),      # reserved
-        le(F.lit(54), 4),       # pixel-data offset
-        le(F.lit(40), 4),       # BITMAPINFOHEADER size
-        le(wid, 4),             # width  (int32 LE)
-        le(hei, 4),             # height (int32 LE)
-        le(F.lit(1), 2),        # planes
-        le(F.lit(24), 2),       # bits per pixel
+        _le(F.lit(54), 4),      # pixel-data offset
+        _le(F.lit(40), 4),      # BITMAPINFOHEADER size
+        _le(wid, 4),            # width  (int32 LE)
+        _le(hei, 4),            # height (int32 LE)
+        _le(F.lit(1), 2),       # planes
+        _le(F.lit(24), 2),      # bits per pixel
         F.lit("00" * 24),       # compression..palette fields (zeros)
     )
     return df.select(
@@ -252,24 +340,15 @@ def parse_bmp_metadata(df: DataFrame, id_col: str,
     bmp_height, bpp)."""
     hx = F.hex(F.col(payload_col))
 
-    def le_at(byte_off, nbytes):  # 1-based byte offset
-        total = F.lit(0).cast("bigint")
-        for i in range(nbytes):
-            b = F.conv(
-                F.substring(hx, (byte_off - 1 + i) * 2 + 1, 2), 16, 10
-            ).cast("bigint")
-            total = total + b * (256 ** i)
-        return total
-
     is_bmp = (F.octet_length(payload_col) >= 54) & \
         (F.substring(hx, 1, 4) == F.lit("424D"))
     guard = lambda c: F.when(is_bmp, c)
     return df.select(
         F.col(id_col),
         is_bmp.alias("is_bmp"),
-        guard(le_at(19, 4)).alias("bmp_width"),
-        guard(le_at(23, 4)).alias("bmp_height"),
-        guard(le_at(29, 2)).alias("bpp"),
+        guard(_le_at(hx, 19, 4)).alias("bmp_width"),
+        guard(_le_at(hx, 23, 4)).alias("bmp_height"),
+        guard(_le_at(hx, 29, 2)).alias("bpp"),
     )
 
 
@@ -295,13 +374,6 @@ def synthesize_bmp_pixels(df: DataFrame, id_col: str,
     gid = F.col("g")
     var = F.col("v")
 
-    def le(x, nbytes):
-        parts = [
-            F.lpad(F.hex((x / (256 ** i)).cast("bigint") % 256), 2, "0")
-            for i in range(nbytes)
-        ]
-        return F.concat(*parts)
-
     def luma(i):
         # i is a static Python index — branch here, not in Column
         # space (F.lit(i) == 0 constructs a literal '0 == 0' predicate
@@ -315,14 +387,14 @@ def synthesize_bmp_pixels(df: DataFrame, id_col: str,
 
     header_hex = F.concat(
         F.lit("424d"),          # 'BM'
-        le(F.lit(246), 4),      # file size: 54 + 192
+        _le(F.lit(246), 4),     # file size: 54 + 192
         F.lit("00000000"),      # reserved
-        le(F.lit(54), 4),       # pixel-data offset
-        le(F.lit(40), 4),       # BITMAPINFOHEADER size
-        le(F.lit(8), 4),        # width
-        le(F.lit(8), 4),        # height
-        le(F.lit(1), 2),        # planes
-        le(F.lit(24), 2),       # bits per pixel
+        _le(F.lit(54), 4),      # pixel-data offset
+        _le(F.lit(40), 4),      # BITMAPINFOHEADER size
+        _le(F.lit(8), 4),       # width
+        _le(F.lit(8), 4),       # height
+        _le(F.lit(1), 2),       # planes
+        _le(F.lit(24), 2),      # bits per pixel
         F.lit("00" * 24),       # compression..palette (zeros)
     )
     pixels_hex = F.concat(*[
@@ -404,34 +476,11 @@ def synthesize_wav(df: DataFrame, id_col: str) -> DataFrame:
     )
     ch = (F.col(id_col) % 2 + 1)
 
-    def le(x, nbytes):
-        parts = [
-            F.lpad(F.hex((x / (256 ** i)).cast("bigint") % 256), 2, "0")
-            for i in range(nbytes)
-        ]
-        return F.concat(*parts)
-
-    byte_rate = rate * ch * 2
-    header_hex = F.concat(
-        F.lit("52494646"),     # 'RIFF'
-        le(F.lit(36), 4),      # chunk size (no data)
-        F.lit("57415645"),     # 'WAVE'
-        F.lit("666d7420"),     # 'fmt '
-        le(F.lit(16), 4),      # fmt chunk size
-        le(F.lit(1), 2),       # PCM
-        le(ch, 2),             # channels
-        le(rate, 4),           # sample rate
-        le(byte_rate, 4),      # byte rate
-        le(ch * 2, 2),         # block align
-        le(F.lit(16), 2),      # bits per sample
-        F.lit("64617461"),     # 'data'
-        le(F.lit(0), 4),       # data size
-    )
     return df.select(
         F.col(id_col),
         rate.cast("bigint").alias("sample_rate"),
         ch.cast("bigint").alias("channels"),
-        F.unhex(header_hex).alias("payload"),
+        F.unhex(_wav_header_hex(rate, ch, 0)).alias("payload"),
     )
 
 
@@ -444,15 +493,6 @@ def parse_wav_metadata(df: DataFrame, id_col: str,
     wav_channels, wav_sample_rate, wav_bps)."""
     hx = F.hex(F.col(payload_col))
 
-    def le_at(byte_off, nbytes):
-        total = F.lit(0).cast("bigint")
-        for i in range(nbytes):
-            b = F.conv(
-                F.substring(hx, (byte_off - 1 + i) * 2 + 1, 2), 16, 10
-            ).cast("bigint")
-            total = total + b * (256 ** i)
-        return total
-
     is_wav = (
         (F.octet_length(payload_col) >= 44)
         & (F.substring(hx, 1, 8) == F.lit("52494646"))
@@ -462,9 +502,9 @@ def parse_wav_metadata(df: DataFrame, id_col: str,
     return df.select(
         F.col(id_col),
         is_wav.alias("is_wav"),
-        guard(le_at(23, 2)).alias("wav_channels"),
-        guard(le_at(25, 4)).alias("wav_sample_rate"),
-        guard(le_at(35, 2)).alias("wav_bps"),
+        guard(_le_at(hx, 23, 2)).alias("wav_channels"),
+        guard(_le_at(hx, 25, 4)).alias("wav_sample_rate"),
+        guard(_le_at(hx, 35, 2)).alias("wav_bps"),
     )
 
 
@@ -475,41 +515,13 @@ def synthesize_wav_pcm(df: DataFrame, id_col: str,
     ``((id*31 + i*17) % 65536) - 32768`` packed little-endian after
     the 44-byte header (:func:`synthesize_wav` stops at the header).
     Returns (id, payload) — the fixture for byte-level audio DSP."""
-    rate, ch = 16000, 1
-    data_size = n_samples * 2
-
-    def le(x, nbytes):
-        parts = [
-            F.lpad(F.hex((x / (256 ** i)).cast("bigint") % 256), 2, "0")
-            for i in range(nbytes)
-        ]
-        return F.concat(*parts)
-
     # unsigned 16-bit two's-complement image of the signed sample:
     # (v - 32768) as int16 stores as ((v - 32768) + 65536) % 65536
     sample_u16 = (
         f"(({id_col} * 31 + i * 17) % 65536 + 32768) % 65536"
     )
-    pcm_hex = F.array_join(
-        F.expr(
-            "transform(sequence(0, {n}), i -> concat("
-            "  lpad(hex(({v}) % 256), 2, '0'),"
-            "  lpad(hex(({v}) div 256), 2, '0')))".format(
-                n=n_samples - 1, v=sample_u16)
-        ),
-        "",
-    )
-    header_hex = F.concat(
-        F.lit("52494646"), le(F.lit(36 + data_size), 4),
-        F.lit("57415645"), F.lit("666d7420"), le(F.lit(16), 4),
-        le(F.lit(1), 2), le(F.lit(ch), 2), le(F.lit(rate), 4),
-        le(F.lit(rate * ch * 2), 4), le(F.lit(ch * 2), 2),
-        le(F.lit(16), 2), F.lit("64617461"), le(F.lit(data_size), 4),
-    )
     return df.select(
-        F.col(id_col),
-        F.unhex(F.concat(header_hex, pcm_hex)).alias("payload"),
-    )
+        F.col(id_col), _mono_wav(sample_u16, n_samples).alias("payload"))
 
 
 def synthesize_wav_pcm_groups(df: DataFrame, id_col: str,
@@ -547,16 +559,6 @@ def synthesize_wav_pcm_groups(df: DataFrame, id_col: str,
     instead of assuming.  The fixture for the audio-fingerprint dedup
     path (:func:`pcm_energy_diff_fingerprint` +
     dedup.hamming_band_pairs).  Returns (id, payload)."""
-    rate, ch = 16000, 1
-    data_size = n_samples * 2
-
-    def le(x, nbytes):
-        parts = [
-            F.lpad(F.hex((x / (256 ** i)).cast("bigint") % 256), 2, "0")
-            for i in range(nbytes)
-        ]
-        return F.concat(*parts)
-
     base = ("(conv(substring(md5(concat(cast(g AS string), '_', "
             "cast(i AS string))), 1, 4), 16, 10) % 160 - 80)")
     bump = ("(CASE WHEN v = 1 AND i IN (14, 15) THEN 40 "
@@ -566,24 +568,8 @@ def synthesize_wav_pcm_groups(df: DataFrame, id_col: str,
     # sample range (-80..119) keeps s + 65536 positive, so one mod
     # suffices
     u16 = f"(({base} + {bump}) + 65536) % 65536"
-    # nested transforms: the inner array evaluates the md5 ONCE per
-    # sample; inlining u16 into both concat halves would hash twice
-    pcm_hex = F.expr(
-        "array_join(transform("
-        "  transform(sequence(0, {n}), i -> {v}), u -> concat("
-        "  lpad(hex(u % 256), 2, '0'),"
-        "  lpad(hex(u div 256), 2, '0'))), '')".format(
-            n=n_samples - 1, v=u16)
-    )
-    header_hex = F.concat(
-        F.lit("52494646"), le(F.lit(36 + data_size), 4),
-        F.lit("57415645"), F.lit("666d7420"), le(F.lit(16), 4),
-        le(F.lit(1), 2), le(F.lit(ch), 2), le(F.lit(rate), 4),
-        le(F.lit(rate * ch * 2), 4), le(F.lit(ch * 2), 2),
-        le(F.lit(16), 2), F.lit("64617461"), le(F.lit(data_size), 4),
-    )
     return _group_variant_payloads(
-        df, id_col, n_groups, F.unhex(F.concat(header_hex, pcm_hex)))
+        df, id_col, n_groups, _mono_wav(u16, n_samples))
 
 
 def pcm_energy_diff_fingerprint(df: DataFrame, id_col: str,
@@ -673,36 +659,9 @@ def pcm_stats(df: DataFrame, id_col: str,
     higher-order ``aggregate`` over the sample positions, so the
     operator is map-only and embarrassingly parallel at 100 TB.
     Returns (id, n_samples, sum_samples, sum_squares, peak_abs)."""
-    hx = F.hex(F.col(payload_col))
-
-    def le_at(byte_off, nbytes):
-        total = F.lit(0).cast("bigint")
-        for i in range(nbytes):
-            b = F.conv(
-                F.substring(hx, (byte_off - 1 + i) * 2 + 1, 2), 16, 10
-            ).cast("bigint")
-            total = total + b * (256 ** i)
-        return total
-
-    with_n = df.select(
-        F.col(id_col), hx.alias("h"),
-        (le_at(41, 4) / 2).cast("bigint").alias("n_samples"),
-    )
-    # signed sample i: u16 at hex offset 89 + 4i (data begins at byte
-    # 45, 1-based), sign-corrected by subtracting 65536 when >= 32768.
-    # Decode the sample ARRAY first, then fold over plain integers —
-    # inlining the decode into the fold re-evaluates the conv/substring
-    # pair ~8x per sample (measured 7.3 s -> ~2 s at sf1)
-    s_i = (
-        "(conv(substring(h, 89 + 4*i, 2), 16, 10) + "
-        " 256 * conv(substring(h, 91 + 4*i, 2), 16, 10))"
-    )
-    signed = f"CAST({s_i} AS BIGINT) - (CASE WHEN {s_i} >= 32768 THEN 65536 ELSE 0 END)"
-    samples = (
-        f"transform(sequence(0, int(n_samples) - 1), i -> {signed})"
-    )
+    pcm = _pcm_samples(df, id_col, payload_col)
     agg = (
-        f"aggregate({samples}, "
+        "aggregate(_sm, "
         " named_struct('s', 0L, 'sq', 0L, 'pk', 0L), "
         " (acc, v) -> named_struct("
         "   's', acc.s + v, "
@@ -710,7 +669,7 @@ def pcm_stats(df: DataFrame, id_col: str,
         "   'pk', greatest(acc.pk, abs(v))))"
     )
     return (
-        with_n.select(F.col(id_col), "n_samples", F.expr(agg).alias("st"))
+        pcm.select(F.col(id_col), "n_samples", F.expr(agg).alias("st"))
         .select(
             F.col(id_col),
             F.col("n_samples"),
@@ -792,36 +751,13 @@ def pcm_silence_runs(df: DataFrame, id_col: str,
     replays the runs with document-partitioned windows — different
     plan, identical integers.  Returns
     (id, n_samples, n_silent, n_runs, longest_run)."""
-    hx = F.hex(F.col(payload_col))
-
-    def le_at(byte_off, nbytes):
-        total = F.lit(0).cast("bigint")
-        for i in range(nbytes):
-            b = F.conv(
-                F.substring(hx, (byte_off - 1 + i) * 2 + 1, 2), 16, 10
-            ).cast("bigint")
-            total = total + b * (256 ** i)
-        return total
-
-    with_n = df.select(
-        F.col(id_col), hx.alias("h"),
-        (le_at(41, 4) / 2).cast("bigint").alias("n_samples"),
-    )
-    s_i = (
-        "(conv(substring(h, 89 + 4*i, 2), 16, 10) + "
-        " 256 * conv(substring(h, 91 + 4*i, 2), 16, 10))"
-    )
-    signed = (f"CAST({s_i} AS BIGINT) - "
-              f"(CASE WHEN {s_i} >= 32768 THEN 65536 ELSE 0 END)")
-    samples = (
-        f"transform(sequence(0, int(n_samples) - 1), i -> {signed})"
-    )
+    pcm = _pcm_samples(df, id_col, payload_col)
     # cur' = sil ? cur + 1 : 0 appears twice (cur and best); the fold
     # state is 4 small integers regardless of sample count
     cur_new = (f"(CASE WHEN abs(v) < {threshold} "
                "THEN acc.cur + 1 ELSE 0 END)")
     agg = (
-        f"aggregate({samples}, "
+        "aggregate(_sm, "
         " named_struct('cur', 0L, 'best', 0L, 'runs', 0L, 'tot', 0L), "
         " (acc, v) -> named_struct("
         f"  'cur', {cur_new}, "
@@ -832,8 +768,7 @@ def pcm_silence_runs(df: DataFrame, id_col: str,
         "            THEN 1 ELSE 0 END)))"
     )
     return (
-        with_n.select(F.col(id_col), "n_samples",
-                      F.expr(agg).alias("st"))
+        pcm.select(F.col(id_col), "n_samples", F.expr(agg).alias("st"))
         .select(
             F.col(id_col), "n_samples",
             F.col("st.tot").cast("bigint").alias("n_silent"),
@@ -860,17 +795,10 @@ def synthesize_gif(df: DataFrame, id_col: str) -> DataFrame:
         .otherwise(F.lit("383761"))  # '89a' / '87a'
     packed = gct_flag * 128 + 112 + gct_exp  # color resolution fixed 7
 
-    def le(x, nbytes):
-        parts = [
-            F.lpad(F.hex((x / (256 ** i)).cast("bigint") % 256), 2, "0")
-            for i in range(nbytes)
-        ]
-        return F.concat(*parts)
-
     header_hex = F.concat(
         F.lit("474946"), version,        # 'GIF' + '89a'/'87a'
-        le(wid, 2), le(hei, 2),          # logical screen w/h (u16 LE)
-        le(packed, 1),                   # packed flags byte
+        _le(wid, 2), _le(hei, 2),        # logical screen w/h (u16 LE)
+        _le(packed, 1),                  # packed flags byte
         F.lit("00"),                     # background color index
         F.lit("00"),                     # pixel aspect ratio
     )
@@ -897,27 +825,18 @@ def parse_gif_metadata(df: DataFrame, id_col: str,
     gct_colors)."""
     hx = F.hex(F.col(payload_col))
 
-    def le_at(byte_off, nbytes):  # 1-based byte offset
-        total = F.lit(0).cast("bigint")
-        for i in range(nbytes):
-            b = F.conv(
-                F.substring(hx, (byte_off - 1 + i) * 2 + 1, 2), 16, 10
-            ).cast("bigint")
-            total = total + b * (256 ** i)
-        return total
-
     is_gif = (F.octet_length(payload_col) >= 13) & \
         (F.substring(hx, 1, 6) == F.lit("474946")) & \
         (F.substring(hx, 7, 6).isin("383761", "383961"))
-    packed = le_at(11, 1)
+    packed = _le_at(hx, 11, 1)
     guard = lambda c: F.when(is_gif, c)
     return df.select(
         F.col(id_col),
         is_gif.alias("is_gif"),
         guard(F.decode(F.unhex(F.substring(hx, 7, 6)), "UTF-8"))
         .alias("gif_version"),
-        guard(le_at(7, 2)).alias("gif_width"),
-        guard(le_at(9, 2)).alias("gif_height"),
+        guard(_le_at(hx, 7, 2)).alias("gif_width"),
+        guard(_le_at(hx, 9, 2)).alias("gif_height"),
         guard((packed / 128).cast("bigint")).alias("has_gct"),
         guard(F.pow(F.lit(2), (packed % 8) + 1).cast("bigint"))
         .alias("gct_colors"),
@@ -937,39 +856,14 @@ def pcm_zero_crossings(df: DataFrame, id_col: str,
     parallel.  Rate reported in rounded ppm of the n-1 pairs so the
     output stays integer-exact.  Returns
     (id, n_samples, zero_crossings, n_zero_samples, zcr_ppm)."""
-    hx = F.hex(F.col(payload_col))
-
-    def le_at(byte_off, nbytes):
-        total = F.lit(0).cast("bigint")
-        for i in range(nbytes):
-            b = F.conv(
-                F.substring(hx, (byte_off - 1 + i) * 2 + 1, 2), 16, 10
-            ).cast("bigint")
-            total = total + b * (256 ** i)
-        return total
-
-    with_n = df.select(
-        F.col(id_col), hx.alias("h"),
-        (le_at(41, 4) / 2).cast("bigint").alias("n_samples"),
-    )
-    s_i = (
-        "(conv(substring(h, 89 + 4*i, 2), 16, 10) + "
-        " 256 * conv(substring(h, 91 + 4*i, 2), 16, 10))"
-    )
-    signed = (f"CAST({s_i} AS BIGINT) - "
-              f"(CASE WHEN {s_i} >= 32768 THEN 65536 ELSE 0 END)")
-    samples = (
-        f"transform(sequence(0, int(n_samples) - 1), i -> {signed})"
-    )
+    pcm = _pcm_samples(df, id_col, payload_col)
     zc = ("size(filter(sequence(1, int(n_samples) - 1), "
           "i -> element_at(_sm, i) * element_at(_sm, i + 1) < 0))")
     zeros = "size(filter(_sm, v -> v = 0))"
     from .stats import _RDIV
 
     return (
-        with_n.select(F.col(id_col), "n_samples",
-                      F.expr(samples).alias("_sm"))
-        .select(
+        pcm.select(
             F.col(id_col), "n_samples",
             F.expr(zc).cast("bigint").alias("zero_crossings"),
             F.expr(zeros).cast("bigint").alias("n_zero_samples"),
@@ -998,13 +892,6 @@ def synthesize_jpeg(df: DataFrame, id_col: str) -> DataFrame:
     com_len = F.col(id_col) % 9 + 4      # declared length (incl. itself)
     two_coms = F.col(id_col) % 3 == 0
 
-    def be(x, nbytes):
-        parts = [
-            F.lpad(F.hex((x / (256 ** i)).cast("bigint") % 256), 2, "0")
-            for i in range(nbytes - 1, -1, -1)
-        ]
-        return F.concat(*parts)
-
     app0 = F.concat(
         F.lit("ffe0"), F.lit("0010"),            # APP0, length 16
         F.lit("4a46494600"),                      # 'JFIF\0'
@@ -1012,13 +899,13 @@ def synthesize_jpeg(df: DataFrame, id_col: str) -> DataFrame:
         F.lit("00480048"), F.lit("0000"),         # 72x72 dpi, no thumb
     )
     com = F.concat(
-        F.lit("fffe"), be(com_len, 2),
+        F.lit("fffe"), _be(com_len, 2),
         F.expr(f"repeat('41', {id_col} % 9 + 2)"),  # 'A' * (len - 2)
     )
     sof0 = F.concat(
         F.lit("ffc0"), F.lit("0011"),             # SOF0, length 17
         F.lit("08"),                               # precision 8
-        be(hei, 2), be(wid, 2),
+        _be(hei, 2), _be(wid, 2),
         F.lit("03"),                               # 3 components
         F.lit("011100"), F.lit("021100"), F.lit("031100"),
     )
@@ -1115,34 +1002,27 @@ def synthesize_mp4(df: DataFrame, id_col: str) -> DataFrame:
     has_udta = did % 5 < 2
     udta_len = did % 11                      # payload bytes of `udta`
 
-    def be(x, nbytes):
-        parts = [
-            F.lpad(F.hex((x / (256 ** i)).cast("bigint") % 256), 2, "0")
-            for i in range(nbytes - 1, -1, -1)
-        ]
-        return F.concat(*parts)
-
     brand = (F.when(did % 3 == 0, F.lit("69736f6d"))     # 'isom'
              .when(did % 3 == 1, F.lit("6d703432"))      # 'mp42'
              .otherwise(F.lit("61766331")))              # 'avc1'
     ftyp = F.concat(
-        be(16 + 4 * n_compat, 4), F.lit("66747970"),     # size, 'ftyp'
+        _be(16 + 4 * n_compat, 4), F.lit("66747970"),    # size, 'ftyp'
         brand, F.lit("00000200"),                        # major, minor
         F.expr(f"repeat('69736f6d', {id_col} % 3)"),     # compat brands
     )
     free = F.when(has_free, F.concat(
-        be(free_len + 8, 4), F.lit("66726565"),          # 'free'
+        _be(free_len + 8, 4), F.lit("66726565"),         # 'free'
         F.expr(f"repeat('00', {id_col} % 16)"),
     )).otherwise(F.lit(""))
     udta = F.when(has_udta, F.concat(
-        be(udta_len + 8, 4), F.lit("75647461"),          # 'udta'
+        _be(udta_len + 8, 4), F.lit("75647461"),         # 'udta'
         F.expr(f"repeat('00', {id_col} % 11)"),
     )).otherwise(F.lit(""))
     mvhd = F.concat(
         F.lit("0000006c"), F.lit("6d766864"),            # size 108, 'mvhd'
         F.lit("00000000"),                               # v0 + flags
         F.lit("00000000"), F.lit("00000000"),            # creation, modif
-        be(tscale, 4), be(dur, 4),
+        _be(tscale, 4), _be(dur, 4),
         F.lit("00010000"), F.lit("0100"),                # rate 1.0, vol 1.0
         F.expr("repeat('00', 10)"),                      # reserved
         # identity matrix (9 x s16.16 / s2.30 fixed-point)
@@ -1155,9 +1035,9 @@ def synthesize_mp4(df: DataFrame, id_col: str) -> DataFrame:
     moov_payload = F.concat(udta, mvhd)
     moov_size = (F.lit(8) + F.when(has_udta, udta_len + 8).otherwise(F.lit(0))
                  + F.lit(108)).cast("bigint")
-    moov = F.concat(be(moov_size, 4), F.lit("6d6f6f76"), moov_payload)
+    moov = F.concat(_be(moov_size, 4), F.lit("6d6f6f76"), moov_payload)
     mdat = F.concat(
-        be(did % 9 + 8, 4), F.lit("6d646174"),           # 'mdat'
+        _be(did % 9 + 8, 4), F.lit("6d646174"),          # 'mdat'
         F.expr(f"repeat('00', {id_col} % 9)"),
     )
     payload_hex = F.concat(ftyp, free, moov, mdat)
@@ -1332,23 +1212,16 @@ def synthesize_mp4_keyframes(df: DataFrame, id_col: str,
     gid = F.col("g")
     var = F.col("v")
 
-    def be(x, nbytes):
-        parts = [
-            F.lpad(F.hex((x / (256 ** i)).cast("bigint") % 256), 2, "0")
-            for i in range(nbytes - 1, -1, -1)
-        ]
-        return F.concat(*parts)
-
     n_compat = gid % 3
     has_free = gid % 2 == 0
     free_len = (gid * 7 + var) % 16
     ftyp = F.concat(
-        be(F.lit(16) + 4 * n_compat, 4), F.lit("66747970"),   # 'ftyp'
+        _be(F.lit(16) + 4 * n_compat, 4), F.lit("66747970"),  # 'ftyp'
         F.lit("69736f6d"), F.lit("00000200"),                 # isom, minor
         F.expr("repeat('69736f6d', g % 3)"),
     )
     free = F.when(has_free, F.concat(
-        be(free_len + 8, 4), F.lit("66726565"),               # 'free'
+        _be(free_len + 8, 4), F.lit("66726565"),              # 'free'
         F.expr("repeat('00', (g * 7 + v) % 16)"),
     )).otherwise(F.lit(""))
     # ONE loop expression for all n_frames*64 pixels, not an unrolled
@@ -1369,7 +1242,7 @@ def synthesize_mp4_keyframes(df: DataFrame, id_col: str,
             n=n_frames * 64 - 1, luma=luma_k)
     )
     mdat = F.concat(
-        be(F.lit(8 + 64 * n_frames), 4), F.lit("6d646174"),   # 'mdat'
+        _be(F.lit(8 + 64 * n_frames), 4), F.lit("6d646174"),  # 'mdat'
         frames_hex,
     )
     return _group_variant_payloads(
@@ -1486,17 +1359,6 @@ def synthesize_wav_pcm_snippets(df: DataFrame, id_col: str,
     detection.  Content is a pure function of (g, v), so the
     _group_variant_payloads broadcast-dedup applies.  Returns
     (id, payload)."""
-    n_samples = 305
-    rate, ch = 16000, 1
-    data_size = n_samples * 2
-
-    def le(x, nbytes):
-        parts = [
-            F.lpad(F.hex((x / (256 ** i)).cast("bigint") % 256), 2, "0")
-            for i in range(nbytes)
-        ]
-        return F.concat(*parts)
-
     own = ("(conv(substring(md5(concat(cast(g AS string), '_', "
            "cast(i AS string))), 1, 4), 16, 10) % 160 - 80)")
     borrowed = ("(conv(substring(md5(concat(cast((g + 1) % "
@@ -1506,22 +1368,8 @@ def synthesize_wav_pcm_snippets(df: DataFrame, id_col: str,
             f"THEN {borrowed} ELSE {own} END)")
     bump = "(CASE WHEN v = 1 AND i IN (14, 15) THEN 40 ELSE 0 END)"
     u16 = f"(({base} + {bump}) + 65536) % 65536"
-    pcm_hex = F.expr(
-        "array_join(transform("
-        "  transform(sequence(0, {n}), i -> {v}), u -> concat("
-        "  lpad(hex(u % 256), 2, '0'),"
-        "  lpad(hex(u div 256), 2, '0'))), '')".format(
-            n=n_samples - 1, v=u16)
-    )
-    header_hex = F.concat(
-        F.lit("52494646"), le(F.lit(36 + data_size), 4),
-        F.lit("57415645"), F.lit("666d7420"), le(F.lit(16), 4),
-        le(F.lit(1), 2), le(F.lit(ch), 2), le(F.lit(rate), 4),
-        le(F.lit(rate * ch * 2), 4), le(F.lit(ch * 2), 2),
-        le(F.lit(16), 2), F.lit("64617461"), le(F.lit(data_size), 4),
-    )
     return _group_variant_payloads(
-        df, id_col, n_groups, F.unhex(F.concat(header_hex, pcm_hex)))
+        df, id_col, n_groups, _mono_wav(u16, 305))
 
 
 def pcm_window_fingerprints(df: DataFrame, id_col: str,

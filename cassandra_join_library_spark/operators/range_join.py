@@ -31,7 +31,6 @@ def band_join(
     right: DataFrame,
     right_col: str,
     width: float,
-    how: str = "inner",
 ) -> DataFrame:
     """All pairs with ``|left_col - right_col| <= width``.
 
@@ -47,8 +46,6 @@ def band_join(
     For exact-boundary-critical joins pick a ``width`` that is a power
     of two (exact division) or pre-scale the values to integers.
     """
-    if how != "inner":
-        raise ValueError("band_join currently supports inner joins")
     if not width > 0:
         # width = 0 is an equality join in disguise — and the bucket
         # division would throw DIVIDE_BY_ZERO mid-job under ANSI mode

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..parity import MAX_PARITY_DECIMAL_SCALE
+from ..sources.catalog import local_frame
 
 # 2^60 — the hash space of a 15-hex-digit md5 prefix (fits BIGINT)
 HASH_SPACE = 1 << 60
@@ -413,8 +414,8 @@ def logbin_quantiles(bins: DataFrame, q_pcts: "list[int]") -> DataFrame:
         ).cast("bigint").alias("cum"),
     )
     total = bins.agg(F.sum("cnt").cast("bigint").alias("n"))
-    qs = bins.sparkSession.createDataFrame(
-        [(int(q),) for q in q_pcts], "q_pct bigint")
+    qs = local_frame(bins.sparkSession, [(int(q),) for q in q_pcts],
+                     "q_pct bigint")
     spec = qs.crossJoin(F.broadcast(total)).select(
         "q_pct", "n",
         F.expr("(q_pct * n + 99) DIV 100").cast("bigint")
@@ -455,8 +456,8 @@ def logbin_quantiles_grouped(bins: DataFrame,
     )
     total = bins.groupBy("shard_id").agg(
         F.sum("cnt").cast("bigint").alias("n"))
-    qs = bins.sparkSession.createDataFrame(
-        [(int(q),) for q in q_pcts], "q_pct bigint")
+    qs = local_frame(bins.sparkSession, [(int(q),) for q in q_pcts],
+                     "q_pct bigint")
     spec = total.crossJoin(F.broadcast(qs)).select(
         "shard_id", "q_pct", "n",
         F.expr("(q_pct * n + 99) DIV 100").cast("bigint")

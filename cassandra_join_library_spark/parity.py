@@ -4,8 +4,8 @@ Shared by the pytest gate (tests/test_oracle_parity.py) and the
 parallel gate runner (scripts/run_gate.py) so the two can never drift:
 one definition of "equal" — row count, column set, and exact values
 (floats compared bit-for-bit after NaN alignment).  Stricter than the
-driver's hash compare — if this passes, the driver's CORRECTNESS row
-should be green.
+(row count, hash sum) compare of :func:`distributed_compare`, which is
+for results too large to collect.
 """
 
 from __future__ import annotations
@@ -58,6 +58,34 @@ def normalize(pdf: pd.DataFrame) -> pd.DataFrame:
     return pdf.sort_values(by=list(pdf.columns)).reset_index(drop=True)
 
 
+def duck_connection(sf_dir: str):
+    """A DuckDB connection with one view per :data:`TABLES` entry over
+    ``sf_dir`` — the oracle side of every parity check.
+
+    Unbounded DuckDB defaults to ~80% of box RAM PER connection; the
+    sf1 graph twins drove one gate worker to 102 GB RSS and the kernel
+    OOM-killed the whole gate.  ``SPARK_GRAFT_DUCK_MEM`` is the opt-in
+    cap (DuckDB spills to temp instead of dying)."""
+    import os
+
+    import duckdb
+
+    con = duckdb.connect()
+    mem = os.environ.get("SPARK_GRAFT_DUCK_MEM")
+    if mem:
+        con.execute(f"SET memory_limit='{mem}'")
+        con.execute("SET temp_directory='/tmp/duck_spill'")
+    for t in TABLES:
+        src = f"{sf_dir}/{t}.parquet"
+        if os.path.isdir(src):
+            # Spark-written table: a directory of part files (the
+            # shipped testdata are single files) — lets the gates
+            # sweep scaled sets written by scripts/make_scaled_sf.py
+            src = f"{src}/*.parquet"
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{src}'")
+    return con
+
+
 def run_parity_gate(spark, sf_dir: str, names=None, workers: int = 6):
     """Run every (or the named) oracled query's Spark vs DuckDB
     comparison from a thread pool and return ``(timings, failures)``
@@ -75,11 +103,8 @@ def run_parity_gate(spark, sf_dir: str, names=None, workers: int = 6):
     import traceback
     from concurrent.futures import ThreadPoolExecutor
 
-    import duckdb
-
     from .registry import all_oracles, all_queries
 
-    tables = TABLES
     queries, oracles = all_queries(), all_oracles()
     if names is None:
         names = sorted(oracles)
@@ -88,28 +113,7 @@ def run_parity_gate(spark, sf_dir: str, names=None, workers: int = 6):
 
     def duck():
         if not hasattr(tl, "con"):
-            import os
-
-            con = duckdb.connect()
-            # unbounded DuckDB defaults to ~80% of box RAM PER
-            # connection; the sf1 graph twins drove one worker to
-            # 102 GB RSS and the kernel OOM-killed the whole gate.
-            # Opt-in cap (spills to temp instead of dying):
-            mem = os.environ.get("SPARK_GRAFT_DUCK_MEM")
-            if mem:
-                con.execute(f"SET memory_limit='{mem}'")
-                con.execute("SET temp_directory='/tmp/duck_spill'")
-            for t in tables:
-                src = f"{sf_dir}/{t}.parquet"
-                if os.path.isdir(src):
-                    # Spark-written table: a directory of part files
-                    # (the driver testdata ships single files) — lets
-                    # the gate sweep .scratch/sf1-style scaled sets
-                    src = f"{src}/*.parquet"
-                con.execute(
-                    f"CREATE VIEW {t} AS SELECT * FROM '{src}'"
-                )
-            tl.con = con
+            tl.con = duck_connection(sf_dir)
         return tl.con
 
     timings, failures = {}, {}
@@ -244,24 +248,12 @@ def distributed_compare(spark, sf_dir: str, name: str, con=None) -> dict:
     result is infeasible: both engines aggregate to (row_count,
     hash_sum) and the scalars must match exactly.  Returns the
     measurement dict; raises AssertionError on divergence."""
-    import os
     import time
-
-    import duckdb
 
     from .registry import all_oracles, all_queries
 
     if con is None:
-        con = duckdb.connect()
-        mem = os.environ.get("SPARK_GRAFT_DUCK_MEM")
-        if mem:
-            con.execute(f"SET memory_limit='{mem}'")
-            con.execute("SET temp_directory='/tmp/duck_spill'")
-        for t in TABLES:
-            src = f"{sf_dir}/{t}.parquet"
-            if os.path.isdir(src):
-                src = f"{src}/*.parquet"
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{src}'")
+        con = duck_connection(sf_dir)
 
     overrides = DISTRIBUTED_CANON.get(name, {})
     # t0 BEFORE query construction: eager-checkpoint queries do most

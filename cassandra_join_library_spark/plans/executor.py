@@ -42,12 +42,14 @@ cluster; AQE handles skew and partition sizing at runtime.
 from __future__ import annotations
 
 import time
+from functools import reduce
 from typing import Any, Callable, Dict, List, Optional, Sequence, Set, Union
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import NumericType
 
+from ..operators.range_join import interval_join
 from ..sources import sinks
 from ..sources.catalog import Catalog, ParquetCatalog, qualify
 from .condition import Condition
@@ -238,9 +240,9 @@ class JoinExecutor:
             return cmp(lcols[0], rcols[0], op, numeric[0], mixed[0])
         # composite key: lexicographic tuple comparison (Python tuple
         # semantics, as the reference compares key tuples directly)
-        eq_all = F.lit(True)
-        for i, (lc, rc) in enumerate(zip(lcols, rcols)):
-            eq_all = eq_all & eq(i, lc, rc)
+        eq_all = reduce(
+            lambda acc, c: acc & c,
+            [eq(i, lc, rc) for i, (lc, rc) in enumerate(zip(lcols, rcols))])
         if op == "=":
             return eq_all
         if op == "!=":
@@ -288,15 +290,17 @@ class JoinExecutor:
         the other) into a bucketized equi-join.
 
         A BroadcastNestedLoopJoin is O(N·M) comparisons and must hold a
-        whole side on every executor; the bucketized form quantizes
-        values to width-``w`` buckets, explodes each interval across the
-        buckets it overlaps, equi-joins on the bucket key, and re-applies
-        the exact predicates — so shuffle/AQE/skew machinery does the
-        work and the plan survives big × big inputs.  Bucket width is
-        chosen adaptively from one tiny 2-column aggregate over the
-        intervals side (avg width, capped so no interval explodes into
-        more than ~256 buckets).  The exact theta predicate is re-applied
-        immediately and the upper/lower-bound filter stays queued, so
+        whole side on every executor; once the bucket width is chosen
+        the join is :func:`..operators.range_join.interval_join`, which
+        explodes each interval across the buckets it overlaps (reversed
+        and NULL intervals match nothing), equi-joins on the bucket key
+        and applies the containment — so shuffle/AQE/skew machinery
+        does the work and the plan survives big × big inputs.  Bucket
+        width is chosen adaptively from one tiny 2-column aggregate over
+        the intervals side (avg width, capped so no interval explodes
+        into more than ~256 buckets).  The exact theta predicate is
+        re-applied immediately, the output keeps the un-rewritten
+        column order and the upper/lower-bound filter stays queued, so
         results are bit-identical to the un-rewritten plan.
         """
         if not self.auto_range_join or how != "inner":
@@ -334,7 +338,6 @@ class JoinExecutor:
             return None
         p, pside, lo, hi, iside = plan
 
-        pdf = current if pside == "left" else rdf
         idf = current if iside == "left" else rdf
         itypes = {f.name: f.dataType for f in idf.schema.fields}
         if not all(isinstance(itypes.get(c), NumericType) for c in (lo, hi)):
@@ -357,26 +360,18 @@ class JoinExecutor:
             return None
         bucket = max(float(stats["aw"]), float(stats["mw"]) / 256.0)
 
-        B = "_cjl_bucket"
-        pb = pdf.withColumn(B, F.floor(F.col(p) / F.lit(bucket)).cast("long"))
-        ib = idf.filter(F.col(hi) >= F.col(lo)).withColumn(
-            B,
-            F.explode(F.sequence(
-                F.floor(F.col(lo) / F.lit(bucket)).cast("long"),
-                F.floor(F.col(hi) / F.lit(bucket)).cast("long"),
-            )),
-        )
-        lframe, rframe = (pb, ib) if pside == "left" else (ib, pb)
-        exact = {
-            "<": F.col(a) < F.col(b), "<=": F.col(a) <= F.col(b),
-            ">": F.col(a) > F.col(b), ">=": F.col(a) >= F.col(b),
-        }[op]
         self.plan_notes.append(
             f"interval-rewrite: theta {a} {op} {b} with bound "
             f"{lo} <= {p} <= {hi} -> bucketized equi-join "
             f"(bucket_width={bucket:.6g})"
         )
-        return lframe.join(rframe, B, "inner").drop(B).filter(exact)
+        pdf = current if pside == "left" else rdf
+        exact = self._theta_condition([F.col(a)], [F.col(b)], op, numeric)
+        return (
+            interval_join(pdf, p, idf, lo, hi, bucket_width=bucket)
+            .filter(exact)
+            .select(*current.columns, *rdf.columns)
+        )
 
     def _compile(self) -> DataFrame:
         self._validate_selections()
@@ -438,8 +433,8 @@ class JoinExecutor:
             ]
             # string-vs-numeric key pairs: a bare == would make ANSI
             # mode (the Spark 4 default) cast the string side and THROW
-            # on the first non-numeric value — route through the same
-            # coerce-else-string-compare fallback the theta path uses
+            # on the first non-numeric value — _theta_condition compares
+            # them coerce-else-string, for equi and theta joins alike
             from pyspark.sql.types import StringType
 
             mixed = [
@@ -449,33 +444,15 @@ class JoinExecutor:
                     and isinstance(rtypes[rk], StringType))
                 for lk, rk in zip(lkeys, rkeys)
             ]
-            if op == "=":
-                cond = None
-                for i, (lk, rk) in enumerate(zip(lkeys, rkeys)):
-                    if mixed[i]:
-                        lc2 = current[lk].try_cast("double")
-                        rc2 = rdf[rk].try_cast("double")
-                        both = lc2.isNotNull() & rc2.isNotNull()
-                        c = F.when(both, lc2 == rc2).otherwise(
-                            current[lk].cast("string")
-                            == rdf[rk].cast("string")
-                        )
-                    else:
-                        c = current[lk] == rdf[rk]
-                    cond = c if cond is None else (cond & c)
-                current = current.join(rdf, on=cond, how=_HOW[how])
-            else:
-                rewritten = self._try_interval_rewrite(
-                    current, rdf, lkeys, rkeys, op, how, numeric
+            joined = self._try_interval_rewrite(
+                current, rdf, lkeys, rkeys, op, how, numeric)
+            if joined is None:
+                cond = self._theta_condition(
+                    [current[k] for k in lkeys], [rdf[k] for k in rkeys],
+                    op, numeric, mixed
                 )
-                if rewritten is not None:
-                    current = rewritten
-                else:
-                    cond = self._theta_condition(
-                        [current[k] for k in lkeys], [rdf[k] for k in rkeys],
-                        op, numeric, mixed
-                    )
-                    current = current.join(rdf, on=cond, how=_HOW[how])
+                joined = current.join(rdf, on=cond, how=_HOW[how])
+            current = joined
             loaded[right.name] = rdf
             if how not in ("semi", "anti"):
                 # semi/anti output carries no right-side columns

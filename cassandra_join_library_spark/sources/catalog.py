@@ -232,22 +232,36 @@ RUNTIME_PARITY_CONFS = {
 #: query's total build+run floor); a real deployment gets the schema
 #: from its metastore/manifest instead of the footer, and this cache
 #: is the equivalent for bare-path reads.  Keyed by applicationId so a
-#: new session (or a restarted cluster pointing at changed files)
-#: re-infers from the footer.
-_SCHEMA_CACHE: "dict[tuple[str, str], object]" = {}
+#: new session re-infers from the footer; each entry also carries the
+#: path's ``os.stat`` signature, so a table rewritten under a live
+#: session (new columns, changed types) is re-inferred too.
+_SCHEMA_CACHE: "dict[tuple[str, str], tuple[object, object]]" = {}
+
+
+def _stat_signature(path: str):
+    """(mtime_ns, size, inode) of a local path, or None when it cannot
+    be stat-ed (remote filesystems) — such paths keep their first
+    schema for the application's lifetime."""
+    try:
+        st = os.stat(path)
+    except (OSError, ValueError):
+        return None
+    return (st.st_mtime_ns, st.st_size, st.st_ino)
 
 
 def read_parquet_cached(spark: SparkSession, path: str) -> DataFrame:
     """``spark.read.parquet(path)`` with the inferred schema memoized
     per (application, path) — the first read per session pays the
-    footer parse, every later query build skips it."""
+    footer parse, every later query build skips it until the path's
+    stat signature changes."""
     key = (spark.sparkContext.applicationId, path)
-    schema = _SCHEMA_CACHE.get(key)
-    if schema is None:
-        df = spark.read.parquet(path)
-        _SCHEMA_CACHE[key] = df.schema
-        return df
-    return spark.read.schema(schema).parquet(path)
+    sig = _stat_signature(path)
+    hit = _SCHEMA_CACHE.get(key)
+    if hit is not None and hit[0] == sig:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMA_CACHE[key] = (sig, df.schema)
+    return df
 
 
 #: applications whose parity confs are already pinned — ensure_ runs

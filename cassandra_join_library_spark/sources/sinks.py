@@ -6,9 +6,7 @@ At 100 TB the sink layout IS the performance of every downstream read:
 - ``write_bucketed``: stable hash bucketing on join/agg keys → bucketed
   tables join without a shuffle (the persistent version of the
   reference's "pre-partition on the next join key",
-  ``hash_join.py:302-328``);
-- ``write_sorted_parquet``: per-file ordering → parquet min/max row-
-  group pruning on range predicates.
+  ``hash_join.py:302-328``).
 """
 
 from __future__ import annotations
@@ -38,13 +36,6 @@ def write_bucketed(df: DataFrame, table: str, bucket_cols: "list[str]",
     if sort_cols:
         w = w.sortBy(*sort_cols)
     w.saveAsTable(table)
-
-
-def write_sorted_parquet(df: DataFrame, path: str, sort_cols: "list[str]",
-                         mode: str = "overwrite") -> None:
-    """Range-partition + sort within files: maximizes parquet row-group
-    min/max pruning for range predicates on sort_cols."""
-    df.sortWithinPartitions(*sort_cols).write.mode(mode).parquet(path)
 
 
 def write_csv(df: DataFrame, path: str, mode: str = "overwrite",

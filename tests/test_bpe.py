@@ -11,7 +11,7 @@ from cassandra_join_library_spark.operators.bpe import bpe_train
 from .background import heavy_check
 
 #: the overlap+ties parity corpus — ONE literal feeds the Spark sweep
-#: entries, the DuckDB twin, and the local/distributed snapshot
+#: entry and the DuckDB twin
 TINY_CORPUS = ["aaa banana band", "banana aaa bab", "band bab banana"]
 
 
@@ -64,26 +64,3 @@ def test_tiny_corpus_matches_unrolled_sql(heavy_results):
         bpe_train_sql(n_merges=6, top_words=100)
     ).fetchall()]
     assert got == want
-
-
-def _bpe_snap(spark, distributed):
-    from cassandra_join_library_spark.operators.bpe import bpe_train_state
-
-    df = spark.createDataFrame([(t,) for t in TINY_CORPUS], "text string")
-    m, w = bpe_train_state(spark, df, "text", n_merges=6,
-                           top_words=100, distributed=distributed)
-    merges = [tuple(r) for r in m.orderBy("step").collect()]
-    vocab = {r["word"]: (r["freq"], list(r["syms"]))
-             for r in w.collect()}
-    return merges, vocab
-
-
-heavy_check("bpe_train_local")(lambda s: _bpe_snap(s, False))
-heavy_check("bpe_train_distributed")(lambda s: _bpe_snap(s, True))
-
-
-def test_local_and_distributed_training_identical(heavy_results):
-    """The driver-local merge loop (default; vocab is constant-size
-    driver state) must be bit-identical to the distributed loop."""
-    assert (heavy_results("bpe_train_local")
-            == heavy_results("bpe_train_distributed"))

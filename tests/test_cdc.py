@@ -1,17 +1,13 @@
 """CDC merge operator semantics: the four MERGE cases, seq-awareness,
-batch-composition invariance — under BOTH physical strategies."""
+batch-composition invariance."""
 
 from __future__ import annotations
-
-import pytest
 
 from cassandra_join_library_spark.operators.cdc import (
     compact_changelog, merge_upsert as _merge_upsert,
 )
 
 from .background import heavy_check
-
-STRATEGIES = ["broadcast_delta", "copartitioned"]
 
 
 def _target(spark):
@@ -27,10 +23,11 @@ def _rows(df):
 
 # ---- background heavy checks: the deterministic merge scenarios are
 # the suite's most expensive fixed-cost calls (the batchwise chains
-# alone were ~35 s across both strategies); precompute every merged
-# snapshot per strategy on the sweep pool, assert in the tests.
+# alone were ~35 s); precompute every merged snapshot on the sweep
+# pool, assert in the tests.
 
-def _four_cases_out(spark, strategy):
+@heavy_check("cdc_four_cases")
+def _four_cases_out(spark):
     changes = spark.createDataFrame(
         [
             (1, "a2", 20, "U"),   # update
@@ -40,20 +37,20 @@ def _four_cases_out(spark, strategy):
         ],
         "k bigint, payload string, seq bigint, op string",
     )
-    return _rows(_merge_upsert(_target(spark), changes, ["k"], ["seq"],
-                               strategy=strategy))
+    return _rows(_merge_upsert(_target(spark), changes, ["k"], ["seq"]))
 
 
-def _stale_out(spark, strategy):
+@heavy_check("cdc_stale")
+def _stale_out(spark):
     changes = spark.createDataFrame(
         [(1, "stale", 5, "U"), (2, None, 5, "D")],
         "k bigint, payload string, seq bigint, op string",
     )
-    return _rows(_merge_upsert(_target(spark), changes, ["k"], ["seq"],
-                               strategy=strategy))
+    return _rows(_merge_upsert(_target(spark), changes, ["k"], ["seq"]))
 
 
-def _batchwise_payload(spark, strategy):
+@heavy_check("cdc_batchwise")
+def _batchwise_payload(spark):
     all_changes = [
         (1, "v1", 20, "U"), (1, "v2", 30, "U"),   # two updates, 30 wins
         (2, None, 25, "D"), (2, "back", 40, "U"),  # delete then re-insert
@@ -63,7 +60,7 @@ def _batchwise_payload(spark, strategy):
     schema = "k bigint, payload string, seq bigint, op string"
     full = _merge_upsert(_target(spark),
                          spark.createDataFrame(all_changes, schema),
-                         ["k"], ["seq"], strategy=strategy)
+                         ["k"], ["seq"])
     want = _rows(full)
 
     # two split points (middle + single-trailing-element) x both orders
@@ -82,7 +79,7 @@ def _batchwise_payload(spark, strategy):
                 # plan tree per action (this one test cost 41 s)
                 snap = _merge_upsert(
                     snap, spark.createDataFrame(p, schema),
-                    ["k"], ["seq"], strategy=strategy
+                    ["k"], ["seq"]
                 ).localCheckpoint(eager=True)
         return _rows(snap)
 
@@ -96,39 +93,23 @@ def _batchwise_payload(spark, strategy):
     return want, dict(zip(combos, results))
 
 
-def _register_cdc(strategy):
-    heavy_check(f"cdc_four_cases_{strategy}")(
-        lambda s: _four_cases_out(s, strategy))
-    heavy_check(f"cdc_stale_{strategy}")(
-        lambda s: _stale_out(s, strategy))
-    heavy_check(f"cdc_batchwise_{strategy}")(
-        lambda s: _batchwise_payload(s, strategy))
-
-
-for _s in STRATEGIES:
-    _register_cdc(_s)
-
-
-@pytest.mark.parametrize("strategy", STRATEGIES)
-def test_merge_covers_all_four_cases(strategy, heavy_results):
-    out = heavy_results(f"cdc_four_cases_{strategy}")
+def test_merge_covers_all_four_cases(heavy_results):
+    out = heavy_results("cdc_four_cases")
     assert out == {1: ("a2", 20), 3: ("c", 10), 4: ("d", 20)}
 
 
-@pytest.mark.parametrize("strategy", STRATEGIES)
-def test_merge_is_seq_aware_stale_change_loses(strategy, heavy_results):
+def test_merge_is_seq_aware_stale_change_loses(heavy_results):
     """A change with an OLDER seq than the target row must not win —
     the invariant that makes replays and out-of-order batches safe."""
-    out = heavy_results(f"cdc_stale_{strategy}")
+    out = heavy_results("cdc_stale")
     # both stale: update ignored, delete ignored
     assert out == {1: ("a", 10), 2: ("b", 10), 3: ("c", 10)}
 
 
-@pytest.mark.parametrize("strategy", STRATEGIES)
-def test_merge_batchwise_equals_global(strategy, heavy_results):
+def test_merge_batchwise_equals_global(heavy_results):
     """Applying the changelog split into two batches (in either order)
     must equal applying it all at once."""
-    want, chains = heavy_results(f"cdc_batchwise_{strategy}")
+    want, chains = heavy_results("cdc_batchwise")
     assert want == {1: ("v2", 30), 2: ("back", 40), 5: ("new", 15)}
     for combo, got in chains.items():
         assert got == want, combo
@@ -144,7 +125,7 @@ def test_compact_changelog_ties_break_on_last_seq_col(spark):
 
 
 def test_broadcast_delta_plan_never_full_outers_the_snapshot(spark):
-    """The default strategy must resolve as broadcast joins streaming
+    """The merge must resolve as broadcast joins streaming
     the snapshot — a FullOuter join (which can never broadcast) would
     shuffle the entire 100 TB target.  Since r12 the contested branch
     (second snapshot pass + broadcast inner join) executes EAGERLY at

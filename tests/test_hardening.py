@@ -256,6 +256,22 @@ def test_mixed_type_equality_join_coerces_not_crashes(spark):
     )
     assert got == [(1, 10), (3, 11)]
 
+    # composite key: a numeric/numeric pair AND a string/numeric pair;
+    # both must hold (a row matching only one of them stays out)
+    ca = local_frame(spark, [(1, 1, "5"), (2, 1, "abc"), (3, 2, "7.0"),
+                             (4, 2, "5")],
+                     "id bigint, g bigint, v string")
+    cb = local_frame(spark, [(10, 1, 5), (11, 2, 7), (12, 1, 7)],
+                     "bid bigint, h int, w int")
+    mc = MemoryCatalog({"a": ca, "b": cb})
+    got = sorted(
+        (r["a_id"], r["b_bid"])
+        for r in JoinExecutor(spark, mc)
+        .join(TableInfo("a", ("g", "v")), TableInfo("b", ("h", "w")))
+        .execute().collect()
+    )
+    assert got == [(1, 10), (3, 11)]
+
 
 class _FakeState:
     """Minimal GroupState stand-in for unit-testing transition fns."""

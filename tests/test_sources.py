@@ -112,6 +112,43 @@ def test_multi_split_input_same_results(spark, tmp_path):
     assert multi_split == tumbling(e)
 
 
+def test_schema_cache_sees_a_column_added_by_a_rewrite(spark, tmp_path):
+    """A table rewritten under a live session with an extra column:
+    the next read must show it, not the schema cached before."""
+    from cassandra_join_library_spark.sources.catalog import (
+        read_parquet_cached,
+    )
+
+    path = str(tmp_path / "t.parquet")
+    spark.createDataFrame([(1, "a")], "k bigint, s string") \
+        .write.parquet(path)
+    assert read_parquet_cached(spark, path).columns == ["k", "s"]
+    spark.createDataFrame([(2, "b", 3.5)], "k bigint, s string, x double") \
+        .write.mode("overwrite").parquet(path)
+    df = read_parquet_cached(spark, path)
+    assert df.columns == ["k", "s", "x"]
+    assert [tuple(r) for r in df.collect()] == [(2, "b", 3.5)]
+
+
+def test_schema_cache_sees_a_type_changed_by_a_rewrite(spark, tmp_path):
+    """A single-file table rewritten in place with a column's type
+    changed: the next read must use the new type instead of failing
+    the job with a parquet type mismatch."""
+    import pandas as pd
+
+    from cassandra_join_library_spark.sources.catalog import (
+        read_parquet_cached,
+    )
+
+    path = str(tmp_path / "t.parquet")
+    pd.DataFrame({"k": [1], "v": [10]}).to_parquet(path, index=False)
+    assert read_parquet_cached(spark, path).collect()[0]["v"] == 10
+    pd.DataFrame({"k": [1], "v": ["ten"]}).to_parquet(path, index=False)
+    df = read_parquet_cached(spark, path)
+    assert dict(df.dtypes)["v"] == "string"
+    assert [tuple(r) for r in df.collect()] == [(1, "ten")]
+
+
 def test_session_confs_pinned_before_a_second_thread_returns(spark, monkeypatch):
     """A thread must not return from ensure_session_confs while another
     is still pinning the confs: it would build a query under a non-UTC
