@@ -341,15 +341,15 @@ def minhash_lsh_pairs(
     if verify:
         # shingles feed both the band build and the verify join
         sh = sh.localCheckpoint(eager=True)
+    # one SQL string: building num_hashes struct Columns one by one
+    # costs ~15 py4j round trips each
     if portable:
-        hashes = [F.expr(f"conv(substr(md5(concat('{i}', ':', shingle)), 1, 15),"
-                         " 16, 10)").cast("bigint")
-                  for i in range(num_hashes)]
+        hash_sql = ("CAST(conv(substr(md5(concat('{i}', ':', shingle)), 1, 15),"
+                    " 16, 10) AS BIGINT)")
     else:
-        hashes = [F.xxhash64(F.lit(i), F.col("shingle"))
-                  for i in range(num_hashes)]
-    structs = F.array(*[F.struct(F.lit(i).alias("i"), h.alias("h"))
-                        for i, h in enumerate(hashes)])
+        hash_sql = "xxhash64({i}, shingle)"
+    structs = F.expr("array({})".format(", ".join(
+        f"struct({i} AS i, {hash_sql.format(i=i)} AS h)" for i in range(num_hashes))))
     # the tall (doc, i, min-hash) aggregate, i named band: a plain 2-key
     # min, cheap to codegen-compile at any num_hashes.  At r == 1 each
     # min-hash is its own band, so this already is the band table; at

@@ -93,10 +93,10 @@ def _mono_wav(u16: str, n_samples: int) -> Column:
     would evaluate it twice."""
     pcm_hex = F.expr(
         "array_join(transform("
-        "  transform(sequence(0, {n}), i -> {v}), u -> concat("
+        "  transform(array_repeat(0, {n}), (_, i) -> {v}), u -> concat("
         "  lpad(hex(u % 256), 2, '0'),"
         "  lpad(hex(u div 256), 2, '0'))), '')".format(
-            n=n_samples - 1, v=u16)
+            n=n_samples, v=u16)
     )
     return F.unhex(F.concat(
         _wav_header_hex(16000, 1, n_samples * 2), pcm_hex))
@@ -123,7 +123,7 @@ def _pcm_samples(df: DataFrame, id_col: str, payload_col: str) -> DataFrame:
         (_le_at(hx, 41, 4) / 2).cast("bigint").alias("n_samples"),
     ).select(
         F.col(id_col), "n_samples",
-        F.expr(f"transform(sequence(0, int(n_samples) - 1), i -> {_SIGNED})")
+        F.expr(f"transform(array_repeat(0, int(n_samples)), (_, i) -> {_SIGNED})")
         .alias("_sm"),
     )
 
@@ -854,11 +854,13 @@ def pcm_zero_crossings(df: DataFrame, id_col: str,
     decode into the pair scan re-evaluates it per neighbor); the pair
     scan is a ``filter`` over positions — map-only, embarrassingly
     parallel.  Rate reported in rounded ppm of the n-1 pairs so the
-    output stays integer-exact.  Returns
+    output stays integer-exact; a clip with fewer than two samples has
+    0 crossings and a NULL rate.  Returns
     (id, n_samples, zero_crossings, n_zero_samples, zcr_ppm)."""
     pcm = _pcm_samples(df, id_col, payload_col)
-    zc = ("size(filter(sequence(1, int(n_samples) - 1), "
-          "i -> element_at(_sm, i) * element_at(_sm, i + 1) < 0))")
+    # pairs (i, i + 1) over 0-based positions: none below two samples
+    zc = ("size(filter(array_repeat(0, int(n_samples) - 1), "
+          "(_, i) -> _sm[i] * _sm[i + 1] < 0))")
     zeros = "size(filter(_sm, v -> v = 0))"
     from .stats import _RDIV
 
@@ -871,8 +873,9 @@ def pcm_zero_crossings(df: DataFrame, id_col: str,
         .select(
             F.col(id_col), "n_samples", "zero_crossings",
             "n_zero_samples",
-            F.expr(_RDIV.format(a="1000000 * zero_crossings",
-                                b="n_samples - 1"))
+            F.when(F.col("n_samples") >= 2,
+                   F.expr(_RDIV.format(a="1000000 * zero_crossings",
+                                       b="n_samples - 1")))
             .cast("bigint").alias("zcr_ppm"),
         )
     )

@@ -808,11 +808,15 @@ def semantic_dedup(
         F.col("_vec").alias("vec"),
         F.col("_norm").alias("norm"),
     )
-    bits = None
-    for p in range(n_planes):
-        bit = (_dot(F.col("vec"), _hyperplane(p, dim)) > 0).cast("long")
-        contrib = F.shiftleft(bit, p)
-        bits = contrib if bits is None else bits + contrib
+    # one SQL string for all planes (the left-fold dot product of
+    # _dot against each literal plane); built Column by Column it costs
+    # ~125 py4j round trips per plane.  A k/1000 coefficient prints as
+    # the shortest decimal that parses back to the same double.
+    bits = F.expr(" + ".join(
+        "shiftleft(CAST(aggregate(zip_with(vec, array({}), (x, y) -> x * y), "
+        "0D, (acc, x) -> acc + x) > 0 AS BIGINT), {})".format(
+            ", ".join(f"{c!r}D" for c in _plane_coeffs(p, dim)), p)
+        for p in range(n_planes)))
     # three consumers (both pair-join sides + the final readout join)
     # with different column pruning — exchange reuse can't fire, so an
     # unmaterialized b re-scans the embeddings per consumer (7 scans in

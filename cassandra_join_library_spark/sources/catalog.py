@@ -382,10 +382,11 @@ def spread_input(df: DataFrame, *key_cols) -> DataFrame:
 def qualify(df: DataFrame, alias: str) -> DataFrame:
     """Flatten the reference's ``(column, table)`` tuple row keys
     (``cassandra_joinlib/hash_join.py:418-426``) into ``{alias}_{col}``
-    column names.  A plain ``select`` of aliased columns keeps Catalyst
+    column names.  A projection of aliased columns keeps Catalyst
     column pruning / filter pushdown intact (rename is a no-op in the
-    physical plan)."""
-    return df.select([df[c].alias(f"{alias}_{c}") for c in df.columns])
+    physical plan).  One ``toDF`` call renames every column: a py4j
+    round trip per DataFrame, not three per column."""
+    return df.toDF(*[f"{alias}_{c}" for c in df.columns])
 
 
 def local_frame(spark: SparkSession, rows, schema=None) -> DataFrame:

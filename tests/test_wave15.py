@@ -11,8 +11,11 @@ from pyspark.sql import functions as F
 
 from cassandra_join_library_spark.operators.multimodal import (
     parse_gif_metadata,
+    pcm_silence_runs,
+    pcm_stats,
     pcm_zero_crossings,
     synthesize_gif,
+    synthesize_wav,
     synthesize_wav_pcm,
 )
 from cassandra_join_library_spark.operators.text import (
@@ -261,6 +264,24 @@ def test_pcm_zero_crossings_reference(spark):
         num, den = 1000000 * zc, 63
         assert r["zcr_ppm"] == num // den + (
             1 if 2 * (num % den) >= den else 0)
+
+
+def test_pcm_decoders_on_clips_under_two_samples(spark):
+    """Header-only WAVs (0 samples) and 1-sample clips decode to an
+    empty / one-element sample array: no crossings and a NULL rate,
+    where a descending ``sequence`` used to fail the job."""
+    ids = spark.createDataFrame([(3,), (10,)], "doc_id bigint")
+    one = [((did * 31) % 65536) - 32768 for did in (3, 10)]
+    for built, n in ((synthesize_wav(ids, "doc_id"), 0),
+                     (synthesize_wav_pcm(ids, "doc_id", n_samples=0), 0),
+                     (synthesize_wav_pcm(ids, "doc_id", n_samples=1), 1)):
+        zc = sorted(tuple(r) for r in pcm_zero_crossings(built, "doc_id").collect())
+        assert zc == [(3, n, 0, 0, None), (10, n, 0, 0, None)]
+        st = sorted(tuple(r) for r in pcm_stats(built, "doc_id").collect())
+        assert st == [(d, n, v, v * v, abs(v)) if n else (d, 0, 0, 0, 0)
+                      for d, v in zip((3, 10), one)]
+        sil = sorted(tuple(r) for r in pcm_silence_runs(built, "doc_id").collect())
+        assert sil == [(3, n, 0, 0, 0), (10, n, 0, 0, 0)]
 
 
 def test_rolling_median_odd_frames(spark):
