@@ -1046,7 +1046,6 @@ def token_budget_plan(
     text_col: str,
     source_col: str,
     budget_tokens: int,
-    round_to: int = MAX_PARITY_DECIMAL_SCALE,
 ) -> DataFrame:
     """Token-budget mixture planning: given a global training-token
     budget and a target weight per source, compute each source's token
@@ -1084,7 +1083,7 @@ def token_budget_plan(
     share = F.col("_w") / F.col("_wtot")
     target_tokens = F.floor(share * F.lit(float(budget_tokens))).cast("bigint")
     ratio = target_tokens / F.col("n_tokens")
-    sample_frac = F.round(F.least(F.lit(1.0), ratio), round_to)
+    sample_frac = F.round(F.least(F.lit(1.0), ratio), MAX_PARITY_DECIMAL_SCALE)
     epochs = F.greatest(F.lit(1.0), ratio)
     return (
         weighted.crossJoin(F.broadcast(total))
@@ -1092,7 +1091,7 @@ def token_budget_plan(
             F.col(source_col),
             "n_docs",
             "n_tokens",
-            F.round(share, round_to).alias("target_weight"),
+            F.round(share, MAX_PARITY_DECIMAL_SCALE).alias("target_weight"),
             target_tokens.alias("target_tokens"),
             sample_frac.alias("sample_frac"),
             F.ceil(epochs).cast("bigint").alias("epochs"),

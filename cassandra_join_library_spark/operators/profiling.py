@@ -363,7 +363,7 @@ def key_skew_report(df: DataFrame, key_cols: "list[str]",
 
 
 def fk_integrity_audit(pairs: "list[tuple]") -> "DataFrame":
-    """See queries/profiling.py fk_integrity — assembled per-relationship
+    """See queries/stats.py profile_fk_integrity — assembled per-relationship
     from (name, child_df, child_key, parent_df, parent_key) tuples:
     orphan count (child keys with no parent) via anti join, NULL-key
     count, and child row total.  Anti joins broadcast the parent KEY

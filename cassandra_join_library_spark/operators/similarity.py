@@ -16,6 +16,10 @@ from pyspark.sql import functions as F
 
 from ..parity import MAX_PARITY_DECIMAL_SCALE
 
+#: decimal places every similarity, mean and error is rounded to before
+#: it is compared or summed, so both engines see the same value
+_DP = MAX_PARITY_DECIMAL_SCALE
+
 
 def _as_double(col: str) -> Column:
     return F.transform(F.col(col), lambda x: x.cast("double"))
@@ -50,7 +54,6 @@ def cosine_topk_bruteforce(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 5,
-    round_to: int = 6,
 ) -> DataFrame:
     """Exact top-k cosine neighbors for each query vector.
 
@@ -71,7 +74,7 @@ def cosine_topk_bruteforce(
     )
     sim = F.round(
         cosine(F.col("q_vec"), F.col("c_vec"), F.col("q_norm"), F.col("c_norm")),
-        round_to,
+        _DP,
     )
     scored = (
         c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
@@ -96,7 +99,6 @@ def cosine_pairs(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     threshold: float = 0.9,
-    round_to: int = 6,
 ) -> DataFrame:
     """All pairs with cosine >= threshold (embedding near-dup check).
 
@@ -108,7 +110,7 @@ def cosine_pairs(
     )
     a = n.select(F.col("id").alias("id_a"), F.col("vec").alias("va"), F.col("norm").alias("na"))
     b = n.select(F.col("id").alias("id_b"), F.col("vec").alias("vb"), F.col("norm").alias("nb"))
-    sim = F.round(cosine(F.col("va"), F.col("vb"), F.col("na"), F.col("nb")), round_to)
+    sim = F.round(cosine(F.col("va"), F.col("vb"), F.col("na"), F.col("nb")), _DP)
     return (
         a.join(b, F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b", sim.alias("cosine_sim"))
@@ -121,7 +123,6 @@ def cosine_pairs_blocked(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     threshold: float = 0.9,
-    round_to: int = 6,
     n_blocks: int = 16,
 ) -> DataFrame:
     """Exact all-pairs cosine >= threshold via BLOCKED pair-space
@@ -174,7 +175,7 @@ def cosine_pairs_blocked(
         F.col("norm").alias("nb"),
     )
     sim = F.round(
-        cosine(F.col("va"), F.col("vb"), F.col("na"), F.col("nb")), round_to
+        cosine(F.col("va"), F.col("vb"), F.col("na"), F.col("nb")), _DP
     )
     return (
         left.join(right, "pid")
@@ -199,7 +200,6 @@ def ivf_topk(
     k: int = 5,
     centroid_stride: int = 32,
     nprobe: int = 4,
-    round_to: int = 6,
     centroids_df: "DataFrame | None" = None,
 ) -> DataFrame:
     """IVF-style approximate top-k: partition the corpus into inverted
@@ -244,7 +244,7 @@ def ivf_topk(
         sim = F.round(
             cosine(F.col("_vec"), F.col("cent_vec"),
                    F.col("_norm"), F.col("cent_norm")),
-            round_to,
+            _DP,
         )
         scored = (
             side.join(F.broadcast(cent), F.lit(True))
@@ -295,7 +295,7 @@ def ivf_topk(
 
     sim = F.round(
         cosine(F.col("q_vec"), F.col("c_vec"), F.col("q_norm"), F.col("c_norm")),
-        round_to,
+        _DP,
     )
     scored = (
         c_assigned.join(F.broadcast(q_assigned), "list_id")
@@ -352,7 +352,6 @@ def lsh_cosine_pairs(
     n_planes: int = 12,
     n_tables: int = 4,
     threshold: float = 0.9,
-    round_to: int = 6,
 ) -> DataFrame:
     """Random-hyperplane (SimHash-for-vectors) LSH near-dup pairs.
 
@@ -415,7 +414,7 @@ def lsh_cosine_pairs(
         )
         .dropDuplicates(["id_a", "id_b"])
     )
-    sim = F.round(cosine(F.col("va"), F.col("vb"), F.col("na"), F.col("nb")), round_to)
+    sim = F.round(cosine(F.col("va"), F.col("vb"), F.col("na"), F.col("nb")), _DP)
     return (
         cand.select("id_a", "id_b", sim.alias("cosine_sim"))
         .filter(F.col("cosine_sim") >= threshold)
@@ -432,7 +431,6 @@ def pq_topk(
     ks: int = 16,
     centroid_stride: int = 7,
     refine: int = 4,
-    round_to: int = 6,
 ) -> DataFrame:
     """Product-quantization (PQ) approximate top-k with asymmetric
     distance + exact re-rank — the memory-bound ANN path.
@@ -504,7 +502,7 @@ def pq_topk(
                 F.lit(0.0),
                 lambda acc, x: acc + x,
             ),
-            round_to,
+            _DP,
         )
 
     def normed(df):
@@ -550,7 +548,7 @@ def pq_topk(
     approx = F.lit(0.0)
     for s in range(m):
         approx = approx + F.element_at(F.col(f"dt{s}"), F.col(f"code{s}") + 1)
-    approx = F.round(approx, round_to)
+    approx = F.round(approx, _DP)
 
     scored = (
         c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
@@ -569,7 +567,7 @@ def pq_topk(
         .filter(F.col("_r") <= k * refine)
     )
     # exact re-rank of the shortlist (vectors already unit-norm)
-    sim = F.round(_dot(F.col("q_vec"), F.col("c_vec")), round_to)
+    sim = F.round(_dot(F.col("q_vec"), F.col("c_vec")), _DP)
     w_final = Window.partitionBy("query_id").orderBy(
         F.col("cosine_sim").desc(), F.col("neighbor_id").asc()
     )
@@ -585,30 +583,23 @@ def label_centroids(
     df: DataFrame,
     vec_col: str = "embedding",
     label_col: str = "label",
-    round_to: int = MAX_PARITY_DECIMAL_SCALE,
 ) -> DataFrame:
     """Per-label embedding centroids (class means), one row per
     (label, dimension).
 
-    ``round_to`` supports up to 18 for standalone use, but ORACLE-GATED
-    queries must keep it <= ``parity.MAX_PARITY_DECIMAL_SCALE`` (the
-    default): the parity gate's bit-exact float floor (``_ULP_FLOOR``)
-    is derived from that scale, so a larger one would admit DuckDB's
-    DECIMAL->DOUBLE double-rounding below the floor.
-
     The offline half of centroid-based classification / clustering
     diagnostics: posexplode the vector, aggregate per (label, pos).
     Cross-ROW float summation is order-dependent, so each element is
-    rounded to ``round_to`` dp and summed as DECIMAL — exact,
+    rounded to 6 dp and summed as DECIMAL — exact,
     order-independent, bit-stable under re-partitioning, and
     reproducible in the SQL oracle.  The mean itself is ALSO integer:
-    the decimal sum scaled to 10^round_to units divides by the count
+    the decimal sum scaled to 10^6 units divides by the count
     with explicit round-half-away — ``round(double_quotient, 6)``
     was the one float op left, and the sf0.1 oracle sweep caught
     Spark and DuckDB rounding a boundary quotient apart (their
     double-round semantics differ in the last ulp); the final value
-    is int/10^round_to, an identical IEEE division in both engines.
-    Scaled-sum bound: |Σ round(val)| < 9.2e12 at round_to=6 before
+    is int/10^6, an identical IEEE division in both engines.
+    Scaled-sum bound: |Σ round(val)| < 9.2e12 at 6 dp before
     BIGINT wraps — ~9e12 rows of unit-norm dims per (label, pos)
     cell, far past any real corpus.
     One shuffle on the bounded (label, pos) key — at 100 TB this is
@@ -618,13 +609,8 @@ def label_centroids(
     """
     from .stats import _RDIV
 
-    scale = 10 ** round_to
-    # the decimal scale must track round_to: a fixed decimal(27,6)
-    # would silently quantize round_to > 6 values at 6 dp while the
-    # *scale multiplier* still used 10^round_to (r12 advice)
-    if round_to > 18:
-        raise ValueError(f"round_to={round_to} exceeds decimal headroom")
-    dec = f"decimal({21 + round_to},{round_to})"
+    scale = 10 ** _DP
+    dec = f"decimal({21 + _DP},{_DP})"
     el = df.select(
         F.col(label_col).alias("label"),
         F.posexplode(_as_double(vec_col)).alias("pos", "val"),
@@ -633,7 +619,7 @@ def label_centroids(
         el.groupBy(F.col("label"), F.col("pos").cast("bigint").alias("pos"))
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_vecs"),
-            (F.sum(F.round("val", round_to).cast(dec))
+            (F.sum(F.round("val", _DP).cast(dec))
              * F.lit(scale)).cast("long").alias("_su"),
         )
     )
@@ -654,7 +640,6 @@ def hard_negatives(
     vec_col: str = "embedding",
     label_col: str = "label",
     k: int = 5,
-    round_to: int = 6,
 ) -> DataFrame:
     """Hard-negative mining for contrastive training: for each query
     vector, the top-k most-similar corpus vectors with a DIFFERENT
@@ -681,7 +666,7 @@ def hard_negatives(
     )
     sim = F.round(
         cosine(F.col("q_vec"), F.col("c_vec"), F.col("q_norm"), F.col("c_norm")),
-        round_to,
+        _DP,
     )
     scored = c.join(
         F.broadcast(q), F.col("query_label") != F.col("neighbor_label")
@@ -740,7 +725,6 @@ def radius_search(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     threshold: float = 0.4,
-    round_to: int = 6,
 ) -> DataFrame:
     """Radius (range) search: every corpus vector with cosine >=
     threshold of each query — the vector-DB "range query" twin of
@@ -764,7 +748,7 @@ def radius_search(
     )
     sim = F.round(
         cosine(F.col("q_vec"), F.col("c_vec"), F.col("q_norm"), F.col("c_norm")),
-        round_to,
+        _DP,
     )
     return (
         c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
@@ -780,7 +764,6 @@ def semantic_dedup(
     dim: int = 64,
     n_planes: int = 6,
     threshold: float = 0.4,
-    round_to: int = 6,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication over an embedding column
     (Abbas et al. 2023 shape: partition the space, drop all-but-one of
@@ -833,7 +816,7 @@ def semantic_dedup(
         F.col("vec").alias("vb"), F.col("norm").alias("nb"),
     )
     sim = F.round(
-        cosine(F.col("va"), F.col("vb"), F.col("na"), F.col("nb")), round_to
+        cosine(F.col("va"), F.col("vb"), F.col("na"), F.col("nb")), _DP
     )
     # close is read three times (the n_close count reads it twice via
     # the union, the drop set once) — without materialization the
@@ -871,13 +854,12 @@ def semantic_dedup(
 def dim_stats(
     df: DataFrame,
     vec_col: str = "embedding",
-    round_to: int = 6,
 ) -> DataFrame:
     """Per-dimension distribution statistics over an embedding column.
 
     The profiling step before whitening / normalization / quantizer
     training: one row per vector position with count, mean, population
-    std, min, max.  Elements are rounded to ``round_to`` dp and summed
+    std, min, max.  Elements are rounded to 6 dp and summed
     as DECIMAL (exact, order-independent — same parity discipline as
     :func:`label_centroids`), so the stats are bit-stable under any
     partitioning and reproducible in the SQL oracle.  One shuffle on
@@ -887,24 +869,24 @@ def dim_stats(
     (pos, n, mean_val, std_val, min_val, max_val).
     """
     el = df.select(F.posexplode(_as_double(vec_col)).alias("pos", "val"))
-    d6 = F.round("val", round_to).cast("decimal(18,6)")
+    d6 = F.round("val", _DP).cast("decimal(18,6)")
     agg = el.groupBy(F.col("pos").cast("bigint").alias("pos")).agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum(d6).alias("_s"),
         F.sum(d6 * d6).alias("_s2"),
-        F.round(F.min("val"), round_to).alias("min_val"),
-        F.round(F.max("val"), round_to).alias("max_val"),
+        F.round(F.min("val"), _DP).alias("min_val"),
+        F.round(F.max("val"), _DP).alias("max_val"),
     )
     mean = F.col("_s").cast("double") / F.col("n")
     ex2 = F.col("_s2").cast("double") / F.col("n")
     return agg.select(
         "pos",
         "n",
-        F.round(mean, round_to).alias("mean_val"),
+        F.round(mean, _DP).alias("mean_val"),
         # greatest(.., 0): ex2 and mean² round differently in double,
         # so a constant dimension can land at ~-1e-17 and sqrt → NaN
         F.round(
-            F.sqrt(F.greatest(ex2 - mean * mean, F.lit(0.0))), round_to
+            F.sqrt(F.greatest(ex2 - mean * mean, F.lit(0.0))), _DP
         ).alias("std_val"),
         "min_val",
         "max_val",
@@ -915,7 +897,6 @@ def quantize_int8(
     df: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    round_to: int = 6,
 ) -> DataFrame:
     """Per-dimension affine int8 quantization with reconstruction-error
     audit.
@@ -924,7 +905,7 @@ def quantize_int8(
     dimension gets an affine code ``round((x - lo) / step)`` with
     ``step = (hi - lo) / 255`` from that dimension's min/max, and each
     vector reports its reconstruction error.  Inputs are rounded to
-    ``round_to`` dp first so both engines quantize the identical
+    6 dp first so both engines quantize the identical
     value; codes/reconstruction stay in double (IEEE-identical given
     identical inputs).  Plan shape: posexplode → per-pos min/max (dim
     rows, broadcast back) → map-only code+error → one aggregate on the
@@ -935,7 +916,7 @@ def quantize_int8(
     el = df.select(
         F.col(id_col).alias("_vid"),
         F.posexplode(_as_double(vec_col)).alias("pos", "val"),
-    ).withColumn("v6", F.round("val", round_to))
+    ).withColumn("v6", F.round("val", _DP))
     rng = el.groupBy("pos").agg(
         F.min("v6").alias("_lo"), F.max("v6").alias("_hi")
     )
@@ -947,7 +928,7 @@ def quantize_int8(
     recon = F.col("_lo") + code * F.when(
         F.col("_hi") == F.col("_lo"), F.lit(0.0)
     ).otherwise(step)
-    err = F.round(F.col("v6") - recon, round_to)
+    err = F.round(F.col("v6") - recon, _DP)
     q = q.select("_vid", err.alias("_err"))
     e6 = F.col("_err").cast("decimal(18,6)")
     return (
@@ -955,9 +936,9 @@ def quantize_int8(
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_dims"),
             F.round(
-                F.sum(e6 * e6).cast("double") / F.count(F.lit(1)), round_to
+                F.sum(e6 * e6).cast("double") / F.count(F.lit(1)), _DP
             ).alias("mse"),
-            F.round(F.max(F.abs("_err")), round_to).alias("max_abs_err"),
+            F.round(F.max(F.abs("_err")), _DP).alias("max_abs_err"),
         )
         .withColumnRenamed("_vid", id_col)
     )

@@ -103,7 +103,6 @@ def sampled_percentiles(
     id_col: str,
     rate: int = 8,
     percentiles: "tuple[float, ...]" = (0.5, 0.9, 0.99),
-    round_to: int = MAX_PARITY_DECIMAL_SCALE,
 ) -> DataFrame:
     """Per-group approximate percentiles from a deterministic
     hash-Bernoulli sample.
@@ -128,10 +127,12 @@ def sampled_percentiles(
         )
     thresh = HASH_SPACE // rate
     sample = df.filter(_h60(F.col(id_col)) < thresh)
-    v6 = F.round(F.col(value_col).cast("double"), round_to)
+    v6 = F.round(F.col(value_col).cast("double"), MAX_PARITY_DECIMAL_SCALE)
     aggs = [F.count(F.lit(1)).cast("bigint").alias("n_sampled")]
     for p, name in zip(percentiles, names):
-        aggs.append(F.round(F.percentile(v6, F.lit(p)), round_to).alias(name))
+        aggs.append(
+            F.round(F.percentile(v6, F.lit(p)), MAX_PARITY_DECIMAL_SCALE)
+            .alias(name))
     return sample.groupBy(group_col).agg(*aggs)
 
 

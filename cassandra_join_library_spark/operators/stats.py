@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 # rounded non-negative integer division (half away from zero) — the
 # same macro contract as operators/graph.py.  Outer-parenthesized so
 # the macro can be embedded after a binary minus (see
-# queries/wave9.py _rdiv_sql for the precedence bug this prevents).
+# queries/_shared.py _rdiv_sql for the precedence bug this prevents).
 _RDIV = ("((({a}) div ({b})) + "
          "(CASE WHEN 2 * (({a}) % ({b})) >= ({b}) THEN 1 ELSE 0 END))")
 

@@ -24,12 +24,11 @@ TABLES = [
 
 #: maximum DECIMAL scale the repo parity conventions allow for
 #: round()/DECIMAL canonicalization in ORACLE-GATED queries.  Single
-#: definition — operators that expose a ``round_to`` knob
-#: (operators.similarity.label_centroids et al) import this as their
-#: default and must not exceed it in any registered query: _ULP_FLOOR
-#: below is derived from it, so a larger scale would let DuckDB's
-#: DECIMAL->DOUBLE double-rounding slip under the floor and fail the
-#: bit-exact compare.
+#: definition — the rounding operators (operators.similarity,
+#: sketch.sampled_percentiles, corpus.token_budget_plan) round to it:
+#: _ULP_FLOOR below is derived from it, so a larger scale would let
+#: DuckDB's DECIMAL->DOUBLE double-rounding slip under the floor and
+#: fail the bit-exact compare.
 MAX_PARITY_DECIMAL_SCALE = 6
 
 #: smallest |double| at which DuckDB's DECIMAL->DOUBLE double-rounding

@@ -1,12 +1,12 @@
-"""Streaming queries.
+"""Structured Streaming queries.
 
-``stream_tumbling`` runs a REAL Structured Streaming job
-(Trigger.AvailableNow → memory sink) and returns the materialized
-result; without a watermark in complete mode every window is emitted,
-so the result equals the batch computation and the DuckDB oracle from
-``events_tumbling`` applies verbatim.  ``stream_dedup`` exercises the
-stateful dedup operator → rows-only check (stateful streaming has no
-SQL twin).
+Each runs a real streaming job (``Trigger.AvailableNow`` into a memory
+sink, or ``foreachBatch``) and returns the materialized result.
+Without a watermark in complete mode every window is emitted, so the
+result equals the batch computation and the batch twin's oracle
+applies verbatim.  Stateful operators whose emission order depends on
+micro-batch arrival are rows-only (``registry.ROWS_ONLY`` names the
+oracled query that supersedes each).
 """
 
 from __future__ import annotations
@@ -14,18 +14,87 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..functions.scalars import dsum
+from ..operators.sketch import (
+    cms_counter_table, cms_counters_sql, hll_register_table, hll_registers_sql,
+    hll_rollup,
+)
 from ..registry import register
+from ..sources.catalog import load_table
 from ..streaming import windows as W
+from ._shared import (
+    _CDC_CUTOFF, _CDC_MERGE_ORACLE, _cdc_target_and_changes, _NEW_BATCH_UNSEEN,
+    _SESSIONS_10M, _SLIDING_30M, _TUMBLING_1H,
+)
 
 
-@register("stream_tumbling", oracle="""
-SELECT CAST(floor(epoch(ts)/3600)*3600 AS BIGINT) AS window_start,
-       event_type,
-       COUNT(*) AS n_events,
-       CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS total_value
-FROM events
-GROUP BY 1, 2
-""")
+@register("stream_incremental_dedup", oracle=_NEW_BATCH_UNSEEN)
+def stream_incremental_dedup(spark, sf_dir):
+    """Streaming incremental dedup: the incoming batch (sources
+    src10+) arrives as a STREAM and is anti-joined against the static
+    corpus's digest set (src0-src9) — the continuous-ingest twin of
+    ``dedup_incremental``.  A stream-static left-anti join on a
+    fixed-width digest is STATELESS in Structured Streaming (the
+    static side is re-broadcast per micro-batch, no state store), so
+    it runs in append mode over an unbounded crawl with bounded
+    memory; over bounded input the result equals the batch twin, so
+    the same DuckDB oracle applies verbatim."""
+    from ..operators.dedup import incremental_dedup
+    from ..streaming import windows as W
+
+    stream = W.read_documents_stream(spark, sf_dir)
+    batch_no = F.substring("source", 4, 10).cast("bigint")
+    new_stream = stream.filter(batch_no >= 10)
+    corpus = load_table(spark, sf_dir, "documents").filter(batch_no < 10)
+    deduped = incremental_dedup(new_stream, corpus, ["text"])
+    out = deduped.select("doc_id", "source")
+    name, _ = W.run_to_memory(out, output_mode="append")
+    return spark.table(name)
+
+
+@register("stream_upsert_foreachbatch", oracle=_CDC_MERGE_ORACLE)
+def stream_upsert_foreachbatch(spark, sf_dir):
+    """The streaming twin: the changelog arrives as a STREAM and each
+    micro-batch is merged into the held snapshot via ``foreachBatch``
+    — the standard Structured-Streaming upsert-sink pattern (the sink
+    a Delta/Iceberg MERGE would be in production).  Because
+    ``merge_upsert`` is seq-aware, batch-wise application composes to
+    the same final snapshot as one global merge regardless of batch
+    boundaries, so the batch oracle applies verbatim."""
+    from ..operators import cdc as CD
+    from ..streaming import windows as W
+
+    target, _ = _cdc_target_and_changes(spark, sf_dir)
+    cut = F.to_timestamp(F.lit(_CDC_CUTOFF))
+    stream = W.read_events_stream(spark, sf_dir).filter(F.col("ts") >= cut)
+    changes = stream.select(
+        "user_id", "event_id", "event_type", "value",
+        F.unix_micros("ts").alias("ts_us"),
+    ).withColumn(
+        "op",
+        F.when(F.col("event_type") == "error", F.lit("D")).otherwise(F.lit("U")),
+    )
+
+    held = {"snap": target.localCheckpoint(eager=True)}
+
+    def apply_batch(bdf, _bid):
+        merged = CD.merge_upsert(held["snap"], bdf, ["user_id"],
+                                 ["ts_us", "event_id"], "op")
+        # materialize: cut lineage so N batches don't stack N joins
+        held["snap"] = merged.localCheckpoint(eager=True)
+
+    import tempfile
+
+    q = (
+        changes.writeStream.foreachBatch(apply_batch)
+        .trigger(availableNow=True)
+        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_cdc_"))
+        .start()
+    )
+    q.awaitTermination()
+    return held["snap"]
+
+
+@register("stream_tumbling", oracle=_TUMBLING_1H)
 def stream_tumbling(spark, sf_dir):
     """Tumbling-window aggregation executed through the streaming
     engine (AvailableNow), result identical to the batch twin."""
@@ -186,27 +255,7 @@ def stream_sessionize_final(spark, sf_dir):
     return spark.table(name)
 
 
-@register("stream_session", oracle="""
-WITH x AS (
-  SELECT user_id, ts, value,
-         CASE WHEN lag(ts) OVER w IS NULL
-              OR ts - lag(ts) OVER w >= INTERVAL 10 MINUTE
-              THEN 1 ELSE 0 END AS new_sess
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts)
-), y AS (
-  SELECT user_id, ts, value,
-         SUM(new_sess) OVER (PARTITION BY user_id ORDER BY ts
-                             ROWS UNBOUNDED PRECEDING) AS sess_id
-  FROM x
-)
-SELECT user_id,
-       CAST(floor(epoch(MIN(ts))) AS BIGINT) AS session_start_epoch,
-       COUNT(*) AS n_events,
-       CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS total_value
-FROM y
-GROUP BY user_id, sess_id
-""")
+@register("stream_session", oracle=_SESSIONS_10M)
 def stream_session(spark, sf_dir):
     """Native streaming session windows (``session_window`` merges
     per-user state as events arrive) run to completion through the
@@ -218,20 +267,7 @@ def stream_session(spark, sf_dir):
     return spark.table(name)
 
 
-@register("stream_sliding", oracle="""
-WITH b AS (
-  SELECT CAST(floor(epoch(ts)/1800)*1800 AS BIGINT) AS s, value FROM events
-), expanded AS (
-  SELECT s AS window_start, value FROM b
-  UNION ALL
-  SELECT s - 1800 AS window_start, value FROM b
-)
-SELECT window_start,
-       COUNT(*) AS n_events,
-       CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS total_value
-FROM expanded
-GROUP BY 1
-""")
+@register("stream_sliding", oracle=_SLIDING_30M)
 def stream_sliding(spark, sf_dir):
     """Sliding-window aggregation through the streaming engine —
     overlap factor length/slide = 2; oracle shared with the batch twin
@@ -268,3 +304,55 @@ def stream_static_enrich(spark, sf_dir):
     name, _ = W.run_to_memory(out, output_mode="append")
     return spark.table(name)
 
+
+@register("stream_hll_final", oracle=f"""
+SELECT grp AS event_type, n_buckets_hit, n_zero_registers, s2, est_raw
+FROM ({hll_registers_sql("events", "event_type", "user_id")})
+""")
+def stream_hll_final(spark, sf_dir):
+    """POST-ALL-BATCHES HyperLogLog register state, built BY the
+    streaming engine: the (group, bucket) MAX aggregate runs as a
+    Structured Streaming aggregation (complete mode, AvailableNow),
+    and because HLL registers merge by MAX, the final streaming state
+    equals the batch register table bit-for-bit regardless of how the
+    micro-batches sliced the input — the sketch-mergeability property
+    (approx_distinct_hll_merge) carried over to incremental
+    execution, which is exactly how a 100 TB streaming distinct-count
+    dashboard stays exact-in-expectation with O(m) state per group.
+    The register rollup (exact harmonic sum, raw estimate) happens on
+    the final state; the whole estimate is value-oracled against the
+    one-shot batch SQL."""
+    stream = W.read_events_stream(spark, sf_dir)
+    regs = hll_register_table(stream, "event_type", "user_id")
+    name, _ = W.run_to_memory(regs, output_mode="complete")
+    return (hll_rollup(spark.table(name))
+            .select(F.col("grp").alias("event_type"), "n_buckets_hit",
+                    "n_zero_registers", "s2", "est_raw"))
+
+
+_CMS_USERS_SQL = cms_counters_sql("events", "CAST(user_id AS VARCHAR)")
+
+
+@register("stream_cms_final", oracle=f"""
+SELECT i, col, cnt FROM ({_CMS_USERS_SQL})
+""")
+def stream_cms_final(spark, sf_dir):
+    """POST-ALL-BATCHES Count-Min state, built BY the streaming
+    engine: the (row, bucket) grouped COUNT runs as a Structured
+    Streaming aggregation (complete mode, AvailableNow) over the
+    per-user event stream.  Counters merge by SUM, so the final
+    streaming state equals the one-shot batch counter table
+    bit-for-bit no matter how the micro-batches sliced the input —
+    the additive-sketch twin of ``stream_hll_final`` (MAX-mergeable).
+    Together they cover the two merge algebras every distributed
+    sketch at 100 TB reduces to.  State is O(d*w) per stream,
+    independent of cardinality; the full final table is
+    value-oracled."""
+    from ..streaming import windows as W
+
+    stream = W.read_events_stream(spark, sf_dir)
+    regs = cms_counter_table(
+        stream.select(F.col("user_id").cast("string").alias("term")),
+        "term")
+    name, _ = W.run_to_memory(regs, output_mode="complete")
+    return spark.table(name).select("i", "col", "cnt")

@@ -46,7 +46,9 @@ first queries loading 15-20 k classes one by one.  Class-data sharing
   ``SPARK_CONF_DIR`` pointing at an empty cache directory, which loses
   no setting.
 - A truncated, corrupt or mismatched archive starts a normal session
-  (the JVM's default ``-Xshare:auto``).  A failed dump leaves a
+  (the JVM's default ``-Xshare:auto``) and is deleted once the JVM
+  reports it unmapped, unless the caller's ``-Xshare:off`` explains
+  that; the next session records a fresh one.  A failed dump leaves a
   ``.failed`` marker, so later sessions neither record nor rebuild.
 """
 
@@ -122,7 +124,11 @@ def get_spark(app_name: str = "cassandra-join-library-spark",
     archive = _archive_path(launch, heap)
     if archive is None:
         return builder.getOrCreate()
-    recording = not archive.is_file()
+    try:
+        found = archive.stat()
+    except FileNotFoundError:
+        found = None
+    recording = found is None
     if recording:
         classlist = archive.with_name(f"{archive.stem}.{os.getpid()}.classlist")
         opts = [f"-XX:DumpLoadedClassList={classlist}"]
@@ -136,6 +142,8 @@ def get_spark(app_name: str = "cassandra-join-library-spark",
         del os.environ["SPARK_CONF_DIR"]
     if recording:
         _build_archive_at_exit(spark, classlist, archive)
+    else:
+        _drop_unmapped_archive(spark, archive, found)
     return spark
 
 
@@ -207,6 +215,25 @@ def _archive_path(launch: "dict[str, str]", heap: str) -> "Path | None":
         return None
     archive = cache / f"{key.hexdigest()[:24]}.jsa"
     return None if archive.with_suffix(".failed").exists() else archive
+
+
+def _drop_unmapped_archive(spark: SparkSession, archive: Path,
+                           found: os.stat_result) -> None:
+    """Delete an archive the JVM could not map (``java.vm.info`` lacks
+    ``sharing``), so the next session records a fresh one.  A caller's
+    ``-Xshare:off`` explains the miss and keeps it; so does a file
+    replaced since the launch."""
+    jvm = spark.sparkContext._jvm
+    if "sharing" in jvm.java.lang.System.getProperty("java.vm.info"):
+        return
+    args = jvm.java.lang.management.ManagementFactory.getRuntimeMXBean().getInputArguments()
+    if "-Xshare:off" in list(args):
+        return
+    with contextlib.suppress(OSError):
+        st = archive.stat()
+        if ((st.st_dev, st.st_ino, st.st_size, st.st_mtime_ns)
+                == (found.st_dev, found.st_ino, found.st_size, found.st_mtime_ns)):
+            archive.unlink()
 
 
 def _build_archive_at_exit(spark: SparkSession, classlist: Path, archive: Path) -> None:

@@ -15,12 +15,12 @@ stratum-by-residue choice is load-bearing there: content groups are
 ``doc_id % 100``, so a modulus-25 residue keeps whole groups aligned
 inside the stratum and the planted duplicate/retouch pairs land
 within it.  ``--family audio`` checks the WAV energy-difference
-fingerprints (queries/wave36.py) — same ``doc_id % 100`` content
+fingerprints (queries/multimodal.py) — same ``doc_id % 100`` content
 groups, so the same residue trick applies.  ``--family video``
-checks the MP4 keyframe aHash fingerprints (queries/wave37.py) —
+checks the MP4 keyframe aHash fingerprints (queries/multimodal.py) —
 same content groups again, with the GROUPED banded join audited
 frame-to-frame via ``group_col="frame"``.  ``--family snippet``
-checks the windowed audio sub-fingerprints (queries/wave38.py) on
+checks the windowed audio sub-fingerprints (queries/multimodal.py) on
 their composite (clip*8 + window) key — the stratum keys on the CLIP
 id so all of a clip's windows stay together; borrow pairs span
 (g, g+1) and mostly cross the stratum boundary, which is fine: the
@@ -55,13 +55,13 @@ from cassandra_join_library_spark.operators.dedup import (
 
 def _fingerprints(family: str, spark, sf_dir: str):
     if family == "phash":
-        from cassandra_join_library_spark.queries.wave33 import (
+        from cassandra_join_library_spark.queries.multimodal import (
             _phash_fingerprints,
         )
 
         return _phash_fingerprints(spark, sf_dir)
     if family == "audio":
-        from cassandra_join_library_spark.queries.wave36 import (
+        from cassandra_join_library_spark.queries.multimodal import (
             _audio_fingerprints,
         )
 
@@ -69,7 +69,7 @@ def _fingerprints(family: str, spark, sf_dir: str):
     if family == "video":
         # (doc, frame, fp) — the selfcheck audits the GROUPED banded
         # join (frame-to-frame) via group_col="frame"
-        from cassandra_join_library_spark.queries.wave37 import (
+        from cassandra_join_library_spark.queries.multimodal import (
             _video_fingerprints,
         )
 
@@ -79,7 +79,7 @@ def _fingerprints(family: str, spark, sf_dir: str):
         # exact table mm_audio_snippet_pairs bands; the stratum
         # expression keys on the CLIP id (doc div 8), keeping all of a
         # clip's windows together (main() special-cases this)
-        from cassandra_join_library_spark.queries.wave38 import (
+        from cassandra_join_library_spark.queries.multimodal import (
             _KEY_STRIDE, _snippet_window_fps,
         )
 

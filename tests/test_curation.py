@@ -415,7 +415,7 @@ def test_rdiv_macros_survive_subtraction_context(spark):
     )
     from cassandra_join_library_spark.operators.graph import _RDIV as _RDIV_G
     from cassandra_join_library_spark.operators.stats import _RDIV
-    from cassandra_join_library_spark.queries.wave9 import _rdiv_sql
+    from cassandra_join_library_spark.queries._shared import _rdiv_sql
 
     for macro in (_RDIV, _RDIV_B, _RDIV_G):
         expr = "10 - " + macro.format(a="3", b="2")

@@ -303,12 +303,16 @@ def test_hll_mergeable_rollup_accuracy(spark):
 
 
 def test_registry_integrity():
-    """The registry must never silently lose a query or leave a
-    rows-only query unexplained:
-      (a) every name in the committed manifest still exists (a refactor
-          that silently drops a query fails here);
+    """The registry must never silently lose a query, change an
+    oracle's text or leave a rows-only query unexplained:
+      (a) every name in the committed manifest still exists, and its
+          oracle's sha256 still equals the manifest's digest (``null``
+          for a rows-only query) — a refactor that drops a query or
+          composes an oracle from fragments into different bytes
+          fails here;
       (b) every query without a DuckDB oracle has a ROWS_ONLY entry
           that names its oracled twin or says why no oracle exists."""
+    import hashlib
     import json
     import pathlib
 
@@ -325,6 +329,11 @@ def test_registry_integrity():
         f"queries disappeared from the registry vs the committed "
         f"manifest: {missing}"
     )
+    changed = sorted(
+        n for n, digest in manifest.items()
+        if digest != (hashlib.sha256(ors[n].encode()).hexdigest()
+                      if n in ors else None))
+    assert not changed, f"oracle text differs from the committed manifest: {changed}"
 
     # every rows-only query must be adjudicated: either it names the
     # oracled query that supersedes it, or it documents why no oracle

@@ -2,11 +2,13 @@
 (a JVM is launched once per process): launch-time settings win over the
 library's defaults, and the class-data archive lifecycle — record on a
 miss, build at exit, map on the next launch, and a normal session from
-a bad archive or an ineligible conf dir.  Every process gets its own
+a bad archive, which is then deleted unless the caller turned sharing
+off, or from an ineligible conf dir.  Every process gets its own
 ``XDG_CACHE_HOME``, so no test reads or replaces the machine's archive."""
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import shutil
@@ -34,6 +36,7 @@ print(json.dumps({
     "args": list(jvm.java.lang.management.ManagementFactory
                  .getRuntimeMXBean().getInputArguments()),
     "caller_flag": jvm.java.lang.System.getProperty("caller.flag"),
+    "vm_info": jvm.java.lang.System.getProperty("java.vm.info"),
     "max_heap": jvm.java.lang.Runtime.getRuntime().maxMemory(),
     "jvm_conf_dir": jvm.java.lang.System.getenv("SPARK_CONF_DIR"),
     "conf_dir": os.environ.get("SPARK_CONF_DIR"),
@@ -113,8 +116,20 @@ def test_the_next_session_maps_the_archive_and_keeps_caller_flags(built):
     assert f"-XX:SharedArchiveFile={archives[0]}" in args
     assert args.index(f"-XX:SharedArchiveFile={archives[0]}") < args.index("-Xshare:on")
     assert out["caller_flag"] == "kept"
+    assert "sharing" in out["vm_info"]
     assert not any(a.startswith("-XX:DumpLoadedClassList=") for a in args)
     assert out["conf_dir"] is None
+    assert archives[0].is_file()
+    assert sorted(_cds(xdg).glob("*.jsa")) == archives
+    assert archives[0].stat().st_mtime_ns == before
+
+
+def test_a_callers_xshare_off_keeps_a_good_archive(built):
+    xdg, _, archives = built
+    before = archives[0].stat().st_mtime_ns
+    out = _session(_env(xdg, SUBMIT + " --driver-java-options -Xshare:off"))
+    assert f"-XX:SharedArchiveFile={archives[0]}" in out["args"]
+    assert "sharing" not in out["vm_info"]
     assert sorted(_cds(xdg).glob("*.jsa")) == archives
     assert archives[0].stat().st_mtime_ns == before
 
@@ -137,10 +152,12 @@ def test_a_bad_archive_starts_a_normal_session(built, tmp_path, damage):
     try:
         out = _session(env)
         assert f"-XX:SharedArchiveFile={target}" in out["args"]
-        # the bad file is used as found: nothing is recorded or rebuilt
-        assert [p.name for p in _cds(xdg).glob("*.*")] == [target.name]
+        assert "sharing" not in out["vm_info"]
+        # the unmapped file is removed, so the next session records anew
+        assert not list(_cds(xdg).glob("*.*"))
     finally:
-        target.unlink()  # a hard link would keep the archive's blocks
+        with contextlib.suppress(FileNotFoundError):
+            target.unlink()  # a hard link would keep the archive's blocks
 
 
 def test_a_conf_dir_with_a_real_file_gets_no_archive(tmp_path):

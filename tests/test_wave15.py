@@ -76,7 +76,7 @@ def test_winnowing_shared_substring_guarantee(spark):
 
 
 def test_stratified_sample_exact_counts(spark):
-    from cassandra_join_library_spark.queries.wave15 import (
+    from cassandra_join_library_spark.queries.corpus import (
         _STRATUM_N, corpus_stratified_sample,
     )
 
@@ -101,7 +101,7 @@ def test_stratified_sample_exact_counts(spark):
 
 
 def test_er_match_scores_weights(spark):
-    from cassandra_join_library_spark.queries.wave15 import er_match_scores
+    from cassandra_join_library_spark.queries.dedup import er_match_scores
 
     first8 = "w1 w2 w3 w4 w5 w6 w7 w8"
     mid8 = "m1 m2 m3 m4 m5 m6 m7 m8"
@@ -114,14 +114,14 @@ def test_er_match_scores_weights(spark):
           + "pad " * 40, "fr", "s2", len(first8) + 200)],
         "doc_id bigint, text string, lang string, source string, "
         "n_chars bigint")
-    import cassandra_join_library_spark.queries.wave15 as w15
+    import cassandra_join_library_spark.queries.dedup as dedup_q
 
-    orig = w15.load_table
+    orig = dedup_q.load_table
     try:
-        w15.load_table = lambda spark, sf_dir, name: docs
+        dedup_q.load_table = lambda spark, sf_dir, name: docs
         rows = er_match_scores(spark, "unused").collect()
     finally:
-        w15.load_table = orig
+        dedup_q.load_table = orig
     scores = {(r["doc_a"], r["doc_b"]): r["match_score"] for r in rows}
     # (1,2): lang+4, source+2, len+3, mid8+5 = 14
     assert scores.get((1, 2)) == 14
@@ -148,7 +148,7 @@ def _rank_avg(vals):
 def test_rank_corr_matches_bruteforce(spark):
     import math
 
-    from cassandra_join_library_spark.queries.wave16 import stats_rank_corr
+    from cassandra_join_library_spark.queries.stats import stats_rank_corr
 
     rng = random.Random(7)
     # quantity-like / discount-like integer domains with ties
@@ -157,14 +157,14 @@ def test_rank_corr_matches_bruteforce(spark):
     li = spark.createDataFrame(
         [(x / 100.0, y / 1000000.0) for x, y in zip(xs, ys)],
         "l_quantity double, l_discount double")
-    import cassandra_join_library_spark.queries.wave16 as w16
+    import cassandra_join_library_spark.queries.stats as stats_q
 
-    orig = w16.load_table
+    orig = stats_q.load_table
     try:
-        w16.load_table = lambda spark, sf_dir, name: li
+        stats_q.load_table = lambda spark, sf_dir, name: li
         row = stats_rank_corr(spark, "unused").collect()[0]
     finally:
-        w16.load_table = orig
+        stats_q.load_table = orig
     rx, ry = _rank_avg(xs), _rank_avg(ys)
     mx = sum(rx) / len(rx)
     my = sum(ry) / len(ry)
@@ -196,7 +196,7 @@ def test_rank_corr_matches_bruteforce(spark):
 def test_user_streaks_islands(spark):
     import datetime as dt
 
-    from cassandra_join_library_spark.queries.wave16 import (
+    from cassandra_join_library_spark.queries.events import (
         events_user_streaks,
     )
 
@@ -210,16 +210,16 @@ def test_user_streaks_islands(spark):
          ev(8, 2, 4)],
         "event_id bigint, ts timestamp, user_id bigint, "
         "event_type string, value double, props string")
-    import cassandra_join_library_spark.queries.wave16 as w16
+    import cassandra_join_library_spark.queries.events as events_q
     from cassandra_join_library_spark.sources import catalog
 
     orig = catalog.load_events
     try:
-        w16.load_events = lambda spark, sf_dir: events
+        events_q.load_events = lambda spark, sf_dir: events
         rows = {r["user_id"]: r for r in
                 events_user_streaks(spark, "unused").collect()}
     finally:
-        w16.load_events = orig
+        events_q.load_events = orig
     assert rows[1]["longest_streak"] == 3
     assert rows[1]["n_active_days"] == 6
     assert rows[1]["n_streaks"] == 3
@@ -287,7 +287,7 @@ def test_pcm_decoders_on_clips_under_two_samples(spark):
 def test_rolling_median_odd_frames(spark):
     import datetime as dt
 
-    from cassandra_join_library_spark.queries.wave16 import (
+    from cassandra_join_library_spark.queries.events import (
         events_rolling_median_daily,
     )
 
@@ -304,15 +304,15 @@ def test_rolling_median_odd_frames(spark):
     events = spark.createDataFrame(
         rowsrc, "event_id bigint, ts timestamp, user_id bigint, "
         "event_type string, value double, props string")
-    import cassandra_join_library_spark.queries.wave16 as w16
+    import cassandra_join_library_spark.queries.events as events_q
 
-    orig = w16.load_events
+    orig = events_q.load_events
     try:
-        w16.load_events = lambda spark, sf_dir: events
+        events_q.load_events = lambda spark, sf_dir: events
         got = sorted(events_rolling_median_daily(
             spark, "unused").collect(), key=lambda r: r["day_epoch"])
     finally:
-        w16.load_events = orig
+        events_q.load_events = orig
     assert len(got) == 14 - 6
     for i, r in enumerate(got):
         frame = sorted(vals[i:i + 7])

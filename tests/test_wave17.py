@@ -70,8 +70,8 @@ def test_hll_register_merge_identity(spark):
 
 
 def test_knn_degree_curve_bruteforce(spark):
-    import cassandra_join_library_spark.queries.wave17 as w17
-    from cassandra_join_library_spark.queries.wave17 import (
+    import cassandra_join_library_spark.queries.graph as graph_q
+    from cassandra_join_library_spark.queries.graph import (
         graph_knn_degree_curve,
     )
 
@@ -82,13 +82,13 @@ def test_knn_degree_curve_bruteforce(spark):
         if u != v:
             edges.add((min(u, v), max(u, v)))
     e_df = spark.createDataFrame(sorted(edges), "u bigint, v bigint")
-    orig = w17._copurchase_edges
+    orig = graph_q._copurchase_edges
     try:
-        w17._copurchase_edges = lambda spark, sf_dir: e_df
+        graph_q._copurchase_edges = lambda spark, sf_dir: e_df
         got = {r["degree"]: r for r in
                graph_knn_degree_curve(spark, "unused").collect()}
     finally:
-        w17._copurchase_edges = orig
+        graph_q._copurchase_edges = orig
     adj = {}
     for u, v in edges:
         adj.setdefault(u, set()).add(v)

@@ -10,7 +10,7 @@ def test_stream_hll_final_equals_batch(spark):
     from cassandra_join_library_spark.operators.sketch import (
         hll_register_table, hll_rollup,
     )
-    from cassandra_join_library_spark.queries.wave18 import (
+    from cassandra_join_library_spark.queries.streaming import (
         stream_hll_final,
     )
 
@@ -29,7 +29,7 @@ def test_stream_hll_final_equals_batch(spark):
 
 
 def test_pivot_matches_long_counts(spark):
-    from cassandra_join_library_spark.queries.wave18 import (
+    from cassandra_join_library_spark.queries.events import (
         _EVENT_TYPES, events_pivot_daily_types,
     )
 

@@ -46,7 +46,7 @@ def test_jpeg_corrupt_and_sofless_streams(spark):
 
 
 def test_equidepth_buckets_are_balanced(spark):
-    from cassandra_join_library_spark.queries.wave19 import (
+    from cassandra_join_library_spark.queries.stats import (
         _EQD_BUCKETS, profile_equidepth_price,
     )
 

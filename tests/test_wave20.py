@@ -103,7 +103,7 @@ def test_cms_overestimates_and_merges(heavy_results):
 
 
 def test_mannwhitney_matches_bruteforce(spark):
-    from cassandra_join_library_spark.queries.wave20 import (
+    from cassandra_join_library_spark.queries.stats import (
         stats_mannwhitney_u,
     )
 
@@ -127,7 +127,7 @@ def test_mannwhitney_matches_bruteforce(spark):
 
 
 def test_compaction_bins_tile_and_conserve(spark):
-    from cassandra_join_library_spark.queries.wave20 import (
+    from cassandra_join_library_spark.queries.relational import (
         _BIN_TARGET, layout_compaction_bins,
     )
 

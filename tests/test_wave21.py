@@ -12,7 +12,7 @@ SF = "/root/testdata/sf0.001"
 
 
 def test_url_parse_variant_axes(spark):
-    from cassandra_join_library_spark.queries.wave21 import text_url_parse
+    from cassandra_join_library_spark.queries.text import text_url_parse
 
     rows = {r["doc_id"]: r for r in text_url_parse(spark, SF).collect()}
     names = ("alpha", "beta", "gamma", "delta", "epsilon", "zeta", "eta")
@@ -36,7 +36,7 @@ def test_url_parse_variant_axes(spark):
 
 
 def test_url_canonical_collapses_equivalent_forms(spark):
-    from cassandra_join_library_spark.queries.wave21 import (
+    from cassandra_join_library_spark.queries.dedup import (
         dedup_url_canonical,
     )
 
@@ -59,10 +59,10 @@ def test_url_canonical_collapses_equivalent_forms(spark):
 
 
 def test_label_propagation_invariants(spark):
-    from cassandra_join_library_spark.queries.wave21 import (
+    from cassandra_join_library_spark.queries.graph import (
         graph_label_propagation,
     )
-    from cassandra_join_library_spark.queries.wave4 import (
+    from cassandra_join_library_spark.queries.graph import (
         _copurchase_edges,
     )
 
@@ -86,7 +86,7 @@ def _jl_sign(r: int, pos: int) -> int:
 
 
 def test_jl_projection_matches_numpy(spark):
-    from cassandra_join_library_spark.queries.wave21 import (
+    from cassandra_join_library_spark.queries.vectors import (
         _JL_K, embedding_jl_projection,
     )
 

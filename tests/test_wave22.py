@@ -21,7 +21,7 @@ def _expected_align(doc_id: int):
 
 
 def test_subtitle_align_matches_interval_math(spark):
-    from cassandra_join_library_spark.queries.wave22 import (
+    from cassandra_join_library_spark.queries.multimodal import (
         mm_subtitle_align,
     )
 
@@ -43,7 +43,7 @@ def _mask(doc_id: int, pos: int) -> bool:
 
 
 def test_span_corruption_matches_python_replay(spark):
-    from cassandra_join_library_spark.queries.wave22 import (
+    from cassandra_join_library_spark.queries.corpus import (
         corpus_span_corruption,
     )
 
@@ -72,10 +72,10 @@ def test_span_corruption_matches_python_replay(spark):
 
 
 def test_ivf_recall_consistent_with_component_queries(spark):
-    from cassandra_join_library_spark.queries.similarity import (
+    from cassandra_join_library_spark.queries.vectors import (
         ann_ivf_topk, ann_topk_bruteforce,
     )
-    from cassandra_join_library_spark.queries.wave22 import (
+    from cassandra_join_library_spark.queries.vectors import (
         ann_ivf_recall_audit,
     )
 
@@ -95,7 +95,7 @@ def test_ivf_recall_consistent_with_component_queries(spark):
 
 
 def test_histogram_drift_conserves_mass(spark):
-    from cassandra_join_library_spark.queries.wave22 import (
+    from cassandra_join_library_spark.queries.stats import (
         profile_histogram_l1_drift,
     )
 

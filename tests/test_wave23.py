@@ -9,10 +9,10 @@ SF = "/root/testdata/sf0.001"
 
 
 def test_kappa_matches_contingency_replay(spark):
-    from cassandra_join_library_spark.queries.curation import (
+    from cassandra_join_library_spark.queries.text import (
         text_c4_line_filter, text_gopher_rules,
     )
-    from cassandra_join_library_spark.queries.wave23 import (
+    from cassandra_join_library_spark.queries.stats import (
         stats_cohens_kappa,
     )
 
@@ -47,7 +47,7 @@ def test_kappa_matches_contingency_replay(spark):
 
 
 def test_hashing_trick_collisions_bounded(spark):
-    from cassandra_join_library_spark.queries.wave23 import (
+    from cassandra_join_library_spark.queries.text import (
         _HASH_BUCKETS, text_hashing_trick_audit,
     )
 
@@ -66,7 +66,7 @@ def test_hashing_trick_collisions_bounded(spark):
 
 
 def test_id3_syncsafe_roundtrip(spark):
-    from cassandra_join_library_spark.queries.wave23 import (
+    from cassandra_join_library_spark.queries.multimodal import (
         mm_id3_tag_parse,
     )
 

@@ -24,7 +24,7 @@ def test_prefix_filter_equals_posting_join(spark):
 
 
 def test_funnel_is_monotone_and_prunes(spark):
-    from cassandra_join_library_spark.queries.wave24 import (
+    from cassandra_join_library_spark.queries.dedup import (
         dedup_prefix_filter_funnel,
     )
 

@@ -17,7 +17,7 @@ def _h20(b: int, eid: int) -> int:
 
 
 def _pois_w(h: int) -> int:
-    from cassandra_join_library_spark.queries.wave25 import _POIS_CUM
+    from cassandra_join_library_spark.queries.stats import _POIS_CUM
 
     for k, t in enumerate(_POIS_CUM):
         if h < t:
@@ -26,7 +26,7 @@ def _pois_w(h: int) -> int:
 
 
 def test_bootstrap_ci_brackets_observed_mean(spark):
-    from cassandra_join_library_spark.queries.wave25 import (
+    from cassandra_join_library_spark.queries.stats import (
         stats_bootstrap_ci,
     )
 
@@ -50,7 +50,7 @@ def test_bootstrap_weights_are_poisson_like(spark):
 
 
 def test_randomization_test_matches_python_replay(spark):
-    from cassandra_join_library_spark.queries.wave25 import (
+    from cassandra_join_library_spark.queries.stats import (
         _B, stats_randomization_test,
     )
 

@@ -15,10 +15,10 @@ def test_hyperball_registers_match_exact_ball_union(spark):
     from cassandra_join_library_spark.operators.sketch import (
         HLL_M, _HLL_PAYLOAD_BITS,
     )
-    from cassandra_join_library_spark.queries.wave4 import (
+    from cassandra_join_library_spark.queries.graph import (
         _copurchase_edges,
     )
-    from cassandra_join_library_spark.queries.wave26 import (
+    from cassandra_join_library_spark.queries.graph import (
         _T, _ZERO_TERM, graph_hyperball_reach,
     )
 

@@ -171,7 +171,7 @@ def test_phash_stratum_selfcheck_pins_script(spark):
     from cassandra_join_library_spark.operators.dedup import (
         hamming_band_selfcheck,
     )
-    from cassandra_join_library_spark.queries.wave33 import (
+    from cassandra_join_library_spark.queries.multimodal import (
         _phash_fingerprints,
     )
     from .conftest import SF_ORACLE

@@ -122,7 +122,7 @@ def test_audio_stratum_selfcheck_pins_script(spark):
     from cassandra_join_library_spark.operators.dedup import (
         hamming_band_selfcheck,
     )
-    from cassandra_join_library_spark.queries.wave36 import (
+    from cassandra_join_library_spark.queries.multimodal import (
         _audio_fingerprints,
     )
     from .conftest import SF_ORACLE

@@ -132,7 +132,7 @@ def test_video_stratum_selfcheck_pins_script(spark):
     from cassandra_join_library_spark.operators.dedup import (
         hamming_band_selfcheck,
     )
-    from cassandra_join_library_spark.queries.wave37 import (
+    from cassandra_join_library_spark.queries.multimodal import (
         _video_fingerprints,
     )
     from .conftest import SF_ORACLE

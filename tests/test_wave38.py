@@ -97,7 +97,7 @@ def test_window_fingerprints_drop_non_wav(spark):
 def test_snippet_pairs_cross_clip_only(spark):
     """The composite-key pair join never reports within-clip window
     pairs, and reports the planted borrow at the right offsets."""
-    from cassandra_join_library_spark.queries.wave38 import _snippet_pairs
+    from cassandra_join_library_spark.queries.multimodal import _snippet_pairs
 
     ids = [205, 6]
     clips = synthesize_wav_pcm_snippets(_ids(spark, ids), "doc_id")
