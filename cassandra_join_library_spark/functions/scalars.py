@@ -40,10 +40,9 @@ def davg(col: "Column | str", alias: "str | None" = None) -> Column:
     return out.alias(alias) if alias else out
 
 
-def bigint(col: Column, alias: "str | None" = None) -> Column:
+def bigint(col: Column) -> Column:
     """Computed-integer parity convention: always BIGINT."""
-    out = col.cast("bigint")
-    return out.alias(alias) if alias else out
+    return col.cast("bigint")
 
 
 # SQL-side mirrors (DuckDB snippets), kept next to their Spark twins so

@@ -154,16 +154,15 @@ def asof_join_nearest(
     left: DataFrame,
     right: DataFrame,
     key: str,
-    left_ts: str = "ts",
-    right_ts: str = "ts",
     right_id: str = "event_id",
     tolerance_seconds: "int | None" = None,
 ) -> DataFrame:
     """The third pandas ``merge_asof`` direction: match each left row
     to the CLOSEST right row in either direction (optionally within
-    ``tolerance_seconds``).  Composed from one backward and one
-    forward :func:`asof_join` pass — still two one-window passes over
-    the union, zero extra joins against the fact table.  Equal
+    ``tolerance_seconds``), both sides timed by ``ts``.  Composed from
+    one backward and one forward :func:`asof_join` pass — still two
+    one-window passes over the union, zero extra joins against the
+    fact table.  Equal
     distance prefers the backward match (pandas' documented tie rule —
     cross-checked against ``merge_asof(direction='nearest')`` on
     random frames in ``tests/test_timeseries.py``).
@@ -173,9 +172,9 @@ def asof_join_nearest(
     # duplicate the right ts under a private name so the matched
     # timestamp survives as a payload column (the ts column itself is
     # the as-of sort key and collides with the dedup groupBy)
-    r = right.withColumn("_nts", F.col(right_ts))
-    kw = dict(left_ts=left_ts, right_ts=right_ts, right_id=right_id,
-              tolerance_seconds=tolerance_seconds, right_payload=["_nts"])
+    r = right.withColumn("_nts", F.col("ts"))
+    kw = dict(right_id=right_id, tolerance_seconds=tolerance_seconds,
+              right_payload=["_nts"])
     # CHAIN the passes instead of joining their outputs: asof_join
     # carries every left column through its window, so the backward
     # result (with its match renamed out of the way) IS the forward
@@ -188,8 +187,8 @@ def asof_join_nearest(
     both = asof_join(back, r, key, direction="forward", **kw) \
         .withColumnRenamed(f"matched_{right_id}", "_f_id") \
         .withColumnRenamed("matched__nts", "_f_ts")
-    b_dt = F.unix_micros(F.col(left_ts)) - F.unix_micros("_b_ts")
-    f_dt = F.unix_micros("_f_ts") - F.unix_micros(F.col(left_ts))
+    b_dt = F.unix_micros(F.col("ts")) - F.unix_micros("_b_ts")
+    f_dt = F.unix_micros("_f_ts") - F.unix_micros(F.col("ts"))
     pick_b = F.col("_b_id").isNotNull() & (
         F.col("_f_id").isNull() | (b_dt <= f_dt))
     out_cols = [F.col(c) for c in left.columns]
@@ -207,11 +206,8 @@ def asof_interpolate(
     left: DataFrame,
     right: DataFrame,
     key: str,
-    left_ts: str = "ts",
-    right_ts: str = "ts",
     right_id: str = "event_id",
     value_micro: str = "v_micro",
-    tolerance_seconds: "int | None" = None,
 ) -> DataFrame:
     """Linear-interpolation as-of (the 'lerp join' of time-series
     stores): each left row gets the right-side value interpolated
@@ -222,7 +218,8 @@ def asof_interpolate(
     falling back to the single available neighbor at the edges (and
     to the exact value when a neighbor shares the timestamp).  Same
     union-sort-carry plan as :func:`asof_join_nearest` — two
-    one-window passes, zero extra joins against the fact table.
+    one-window passes, zero extra joins against the fact table — and
+    both sides timed by ``ts``.
 
     ``value_micro`` must be an integer (micro-unit) column.  The
     interpolation itself is three IEEE double ops over exactly-known
@@ -231,10 +228,8 @@ def asof_interpolate(
 
     Output: all left columns + ``v_before`` / ``v_after`` (BIGINT,
     NULL at edges) + ``v_interp`` (DOUBLE)."""
-    r = right.withColumn("_nts", F.col(right_ts))
-    kw = dict(left_ts=left_ts, right_ts=right_ts, right_id=right_id,
-              tolerance_seconds=tolerance_seconds,
-              right_payload=["_nts", value_micro])
+    r = right.withColumn("_nts", F.col("ts"))
+    kw = dict(right_id=right_id, right_payload=["_nts", value_micro])
     back = asof_join(left, r, key, direction="backward", **kw) \
         .withColumnRenamed(f"matched_{right_id}", "_b_id") \
         .withColumnRenamed("matched__nts", "_b_ts") \
@@ -243,7 +238,7 @@ def asof_interpolate(
         .withColumnRenamed(f"matched_{right_id}", "_f_id") \
         .withColumnRenamed("matched__nts", "_f_ts") \
         .withColumnRenamed(f"matched_{value_micro}", "_f_v")
-    t = F.unix_micros(F.col(left_ts))
+    t = F.unix_micros(F.col("ts"))
     tb, tf = F.unix_micros("_b_ts"), F.unix_micros("_f_ts")
     vb, vf = F.col("_b_v").cast("bigint"), F.col("_f_v").cast("bigint")
     # the slope multiply runs in DOUBLE: (vf-vb)*(t-tb) can exceed

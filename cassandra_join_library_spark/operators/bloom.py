@@ -115,15 +115,14 @@ def bloom_prefilter(
     fact_key: "Column | str",
     dim: DataFrame,
     dim_key: "Column | str",
-    num_bits: int = 1 << 16,
-    num_hashes: int = 5,
 ) -> DataFrame:
-    """Map-side prune ``fact`` to rows whose key MIGHT be in ``dim``.
+    """Map-side prune ``fact`` to rows whose key MIGHT be in ``dim``,
+    through a 2^16-bit filter with 5 hashes.
 
     Superset of the exact semi-join (never drops a matching row);
     follow with the real join for exact results."""
-    words = bloom_build(dim, dim_key, num_bits, num_hashes)
-    return fact.filter(bloom_might_contain(fact_key, words, num_hashes))
+    words = bloom_build(dim, dim_key, 1 << 16, 5)
+    return fact.filter(bloom_might_contain(fact_key, words, 5))
 
 
 def _portable_positions(key: Column, num_bits: int,

@@ -201,14 +201,14 @@ def bpe_encode_counts(
 
 
 def _tagged_words(tagged_df: DataFrame, text_col: str,
-                  class_col: str, snap_col: str) -> DataFrame:
+                  class_col: str) -> DataFrame:
     """(snap, class, word) occurrences: the one corpus-sized pass both
     drift audits share — lowercase alphabetic words, the exact
     ``build_word_vocab`` tokenization, so membership tests against the
     trained dictionary are apples-to-apples."""
     return (
         tagged_df.select(
-            F.col(snap_col).alias("snap"),
+            F.col("snap"),
             F.col(class_col).alias("class"),
             F.explode(F.split(F.lower(F.col(text_col)), " ")).alias("word"),
         )
@@ -233,7 +233,6 @@ def bpe_fertility_drift(
     tagged_df: DataFrame,
     text_col: str,
     class_col: str,
-    snap_col: str = "snap",
     n_merges: int = 8,
     top_words: int = 2000,
     retrain_ppm: int = 50_000,
@@ -241,7 +240,7 @@ def bpe_fertility_drift(
     """Tokenizer-fertility drift across corpus snapshots: train BPE on
     ``train_df`` (the PRIOR snapshot — the tokenizer that shipped),
     encode BOTH snapshots of ``tagged_df`` (rows tagged 'a'/'b' in
-    ``snap_col``) with that frozen symbol table, and report per-class
+    ``snap``) with that frozen symbol table, and report per-class
     fertility (BPE tokens per word, rounded ppm) side by side with the
     signed drift — the audit that decides whether a new crawl's
     language mix has outgrown the shipped tokenizer before a retrain
@@ -261,7 +260,7 @@ def bpe_fertility_drift(
     """
     _, vocab = bpe_train_state(spark, train_df, text_col,
                                n_merges, top_words)
-    words = _tagged_words(tagged_df, text_col, class_col, snap_col)
+    words = _tagged_words(tagged_df, text_col, class_col)
     wide = _snap_pivot(
         _encode_words(words, vocab),
         {"n_words": F.lit(1), "n_bpe_tokens": F.col("n_tok")},
@@ -283,7 +282,6 @@ def vocab_oov_drift(
     tagged_df: DataFrame,
     text_col: str,
     class_col: str,
-    snap_col: str = "snap",
     top_words: int = 2000,
 ) -> DataFrame:
     """Dictionary OOV-mass drift across snapshots: the fraction of
@@ -300,7 +298,7 @@ def vocab_oov_drift(
     """
     vocab = build_word_vocab(train_df, text_col, top_words) \
         .select("word", F.lit(1).alias("_hit"))
-    words = _tagged_words(tagged_df, text_col, class_col, snap_col)
+    words = _tagged_words(tagged_df, text_col, class_col)
     wide = _snap_pivot(
         words.join(F.broadcast(vocab), "word", "left"),
         {

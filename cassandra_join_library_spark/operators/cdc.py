@@ -51,7 +51,6 @@ def merge_upsert(
     keys: "list[str]",
     seq_cols: "list[str]",
     op_col: str = "op",
-    delete_op: str = "D",
 ) -> DataFrame:
     """Apply a changelog onto a snapshot (MERGE INTO semantics).
 
@@ -63,7 +62,7 @@ def merge_upsert(
     ``test_null_key_changes_insert_not_update``.  Scrub or surrogate
     NULL keys upstream if they can occur).
     ``changes`` carries the same columns plus ``op_col`` ('U' upsert /
-    ``delete_op``).  Winner per key is decided by lexicographic
+    'D' delete).  Winner per key is decided by lexicographic
     ``seq_cols`` comparison (change wins ties — idempotent
     re-application), making batch-wise application composition-safe in
     any batch grouping.  Output schema == target schema.
@@ -116,7 +115,7 @@ def merge_upsert(
         .select(*keys, "_t.*").select(*target.columns)
     )
     updates = (
-        contested.filter(change_wins & (F.col("_op") != delete_op))
+        contested.filter(change_wins & (F.col("_op") != "D"))
         .select(*keys, "_c.*").select(*target.columns)
     )
     # inserts: delta keys that hit no target row (delta-sized
@@ -127,7 +126,7 @@ def merge_upsert(
     # (<= the already-broadcast delta) by construction
     inserts = (
         c.join(F.broadcast(contested.select(*keys)), keys, "left_anti")
-        .filter(F.col("_op") != delete_op)
+        .filter(F.col("_op") != "D")
         .select(*keys, "_c.*").select(*target.columns)
     )
     return kept.unionByName(stale_keep).unionByName(updates) \

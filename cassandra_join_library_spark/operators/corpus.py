@@ -18,7 +18,7 @@ with a doc-frequency cap upstream) and per-row work is map-side.
 
 from __future__ import annotations
 
-from typing import List, Optional
+from typing import List
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -196,7 +196,6 @@ def contamination_overlap(
     text_col: str,
     bench: DataFrame,
     n: int = 3,
-    threshold: float = 0.5,
     max_bench_doc_freq: "int | None" = None,
     bench_index: "DataFrame | None" = None,
     bench_bloom: "DataFrame | None" = None,
@@ -205,7 +204,8 @@ def contamination_overlap(
     bloom_portable: bool = True,
 ) -> DataFrame:
     """Benchmark-contamination check: fraction of a document's distinct
-    word n-grams that appear in a benchmark/eval set.
+    word n-grams that appear in a benchmark/eval set; a document is
+    contaminated at a fraction of 0.5 or more.
 
     Standard decontamination step before training.  Inverted-index
     join on the n-gram string: cost ∝ Σ df(shingle over bench), never
@@ -326,7 +326,7 @@ def contamination_overlap(
         "n_shingles",
         "n_overlap",
         F.round(ratio, 6).alias("overlap_ratio"),
-        (ratio >= threshold).alias("is_contaminated"),
+        (ratio >= 0.5).alias("is_contaminated"),
     )
 
 
@@ -398,7 +398,6 @@ def mixture_rebalance(
     df: DataFrame,
     id_col: str,
     source_col: str,
-    bucket_mod: int = 1_000_000,
 ) -> DataFrame:
     """Temperature-0.5 source rebalancing: downsample each source with
     keep-fraction sqrt(c_min / c_source), flattening the size skew
@@ -417,11 +416,11 @@ def mixture_rebalance(
     )
     cmin = counts.agg(F.min("_c").alias("_cmin"))
     frac = F.sqrt(F.col("_cmin") / F.col("_c"))
-    bucket = F.pmod(_knuth_hash(F.col(id_col)), bucket_mod)
+    bucket = F.pmod(_knuth_hash(F.col(id_col)), 1_000_000)
     return (
         df.join(F.broadcast(counts), source_col)
         .crossJoin(F.broadcast(cmin))
-        .filter(bucket < frac * bucket_mod)
+        .filter(bucket < frac * 1_000_000)
         .select(
             F.col(id_col),
             F.col(source_col),
@@ -430,29 +429,28 @@ def mixture_rebalance(
     )
 
 
-def pack_sequences(
-    chunks: DataFrame,
-    doc_col: str = "doc_id",
-    chunk_col: str = "chunk_id",
-    chars_col: str = "chunk_chars",
-    budget_tokens: int = 512,
-    n_buckets: int = 1024,
-) -> DataFrame:
-    """Assign chunks to fixed-token-budget training packs by global
-    offset: pack_id = (running_token_count - own_tokens) div budget in
-    (doc, chunk) order.
+#: range buckets of :func:`pack_sequences`' doc-offset prefix sum: the
+#: bound on its one unpartitioned window
+PACK_BUCKETS = 1024
+
+
+def pack_sequences(chunks: DataFrame, budget_tokens: int = 512) -> DataFrame:
+    """Assign chunks (doc_id, chunk_id, chunk_chars) to
+    fixed-token-budget training packs by global offset: pack_id =
+    (running_token_count - own_tokens) div budget in (doc, chunk)
+    order.
 
     The global prefix sum is computed scalably in THREE levels; the
-    only unpartitioned window runs over at most ``n_buckets`` rows (a
-    knob, never data-sized):
+    only unpartitioned window runs over at most ``PACK_BUCKETS`` rows
+    (a constant, never data-sized):
 
     1. intra-document cumulative sum — window partitioned by doc
        (fully parallel);
     2. per-document offsets within a doc-id RANGE BUCKET — window
        partitioned by bucket over the doc-level totals table (one row
-       per doc, ≤ ~N/n_buckets rows per partition for uniform ids);
+       per doc, ≤ ~N/PACK_BUCKETS rows per partition for uniform ids);
     3. per-bucket offsets — an exclusive prefix window over at most
-       ``n_buckets`` (bucket, total) rows (constant-size state, same
+       ``PACK_BUCKETS`` (bucket, total) rows (constant-size state, same
        bounded-frame pattern as corpus.shuffle_shards), joined back as
        a broadcast.
 
@@ -463,11 +461,10 @@ def pack_sequences(
 
     The operator needs the input more than once (bucket totals, final
     join), so it eagerly localCheckpoints the narrow (doc, chunk,
-    tokens) projection and persists the one-row-per-doc totals table
-    up front — whatever transform produced ``chunks`` (typically an
-    explode) executes exactly once, and the checkpoint also truncates
-    the lineage so everything downstream plans over a leaf instead of
-    re-optimizing the producer pipeline.  The doc-id bounds for the
+    tokens) projection up front — whatever transform produced
+    ``chunks`` (typically an explode) executes exactly once, and the
+    checkpoint also truncates the lineage so everything downstream
+    plans over a leaf instead of re-optimizing the producer pipeline.  The doc-id bounds for the
     range bucketing ride the checkpoint job as an ``observe()``
     metric, and the bucket offsets are computed in-plan, so the
     checkpoint is the operator's ONLY internal action — everything
@@ -480,10 +477,9 @@ def pack_sequences(
     GC'd driver-side (there is no caller-visible unpersist handle);
     long sessions packing many corpora rely on that GC path.
     """
-    from pyspark import StorageLevel
     from pyspark.sql import Observation
 
-    tok = F.ceil(F.col(chars_col) / 4.0).cast("bigint")
+    tok = F.ceil(F.col("chunk_chars") / 4.0).cast("bigint")
     # a NULL doc id would flow into a NULL range bucket and break the
     # bucket-offset running sum ordering — assert loudly per row
     # instead (in a FILTER so column pruning can't elide the check)
@@ -504,11 +500,11 @@ def pack_sequences(
     # plan-side cost at all.)
     obs = Observation()
     c = chunks.filter(F.assert_true(
-        F.col(doc_col).isNotNull(),
+        F.col("doc_id").isNotNull(),
         F.lit("pack_sequences: NULL doc id in chunk input"),
     ).isNull()).select(
-        F.col(doc_col).cast("bigint").alias("doc_id"),
-        F.col(chunk_col).alias("chunk_id"),
+        F.col("doc_id").cast("bigint").alias("doc_id"),
+        F.col("chunk_id"),
         tok.alias("n_tokens"),
     ).observe(
         obs, F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi")
@@ -518,13 +514,11 @@ def pack_sequences(
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     with_intra = c.withColumn("_intra", intra)
-    doc_totals = c.groupBy("doc_id").agg(
-        F.sum("n_tokens").alias("_doc_tot")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    doc_totals = c.groupBy("doc_id").agg(F.sum("n_tokens").alias("_doc_tot"))
     bounds = obs.get  # blocks until the checkpoint job has reported
     lo = bounds["lo"] if bounds["lo"] is not None else 0
     hi = bounds["hi"] if bounds["hi"] is not None else 0
-    span = max(1, -(-(hi - lo + 1) // n_buckets))  # ceil div
+    span = max(1, -(-(hi - lo + 1) // PACK_BUCKETS))  # ceil div
     bkt = F.floor((F.col("doc_id") - F.lit(lo)) / F.lit(span)).cast("bigint")
     dt = doc_totals.withColumn("_bkt", bkt)
     # level 2: exclusive doc-offset within each bucket (parallel)
@@ -536,7 +530,7 @@ def pack_sequences(
         "_boff",
         F.coalesce(F.sum("_doc_tot").over(w_bkt), F.lit(0)).cast("bigint"),
     )
-    # level 3: exclusive bucket-offset — ≤ n_buckets rows.  Computed
+    # level 3: exclusive bucket-offset — ≤ PACK_BUCKETS rows.  Computed
     # as a running sum over the per-bucket totals INSIDE the plan (a
     # window over a bounded, cluster-property-sized frame — the same
     # shape corpus.shuffle_shards' global index already uses) instead
@@ -544,7 +538,7 @@ def pack_sequences(
     # extra driver action per pack_sequences call (r16 verdict ask #1,
     # cut the internal action count), where the window rides the
     # caller's action for free.  The unpartitioned window is bounded
-    # by n_buckets (1024), never data-sized.
+    # by PACK_BUCKETS, never data-sized.
     w_bkt_off = (
         Window.orderBy("_bkt")
         .rowsBetween(Window.unboundedPreceding, -1)
@@ -704,19 +698,17 @@ def kmeans_fit(
 
     The loop runs one driver action per iteration (centroid update),
     plus the init collect and the caller's final action — so the
-    narrow (id, vector) projection is persisted up front and whatever
-    produced ``df`` executes exactly once (accumulator-pinned in
-    ``tests/test_plans.py``, same guarantee as ``pack_sequences``).
+    narrow (id, vector) projection is localCheckpointed up front and
+    whatever produced ``df`` executes exactly once (accumulator-pinned
+    in ``tests/test_plans.py``, same guarantee as ``pack_sequences``).
     """
-    from pyspark import StorageLevel
-
     vec = F.transform(
         F.col(vec_col),
         lambda x: F.round(x.cast("double") * KMEANS_SCALE, 0).cast("bigint"),
     )
     base = df.select(
         F.col(id_col).alias("vid"), vec.alias("v")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ).localCheckpoint(eager=True)
     if n_iter < 1:
         raise ValueError(f"n_iter must be >= 1, got {n_iter}")
     init = [
@@ -894,7 +886,6 @@ def global_row_numbers(
     order_cols: "List[Column]",
     range_cols: "List[str]",
     out_col: str = "row_id",
-    num_partitions: Optional[int] = None,
 ) -> DataFrame:
     """Deterministic 0-based global sequence numbers in a total order,
     WITHOUT a global sort or unpartitioned window — the scale-safe way
@@ -904,7 +895,8 @@ def global_row_numbers(
 
     1. ``repartitionByRange`` on the full sort key (must be a total
        order — include a unique tiebreak in both ``order_cols`` and
-       ``range_cols``) puts each row in an ordered range bucket;
+       ``range_cols``) puts each row in one of ``defaultParallelism``
+       ordered range buckets;
     2. per-bucket ``row_number`` over a window keyed by
        ``spark_partition_id()`` — bounded by rows-per-bucket, never
        corpus size;
@@ -916,7 +908,7 @@ def global_row_numbers(
     exactly (range buckets are ordered and the key is total), which is
     what the SQL oracle computes.  Appends ``out_col``.
     """
-    n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
+    n = df.sparkSession.sparkContext.defaultParallelism
     bucketed = df.repartitionByRange(n, *range_cols).withColumn(
         "_pid", F.spark_partition_id()
     )

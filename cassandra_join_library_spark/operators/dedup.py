@@ -23,13 +23,19 @@ bit-for-bit, so a DuckDB oracle can check the full output.
 All operators are pure DataFrame pipelines (JVM-side, no Python UDFs,
 no driver collects).
 
-Materialization pattern (module-wide): corpus-sized intermediates that
-several downstream branches re-read (shingle sets, TF postings) are
-materialized with ``.localCheckpoint(eager=True)``, never ``persist()``.
-These functions return lazy plans, so a persist could never be
-unpersisted before the caller materializes, and CacheManager-registered
-blocks accumulate for the life of a shared session (releasing them
-measurably sped up the whole r10 bench suite).  Cluster-scale caveat:
+Materialization rule (library-wide: every operator and every registered
+query follows it): an intermediate that the RETURNED plan reads and
+that several branches re-read (shingle sets, TF postings, k-means
+vectors, a contingency table) is materialized with
+``.localCheckpoint(eager=True)``, never ``persist()``.  These functions
+return lazy plans, so a persist could never be unpersisted before the
+caller materializes, and CacheManager-registered blocks accumulate for
+the life of a shared session (releasing them measurably sped up the
+whole r10 bench suite).  A ``persist()`` is allowed only for an
+intermediate that the function itself unpersists before it returns
+(the iterative loops of :func:`duplicate_clusters` and the graph
+operators and queries).  ``tests/test_plans.py`` checks that queries
+leave the session's cached-plan count unchanged.  Cluster-scale caveat:
 localCheckpoint truncates lineage into non-replicated executor-local
 blocks, so an executor loss or dynamic-allocation decommission fails
 the job instead of recomputing the lost partitions.  On a real
@@ -270,21 +276,20 @@ def containment_pairs_exact(
     text_col: str,
     n: int = 5,
     threshold: float = 0.8,
-    max_doc_freq: "int | None" = None,
 ) -> DataFrame:
     """Directional shingle containment: ``|A ∩ B| / |A|`` — the
     subset-duplicate metric.  A short document pasted inside a longer
     one scores near 1.0 here while its Jaccard (normalized by the
     UNION) stays low, so this catches the quote/excerpt duplicates
     :func:`jaccard_pairs_exact` is blind to.  Same posting-list
-    (inverted-index) join — cost ∝ Σ df(shingle)², never n²; same
-    ``max_doc_freq`` stop-shingle cap.
+    (inverted-index) join — cost ∝ Σ df(shingle)², never n², without
+    the stop-shingle cap.
 
     Returns (doc_a, doc_b, containment): doc_a's shingle set is
     ``containment``-contained in doc_b's (directional — both
     orientations of a pair can appear).  Both directions come from the
     one doc_a < doc_b co-occurrence row of the pair."""
-    pairs = _cooccurrence(df, id_col, text_col, n, max_doc_freq)
+    pairs = _cooccurrence(df, id_col, text_col, n, None)
     c = F.col("common") * F.lit(1.0)
     directions = F.array(
         F.struct(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"),
@@ -786,15 +791,14 @@ def hamming_band_selfcheck(fps: DataFrame, bits: int, max_hamming: int,
 
 
 def simhash_pairs(df: DataFrame, id_col: str, text_col: str,
-                  max_hamming: int = 3, bits: int = 64,
+                  max_hamming: int = 3,
                   portable: bool = False) -> DataFrame:
     """Near-dup pairs with Hamming(simhash) <= max_hamming via the
-    exact pigeonhole chunk join (:func:`hamming_band_pairs`).
-    ``portable=True`` uses the 60-bit md5-prefix fingerprint (see
-    :func:`simhash_fingerprints`) so a SQL oracle can verify the full
-    output."""
-    if portable:
-        bits = 60
+    exact pigeonhole chunk join (:func:`hamming_band_pairs`) over
+    64-bit fingerprints.  ``portable=True`` uses the 60-bit md5-prefix
+    fingerprint (see :func:`simhash_fingerprints`) so a SQL oracle can
+    verify the full output."""
+    bits = 60 if portable else 64
     fps = simhash_fingerprints(df, id_col, text_col, bits=bits,
                                portable=portable)
     return hamming_band_pairs(

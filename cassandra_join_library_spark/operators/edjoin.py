@@ -65,14 +65,13 @@ def edit_distance_pairs(
 
     names = df.select(F.col(id_col).alias("_id"), F.col(s_col).alias("_s")) \
               .filter(F.col("_s").isNotNull())
-    # persisted: the short-residue PROBE below (limit(1).count()) and
-    # the main candidate path both read the distinct set — uncached,
+    # materialized: the short-residue PROBE below (limit(1).count()) and
+    # the main candidate path both read the distinct set — otherwise
     # the probe would re-scan and re-shuffle the whole input once just
     # to decide plan shape (and could see different data than the main
     # job if the source is being rewritten)
-    dn = names.select("_s").distinct().withColumn("_m", F.length("_s"))
-    dn = dn.persist()
-    dn.count()
+    dn = names.select("_s").distinct().withColumn("_m", F.length("_s")) \
+        .localCheckpoint(eager=True)
 
     # ---- main path: distinct strings of length >= k -------------------
     longs = dn.filter(F.col("_m") >= k)

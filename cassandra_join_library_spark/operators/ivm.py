@@ -41,11 +41,11 @@ def aggregate_view(df: DataFrame, group_cols: "list[str]",
 
 
 def delta_aggregate(changes: DataFrame, group_cols: "list[str]",
-                    value_col: str, op_col: str = "op",
-                    delete_op: str = "D") -> DataFrame:
+                    value_col: str) -> DataFrame:
     """Aggregate a changelog into signed per-group deltas: a delete
-    retracts (-1, -value), anything else inserts (+1, +value)."""
-    sign = F.when(F.col(op_col) == delete_op, F.lit(-1)).otherwise(F.lit(1))
+    (``op = 'D'``) retracts (-1, -value), anything else inserts
+    (+1, +value)."""
+    sign = F.when(F.col("op") == "D", F.lit(-1)).otherwise(F.lit(1))
     return changes.groupBy(*group_cols).agg(
         F.sum(sign).alias("d_rows"),
         F.sum(sign.cast(DEC) * F.col(value_col).cast(DEC)).alias("d_total"),

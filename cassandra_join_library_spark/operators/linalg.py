@@ -82,18 +82,18 @@ def gram_matrix(df: DataFrame, vec_col: str, dim: int) -> DataFrame:
     )
 
 
-def gram_matrix_sql(table: str = "embeddings", id_col: str = "vec_id",
-                    vec_col: str = "embedding") -> str:
-    """DuckDB twin: per-coordinate fixed-point explode + upper-triangle
-    self-join — value-exact against :func:`gram_matrix` (the join is
-    O(n·d²), fine for an oracle; the operator's map-side-combine is
-    the scale path)."""
+def gram_matrix_sql() -> str:
+    """DuckDB twin over ``embeddings(vec_id, embedding)``:
+    per-coordinate fixed-point explode + upper-triangle self-join —
+    value-exact against :func:`gram_matrix` (the join is O(n·d²), fine
+    for an oracle; the operator's map-side-combine is the scale
+    path)."""
     return f"""
 WITH v AS (
-  SELECT {id_col} AS rid, CAST(i - 1 AS BIGINT) AS pos,
-         CAST(round(CAST({vec_col}[i] AS DOUBLE) * {SCALE}, 0) AS BIGINT) AS x
-  FROM {table}, UNNEST(generate_series(1, len({vec_col}))) AS t(i)
-  WHERE {vec_col} IS NOT NULL
+  SELECT vec_id AS rid, CAST(i - 1 AS BIGINT) AS pos,
+         CAST(round(CAST(embedding[i] AS DOUBLE) * {SCALE}, 0) AS BIGINT) AS x
+  FROM embeddings, UNNEST(generate_series(1, len(embedding))) AS t(i)
+  WHERE embedding IS NOT NULL
 )
 SELECT a.pos AS i, b.pos AS j,
        CAST(SUM(CAST(a.x AS DECIMAL(19,0)) * CAST(b.x AS DECIMAL(19,0)))

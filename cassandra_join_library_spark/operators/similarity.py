@@ -94,19 +94,15 @@ def cosine_topk_bruteforce(
     )
 
 
-def cosine_pairs(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.9,
-) -> DataFrame:
-    """All pairs with cosine >= threshold (embedding near-dup check).
+def cosine_pairs(df: DataFrame, threshold: float = 0.9) -> DataFrame:
+    """All pairs of ``vec_id`` with ``embedding`` cosine >= threshold
+    (embedding near-dup check).
 
     O(n^2) pair space — correctness baseline for small n; use
     :func:`lsh_cosine_pairs` at scale.  Returns (id_a, id_b, cosine_sim)
     with id_a < id_b."""
-    n = with_norm(df, vec_col).select(
-        F.col(id_col).alias("id"), F.col("_vec").alias("vec"), F.col("_norm").alias("norm")
+    n = with_norm(df, "embedding").select(
+        F.col("vec_id").alias("id"), F.col("_vec").alias("vec"), F.col("_norm").alias("norm")
     )
     a = n.select(F.col("id").alias("id_a"), F.col("vec").alias("va"), F.col("norm").alias("na"))
     b = n.select(F.col("id").alias("id_b"), F.col("vec").alias("vb"), F.col("norm").alias("nb"))
@@ -118,12 +114,15 @@ def cosine_pairs(
     )
 
 
+#: hash blocks of :func:`cosine_pairs_blocked`: B(B+1)/2 block-pair tasks
+COSINE_BLOCKS = 16
+
+
 def cosine_pairs_blocked(
     df: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     threshold: float = 0.9,
-    n_blocks: int = 16,
 ) -> DataFrame:
     """Exact all-pairs cosine >= threshold via BLOCKED pair-space
     enumeration — the distributed-exact plan, no cartesian/BNLJ.
@@ -132,13 +131,13 @@ def cosine_pairs_blocked(
     kills ``a.join(b, id_a < id_b)`` at scale is the PLAN — Spark
     executes an inequality-only join as BroadcastNestedLoopJoin (one
     whole side broadcast: driver/executor OOM, zero partitioning of
-    the work).  Here ids hash into ``n_blocks`` blocks, the
+    the work).  Here ids hash into ``COSINE_BLOCKS`` blocks, the
     B(B+1)/2 unordered block pairs are a driver-literal frame
     (constant size), each row is tagged to its block pairs by
     broadcast hash join, and candidates meet in a SHUFFLED EQUI-JOIN
     on the block-pair id: B²/2 uniform tasks, each streaming two
     n/B-row blocks — bounded memory, full-cluster parallelism,
-    O(n·B) shuffle.  Pick n_blocks ≈ sqrt(total cores) per the
+    O(n·B) shuffle.  Pick COSINE_BLOCKS ≈ sqrt(total cores) per the
     standard blocked-similarity-join tradeoff.  For near-dup
     thresholds prefer :func:`lsh_cosine_pairs` (sub-quadratic);
     dense near-orthogonal embeddings at loose thresholds admit no
@@ -148,6 +147,7 @@ def cosine_pairs_blocked(
     spark = df.sparkSession
     from ..sources.catalog import local_frame
 
+    n_blocks = COSINE_BLOCKS
     pairs = local_frame(
         spark,
         [(i * n_blocks + j, i, j)
@@ -983,17 +983,20 @@ def sign_signatures(df: DataFrame, id_col: str = "vec_id",
     return df.select(F.col(id_col), *words)
 
 
+#: most probe vectors :func:`hamming_topk` broadcasts (≈ 10 MB)
+HAMMING_MAX_QUERIES = 100_000
+
+
 def hamming_topk(df: DataFrame, queries: DataFrame,
                  id_col: str = "vec_id", vec_col: str = "embedding",
-                 k: int = 5, dim: int = 64,
-                 max_queries: int = 100_000) -> DataFrame:
+                 k: int = 5, dim: int = 64) -> DataFrame:
     """Exact Hamming top-k over binary sign signatures.
 
     The scan side is the bit-packed signature table (16 bytes/vector),
     the QUERY side broadcasts — so it must be genuinely small (a batch
     of probe vectors, never a second corpus).  That contract is
     enforced, not assumed: the signature'd query side is counted and a
-    ``ValueError`` raised over ``max_queries`` (default 100k probes ≈
+    ``ValueError`` raised over ``HAMMING_MAX_QUERIES`` (100k probes ≈
     10 MB broadcast) — the same uncapped-broadcast failure class the
     prefix-filter sf10 OOM documented (SCALE.md round-11 rule).  For
     corpus×corpus Hamming pairs, use the SimHash pigeonhole banding in
@@ -1018,14 +1021,13 @@ def hamming_topk(df: DataFrame, queries: DataFrame,
     # is bounded: limit(max+1) stops the scan at the threshold, so a
     # corpus-sized query set is rejected without ever being signed
     # in full
-    n_q = qsig.limit(max_queries + 1).count()
-    if n_q > max_queries:
+    n_q = qsig.limit(HAMMING_MAX_QUERIES + 1).count()
+    if n_q > HAMMING_MAX_QUERIES:
         raise ValueError(
-            f"hamming_topk: query side exceeds max_queries="
-            f"{max_queries}; it is broadcast, so a corpus-sized query "
-            "set would OOM the driver — use the SimHash pigeonhole "
-            "banding (operators/dedup.py) for corpus-scale pairs, or "
-            "raise max_queries deliberately"
+            f"hamming_topk: query side exceeds HAMMING_MAX_QUERIES="
+            f"{HAMMING_MAX_QUERIES}; it is broadcast, so a corpus-sized "
+            "query set would OOM the driver — use the SimHash pigeonhole "
+            "banding (operators/dedup.py) for corpus-scale pairs"
         )
     ham = None
     for w in range(n_words):

@@ -101,7 +101,6 @@ def stratified_topk(
     rank_cols: "list[Column | str]",
     n: int,
     salt_buckets: int = 8,
-    rank_alias: str = "rn",
 ) -> DataFrame:
     """Exact per-stratum top-n via TWO-LEVEL rank — the skew-safe form
     of ``row_number() OVER (PARTITION BY stratum) <= n``.
@@ -120,7 +119,7 @@ def stratified_topk(
 
     ``rank_cols`` must be a deterministic total order within a stratum
     (include a key tiebreak).  Returns the input columns plus
-    ``rank_alias`` (1-based BIGINT) with only rank <= n rows kept.
+    ``rn`` (1-based BIGINT) with only rank <= n rows kept.
     """
     from pyspark.sql import Window
 
@@ -140,7 +139,7 @@ def stratified_topk(
     )
     w_final = Window.partitionBy(stratum_col).orderBy(*cols)
     return (
-        local.withColumn(rank_alias, F.row_number().over(w_final).cast("bigint"))
-        .filter(F.col(rank_alias) <= n)
+        local.withColumn("rn", F.row_number().over(w_final).cast("bigint"))
+        .filter(F.col("rn") <= n)
         .drop("_salt", "_lrn")
     )

@@ -376,20 +376,13 @@ def gopher_rules(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    min_words: int = 50,
-    max_words: int = 100_000,
-    min_mean_word_len: float = 3.0,
-    max_mean_word_len: float = 10.0,
-    min_alpha_word_frac: float = 0.80,
-    min_stop_hits: int = 2,
-    max_top_word_ratio: float = 0.20,
-    max_symbol_ratio: float = 0.10,
 ) -> DataFrame:
     """Gopher/MassiveText-style document quality rules (Rae et al.
-    2021, table A1 shape): word-count bounds, mean-word-length bounds,
-    alphabetic-word fraction, stop-word presence, top-word
-    concentration (the single-line stand-in for the duplicate-line
-    fraction), and symbol-to-word ratio ('#' and '...').
+    2021, table A1 shape): 50 to 100,000 words, mean word length 3 to
+    10, at least 80 % alphabetic words, at least 2 distinct stop
+    words, a top-word share of at most 20 % (the single-line stand-in
+    for the duplicate-line fraction), and at most 0.1 symbols ('#' and
+    '...') per word.
 
     Every metric is a per-row higher-order-function expression over
     the token array — JVM codegen, map-only, no shuffle, no UDF — so
@@ -421,13 +414,12 @@ def gopher_rules(
     n_symbols = F.regexp_count(F.col(text_col), F.lit(r"#|\.\.\.")).cast("bigint")
     symbol_ratio = F.round(n_symbols * F.lit(1.0) / n_words, 6)
     rules = {
-        "rule_word_count": (n_words >= min_words) & (n_words <= max_words),
-        "rule_mean_word_len": (mean_word_len >= min_mean_word_len)
-        & (mean_word_len <= max_mean_word_len),
-        "rule_alpha_words": alpha_frac >= min_alpha_word_frac,
-        "rule_stopwords": stop_hits >= min_stop_hits,
-        "rule_top_word": top_ratio <= max_top_word_ratio,
-        "rule_symbol_ratio": symbol_ratio <= max_symbol_ratio,
+        "rule_word_count": (n_words >= 50) & (n_words <= 100_000),
+        "rule_mean_word_len": (mean_word_len >= 3.0) & (mean_word_len <= 10.0),
+        "rule_alpha_words": alpha_frac >= 0.80,
+        "rule_stopwords": stop_hits >= 2,
+        "rule_top_word": top_ratio <= 0.20,
+        "rule_symbol_ratio": symbol_ratio <= 0.10,
     }
     passes = None
     for expr in rules.values():
@@ -449,37 +441,32 @@ def c4_line_filter(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    line_sep: str = r"\r?\n",
-    join_sep: str = "\n",
-    min_words_per_line: int = 5,
-    min_kept_lines: int = 3,
 ) -> DataFrame:
     """C4-style line-level cleaning (Raffel et al. 2020 shape): keep
-    only lines that have at least ``min_words_per_line`` words, end in
-    terminal punctuation, and contain no boilerplate markers ("lorem
-    ipsum", "javascript", '{'); drop the whole document when fewer
-    than ``min_kept_lines`` lines survive.
+    only lines that have at least 5 words, end in terminal
+    punctuation, and contain no boilerplate markers ("lorem ipsum",
+    "javascript", '{'); drop the whole document when fewer than 3
+    lines survive.
 
     The line-level twin of :func:`gopher_rules` — C4 cleans INSIDE the
     document before doc-level rules run.  One higher-order filter over
     the split line array plus an array_join to re-assemble the kept
     text: per-row JVM codegen, map-only, no shuffle, no UDF, and the
     re-assembled ``filtered_text`` is byte-reproducible in the SQL
-    oracle.  ``line_sep`` is a REGEX and defaults to ``\r?\n`` so
-    CRLF web text splits cleanly — splitting on bare ``\n`` would
-    leave a trailing ``\r`` on every line, which Java's ``$`` matches
-    before but RE2's does not (a silent Spark/DuckDB divergence), and
-    the stray byte would survive into ``filtered_text``; kept lines
-    re-join with the literal ``join_sep`` (line_sep is a pattern, not
-    a byte sequence).  Returns (id, n_lines, n_kept, kept_ratio,
+    oracle.  Lines split on the REGEX ``\r?\n`` so CRLF web text
+    splits cleanly — splitting on bare ``\n`` would leave a trailing
+    ``\r`` on every line, which Java's ``$`` matches before but RE2's
+    does not (a silent Spark/DuckDB divergence), and the stray byte
+    would survive into ``filtered_text``; kept lines re-join with a
+    literal ``\n``.  Returns (id, n_lines, n_kept, kept_ratio,
     filtered_text, dropped).
     """
-    lines = F.split(F.col(text_col), line_sep)
+    lines = F.split(F.col(text_col), r"\r?\n")
 
     def keep(line: Column) -> Column:
         lower = F.lower(line)
         return (
-            (F.size(F.split(line, " ")) >= min_words_per_line)
+            (F.size(F.split(line, " ")) >= 5)
             & line.rlike('[.!?"]$')
             & ~lower.contains("lorem ipsum")
             & ~lower.contains("javascript")
@@ -494,17 +481,21 @@ def c4_line_filter(
         n_lines.alias("n_lines"),
         n_kept.alias("n_kept"),
         F.round(n_kept * F.lit(1.0) / n_lines, 6).alias("kept_ratio"),
-        F.array_join(kept, join_sep).alias("filtered_text"),
-        (n_kept < min_kept_lines).alias("dropped"),
+        F.array_join(kept, "\n").alias("filtered_text"),
+        (n_kept < 3).alias("dropped"),
     )
 
 
-def cdc_chunks(df: DataFrame, id_col: str, text_col: str,
-               window: int = 4, modulus: int = 16) -> DataFrame:
+#: :func:`cdc_chunks` and its oracle :func:`cdc_chunks_sql` hash this
+#: many trailing characters and cut where the hash is 0 mod this modulus
+CDC_WINDOW, CDC_MODULUS = 4, 16
+
+
+def cdc_chunks(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Content-defined chunking (the FastCDC/rolling-hash family used
     by dedup storage and training-data pipelines): a chunk boundary
     falls after position ``i`` whenever the polynomial hash of the
-    last ``window`` characters is 0 mod ``modulus`` — so boundaries
+    last ``CDC_WINDOW`` characters is 0 mod ``CDC_MODULUS`` — so boundaries
     move WITH the content, and an insertion early in a document only
     reshapes the chunks it touches instead of shifting every
     fixed-stride chunk after it (the property that makes chunk-level
@@ -519,6 +510,7 @@ def cdc_chunks(df: DataFrame, id_col: str, text_col: str,
 
     Returns (id, chunk_idx, chunk_start [1-based], chunk_len,
     chunk_text) for every document with at least one character."""
+    window, modulus = CDC_WINDOW, CDC_MODULUS
     pows = [31 ** j for j in range(window)]
     # hash from a MATERIALIZED char-code array: substring(text, i, 1)
     # seeks from the string start, so hashing via substring is O(n²)
@@ -572,11 +564,11 @@ def cdc_chunks(df: DataFrame, id_col: str, text_col: str,
     )
 
 
-def cdc_chunks_sql(table: str, id_col: str, text_col: str,
-                   window: int = 4, modulus: int = 16) -> str:
+def cdc_chunks_sql(table: str, id_col: str, text_col: str) -> str:
     """DuckDB twin of :func:`cdc_chunks` — identical windowed
     polynomial hash; DuckDB's indexed list lambdas are 1-based where
     Spark's are 0-based, so each side spells its own convention."""
+    window, modulus = CDC_WINDOW, CDC_MODULUS
     pows = [31 ** j for j in range(window)]
     h = " + ".join(
         f"{p} * ascii(substr({text_col}, i - {j}, 1))"
@@ -680,19 +672,26 @@ def rake_keywords(
     )
 
 
-def winnowing_fingerprints(df: DataFrame, id_col: str, text_col: str,
-                           k: int = 5, window: int = 4) -> DataFrame:
+#: :func:`winnowing_fingerprints` and its oracle :func:`winnowing_sql`
+#: hash char grams of this length and keep the minimum of each window
+#: of this many consecutive gram hashes
+WINNOW_K, WINNOW_WINDOW = 5, 4
+
+
+def winnowing_fingerprints(df: DataFrame, id_col: str,
+                           text_col: str) -> DataFrame:
     """Winnowing document fingerprints (Schleimer/Wilkerson/Aiken,
-    SIGMOD 2003 — the MOSS algorithm): hash every char ``k``-gram,
-    slide a ``window`` of consecutive gram hashes over the document,
-    and select the MINIMUM hash of each window (rightmost position on
-    ties).  The selected (position, hash) pairs — deduplicated — are
-    the document's fingerprints: any shared substring of length
-    >= k + window - 1 between two documents is GUARANTEED to share at
-    least one fingerprint, while only ~2/(window+1) of all grams are
-    kept.  That guarantee + sparsity is what makes fingerprint
-    posting-list joins a sound near-dup/plagiarism candidate
-    generator at 100 TB (contrast MinHash, which is probabilistic).
+    SIGMOD 2003 — the MOSS algorithm): hash every char ``k``-gram
+    (``k = WINNOW_K``), slide a window of ``w = WINNOW_WINDOW``
+    consecutive gram hashes over the document, and select the MINIMUM
+    hash of each window (rightmost position on ties).  The selected
+    (position, hash) pairs — deduplicated — are the document's
+    fingerprints: any shared substring of length >= k + w - 1 between
+    two documents is GUARANTEED to share at least one fingerprint,
+    while only ~2/(w+1) of all grams are kept.  That guarantee +
+    sparsity is what makes fingerprint posting-list joins a sound
+    near-dup/plagiarism candidate generator at 100 TB (contrast
+    MinHash, which is probabilistic).
 
     The gram hash is the CDC chunker's integer convention (31-powers
     of char codes over a materialized char-code array — element_at is
@@ -705,6 +704,7 @@ def winnowing_fingerprints(df: DataFrame, id_col: str, text_col: str,
     trailing DISTINCT on (id, pos, hash) is the only exchange and is
     map-side combined.  Returns (id, fp_pos [1-based gram END
     position], fp_hash)."""
+    k, window = WINNOW_K, WINNOW_WINDOW
     pows = [31 ** j for j in range(k)]
     raw = " + ".join(
         f"{p} * element_at(_codes, p - {j})" for j, p in enumerate(pows)
@@ -762,12 +762,12 @@ def winnowing_fingerprints(df: DataFrame, id_col: str, text_col: str,
     )
 
 
-def winnowing_sql(table: str, id_col: str, text_col: str,
-                  k: int = 5, window: int = 4) -> str:
+def winnowing_sql(table: str, id_col: str, text_col: str) -> str:
     """DuckDB twin of :func:`winnowing_fingerprints` — identical
     integer gram hash and min-of-window selection; DuckDB's
     generate_series is empty on start > stop (Spark's sequence
     DESCENDS, hence the CASE guard on the Spark side)."""
+    k, window = WINNOW_K, WINNOW_WINDOW
     pows = [31 ** j for j in range(k)]
     raw = " + ".join(
         f"{p} * ascii(substr({text_col}, p - {j}, 1))"

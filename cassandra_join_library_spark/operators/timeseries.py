@@ -106,51 +106,38 @@ def scd2_intervals(
     )
 
 
-def first_touch_attribution(
-    events: DataFrame,
-    id_col: str = "event_id",
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-    touch_type: str = "click",
-    convert_type: str = "purchase",
-    lookback_days: int = 7,
-) -> DataFrame:
-    """First-touch attribution: each conversion credits the user's
-    EARLIEST touch event inside the preceding lookback window.
+def first_touch_attribution(events: DataFrame) -> DataFrame:
+    """First-touch attribution: each ``purchase`` credits the user's
+    EARLIEST ``click`` inside the preceding 7 days.
 
     One pass, no self-join: events are windowed per user over epoch
     seconds with ``RANGE BETWEEN lookback PRECEDING AND CURRENT ROW``,
-    and ``min(ts) FILTER (type = touch)`` over that frame is exactly
+    and ``min(ts) FILTER (type = click)`` over that frame is exactly
     the first touch in the window.  Frame state is one user's events
     inside the lookback — bounded by activity rate, never the table —
     and the only shuffle is the per-user hash partitioning.  Contrast
     with the as-of join (``operators/asof.py``), which credits the
     LATEST touch (last-touch attribution).
 
-    Returns one row per conversion: (``id_col``, ``user_col``,
-    conv_ts_epoch, first_touch_epoch nullable, attributed,
-    latency_sec nullable).
+    Reads (event_id, user_id, ts, event_type).  Returns one row per
+    conversion: (event_id, user_id, conv_ts_epoch, first_touch_epoch
+    nullable, attributed, latency_sec nullable).
     """
-    ep = F.unix_timestamp(F.col(ts_col)).cast("bigint")
-    w = (
-        Window.partitionBy(user_col)
-        .orderBy("_ep")
-        .rangeBetween(-lookback_days * 86400, 0)
-    )
+    w = Window.partitionBy("user_id").orderBy("_ep").rangeBetween(-7 * 86400, 0)
     first_touch = F.min(
-        F.when(F.col(type_col) == touch_type, F.col("_ep"))
+        F.when(F.col("event_type") == "click", F.col("_ep"))
     ).over(w)
     base = events.select(
-        F.col(id_col), F.col(user_col), F.col(type_col), ep.alias("_ep")
+        F.col("event_id"), F.col("user_id"), F.col("event_type"),
+        F.unix_timestamp(F.col("ts")).cast("bigint").alias("_ep"),
     )
     conv = (
         base.withColumn("_ft", first_touch)
-        .filter(F.col(type_col) == convert_type)
+        .filter(F.col("event_type") == "purchase")
     )
     return conv.select(
-        F.col(id_col),
-        F.col(user_col),
+        F.col("event_id"),
+        F.col("user_id"),
         F.col("_ep").alias("conv_ts_epoch"),
         F.col("_ft").alias("first_touch_epoch"),
         F.col("_ft").isNotNull().alias("attributed"),

@@ -523,7 +523,6 @@ def stats_rank_corr(spark, sf_dir):
                   F.expr(_DISC_BP).alias("y"))
     cells = (m.groupBy("x", "y")
              .agg(F.count(F.lit(1)).cast("bigint").alias("f")))
-    cells = cells.persist()
 
     def marginal(key):
         w = (Window.orderBy(key)

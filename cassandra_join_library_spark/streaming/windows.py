@@ -26,10 +26,10 @@ from pyspark.sql import functions as F
 from ..functions.scalars import dsum
 
 
-def read_events_stream(spark: SparkSession, sf_dir: str,
-                       max_files_per_trigger: int = 1) -> DataFrame:
-    """File-based stream of the events table (schema pinned from the
-    batch read — streaming sources require a declared schema)."""
+def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """File-based stream of the events table, one file per trigger
+    (schema pinned from the batch read — streaming sources require a
+    declared schema)."""
     from pyspark.sql.types import LongType, TimestampNTZType, TimestampType
 
     from ..sources.catalog import ensure_session_confs
@@ -41,7 +41,7 @@ def read_events_stream(spark: SparkSession, sf_dir: str,
     schema = spark.read.parquet(path).schema
     reader = (
         spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", 1)
     )
     if os.path.isdir(path):
         # Spark-written table: a DIRECTORY of part files — stream it
@@ -109,12 +109,12 @@ def dedup_stream(stream: DataFrame, keys: "list[str]",
     return stream.dropDuplicates(keys)
 
 
-def run_to_memory(result: DataFrame, output_mode: str = "append",
-                  name: "str | None" = None) -> "tuple[str, object]":
+def run_to_memory(result: DataFrame,
+                  output_mode: str = "append") -> "tuple[str, object]":
     """Execute a streaming DataFrame to completion (AvailableNow) into
-    an in-memory table; returns (table_name, query).  Test/driver
-    harness — production sinks are kafka/delta/parquet via the same
-    ``writeStream`` call.
+    an in-memory table with a fresh unique name; returns (table_name,
+    query).  Test/driver harness — production sinks are
+    kafka/delta/parquet via the same ``writeStream`` call.
 
     Default mode is ``append`` — the only mode valid for the
     non-aggregating streams half this module produces (``complete``
@@ -122,7 +122,7 @@ def run_to_memory(result: DataFrame, output_mode: str = "append",
     ``complete``/``update`` explicitly for aggregations).  The
     checkpoint directory is a fresh tempdir per call and is left on
     disk with the memory table (test-harness lifetime)."""
-    name = name or f"mem_{uuid.uuid4().hex[:12]}"
+    name = f"mem_{uuid.uuid4().hex[:12]}"
     q = (
         result.writeStream.format("memory")
         .queryName(name)
@@ -162,8 +162,12 @@ def stream_stream_interval_join(left: DataFrame, right: DataFrame,
     )
 
 
-def stage_events_with_sentinels(spark: SparkSession, sf_dir: str,
-                                sentinel_lead_seconds: int = 14400) -> DataFrame:
+#: how far past the last real event the sentinel rows of
+#: :func:`stage_events_with_sentinels` land: 4 hours
+SENTINEL_LEAD_S = 14400
+
+
+def stage_events_with_sentinels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream of the events table followed by one per-user SENTINEL row
     far past the last real event — the end-of-replay flush marker that
     lets a stateful operator close (and emit) every open session, so
@@ -197,7 +201,7 @@ def stage_events_with_sentinels(spark: SparkSession, sf_dir: str,
     sentinels = (
         ev.select("user_id").distinct()
         .withColumn("ts", F.lit(max_ts) + F.expr(
-            f"INTERVAL {sentinel_lead_seconds} SECOND"))
+            f"INTERVAL {SENTINEL_LEAD_S} SECOND"))
         .withColumn("sentinel", F.lit(True))
     )
     for c in ev2.columns:
@@ -234,7 +238,7 @@ def stage_events_with_sentinels(spark: SparkSession, sf_dir: str,
 
     src = f"{sf_dir}/events.parquet"
     key = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}|{sentinel_lead_seconds}|{_source_sig(src)}"
+        f"{os.path.abspath(sf_dir)}|{SENTINEL_LEAD_S}|{_source_sig(src)}"
         .encode()
     ).hexdigest()[:12]
     stream_dir = os.path.join(tempfile.gettempdir(), f"evflush_{key}")
@@ -265,12 +269,11 @@ def stage_events_with_sentinels(spark: SparkSession, sf_dir: str,
     )
 
 
-def read_documents_stream(spark: SparkSession, sf_dir: str,
-                          max_files_per_trigger: int = 1) -> DataFrame:
-    """File-based stream of the documents table (schema pinned from
-    the batch read, glob-filtered like :func:`read_events_stream`) —
-    the streaming-ingest twin of the batch corpus loader, for
-    continuous-crawl pipelines."""
+def read_documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """File-based stream of the documents table, one file per trigger
+    (schema pinned from the batch read, glob-filtered like
+    :func:`read_events_stream`) — the streaming-ingest twin of the
+    batch corpus loader, for continuous-crawl pipelines."""
     import os
 
     from ..sources.catalog import ensure_session_confs
@@ -280,7 +283,7 @@ def read_documents_stream(spark: SparkSession, sf_dir: str,
     schema = spark.read.parquet(path).schema
     reader = (
         spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", 1)
     )
     if os.path.isdir(path):  # directory-of-parts layout
         return reader.parquet(path)

@@ -7,9 +7,13 @@ threads, and at sf0.01 most queries leave 31 of 32 cores idle — so
 6 workers cut the ~6 min sequential gate to roughly its longest
 critical path.  DuckDB gets one connection per worker thread.
 
-Prints a JSON summary (total wall, per-query seconds, slowest 10) and
-exits non-zero on any mismatch.  This is the pre-commit gate; the
-pytest twin (tests/test_oracle_parity.py) calls the SAME
+Prints a JSON summary (total wall, per-query seconds, slowest 10, and
+``cached_plans_left``: the plans the session's CacheManager still holds
+after the sweep) and exits non-zero on any mismatch, or when a query
+left a cached plan behind (a ``persist()`` nothing can unpersist; see
+the materialization rule in ``operators/dedup.py``).  This is the
+pre-commit gate; the pytest twin (tests/test_oracle_parity.py) calls
+the SAME
 ``parity.run_parity_gate`` engine, so the two can never drift in
 coverage or comparison semantics.
 
@@ -50,18 +54,21 @@ def main() -> int:
     timings, failures = run_parity_gate(
         spark, args.sf, names=names, workers=args.workers)
     wall = round(time.time() - t0, 1)
+    cached_left = spark._jsparkSession.sharedState().cacheManager() \
+        .cachedData().size()
 
     slowest = sorted(timings.items(), key=lambda kv: -kv[1])[:10]
     print(json.dumps({
         "gate_wall_seconds": wall,
         "n_oracles": len(names),
         "n_failures": len(failures),
+        "cached_plans_left": cached_left,
         "slowest10": dict(slowest),
         "workers": args.workers,
     }))
     for name, err in failures.items():
         print(f"\n=== FAIL {name} ===\n{err}", file=sys.stderr)
-    return 1 if failures else 0
+    return 1 if failures or cached_left else 0
 
 
 if __name__ == "__main__":

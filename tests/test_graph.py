@@ -1,11 +1,11 @@
-"""Wave-26 unit tests: HyperBall register-propagation invariants
+"""Graph-domain tests: HyperBall register-propagation invariants
 against an exact BFS reach replay."""
 
 from __future__ import annotations
 
 import hashlib
 
-SF = "/root/testdata/sf0.001"
+from .conftest import SF_SMOKE as SF
 
 
 def test_hyperball_registers_match_exact_ball_union(spark):

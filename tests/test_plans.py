@@ -181,13 +181,13 @@ def test_pack_sequences_computes_input_once(spark):
     assert out.count() == len(rows)
     assert acc.value == len(rows), (
         f"input computed {acc.value / len(rows):.1f}x — "
-        "pack_sequences must persist its input projection"
+        "pack_sequences must materialize its input projection"
     )
 
 
 def test_kmeans_computes_input_once(spark):
     """kmeans_fit runs one driver action per Lloyd iteration plus the
-    init collect — without the operator-internal persist the upstream
+    init collect — without the operator-internal checkpoint the upstream
     transform would execute n_iter+2 times (7 full corpus scans at
     n_iter=5).  Same accumulator harness as the pack_sequences guard."""
     from cassandra_join_library_spark.operators import corpus as C
@@ -208,8 +208,56 @@ def test_kmeans_computes_input_once(spark):
     assert assigned.count() == len(rows) and len(cents) == 4
     assert acc.value == len(rows), (
         f"input computed {acc.value / len(rows):.1f}x — "
-        "kmeans_fit must persist its input projection"
+        "kmeans_fit must materialize its input projection"
     )
+
+
+#: runs registered queries in a fresh session and prints how many
+#: plans the session's CacheManager holds before and after
+_CACHED_PLANS_CHILD = """
+import json, sys
+sys.path.insert(0, sys.argv[1])
+from cassandra_join_library_spark import get_spark
+from cassandra_join_library_spark.registry import all_queries
+spark = get_spark(app_name="cached-plans-test", shuffle_partitions=8)
+cached = spark._jsparkSession.sharedState().cacheManager().cachedData
+before = cached().size()
+for name in sys.argv[3].split(","):
+    all_queries()[name](spark, sys.argv[2]).count()
+print(json.dumps({"before": before, "after": cached().size()}))
+"""
+
+
+def test_queries_leave_no_cached_plan():
+    """The four queries whose operators re-read an intermediate
+    (edit_distance_pairs, the rank-correlation contingency table,
+    pack_sequences, kmeans_fit) leave the session's CacheManager as
+    they found it: a ``persist()`` on a plan the caller materializes
+    later can never be unpersisted, so each call would pin one more
+    cached plan for the life of the session.  Own process, own
+    session: the shared test session runs the background sweeps
+    concurrently, and their own persist/unpersist pairs would move
+    the count.  The child passes default Java options, so it neither
+    maps nor records the machine's class-data archive."""
+    import json
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    env = {k: v for k, v in os.environ.items()
+           if k not in ("PYSPARK_GATEWAY_PORT", "PYSPARK_GATEWAY_SECRET")}
+    env["PYSPARK_SUBMIT_ARGS"] = (
+        "--master local[2] --driver-memory 1g"
+        " --conf spark.driver.defaultJavaOptions=-Xshare:auto pyspark-shell")
+    names = "string_similarity,stats_rank_corr,corpus_pack_sequences,ann_ivf_kmeans_topk"
+    p = subprocess.run(
+        [sys.executable, "-c", _CACHED_PLANS_CHILD,
+         str(Path(__file__).resolve().parent.parent), SF_ORACLE, names],
+        env=env, capture_output=True, text=True, timeout=600)
+    assert p.returncode == 0, p.stderr[-4000:]
+    out = json.loads(p.stdout.strip().splitlines()[-1])
+    assert out["after"] == out["before"], out
 
 
 def test_e2e_pipeline_plan_is_scale_safe(spark):
