@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 # 27,6: exact to 6 dp with headroom to |v| < 10^21 — a DECIMAL(18,6)
 # element cast would abort the whole aggregate (ANSI overflow) on a
 # single corrupt value >= 10^12; the SUM result widens further, and
-# the final double cast is unchanged.  The SQL mirrors keep (18,6):
+# the final double cast is unchanged.  The oracle SQL keeps (18,6):
 # for in-range data both are exact, so the values agree.
 DEC = "decimal(27,6)"
 
@@ -38,17 +38,6 @@ def davg(col: "Column | str", alias: "str | None" = None) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     out = F.sum(c.cast(DEC)).cast("double") / F.count(c)
     return out.alias(alias) if alias else out
-
-
-def bigint(col: Column) -> Column:
-    """Computed-integer parity convention: always BIGINT."""
-    return col.cast("bigint")
-
-
-# SQL-side mirrors (DuckDB snippets), kept next to their Spark twins so
-# the convention can't drift:
-SQL_DSUM = "CAST(SUM(CAST({x} AS DECIMAL(18,6))) AS DOUBLE)"
-SQL_DAVG = "CAST(SUM(CAST({x} AS DECIMAL(18,6))) AS DOUBLE) / COUNT({x})"
 
 
 def content_digest(content_cols: "list[str]") -> Column:

@@ -35,6 +35,16 @@ from ..sources.catalog import local_frame
 END_MARK = "</w>"
 
 
+def _alpha_words(df: DataFrame, text_col: str, *cols: Column) -> DataFrame:
+    """``cols`` and one ``word`` row per lowercase, alphabetic word of
+    ``text_col``."""
+    return (
+        df.select(*cols,
+                  F.explode(F.split(F.lower(F.col(text_col)), " ")).alias("word"))
+        .filter(F.col("word").rlike("^[a-z]+$"))
+    )
+
+
 def build_word_vocab(df: DataFrame, text_col: str,
                      top_words: int = 2000) -> DataFrame:
     """(word, freq) dictionary: lowercase, alphabetic words only,
@@ -42,8 +52,7 @@ def build_word_vocab(df: DataFrame, text_col: str,
     deterministic training dictionary.  At 100 TB apply a frequency
     floor before the top-N so the sort input is bounded."""
     return (
-        df.select(F.explode(F.split(F.lower(F.col(text_col)), " ")).alias("word"))
-        .filter(F.col("word").rlike("^[a-z]+$"))
+        _alpha_words(df, text_col)
         .groupBy("word").agg(F.count(F.lit(1)).alias("freq"))
         .orderBy(F.desc("freq"), F.asc("word"))
         .limit(top_words)
@@ -183,13 +192,7 @@ def bpe_encode_counts(
     Out-of-vocabulary words fall back to character tokens
     (len + 1 for the end mark), the untrained-BPE floor."""
     _, vocab = bpe_train_state(spark, df, text_col, n_merges, top_words)
-    doc_words = (
-        df.select(
-            F.col(id_col),
-            F.explode(F.split(F.lower(F.col(text_col)), " ")).alias("word"),
-        )
-        .filter(F.col("word").rlike("^[a-z]+$"))
-    )
+    doc_words = _alpha_words(df, text_col, F.col(id_col))
     return (
         _encode_words(doc_words, vocab)
         .groupBy(id_col)
@@ -203,17 +206,11 @@ def bpe_encode_counts(
 def _tagged_words(tagged_df: DataFrame, text_col: str,
                   class_col: str) -> DataFrame:
     """(snap, class, word) occurrences: the one corpus-sized pass both
-    drift audits share — lowercase alphabetic words, the exact
-    ``build_word_vocab`` tokenization, so membership tests against the
-    trained dictionary are apples-to-apples."""
-    return (
-        tagged_df.select(
-            F.col("snap"),
-            F.col(class_col).alias("class"),
-            F.explode(F.split(F.lower(F.col(text_col)), " ")).alias("word"),
-        )
-        .filter(F.col("word").rlike("^[a-z]+$"))
-    )
+    drift audits share — ``build_word_vocab``'s tokenization, so
+    membership tests against the trained dictionary are
+    apples-to-apples."""
+    return _alpha_words(tagged_df, text_col, F.col("snap"),
+                        F.col(class_col).alias("class"))
 
 
 # rounded ppm division guarded for an empty side (a class present in

@@ -43,6 +43,15 @@ def _knuth_hash(id_col: Column) -> Column:
     )
 
 
+def _doc_terms(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """One ``(doc_id, term)`` row per space-separated term of each
+    document."""
+    return df.select(
+        F.col(id_col).alias("doc_id"),
+        F.explode(F.split(F.col(text_col), " ")).alias("term"),
+    )
+
+
 def tfidf_top_terms(
     df: DataFrame, id_col: str, text_col: str, k: int = 5
 ) -> DataFrame:
@@ -55,10 +64,7 @@ def tfidf_top_terms(
     row per distinct term — broadcast-sized even for web-scale vocab
     after minDF pruning.
     """
-    tok = df.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(F.split(F.col(text_col), " ")).alias("term"),
-    )
+    tok = _doc_terms(df, id_col, text_col)
     # df(term) from the tf AGGREGATE, not a second pass over tok: tf
     # already has exactly one row per (doc, term), so count-per-term
     # equals count_distinct(doc).  tf is MATERIALIZED (eager
@@ -827,10 +833,7 @@ def bm25_search(
     (doc_id, n_matched, score), highest score first.
     """
     terms = list(query_terms)
-    tok = df.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(F.split(F.col(text_col), " ")).alias("term"),
-    )
+    tok = _doc_terms(df, id_col, text_col)
     # one narrow row per doc, MATERIALIZED (eager localCheckpoint):
     # its three consumers (stats, postings, dfreq-through-postings)
     # prune different columns, so Catalyst specializes each branch's
@@ -936,7 +939,6 @@ def global_row_numbers(
 
 def pmi_collocations(
     df: DataFrame,
-    id_col: str,
     text_col: str,
     min_count: int = 5,
     k: int = 50,
@@ -1034,7 +1036,6 @@ def snapshot_diff(
 
 def token_budget_plan(
     df: DataFrame,
-    id_col: str,
     text_col: str,
     source_col: str,
     budget_tokens: int,
@@ -1117,10 +1118,7 @@ def vocabulary_oov(
     it is actually small.  Returns one row per doc:
     (doc_id, n_tokens, n_oov, oov_rate).
     """
-    tok = df.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(F.split(F.col(text_col), " ")).alias("term"),
-    )
+    tok = _doc_terms(df, id_col, text_col)
     ndocs = df.select(F.count_distinct(id_col).cast("bigint").alias("_n"))
     dfreq = (
         tok.groupBy("term")

@@ -57,15 +57,13 @@ def tokenize(df: DataFrame, text_col: str) -> DataFrame:
     return df.withColumn("words", F.split(F.col(text_col), " "))
 
 
-def shingles(df: DataFrame, id_col: str, text_col: str, n: int = 5) -> DataFrame:
-    """Distinct word n-gram shingles, one row per (id, shingle).
-
-    Documents shorter than ``n`` words produce no shingles (guarded —
-    Spark's ``sequence(0, negative)`` would count backwards)."""
+def _doc_words(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """``(doc, w)``: each document's whitespace word array, spread over
+    the cluster for a CPU-heavy gram transform."""
     base = df.select(
         F.col(id_col).alias("doc"), F.split(F.col(text_col), " ").alias("w")
     )
-    # parallelize the (CPU-heavy) shingle transform: small corpora often
+    # parallelize the (CPU-heavy) gram transform: small corpora often
     # arrive as a single input split; hash-repartition on doc spreads the
     # work AND pre-partitions for the per-doc groupBys downstream
     # (EnsureRequirements reuses this exchange, so it costs one tiny
@@ -75,7 +73,15 @@ def shingles(df: DataFrame, id_col: str, text_col: str, n: int = 5) -> DataFrame
     # (r16 verdict ask #5)
     from ..sources.catalog import spread_input
 
-    base = spread_input(base, F.col("doc"))
+    return spread_input(base, F.col("doc"))
+
+
+def shingles(df: DataFrame, id_col: str, text_col: str, n: int = 5) -> DataFrame:
+    """Distinct word n-gram shingles, one row per (id, shingle).
+
+    Documents shorter than ``n`` words produce no shingles (guarded —
+    Spark's ``sequence(0, negative)`` would count backwards)."""
+    base = _doc_words(df, id_col, text_col)
     grams = F.when(
         F.size(F.col("w")) >= n,
         F.expr(f"transform(sequence(0, size(w) - {n}), "
@@ -185,14 +191,7 @@ def positional_grams(
     """Word k-grams WITH positions: one row per (doc, pos, gram),
     ``pos`` 0-based.  Unlike :func:`shingles` (which dedups per doc for
     set semantics), positions are kept — passage detection needs them."""
-    base = df.select(
-        F.col(id_col).alias("doc"), F.split(F.col(text_col), " ").alias("w")
-    )
-    # same single-split parallelization rationale (and gate) as
-    # shingles()
-    from ..sources.catalog import spread_input
-
-    base = spread_input(base, F.col("doc"))
+    base = _doc_words(df, id_col, text_col)
     grams = F.when(
         F.size(F.col("w")) >= k,
         F.expr(

@@ -216,6 +216,36 @@ FRAMES_SCHEMA = StructType([
 ])
 
 
+def _map_payloads(df: DataFrame, id_col: str, cols: str,
+                  decode) -> DataFrame:
+    """``df``'s ``(id_col, payload)`` through the Arrow batch function
+    ``decode``, whose output is the id and then ``cols`` (a DDL column
+    list)."""
+    id_type = df.schema[id_col].dataType.simpleString()
+    return df.select(id_col, "payload").mapInArrow(
+        decode, f"`{id_col}` {id_type}, {cols}")
+
+
+def _map_docs(df: DataFrame, id_col: str, text_col: str, per_doc,
+              schema: StructType) -> DataFrame:
+    """Every document's ``(doc_id, text)`` through ``per_doc``, which
+    returns its output rows as tuples of ``schema``'s fields, over
+    pandas batches (``mapInPandas``: input partitioning preserved, no
+    shuffle)."""
+    src = df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
+    columns = schema.fieldNames()
+
+    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            yield pd.DataFrame(
+                [row for i, t in zip(pdf["doc_id"], pdf["text"])
+                 for row in per_doc(int(i), t)],
+                columns=columns,
+            )
+
+    return src.mapInPandas(batches, schema)
+
+
 def resize_images(df: DataFrame, id_col: str, text_col: str,
                   target_w: int = 224, target_h: int = 224) -> DataFrame:
     """Image-resize step over opaque payloads via ``mapInPandas``.
@@ -225,26 +255,17 @@ def resize_images(df: DataFrame, id_col: str, text_col: str,
     plumbing (schema, Arrow batching, partition preservation) is real.
     The stub derives the "source dimensions" from the payload exactly
     like ``_fake_decode`` and emits the letterboxed output size."""
-    src = df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
+    def letterbox(i: int, t: str) -> list:
+        _, w, h, _, _ = _fake_decode(i, t)
+        w, h = max(w, 1), max(h, 1)
+        # integer letterbox: scale = min(tw/w, th/h) as a ratio
+        if target_w * h <= target_h * w:
+            num, den = target_w, w
+        else:
+            num, den = target_h, h
+        return [(i, w * num // den, h * num // den, num, den)]
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for i, t in zip(pdf["doc_id"], pdf["text"]):
-                byte_len, w, h, _, _ = _fake_decode(int(i), t)
-                w, h = max(w, 1), max(h, 1)
-                # integer letterbox: scale = min(tw/w, th/h) as a ratio
-                if target_w * h <= target_h * w:
-                    num, den = target_w, w
-                else:
-                    num, den = target_h, h
-                rows.append((int(i), w * num // den, h * num // den, num, den))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "out_width", "out_height",
-                               "scale_num", "scale_den"],
-            )
-
-    return src.mapInPandas(batches, RESIZED_SCHEMA)
+    return _map_docs(df, id_col, text_col, letterbox, RESIZED_SCHEMA)
 
 
 def sample_frames(df: DataFrame, id_col: str, text_col: str,
@@ -255,25 +276,17 @@ def sample_frames(df: DataFrame, id_col: str, text_col: str,
     the stub treats every ``every_n`` bytes of payload as a "frame" and
     emits a deterministic checksum per frame.  Demonstrates the 1→N
     row-expanding UDF shape (mapInPandas yields more rows than input)."""
-    src = df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
+    def frames(i: int, t: str) -> list:
+        data = t.encode("utf-8")
+        n_frames = min(max_frames, max(len(data) // every_n, 0))
+        rows = [(i, f, sum(data[f * every_n:(f + 1) * every_n]) % 997)
+                for f in range(n_frames)]
+        if n_frames == 0 and len(data):
+            # short payload: emit one whole-payload frame
+            rows.append((i, 0, sum(data) % 997))
+        return rows
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for i, t in zip(pdf["doc_id"], pdf["text"]):
-                data = t.encode("utf-8")
-                n_frames = min(max_frames, max(len(data) // every_n, 0))
-                for f in range(n_frames):
-                    chunk = data[f * every_n:(f + 1) * every_n]
-                    rows.append((int(i), f, sum(chunk) % 997))
-                if n_frames == 0 and len(data):
-                    # short payload: emit one whole-payload frame
-                    rows.append((int(i), 0, sum(data) % 997))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "frame_idx", "frame_checksum"],
-            )
-
-    return src.mapInPandas(batches, FRAMES_SCHEMA)
+    return _map_docs(df, id_col, text_col, frames, FRAMES_SCHEMA)
 
 
 def decode_features(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -294,6 +307,19 @@ def decode_features(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
             )
 
     return src.mapInPandas(decode_batches, DECODED_SCHEMA)
+
+
+def _with_header(df: DataFrame, id_col: str, wid: Column, hei: Column,
+                 header_hex: Column, *extra: Column) -> DataFrame:
+    """``(id, width, height, *extra, payload)``: the image size as
+    BIGINT and the hex header as binary payload."""
+    return df.select(
+        F.col(id_col),
+        wid.cast("bigint").alias("width"),
+        hei.cast("bigint").alias("height"),
+        *extra,
+        F.unhex(header_hex).alias("payload"),
+    )
 
 
 def synthesize_bmp(df: DataFrame, id_col: str) -> DataFrame:
@@ -318,12 +344,7 @@ def synthesize_bmp(df: DataFrame, id_col: str) -> DataFrame:
         _le(F.lit(24), 2),      # bits per pixel
         F.lit("00" * 24),       # compression..palette fields (zeros)
     )
-    return df.select(
-        F.col(id_col),
-        wid.cast("bigint").alias("width"),
-        hei.cast("bigint").alias("height"),
-        F.unhex(header_hex).alias("payload"),
-    )
+    return _with_header(df, id_col, wid, hei, header_hex)
 
 
 def parse_bmp_metadata(df: DataFrame, id_col: str,
@@ -423,8 +444,6 @@ def bmp_ahash(df: DataFrame, id_col: str) -> DataFrame:
     the hashes are bit-identical to the previous staged-expression
     form and the DuckDB oracle.  Map-only per image; only
     (id, payload) crosses the Python boundary."""
-    id_type = df.schema[id_col].dataType.simpleString()
-    out_schema = f"`{id_col}` {id_type}, is_bmp boolean, ahash bigint"
 
     def _decode(batches):
         import numpy as np
@@ -458,7 +477,7 @@ def bmp_ahash(df: DataFrame, id_col: str) -> DataFrame:
                  pa.array(hashes, pa.int64())],
                 names=batch.schema.names[:1] + ["is_bmp", "ahash"])
 
-    return df.select(id_col, "payload").mapInArrow(_decode, out_schema)
+    return _map_payloads(df, id_col, "is_bmp boolean, ahash bigint", _decode)
 
 
 def synthesize_wav(df: DataFrame, id_col: str) -> DataFrame:
@@ -613,8 +632,6 @@ def pcm_energy_diff_fingerprint(df: DataFrame, id_col: str) -> DataFrame:
     from NULL-coerced samples as the expression form did."""
     need = PCM_FP_SAMPLES
 
-    id_type = df.schema[id_col].dataType.simpleString()
-    out_schema = f"`{id_col}` {id_type}, fp bigint"
 
     def _decode(batches):
         import numpy as np
@@ -644,7 +661,7 @@ def pcm_energy_diff_fingerprint(df: DataFrame, id_col: str) -> DataFrame:
                  pa.array(fps, pa.int64())],
                 names=batch.schema.names[:1] + ["fp"])
 
-    return df.select(id_col, "payload").mapInArrow(_decode, out_schema)
+    return _map_payloads(df, id_col, "fp bigint", _decode)
 
 
 def pcm_stats(df: DataFrame, id_col: str) -> DataFrame:
@@ -798,14 +815,9 @@ def synthesize_gif(df: DataFrame, id_col: str) -> DataFrame:
         F.lit("00"),                     # background color index
         F.lit("00"),                     # pixel aspect ratio
     )
-    return df.select(
-        F.col(id_col),
-        wid.cast("bigint").alias("width"),
-        hei.cast("bigint").alias("height"),
-        gct_flag.cast("bigint").alias("gct_flag"),
-        gct_exp.cast("bigint").alias("gct_exp"),
-        F.unhex(header_hex).alias("payload"),
-    )
+    return _with_header(df, id_col, wid, hei, header_hex,
+                        gct_flag.cast("bigint").alias("gct_flag"),
+                        gct_exp.cast("bigint").alias("gct_exp"))
 
 
 def parse_gif_metadata(df: DataFrame, id_col: str) -> DataFrame:
@@ -1078,10 +1090,6 @@ def parse_mp4_metadata(df: DataFrame, id_col: str) -> DataFrame:
     overflowed the hex-offset INT cast (CAST_OVERFLOW crash) now
     walks to NULL, and a zero timescale yields NULL duration_ms
     instead of an ANSI divide-by-zero error."""
-    id_type = df.schema[id_col].dataType.simpleString()
-    out_schema = (f"`{id_col}` {id_type}, is_mp4 boolean, "
-                  "major_brand_u32 bigint, timescale bigint, "
-                  "duration bigint, duration_ms bigint")
     ftyp, moov, mvhd = _MP4_FTYP, _MP4_MOOV, _MP4_MVHD
     top_steps, child_steps = _MP4_TOP_STEPS, _MP4_CHILD_STEPS
 
@@ -1158,7 +1166,9 @@ def parse_mp4_metadata(df: DataFrame, id_col: str) -> DataFrame:
                        "major_brand_u32", "timescale", "duration",
                        "duration_ms"])
 
-    return df.select(id_col, "payload").mapInArrow(_decode, out_schema)
+    return _map_payloads(
+        df, id_col, "is_mp4 boolean, major_brand_u32 bigint, timescale bigint, "
+        "duration bigint, duration_ms bigint", _decode)
 
 
 _MP4_MDAT = 1835295092   # u32('mdat')
@@ -1276,8 +1286,6 @@ def mp4_keyframe_ahash(df: DataFrame, id_col: str,
     the final gate (mdat found, box and payload big enough) drops the
     clip.  Only (id, payload) crosses the Python boundary."""
     data_bytes = 64 * n_frames
-    id_type = df.schema[id_col].dataType.simpleString()
-    out_schema = f"`{id_col}` {id_type}, frame bigint, fp bigint"
     mdat = _MP4_MDAT
 
     def _decode(batches):
@@ -1327,7 +1335,7 @@ def mp4_keyframe_ahash(df: DataFrame, id_col: str,
                  pa.array(fps, pa.int64())],
                 names=batch.schema.names[:1] + ["frame", "fp"])
 
-    return df.select(id_col, "payload").mapInArrow(_decode, out_schema)
+    return _map_payloads(df, id_col, "frame bigint, fp bigint", _decode)
 
 
 def synthesize_wav_pcm_snippets(df: DataFrame, id_col: str) -> DataFrame:
@@ -1391,8 +1399,6 @@ def pcm_window_fingerprints(df: DataFrame, id_col: str) -> DataFrame:
     Returns (id, win, fp)."""
     window, hop = PCM_FP_SAMPLES, PCM_FP_SAMPLES // 2
 
-    id_type = df.schema[id_col].dataType.simpleString()
-    out_schema = f"`{id_col}` {id_type}, win bigint, fp bigint"
 
     def _decode(batches):
         import numpy as np
@@ -1432,4 +1438,4 @@ def pcm_window_fingerprints(df: DataFrame, id_col: str) -> DataFrame:
                  pa.array(fps, pa.int64())],
                 names=batch.schema.names[:1] + ["win", "fp"])
 
-    return df.select(id_col, "payload").mapInArrow(_decode, out_schema)
+    return _map_payloads(df, id_col, "win bigint, fp bigint", _decode)

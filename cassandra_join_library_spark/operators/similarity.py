@@ -39,6 +39,16 @@ def with_norm(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
     return df.withColumn("_vec", v).withColumn("_norm", F.sqrt(_dot(v, v)))
 
 
+def _id_vec_norm(df: DataFrame, id_col: str, vec_col: str,
+                 *extra: Column) -> DataFrame:
+    """``df`` as ``(id, vec, norm, *extra)``: its id, its vector as
+    doubles and the vector's norm."""
+    return with_norm(df, vec_col).select(
+        F.col(id_col).alias("id"), F.col("_vec").alias("vec"),
+        F.col("_norm").alias("norm"), *extra,
+    )
+
+
 def cosine(a_vec: Column, b_vec: Column, a_norm: Column, b_norm: Column) -> Column:
     """try_divide: a zero vector has no direction, so its cosine is
     NULL — which every downstream threshold filter and DESC rank
@@ -62,35 +72,61 @@ def cosine_topk_bruteforce(
     rank filter; no corpus shuffle.  Ranks break ties on neighbor id
     for a total order.  Returns (query_id, neighbor_id, rank, cosine_sim).
     """
-    from pyspark.sql import Window
-
-    c = with_norm(corpus, vec_col).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col("_vec").alias("c_vec"), F.col("_norm").alias("c_norm"),
-    )
-    q = with_norm(queries, vec_col).select(
-        F.col(id_col).alias("query_id"),
-        F.col("_vec").alias("q_vec"), F.col("_norm").alias("q_norm"),
-    )
-    sim = F.round(
-        cosine(F.col("q_vec"), F.col("c_vec"), F.col("q_norm"), F.col("c_norm")),
-        _DP,
-    )
     scored = (
-        c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", sim.alias("cosine_sim"))
+        _scored_against_queries(corpus, queries, id_col, vec_col)
         # zero-norm vectors (NULL cosine, see cosine()) are not
         # neighbors — drop them before ranking so they never pad the
         # top-k tail
         .filter(F.col("cosine_sim").isNotNull())
     )
+    return _top_k(scored, k).select(
+        "query_id", "neighbor_id", "rank", "cosine_sim")
+
+
+def _side(df: DataFrame, id_col: str, vec_col: str, id_as: str,
+          prefix: str, *extra: Column) -> DataFrame:
+    """``df`` as ``(id_as, *extra, <prefix>_vec, <prefix>_norm)``: its
+    id, its vector as doubles and the vector's norm."""
+    return with_norm(df, vec_col).select(
+        F.col(id_col).alias(id_as), *extra,
+        F.col("_vec").alias(f"{prefix}_vec"),
+        F.col("_norm").alias(f"{prefix}_norm"),
+    )
+
+
+def _qc_cosine() -> Column:
+    """Cosine of the query (``q_*``) and corpus (``c_*``) vectors,
+    rounded to ``_DP``."""
+    return F.round(
+        cosine(F.col("q_vec"), F.col("c_vec"), F.col("q_norm"), F.col("c_norm")),
+        _DP,
+    )
+
+
+def _scored_against_queries(corpus: DataFrame, queries: DataFrame,
+                            id_col: str, vec_col: str) -> DataFrame:
+    """``(query_id, neighbor_id, cosine_sim)`` for every query and every
+    other corpus vector: the small query side is broadcast and the
+    corpus streamed map-only."""
+    c = _side(corpus, id_col, vec_col, "neighbor_id", "c")
+    q = _side(queries, id_col, vec_col, "query_id", "q")
+    return (
+        c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
+        .select("query_id", "neighbor_id", _qc_cosine().alias("cosine_sim"))
+    )
+
+
+def _top_k(scored: DataFrame, k: int) -> DataFrame:
+    """The first ``k`` rows per query of ``scored``, ranked (``rank``)
+    by ``cosine_sim`` descending, then neighbor id."""
+    from pyspark.sql import Window
+
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine_sim").desc(), F.col("neighbor_id").asc()
     )
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
         .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine_sim")
     )
 
 
@@ -101,9 +137,7 @@ def cosine_pairs(df: DataFrame, threshold: float = 0.9) -> DataFrame:
     O(n^2) pair space — correctness baseline for small n; use
     :func:`lsh_cosine_pairs` at scale.  Returns (id_a, id_b, cosine_sim)
     with id_a < id_b."""
-    n = with_norm(df, "embedding").select(
-        F.col("vec_id").alias("id"), F.col("_vec").alias("vec"), F.col("_norm").alias("norm")
-    )
+    n = _id_vec_norm(df, "vec_id", "embedding")
     a = n.select(F.col("id").alias("id_a"), F.col("vec").alias("va"), F.col("norm").alias("na"))
     b = n.select(F.col("id").alias("id_b"), F.col("vec").alias("vb"), F.col("norm").alias("nb"))
     sim = F.round(cosine(F.col("va"), F.col("vb"), F.col("na"), F.col("nb")), _DP)
@@ -154,13 +188,9 @@ def cosine_pairs_blocked(
          for i in range(n_blocks) for j in range(i, n_blocks)],
         "pid bigint, bi int, bj int",
     )
-    n = with_norm(df, vec_col).select(
-        F.col(id_col).alias("id"),
-        F.col("_vec").alias("vec"),
-        F.col("_norm").alias("norm"),
-        F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_blocks))
-        .cast("int").alias("blk"),
-    )
+    n = _id_vec_norm(df, id_col, vec_col,
+                     F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_blocks))
+                     .cast("int").alias("blk"))
     left = n.join(F.broadcast(pairs), n["blk"] == pairs["bi"]).select(
         "pid", "bi", "bj",
         F.col("id").alias("ida"), F.col("vec").alias("va"),
@@ -293,24 +323,14 @@ def ivf_topk(
         F.col("_norm").alias("q_norm"), F.col("cent_id").alias("list_id"),
     )
 
-    sim = F.round(
-        cosine(F.col("q_vec"), F.col("c_vec"), F.col("q_norm"), F.col("c_norm")),
-        _DP,
-    )
     scored = (
         c_assigned.join(F.broadcast(q_assigned), "list_id")
         .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", sim.alias("cosine_sim"))
+        .select("query_id", "neighbor_id", _qc_cosine().alias("cosine_sim"))
         .dropDuplicates(["query_id", "neighbor_id"])
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine_sim")
-    )
+    return _top_k(scored, k).select(
+        "query_id", "neighbor_id", "rank", "cosine_sim")
 
 
 def _plane_coeffs(plane: int, dim: int) -> "list[float]":
@@ -374,9 +394,7 @@ def lsh_cosine_pairs(
     work and LSH stops paying vs blocked brute-force; run the
     recall-audit queries before committing to an index shape.
     """
-    n = with_norm(df, vec_col).select(
-        F.col(id_col).alias("id"), F.col("_vec").alias("vec"), F.col("_norm").alias("norm")
-    )
+    n = _id_vec_norm(df, id_col, vec_col)
     # a dim mismatch would NULL every signature (zip_with pads with
     # NULL) and the sig-equality join would silently return ZERO pairs
     # — a wrong answer for a pure parameter mistake; fail loudly on the
@@ -568,15 +586,8 @@ def pq_topk(
     )
     # exact re-rank of the shortlist (vectors already unit-norm)
     sim = F.round(_dot(F.col("q_vec"), F.col("c_vec")), _DP)
-    w_final = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        short.withColumn("cosine_sim", sim)
-        .withColumn("rank", F.row_number().over(w_final).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine_sim")
-    )
+    return _top_k(short.withColumn("cosine_sim", sim), k).select(
+        "query_id", "neighbor_id", "rank", "cosine_sim")
 
 
 def label_centroids(
@@ -652,33 +663,15 @@ def hard_negatives(
     same-label pairs are dropped BEFORE scoring.  Returns (query_id,
     query_label, neighbor_id, neighbor_label, rank, cosine_sim).
     """
-    from pyspark.sql import Window
-
-    c = with_norm(corpus, vec_col).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(label_col).alias("neighbor_label"),
-        F.col("_vec").alias("c_vec"), F.col("_norm").alias("c_norm"),
-    )
-    q = with_norm(queries, vec_col).select(
-        F.col(id_col).alias("query_id"),
-        F.col(label_col).alias("query_label"),
-        F.col("_vec").alias("q_vec"), F.col("_norm").alias("q_norm"),
-    )
-    sim = F.round(
-        cosine(F.col("q_vec"), F.col("c_vec"), F.col("q_norm"), F.col("c_norm")),
-        _DP,
-    )
+    c = _side(corpus, id_col, vec_col, "neighbor_id", "c",
+              F.col(label_col).alias("neighbor_label"))
+    q = _side(queries, id_col, vec_col, "query_id", "q",
+              F.col(label_col).alias("query_label"))
     scored = c.join(
         F.broadcast(q), F.col("query_label") != F.col("neighbor_label")
     ).select("query_id", "query_label", "neighbor_id", "neighbor_label",
-             sim.alias("cosine_sim"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-    )
+             _qc_cosine().alias("cosine_sim"))
+    return _top_k(scored, k)
 
 
 def rrf_fuse(
@@ -738,21 +731,8 @@ def radius_search(
     the output is bounded by the hit count rather than k·|queries|.
     Returns (query_id, neighbor_id, cosine_sim).
     """
-    c = with_norm(corpus, vec_col).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col("_vec").alias("c_vec"), F.col("_norm").alias("c_norm"),
-    )
-    q = with_norm(queries, vec_col).select(
-        F.col(id_col).alias("query_id"),
-        F.col("_vec").alias("q_vec"), F.col("_norm").alias("q_norm"),
-    )
-    sim = F.round(
-        cosine(F.col("q_vec"), F.col("c_vec"), F.col("q_norm"), F.col("c_norm")),
-        _DP,
-    )
     return (
-        c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", sim.alias("cosine_sim"))
+        _scored_against_queries(corpus, queries, id_col, vec_col)
         .filter(F.col("cosine_sim") >= threshold)
     )
 
@@ -786,11 +766,7 @@ def semantic_dedup(
     at 100 TB raise n_planes so mean bucket size stays O(10^3)).
     Returns (vec_id, bucket_id, n_close, dropped).
     """
-    n = with_norm(df, vec_col).select(
-        F.col(id_col).alias("id"),
-        F.col("_vec").alias("vec"),
-        F.col("_norm").alias("norm"),
-    )
+    n = _id_vec_norm(df, id_col, vec_col)
     # one SQL string for all planes (the left-fold dot product of
     # _dot against each literal plane); built Column by Column it costs
     # ~125 py4j round trips per plane.  A k/1000 coefficient prints as

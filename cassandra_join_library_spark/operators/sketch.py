@@ -288,6 +288,16 @@ def _cms_bucket(i: int, col) -> "F.Column":
             .cast("bigint") % CMS_WIDTH)
 
 
+def _cms_cells(item: Column) -> Column:
+    """``c``: one ``(i, col)`` counter cell per sketch row of
+    ``item``, exploded."""
+    return F.explode(F.array(*[
+        F.struct(F.lit(i).cast("bigint").alias("i"),
+                 _cms_bucket(i, item).alias("col"))
+        for i in range(CMS_DEPTH)
+    ])).alias("c")
+
+
 def cms_counter_table(df: DataFrame, item_col: str) -> DataFrame:
     """The Count-Min counter table over a (possibly corpus-sized)
     item stream: d·w = {d}·{w} BIGINT counters, built by ONE grouped
@@ -297,14 +307,7 @@ def cms_counter_table(df: DataFrame, item_col: str) -> DataFrame:
     what makes the sketch work as a streaming complete-mode aggregate
     and as a partial-aggregate tree at 100 TB: any sharding of the
     input sums to the identical table.  Returns (i, col, cnt)."""
-    item = F.col(item_col)
-    cells = df.select(
-        F.explode(F.array(*[
-            F.struct(F.lit(i).cast("bigint").alias("i"),
-                     _cms_bucket(i, item).alias("col"))
-            for i in range(CMS_DEPTH)
-        ])).alias("c")
-    ).select("c.i", "c.col")
+    cells = df.select(_cms_cells(F.col(item_col))).select("c.i", "c.col")
     return cells.groupBy("i", "col").agg(
         F.count(F.lit(1)).cast("bigint").alias("cnt"))
 
@@ -336,14 +339,8 @@ def cms_estimate(items: DataFrame, counters: DataFrame,
     per-item MIN — the Count-Min estimate, guaranteed ≥ the true
     count.  d·|items| join rows against a ≤d·w-row broadcast side."""
     item = F.col(item_col)
-    cells = items.select(
-        item,
-        F.explode(F.array(*[
-            F.struct(F.lit(i).cast("bigint").alias("i"),
-                     _cms_bucket(i, item).alias("col"))
-            for i in range(CMS_DEPTH)
-        ])).alias("c")
-    ).select(item_col, "c.i", "c.col")
+    cells = items.select(item, _cms_cells(item)).select(
+        item_col, "c.i", "c.col")
     return (cells.join(F.broadcast(counters), ["i", "col"])
             .groupBy(item_col)
             .agg(F.min("cnt").cast("bigint").alias("cms_est")))
@@ -425,17 +422,22 @@ def logbin_quantiles(bins: DataFrame, q_pcts: "list[int]") -> DataFrame:
                      F.col("cum") >= F.col("target_rank"))
            .groupBy("q_pct", "n", "target_rank")
            .agg(F.min("bin").cast("bigint").alias("bin")))
+    return hit.select("q_pct", "n", "target_rank", "bin", *_bin_bounds())
+
+
+def _bin_bounds() -> "list[Column]":
+    """``bin_lo`` and ``bin_hi``: the value range of log bin ``bin``."""
     # bin is bit_length of a positive BIGINT, so 1 <= bin <= 63;
     # bin = 63 needs a special case — shiftleft(1L, 63) wraps to
     # Long.MIN_VALUE and the "- 1" throws ARITHMETIC_OVERFLOW under
     # ANSI mode.  The true upper bound of the top bin IS Long.MAX.
-    return hit.select(
-        "q_pct", "n", "target_rank", "bin",
+    return [
         F.expr("shiftleft(1L, CAST(bin - 1 AS INT))").cast("bigint")
         .alias("bin_lo"),
         F.expr("CASE WHEN bin >= 63 THEN 9223372036854775807L "
                "ELSE shiftleft(1L, CAST(bin AS INT)) - 1 END")
-        .cast("bigint").alias("bin_hi"))
+        .cast("bigint").alias("bin_hi"),
+    ]
 
 
 def logbin_quantiles_grouped(bins: DataFrame,
@@ -468,11 +470,5 @@ def logbin_quantiles_grouped(bins: DataFrame,
                      & (F.col("cum") >= F.col("target_rank")))
            .groupBy("shard_id", "q_pct", "n", "target_rank")
            .agg(F.min("bin").cast("bigint").alias("bin")))
-    # same top-bin guard as logbin_quantiles: shiftleft(1L, 63) wraps
-    return hit.select(
-        "shard_id", "q_pct", "n", "target_rank", "bin",
-        F.expr("shiftleft(1L, CAST(bin - 1 AS INT))").cast("bigint")
-        .alias("bin_lo"),
-        F.expr("CASE WHEN bin >= 63 THEN 9223372036854775807L "
-               "ELSE shiftleft(1L, CAST(bin AS INT)) - 1 END")
-        .cast("bigint").alias("bin_hi"))
+    return hit.select("shard_id", "q_pct", "n", "target_rank", "bin",
+                      *_bin_bounds())

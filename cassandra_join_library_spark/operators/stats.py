@@ -87,6 +87,15 @@ def contingency_chi_square(
     )
 
 
+def _with_sum_count(series: DataFrame, value_col: str) -> DataFrame:
+    """``series`` with the BIGINT sum ``s`` and row count ``n`` of
+    ``value_col`` broadcast onto every row."""
+    stats = series.agg(
+        F.sum(value_col).cast("bigint").alias("s"),
+        F.count(F.lit(1)).cast("bigint").alias("n"))
+    return series.crossJoin(F.broadcast(stats))
+
+
 def autocorr_integer(
     series: DataFrame,
     order_col: str,
@@ -106,10 +115,7 @@ def autocorr_integer(
     corpus-sized work is the upstream rollup.
 
     Returns (lag, n_pairs, num, den, autocorr)."""
-    stats = series.agg(
-        F.sum(value_col).cast("bigint").alias("s"),
-        F.count(F.lit(1)).cast("bigint").alias("n"))
-    withm = series.crossJoin(F.broadcast(stats)).select(
+    withm = _with_sum_count(series, value_col).select(
         F.col(order_col).alias("_ord"),
         (F.col(value_col)
          - F.expr(_RDIV.format(a="s", b="n"))).alias("dev"),

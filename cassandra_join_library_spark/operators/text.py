@@ -71,9 +71,9 @@ def bpe_pretokens(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def quality_scores(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Heuristic quality scoring: length, mean token length, lexical
-    diversity, stopword ratio — the standard cheap pre-filters."""
+def _quality_features(text_col: str) -> "tuple[Column, ...]":
+    """Token count, mean token length, lexical diversity and stopword
+    ratio of ``text_col``, the ratios rounded to 6 dp."""
     w = _words(text_col)
     n_tokens = F.size(w).cast("bigint")
     sw = F.array([F.lit(s) for s in STOPWORDS["en"]])
@@ -82,6 +82,13 @@ def quality_scores(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     uniq_ratio = F.round(F.size(F.array_distinct(w)) * F.lit(1.0) / n_tokens, 6)
     avg_tok_len = F.round(alpha_chars * F.lit(1.0) / n_tokens, 6)
     stop_ratio = F.round(stop_hits * F.lit(1.0) / n_tokens, 6)
+    return n_tokens, avg_tok_len, uniq_ratio, stop_ratio
+
+
+def quality_scores(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """Heuristic quality scoring: length, mean token length, lexical
+    diversity, stopword ratio — the standard cheap pre-filters."""
+    n_tokens, avg_tok_len, uniq_ratio, stop_ratio = _quality_features(text_col)
     return df.select(
         F.col(id_col),
         n_tokens.alias("n_tokens"),
@@ -177,14 +184,7 @@ def model_score(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 
     Returns (id, score, prob, keep) — ``keep`` at prob >= 0.5."""
     W = MODEL_WEIGHTS
-    w = _words(text_col)
-    n_tokens = F.size(w).cast("bigint")
-    sw = F.array([F.lit(s) for s in STOPWORDS["en"]])
-    stop_hits = F.size(F.filter(w, lambda x: F.array_contains(sw, x))).cast("bigint")
-    alpha_chars = F.length(F.regexp_replace(F.col(text_col), " ", "")).cast("bigint")
-    uniq_ratio = F.round(F.size(F.array_distinct(w)) * F.lit(1.0) / n_tokens, 6)
-    avg_tok_len = F.round(alpha_chars * F.lit(1.0) / n_tokens, 6)
-    stop_ratio = F.round(stop_hits * F.lit(1.0) / n_tokens, 6)
+    n_tokens, avg_tok_len, uniq_ratio, stop_ratio = _quality_features(text_col)
     # the dot product runs in DECIMAL so the sum is EXACT (float
     # summation rounds per-op and engines may fuse differently —
     # decimal math is the only cross-engine-bit-stable path, same as

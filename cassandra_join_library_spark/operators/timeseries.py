@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.scalars import dsum
+from .stats import _with_sum_count
 
 
 def gap_fill_daily(
@@ -225,14 +226,11 @@ def cusum_integer(
     never the fact table.  All arithmetic is BIGINT; identical to the
     SQL twin by construction.  Returns
     (ord, v, s_up, s_down, alarm)."""
-    stats = series.agg(
-        F.sum(value_col).cast("bigint").alias("s"),
-        F.count(F.lit(1)).cast("bigint").alias("n"))
     m = F.expr(
         "((s) div (n)) + (CASE WHEN 2 * ((s) % (n)) >= (n) "
         "THEN 1 ELSE 0 END)")
     k = F.expr(f"m div {slack_div}")
-    base = series.crossJoin(F.broadcast(stats)).select(
+    base = _with_sum_count(series, value_col).select(
         F.col(order_col).alias("ord"),
         F.col(value_col).cast("bigint").alias("v"),
         m.alias("m"),

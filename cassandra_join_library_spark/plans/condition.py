@@ -26,13 +26,16 @@ with ``COALESCE(pred, FALSE)`` (harmless in positive contexts).
 
 from __future__ import annotations
 
+from operator import eq, ge, gt, le, lt, ne
 from typing import Any, Callable
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, MapType
 
-BASE_OPS = {"=", "!=", "<", ">", "<=", ">=", "IN", "CONTAINS"}
+#: the comparison operators, shared with the join façade's join conditions
+COMPARE = {"=": eq, "!=": ne, "<": lt, ">": gt, "<=": le, ">=": ge}
+BASE_OPS = {*COMPARE, "IN", "CONTAINS"}
 
 # resolver: qualified "table.column" -> Column, or None if not a known ref
 Resolver = Callable[[Any], "Column | None"]
@@ -91,19 +94,7 @@ class Condition:
             # when we can see it, else fall back to Column.contains.
             pred = self._contains(lhs, resolve)
         else:
-            rhs = self._operand(self.rhs, resolve)
-            if op == "=":
-                pred = lhs == rhs
-            elif op == "!=":
-                pred = lhs != rhs
-            elif op == "<":
-                pred = lhs < rhs
-            elif op == ">":
-                pred = lhs > rhs
-            elif op == "<=":
-                pred = lhs <= rhs
-            else:
-                pred = lhs >= rhs
+            pred = COMPARE[op](lhs, self._operand(self.rhs, resolve))
         # reference base comparisons are null-rejecting booleans; the
         # wrapper only matters under NOT and would block predicate
         # pushdown elsewhere, so it is applied on demand
@@ -121,10 +112,7 @@ class Condition:
             return F.map_contains_key(lhs, F.lit(self.rhs))
         return lhs.contains(F.lit(self.rhs))
 
-    # -- introspection (mirrors is_always_and, commands.py:88-97) -------
-    def is_always_and(self) -> bool:
-        return True
-
+    # -- introspection ----------------------------------------------
     def references(self) -> "set[str]":
         """Qualified column refs mentioned anywhere in the tree."""
         refs = set()
@@ -144,9 +132,6 @@ class _And(Condition):
     def compile(self, resolve: Resolver, null_safe: bool = False) -> Column:
         return self.left.compile(resolve, null_safe) & self.right.compile(resolve, null_safe)
 
-    def is_always_and(self) -> bool:
-        return self.left.is_always_and() and self.right.is_always_and()
-
     def references(self) -> "set[str]":
         return self.left.references() | self.right.references()
 
@@ -160,9 +145,6 @@ class _Or(Condition):
 
     def compile(self, resolve: Resolver, null_safe: bool = False) -> Column:
         return self.left.compile(resolve, null_safe) | self.right.compile(resolve, null_safe)
-
-    def is_always_and(self) -> bool:
-        return False
 
     def references(self) -> "set[str]":
         return self.left.references() | self.right.references()
@@ -178,9 +160,6 @@ class _Not(Condition):
     def compile(self, resolve: Resolver, null_safe: bool = False) -> Column:
         # everything under a NOT needs reference null semantics
         return ~self.inner.compile(resolve, True)
-
-    def is_always_and(self) -> bool:
-        return self.inner.is_always_and()
 
     def references(self) -> "set[str]":
         return self.inner.references()

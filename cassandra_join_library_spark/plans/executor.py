@@ -41,7 +41,6 @@ cluster; AQE handles skew and partition sizing at runtime.
 
 from __future__ import annotations
 
-import operator
 import time
 from functools import reduce
 from typing import Any, Callable, Dict, List, Optional, Sequence, Set, Union
@@ -53,12 +52,8 @@ from pyspark.sql.types import NumericType
 from ..operators.range_join import interval_join
 from ..sources import sinks
 from ..sources.catalog import Catalog, ParquetCatalog, qualify
-from .condition import Condition
+from .condition import COMPARE, Condition
 from .table_info import TableInfo
-
-#: the join comparisons the façade accepts; only the requested one is built
-_COMPARE = {"=": operator.eq, "!=": operator.ne, "<": operator.lt,
-            ">": operator.gt, "<=": operator.le, ">=": operator.ge}
 
 _HOW = {"inner": "inner", "left": "left", "right": "right", "full": "full",
         "semi": "left_semi", "anti": "left_anti"}
@@ -147,8 +142,8 @@ class JoinExecutor:
 
     def _add_join(self, how: str, left: TableInfo, right: TableInfo, operator: str,
                   strategy: "str | None" = None) -> "JoinExecutor":
-        if operator not in _COMPARE:
-            raise ValueError(f"join operator must be one of {sorted(_COMPARE)}")
+        if operator not in COMPARE:
+            raise ValueError(f"join operator must be one of {sorted(COMPARE)}")
         if strategy is not None and strategy not in self._JOIN_STRATEGIES:
             raise ValueError(
                 f"join strategy must be one of {sorted(self._JOIN_STRATEGIES)}"
@@ -231,7 +226,7 @@ class JoinExecutor:
             return _apply(lc, rc, o)
 
         def _apply(a: Column, b: Column, o: str) -> Column:
-            return _COMPARE[o](a, b)
+            return COMPARE[o](a, b)
 
         def eq(i: int, lc: Column, rc: Column) -> Column:
             return cmp(lc, rc, "=", numeric[i], mixed[i])

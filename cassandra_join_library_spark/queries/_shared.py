@@ -160,6 +160,17 @@ WITH daily AS (
 )"""
 
 
+def _daily_order_value(spark, sf_dir):
+    """Spark twin of ``_DAILY_ORDER_VALUE``'s ``daily``: whole-dollar
+    order value ``v`` per ``day``."""
+    return (
+        load_table(spark, sf_dir, "orders")
+        .groupBy(F.to_date("o_orderdate").alias("day"))
+        .agg(F.sum(F.floor("o_totalprice").cast("bigint"))
+             .cast("bigint").alias("v"))
+    )
+
+
 _CDC_MERGE_ORACLE = """
 WITH base AS (
   SELECT user_id, event_id, event_type, value,

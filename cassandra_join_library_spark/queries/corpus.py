@@ -209,9 +209,15 @@ def corpus_contamination(spark, sf_dir):
     """Benchmark decontamination: 3-gram overlap of every document
     against a deterministic benchmark subset (doc_id % 20 = 0),
     inverted-index join — never n²."""
-    docs = load_table(spark, sf_dir, "documents")
+    return _contamination(load_table(spark, sf_dir, "documents"), None)
+
+
+def _contamination(docs, max_bench_doc_freq):
+    """3-gram contamination of ``docs`` against their benchmark subset
+    ``doc_id % 20 = 0``."""
     bench = docs.filter(F.col("doc_id") % 20 == 0)
-    return C.contamination_overlap(docs, "doc_id", "text", bench, n=3)
+    return C.contamination_overlap(docs, "doc_id", "text", bench, n=3,
+                                   max_bench_doc_freq=max_bench_doc_freq)
 
 
 @register("corpus_contamination_capped", oracle="""
@@ -230,10 +236,7 @@ def corpus_contamination_capped(spark, sf_dir):
     exactly like Jaccard's ``max_doc_freq``.  Load-bearing at sf0.01
     (cross-bench-doc shingles exist, so the pair set differs from the
     uncapped query); denominators stay uncapped by design."""
-    docs = load_table(spark, sf_dir, "documents")
-    bench = docs.filter(F.col("doc_id") % 20 == 0)
-    return C.contamination_overlap(docs, "doc_id", "text", bench, n=3,
-                                   max_bench_doc_freq=1)
+    return _contamination(load_table(spark, sf_dir, "documents"), 1)
 
 
 @register("corpus_stats", oracle=f"""
@@ -539,6 +542,12 @@ def corpus_curation_report(spark, sf_dir):
     hands to reviewers.  Three doc_id-keyed left joins over operators
     that are each individually graded; co-partitioned on the join key,
     so the composition adds no new wide shuffles beyond its parts."""
+    return _curation_report(spark, sf_dir, None)
+
+
+def _curation_report(spark, sf_dir, max_bench_doc_freq):
+    """Quality, 5-gram novelty and contamination per document, joined
+    on ``doc_id`` with the keep verdict."""
     docs = load_table(spark, sf_dir, "documents")
     quality = T.quality_scores(docs, "doc_id", "text").select(
         "doc_id", "n_tokens", "uniq_ratio", "stopword_ratio", "is_quality"
@@ -546,8 +555,7 @@ def corpus_curation_report(spark, sf_dir):
     novelty = D.ngram_novelty(docs, "doc_id", "text", n=5).select(
         "doc_id", "novelty"
     )
-    bench = docs.filter(F.col("doc_id") % 20 == 0)
-    contam = C.contamination_overlap(docs, "doc_id", "text", bench, n=3).select(
+    contam = _contamination(docs, max_bench_doc_freq).select(
         "doc_id", "overlap_ratio", "is_contaminated"
     )
     keep = (
@@ -592,7 +600,7 @@ LIMIT 50
 def corpus_pmi_collocations(spark, sf_dir):
     """Top-50 collocations by PMI (min count 5): exact counts,
     rounded-then-ranked score, TakeOrderedAndProject top-k."""
-    return C.pmi_collocations(load_table(spark, sf_dir, "documents"), "doc_id", "text",
+    return C.pmi_collocations(load_table(spark, sf_dir, "documents"), "text",
                               min_count=5, k=50)
 
 
@@ -738,7 +746,7 @@ def corpus_token_budget_plan(spark, sf_dir):
     planning table a training-data mixer materializes before sampling.
     One tiny per-source aggregate + a one-row weight-total broadcast;
     exact to the oracle at every derived column."""
-    return C.token_budget_plan(load_table(spark, sf_dir, "documents"), "doc_id", "text",
+    return C.token_budget_plan(load_table(spark, sf_dir, "documents"), "text",
                                "source", budget_tokens=100_000)
 
 
@@ -753,27 +761,7 @@ def corpus_curation_report_capped(spark, sf_dir):
     term when the uncapped report was measured at 5.2x per 10x data).
     Novelty already joins only df=1 shingles; quality is map-only.
     Same report schema, bounded joins all the way down."""
-    docs = load_table(spark, sf_dir, "documents")
-    quality = T.quality_scores(docs, "doc_id", "text").select(
-        "doc_id", "n_tokens", "uniq_ratio", "stopword_ratio", "is_quality"
-    )
-    novelty = D.ngram_novelty(docs, "doc_id", "text", n=5).select(
-        "doc_id", "novelty"
-    )
-    bench = docs.filter(F.col("doc_id") % 20 == 0)
-    contam = C.contamination_overlap(
-        docs, "doc_id", "text", bench, n=3, max_bench_doc_freq=1
-    ).select("doc_id", "overlap_ratio", "is_contaminated")
-    keep = (
-        F.col("is_quality")
-        & ~F.coalesce(F.col("is_contaminated"), F.lit(False))
-        & (F.coalesce(F.col("novelty"), F.lit(1.0)) >= 0.2)
-    )
-    return (
-        quality.join(novelty, "doc_id", "left")
-        .join(contam, "doc_id", "left")
-        .withColumn("keep", keep)
-    )
+    return _curation_report(spark, sf_dir, 1)
 
 
 @register("corpus_vocabulary", oracle="""
@@ -1828,6 +1816,8 @@ def contamination_bloom_cut_audit(spark, sf_dir):
         .localCheckpoint(eager=True)
     passing = (bloom_pass_keys(news, "shingle", words, _NUM_BITS, _K)
                .localCheckpoint(eager=True))
+    passed = (passing.select("shingle")
+              .withColumn("passed", F.lit(1)).hint("merge"))
 
     # ONE flags pass for the distinct-shingle counts (the pattern of
     # dedup_cross_snapshot_bloom; sort-merge — all three sides are
@@ -1836,9 +1826,7 @@ def contamination_bloom_cut_audit(spark, sf_dir):
         news.hint("merge")
         .join(store.withColumn("in_store", F.lit(1)).hint("merge"),
               "shingle", "left")
-        .join(passing.select("shingle")
-              .withColumn("passed", F.lit(1)).hint("merge"),
-              "shingle", "left")
+        .join(passed, "shingle", "left")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_probes"),
             F.sum(F.coalesce(F.col("passed"), F.lit(0)))
@@ -1853,9 +1841,7 @@ def contamination_bloom_cut_audit(spark, sf_dir):
     # the map-side probe — what actually reaches the exact join
     rstats = (
         rows.hint("merge")
-        .join(passing.select("shingle")
-              .withColumn("passed", F.lit(1)).hint("merge"),
-              "shingle", "left")
+        .join(passed, "shingle", "left")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_rows"),
             F.sum(F.coalesce(F.col("passed"), F.lit(0)))

@@ -1128,6 +1128,14 @@ _SNAPSHOT_CTE = "\n" + _SHINGLES + """, store AS (
 )"""
 
 
+def _snapshots(spark, sf_dir):
+    """``(prior, new)``: the prior corpus (even ``doc_id``) and the new
+    crawl (odd ``doc_id``)."""
+    docs = load_table(spark, sf_dir, "documents")
+    return (docs.filter(F.col("doc_id") % 2 == 0),
+            docs.filter(F.col("doc_id") % 2 == 1))
+
+
 @register("dedup_cross_snapshot", oracle=f"""
 WITH {_SNAPSHOT_CTE}
 SELECT doc_id, n_shingles, n_seen, containment_ppm,
@@ -1147,9 +1155,7 @@ def dedup_cross_snapshot(spark, sf_dir):
     it — new-crawl shingles shuffle to the store's buckets, nothing
     corpus-vs-corpus ever forms.  Integer ppm containment: exact,
     no float threshold boundary."""
-    docs = load_table(spark, sf_dir, "documents")
-    prior = docs.filter(F.col("doc_id") % 2 == 0)
-    new = docs.filter(F.col("doc_id") % 2 == 1)
+    prior, new = _snapshots(spark, sf_dir)
     store = (D.shingles(prior, "doc_id", "text", 5)
              .select("shingle").distinct())
     out = D.cross_snapshot_containment(new, store, "doc_id", "text", n=5)
@@ -1169,9 +1175,7 @@ def dedup_cross_snapshot_funnel(spark, sf_dir):
     the next snapshot's storage bill shrinks — and the regression
     canary for the store build (a store that silently loses shingles
     shows up here as n_dropped collapsing)."""
-    docs = load_table(spark, sf_dir, "documents")
-    prior = docs.filter(F.col("doc_id") % 2 == 0)
-    new = docs.filter(F.col("doc_id") % 2 == 1)
+    prior, new = _snapshots(spark, sf_dir)
     store = (D.shingles(prior, "doc_id", "text", 5)
              .select("shingle").distinct()
              .localCheckpoint(eager=True))  # two consumers below
@@ -1211,9 +1215,7 @@ def dedup_cross_snapshot_bloom(spark, sf_dir):
     instead of all of it — ``bloom_store_fp_audit`` measures that
     fp_rate.  Probe cost is flat in filter size (the table path),
     so sizing ``_sized_bits`` up never slows the probe."""
-    docs = load_table(spark, sf_dir, "documents")
-    prior = docs.filter(F.col("doc_id") % 2 == 0)
-    new = docs.filter(F.col("doc_id") % 2 == 1)
+    prior, new = _snapshots(spark, sf_dir)
     # consumers: words build, exact verify join (module
     # materialization pattern).  The sizing count rides the checkpoint
     # job as an observe() metric (the store is DISTINCT, so count(*)

@@ -22,8 +22,10 @@ from ..operators.timeseries import (
 )
 from ..registry import register
 from ..sources.catalog import load_events, load_table
+from ..streaming.windows import event_totals
 from ._shared import (
-    _CDC_MERGE_ORACLE, _cdc_target_and_changes, _DAILY_ORDER_VALUE, _rdiv_sql,
+    _CDC_MERGE_ORACLE, _cdc_target_and_changes, _DAILY_ORDER_VALUE,
+    _daily_order_value, _rdiv_sql,
     _SESSIONS_10M, _SLIDING_30M, _TP_CENTS, _TUMBLING_1H, _VAL_CENTS,
 )
 
@@ -38,6 +40,23 @@ WITH l AS (
     AND ts IS NOT NULL AND event_id IS NOT NULL
   GROUP BY 1, 2
 )"""
+
+
+def _clicks_purchases(spark, sf_dir):
+    """``(clicks, purchases)``: click events as ``(event_id, user_id,
+    ts)`` and every purchase event."""
+    ev = load_events(spark, sf_dir)
+    return (ev.filter(F.col("event_type") == "click").select(
+                "event_id", "user_id", "ts"),
+            ev.filter(F.col("event_type") == "purchase"))
+
+
+def _per_event(out, *cols):
+    """``event_id``, ``user_id`` and ``ts`` in epoch seconds of each
+    row of ``out``, then ``cols``."""
+    return out.select(
+        "event_id", "user_id",
+        F.unix_timestamp("ts").cast("bigint").alias("ts_epoch"), *cols)
 
 
 @register("events_latest_state", oracle="""
@@ -96,30 +115,18 @@ def events_value_outliers(spark, sf_dir):
 @register("events_tumbling", oracle=_TUMBLING_1H)
 def events_tumbling(spark, sf_dir):
     """Tumbling 1-hour windows per event type."""
-    e = load_table(spark, sf_dir, "events")
-    return (
-        e.groupBy(F.window("ts", "1 hour").alias("w"), F.col("event_type"))
-        .agg(F.count(F.lit(1)).alias("n_events"), dsum("value", "total_value"))
-        .select(
-            F.unix_timestamp("w.start").cast("bigint").alias("window_start"),
-            "event_type", "n_events", "total_value",
-        )
-    )
+    return event_totals(
+        load_table(spark, sf_dir, "events"),
+        [F.window("ts", "1 hour").alias("w"), "event_type"], "window_start")
 
 
 @register("events_sliding", oracle=_SLIDING_30M)
 def events_sliding(spark, sf_dir):
     """Sliding windows (1 h length, 30 min slide) — each event lands in
     exactly length/slide = 2 windows."""
-    e = load_table(spark, sf_dir, "events")
-    return (
-        e.groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"))
-        .agg(F.count(F.lit(1)).alias("n_events"), dsum("value", "total_value"))
-        .select(
-            F.unix_timestamp("w.start").cast("bigint").alias("window_start"),
-            "n_events", "total_value",
-        )
-    )
+    return event_totals(
+        load_table(spark, sf_dir, "events"),
+        [F.window("ts", "1 hour", "30 minutes").alias("w")], "window_start")
 
 
 @register("events_session", oracle=_SESSIONS_10M)
@@ -128,16 +135,10 @@ def events_session(spark, sf_dir):
     Spark ``session_window``; the oracle is the classic
     gaps-and-islands rewrite (sessions are half-open: a gap of exactly
     10 min starts a new session)."""
-    e = load_table(spark, sf_dir, "events")
-    return (
-        e.groupBy("user_id", F.session_window("ts", "10 minutes").alias("w"))
-        .agg(F.count(F.lit(1)).alias("n_events"), dsum("value", "total_value"))
-        .select(
-            "user_id",
-            F.unix_timestamp("w.start").cast("bigint").alias("session_start_epoch"),
-            "n_events", "total_value",
-        )
-    )
+    return event_totals(
+        load_table(spark, sf_dir, "events"),
+        ["user_id", F.session_window("ts", "10 minutes").alias("w")],
+        "session_start_epoch")
 
 
 @register("events_enrich_join", oracle="""
@@ -280,15 +281,9 @@ def events_rollup_daily(spark, sf_dir):
     built FROM the hourly aggregate (sum of partial sums — the
     continuous-aggregate pattern: coarser resolutions reuse finer ones
     instead of rescanning raw data)."""
-    e = load_table(spark, sf_dir, "events")
-    hourly = (
-        e.groupBy(F.window("ts", "1 hour").alias("w"), F.col("event_type"))
-        .agg(F.count(F.lit(1)).alias("n_events"), dsum("value", "total_value"))
-        .select(
-            F.unix_timestamp("w.start").cast("bigint").alias("hour_start"),
-            "event_type", "n_events", "total_value",
-        )
-    )
+    hourly = event_totals(
+        load_table(spark, sf_dir, "events"),
+        [F.window("ts", "1 hour").alias("w"), "event_type"], "hour_start")
     return (
         hourly.groupBy(
             (F.floor(F.col("hour_start") / 86400) * 86400).cast("bigint").alias("day_start"),
@@ -421,6 +416,19 @@ def events_first_touch(spark, sf_dir):
     return first_touch_attribution(load_events(spark, sf_dir))
 
 
+def _with_previous(spark, sf_dir, cols, col, prev):
+    """Events of known user and time as ``cols`` plus ``prev``: the
+    user's previous ``col`` by ``(ts, event_id)``; each user's first
+    event is dropped."""
+    ev = load_events(spark, sf_dir)
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    return (
+        ev.filter(F.col("user_id").isNotNull() & F.col("ts").isNotNull())
+        .select(*cols, F.lag(col).over(w).alias(prev))
+        .filter(F.col(prev).isNotNull())
+    )
+
+
 @register("events_inactivity_gaps", oracle="""
 WITH seq AS (
   SELECT user_id, event_id, ts,
@@ -443,16 +451,8 @@ def events_inactivity_gaps(spark, sf_dir):
     sessionization gap threshold and flags churn-risk dormancy.  One
     keyed window + a global top-k (per-partition TakeOrdered, k rows
     to the driver)."""
-    from ..sources.catalog import load_events
-
-    ev = load_events(spark, sf_dir)
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    seq = (
-        ev.filter(F.col("user_id").isNotNull() & F.col("ts").isNotNull())
-        .select("user_id", "event_id", "ts",
-                F.lag("ts").over(w).alias("prev_ts"))
-        .filter(F.col("prev_ts").isNotNull())
-    )
+    seq = _with_previous(spark, sf_dir, ["user_id", "event_id", "ts"],
+                         "ts", "prev_ts")
     return (
         seq.select(
             "user_id", "event_id",
@@ -489,14 +489,8 @@ def events_markov_transitions(spark, sf_dir):
     under next-action prediction and anomaly scoring.  Output is
     #event_types² rows; the probability is one integer division, and
     the normalizing window runs over the bounded type key."""
-    ev = load_events(spark, sf_dir)
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    seq = (
-        ev.filter(F.col("user_id").isNotNull() & F.col("ts").isNotNull())
-        .select("user_id", "event_type",
-                F.lag("event_type").over(w).alias("prev_type"))
-        .filter(F.col("prev_type").isNotNull())
-    )
+    seq = _with_previous(spark, sf_dir, ["user_id", "event_type"],
+                         "event_type", "prev_type")
     t = seq.groupBy("prev_type", "event_type").agg(
         F.count(F.lit(1)).alias("n_transitions"))
     wn = Window.partitionBy("prev_type")
@@ -920,12 +914,7 @@ def events_cusum_drift(spark, sf_dir):
     expressible; slack = 5% of the rounded mean, alarm at h = mean.
     All BIGINT; the ordering windows run over the calendar-bounded
     daily rollup, never the fact table."""
-    daily = (
-        load_table(spark, sf_dir, "orders")
-        .groupBy(F.to_date("o_orderdate").alias("day"))
-        .agg(F.sum(F.floor("o_totalprice").cast("bigint"))
-             .cast("bigint").alias("v"))
-    )
+    daily = _daily_order_value(spark, sf_dir)
     out = cusum_integer(daily, "day", "v", slack_div=20)
     return out.select(
         F.datediff("ord", F.lit("1970-01-01")).cast("bigint")
@@ -984,11 +973,8 @@ def events_scd2_pit_join(spark, sf_dir):
         "user_id", "ts", "event_id")
     out = asof_join(left, runs, "user_id",
                     right_payload=["event_type"], direction="backward")
-    return out.select(
-        "event_id", "user_id",
-        F.unix_timestamp("ts").cast("bigint").alias("ts_epoch"),
-        "matched_event_id",
-        F.col("matched_event_type").alias("status"))
+    return _per_event(out, "matched_event_id",
+                      F.col("matched_event_type").alias("status"))
 
 
 @register("events_interarrival_hist", oracle="""
@@ -1477,17 +1463,10 @@ def asof_click_next_purchase_tol(spark, sf_dir):
     to the carried match (no extra join)."""
     from ..operators.asof import asof_join
 
-    ev = load_events(spark, sf_dir)
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        "event_id", "user_id", "ts")
-    purchases = ev.filter(F.col("event_type") == "purchase")
+    clicks, purchases = _clicks_purchases(spark, sf_dir)
     out = asof_join(clicks, purchases, "user_id",
                     direction="forward", tolerance_seconds=1800)
-    return out.select(
-        "event_id", "user_id",
-        F.unix_timestamp("ts").cast("bigint").alias("ts_epoch"),
-        "matched_event_id",
-    )
+    return _per_event(out, "matched_event_id")
 
 
 @register("asof_nearest_event", oracle=_CLICKS_PURCHASES + """, b AS (
@@ -1531,19 +1510,11 @@ def asof_nearest_event(spark, sf_dir):
     fact table).  Equal distance prefers the backward match;
     ``matched_dt_us`` is signed (negative = purchase before click)."""
     from ..operators.asof import asof_join_nearest
-    from ..sources.catalog import load_events
 
-    ev = load_events(spark, sf_dir)
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        "event_id", "user_id", "ts")
-    purchases = ev.filter(F.col("event_type") == "purchase")
+    clicks, purchases = _clicks_purchases(spark, sf_dir)
     out = asof_join_nearest(clicks, purchases, "user_id",
                             right_id="event_id", tolerance_seconds=1800)
-    return out.select(
-        F.col("event_id"), "user_id",
-        F.unix_timestamp("ts").cast("bigint").alias("ts_epoch"),
-        F.col("matched_event_id"), F.col("matched_dt_us"),
-    )
+    return _per_event(out, "matched_event_id", "matched_dt_us")
 
 
 @register("asof_interpolate_value", oracle=f"""
@@ -1604,10 +1575,7 @@ def asof_interpolate_value(spark, sf_dir):
              F.expr(_VMICRO).alias("v_micro"))
     out = asof_interpolate(l, r, "user_id", right_id="event_id",
                            value_micro="v_micro")
-    return out.select(
-        "event_id", "user_id",
-        F.unix_timestamp("ts").cast("bigint").alias("ts_epoch"),
-        "v_before", "v_after", "v_interp")
+    return _per_event(out, "v_before", "v_after", "v_interp")
 
 
 @register("cdc_merge_upsert", oracle=_CDC_MERGE_ORACLE)

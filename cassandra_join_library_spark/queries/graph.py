@@ -33,10 +33,16 @@ def graph_pagerank_copurchase(spark, sf_dir):
     all integer microunits (operators/graph.py), so the unrolled CTE
     oracle reproduces every rank bit-for-bit.  The centrality signal
     a marketplace risk/recommendation pipeline consumes."""
-    from pyspark.sql import functions as F
-
     from ..operators.graph import pagerank_fixed_point
 
+    return pagerank_fixed_point(*_customer_supplier_graph(spark, sf_dir),
+                                n_iter=4, damping_pct=85)
+
+
+def _customer_supplier_graph(spark, sf_dir):
+    """``(nodes, edges)`` of the customer↔supplier co-purchase graph:
+    one node per customer (``c``) and supplier (``s``), and an edge in
+    both directions for each customer that ordered a supplier's part."""
     cust = load_table(spark, sf_dir, "customer")
     supp = load_table(spark, sf_dir, "supplier")
     orders = load_table(spark, sf_dir, "orders")
@@ -46,7 +52,6 @@ def graph_pagerank_copurchase(spark, sf_dir):
         F.lit("c").alias("nt"), F.col("c_custkey").cast("long").alias("id")
     ).unionByName(supp.select(
         F.lit("s").alias("nt"), F.col("s_suppkey").cast("long").alias("id")))
-
     pairs = (
         orders.join(li, orders.o_orderkey == li.l_orderkey)
         .select(F.col("o_custkey").cast("long").alias("c"),
@@ -60,7 +65,7 @@ def graph_pagerank_copurchase(spark, sf_dir):
         F.lit("s").alias("src_t"), F.col("s").alias("src"),
         F.lit("c").alias("dst_t"), F.col("c").alias("dst"),
     ))
-    return pagerank_fixed_point(nodes, edges, n_iter=4, damping_pct=85)
+    return nodes, edges
 
 
 _EDGE_CTE = """
@@ -96,6 +101,15 @@ def _copurchase_edges(spark, sf_dir):
         .select("u", "v")
         .distinct()
     )
+
+
+def _copurchase_edges_both_ways(spark, sf_dir):
+    """``_copurchase_edges`` as directed ``(u, v)`` rows, one per
+    direction."""
+    e = _copurchase_edges(spark, sf_dir)
+    return (e.select("u", "v")
+            .unionAll(e.select(F.col("v").alias("u"),
+                               F.col("u").alias("v"))))
 
 
 @register("graph_triangle_count", oracle=f"""
@@ -166,30 +180,11 @@ def graph_bfs_hops(spark, sf_dir):
     histogram with unreached nodes at hop -1.  The reachability
     primitive under influence/contamination-spread audits; all-integer
     hops, unrolled-CTE oracle."""
-    cust = load_table(spark, sf_dir, "customer")
-    supp = load_table(spark, sf_dir, "supplier")
-    orders = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-
-    nodes = cust.select(
-        F.lit("c").alias("nt"), F.col("c_custkey").cast("long").alias("id")
-    ).unionByName(supp.select(
-        F.lit("s").alias("nt"), F.col("s_suppkey").cast("long").alias("id")))
-    pairs = (
-        orders.join(li, orders.o_orderkey == li.l_orderkey)
-        .select(F.col("o_custkey").cast("long").alias("c"),
-                F.col("l_suppkey").cast("long").alias("s"))
-        .distinct()
-    )
-    edges = pairs.select(
-        F.lit("c").alias("src_t"), F.col("c").alias("src"),
-        F.lit("s").alias("dst_t"), F.col("s").alias("dst"),
-    ).unionByName(pairs.select(
-        F.lit("s").alias("src_t"), F.col("s").alias("src"),
-        F.lit("c").alias("dst_t"), F.col("c").alias("dst"),
-    ))
-    seeds = cust.filter(F.col("c_custkey") % 50 == 0).select(
-        F.lit("c").alias("nt"), F.col("c_custkey").cast("long").alias("id"))
+    nodes, edges = _customer_supplier_graph(spark, sf_dir)
+    seeds = (load_table(spark, sf_dir, "customer")
+             .filter(F.col("c_custkey") % 50 == 0)
+             .select(F.lit("c").alias("nt"),
+                     F.col("c_custkey").cast("long").alias("id")))
     return bfs_hops(nodes, edges, seeds, max_hops=3)
 
 
@@ -493,10 +488,7 @@ def graph_knn_degree_curve(spark, sf_dir):
     curve has one row per distinct degree); the rounded-micro ratio
     keeps parity integer-exact.  Never materializes anything larger
     than the directed edge list."""
-    e = _copurchase_edges(spark, sf_dir)
-    ed = (e.select("u", "v")
-          .unionAll(e.select(F.col("v").alias("u"),
-                             F.col("u").alias("v"))))
+    ed = _copurchase_edges_both_ways(spark, sf_dir)
     deg = ed.groupBy(F.col("u").alias("n")).agg(
         F.count(F.lit(1)).cast("bigint").alias("d"))
     nbr = (ed.join(deg.select(F.col("n").alias("v"),
@@ -560,10 +552,7 @@ def graph_label_propagation(spark, sf_dir):
     the oriented edge list once, localCheckpoint the label table per
     round (flat lineage), stop on a converged-fraction threshold
     instead of a fixed round count."""
-    e = _copurchase_edges(spark, sf_dir)
-    ed = (e.select("u", "v")
-          .unionAll(e.select(F.col("v").alias("u"),
-                             F.col("u").alias("v"))))
+    ed = _copurchase_edges_both_ways(spark, sf_dir)
     # columnar persist, NOT localCheckpoint: the checkpoint stores
     # deserialized row blocks and OOM'd the shared heap at sf10, while
     # the compressed InMemoryRelation spills cleanly; lineage depth is
@@ -665,10 +654,7 @@ def graph_hyperball_reach(spark, sf_dir):
     into alpha·m² to read off per-node estimates.  Plan: node-keyed
     register tables, {t} edge⋈register joins with map-side MAX
     combine; nothing ever grows past nodes × {m} rows."""
-    e = _copurchase_edges(spark, sf_dir)
-    ed = (e.select("u", "v")
-          .unionAll(e.select(F.col("v").alias("u"),
-                             F.col("u").alias("v"))))
+    ed = _copurchase_edges_both_ways(spark, sf_dir)
     ed = ed.persist()
     n_ed = ed.count()
     # reduce-side width for the propagate stream (|edges| × ≤64

@@ -985,6 +985,14 @@ def band_join_acctbal(spark, sf_dir):
     return band_join(s, "s_acctbal", c, "c_acctbal", width=25.0)
 
 
+def _ship_epochs(spark, sf_dir):
+    """Lineitem keys with their ship date in epoch seconds."""
+    return load_table(spark, sf_dir, "lineitem").select(
+        "l_orderkey", "l_linenumber",
+        F.unix_timestamp("l_shipdate").cast("bigint").alias("ship_epoch"),
+    )
+
+
 @register("interval_join_shipdate", oracle="""
 SELECT l.l_orderkey, l.l_linenumber,
        CAST(epoch(l.l_shipdate) AS BIGINT) AS ship_epoch,
@@ -1001,10 +1009,7 @@ def interval_join_shipdate(spark, sf_dir):
     within 7 days of (a sampled set of) order dates."""
     from ..operators.range_join import interval_join
 
-    l = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_linenumber",
-        F.unix_timestamp("l_shipdate").cast("bigint").alias("ship_epoch"),
-    )
+    l = _ship_epochs(spark, sf_dir)
     o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 100 == 0).select(
         "o_orderkey",
         F.unix_timestamp("o_orderdate").cast("bigint").alias("order_epoch"),
@@ -1038,10 +1043,7 @@ def interval_join_facade(spark, sf_dir):
     from ..plans.table_info import TableInfo
     from ..sources.catalog import MemoryCatalog
 
-    l = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_linenumber",
-        F.unix_timestamp("l_shipdate").cast("bigint").alias("ship_epoch"),
-    )
+    l = _ship_epochs(spark, sf_dir)
     o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 100 == 0).select(
         F.col("o_orderkey").alias("iv_key"),
         F.unix_timestamp("o_orderdate").cast("bigint").alias("lo_epoch"),

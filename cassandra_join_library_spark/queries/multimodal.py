@@ -54,6 +54,52 @@ _PLANTED_PAIRS = """  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
 """
 
 
+def _planted_labels(spark, sf_dir):
+    """Both sides of the planted truth: every document's content group
+    ``g`` and variant ``v``, once as ``doc_a/g_a/v_a`` and once as
+    ``doc_b/g_b/v_b``."""
+    docs = load_table(spark, sf_dir, "documents").select("doc_id")
+    lab = docs.select(
+        "doc_id", (F.col("doc_id") % 100).alias("g"),
+        ((F.col("doc_id") / 100).cast("bigint") % 3).alias("v"))
+    a = lab.select(F.col("doc_id").alias("doc_a"), F.col("g").alias("g_a"),
+                   F.col("v").alias("v_a"))
+    b = lab.select(F.col("doc_id").alias("doc_b"), F.col("g").alias("g_b"),
+                   F.col("v").alias("v_b"))
+    return a, b
+
+
+def _planted_pairs(spark, sf_dir):
+    """Spark twin of ``_PLANTED_PAIRS``: ``(doc_a, doc_b)`` in the same
+    content group, both base/variant or the same variant."""
+    a, b = _planted_labels(spark, sf_dir)
+    return (a.join(b, (F.col("g_a") == F.col("g_b"))
+                   & (F.col("doc_a") < F.col("doc_b")))
+            .filter((F.col("v_a").isin(0, 1) & F.col("v_b").isin(0, 1))
+                    | (F.col("v_a") == F.col("v_b")))
+            .select("doc_a", "doc_b"))
+
+
+def _recall_ppm(pred, truth):
+    """Spark twin of ``_RECALL_PPM`` over two ``(doc_a, doc_b)`` pair
+    sets."""
+    nt = truth.agg(F.count(F.lit(1)).cast("bigint").alias("n_true"))
+    np_ = pred.agg(F.count(F.lit(1)).cast("bigint").alias("n_pred"))
+    nh = pred.join(truth, ["doc_a", "doc_b"]).agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_hit"))
+    # integer DIV on both engines — exact floor ppm, no float rounding
+    # (the round(x/y) oracle sites are the sf10 drift watch class)
+    return (nt.crossJoin(F.broadcast(np_)).crossJoin(F.broadcast(nh))
+            .select(
+                "n_true", "n_pred", "n_hit",
+                F.when(F.col("n_true") > 0,
+                       F.expr("1000000 * n_hit DIV n_true"))
+                .cast("bigint").alias("recall_ppm"),
+                F.when(F.col("n_pred") > 0,
+                       F.expr("1000000 * n_hit DIV n_pred"))
+                .cast("bigint").alias("precision_ppm")))
+
+
 @register("mm_bmp_parse", oracle="""
 WITH src AS (
   SELECT doc_id,
@@ -1214,32 +1260,7 @@ def mm_phash_recall_audit(spark, sf_dir):
     pred = D.hamming_band_pairs(fps, bits=60, max_hamming=2,
                                 by_value=True) \
         .select("doc_a", "doc_b")
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    lab = docs.select(
-        "doc_id", (F.col("doc_id") % 100).alias("g"),
-        ((F.col("doc_id") / 100).cast("bigint") % 3).alias("v"))
-    a = lab.select(F.col("doc_id").alias("doc_a"), F.col("g").alias("g_a"),
-                   F.col("v").alias("v_a"))
-    b = lab.select(F.col("doc_id").alias("doc_b"), F.col("g").alias("g_b"),
-                   F.col("v").alias("v_b"))
-    truth = (a.join(b, (F.col("g_a") == F.col("g_b"))
-                    & (F.col("doc_a") < F.col("doc_b")))
-             .filter((F.col("v_a").isin(0, 1) & F.col("v_b").isin(0, 1))
-                     | (F.col("v_a") == F.col("v_b")))
-             .select("doc_a", "doc_b"))
-    nt = truth.agg(F.count(F.lit(1)).cast("bigint").alias("n_true"))
-    np_ = pred.agg(F.count(F.lit(1)).cast("bigint").alias("n_pred"))
-    nh = pred.join(truth, ["doc_a", "doc_b"]).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_hit"))
-    return (nt.crossJoin(F.broadcast(np_)).crossJoin(F.broadcast(nh))
-            .select(
-                "n_true", "n_pred", "n_hit",
-                F.when(F.col("n_true") > 0,
-                       F.expr("1000000 * n_hit DIV n_true"))
-                .cast("bigint").alias("recall_ppm"),
-                F.when(F.col("n_pred") > 0,
-                       F.expr("1000000 * n_hit DIV n_pred"))
-                .cast("bigint").alias("precision_ppm")))
+    return _recall_ppm(pred, _planted_pairs(spark, sf_dir))
 
 
 # 44-byte PCM WAV header for 122 mono 16-bit samples at 16 kHz
@@ -1393,32 +1414,7 @@ def mm_audio_fp_recall_audit(spark, sf_dir):
     fps = _audio_fingerprints(spark, sf_dir)
     pred = D.hamming_band_pairs(fps, bits=60, max_hamming=2) \
         .select("doc_a", "doc_b")
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    lab = docs.select(
-        "doc_id", (F.col("doc_id") % 100).alias("g"),
-        ((F.col("doc_id") / 100).cast("bigint") % 3).alias("v"))
-    a = lab.select(F.col("doc_id").alias("doc_a"), F.col("g").alias("g_a"),
-                   F.col("v").alias("v_a"))
-    b = lab.select(F.col("doc_id").alias("doc_b"), F.col("g").alias("g_b"),
-                   F.col("v").alias("v_b"))
-    truth = (a.join(b, (F.col("g_a") == F.col("g_b"))
-                    & (F.col("doc_a") < F.col("doc_b")))
-             .filter((F.col("v_a").isin(0, 1) & F.col("v_b").isin(0, 1))
-                     | (F.col("v_a") == F.col("v_b")))
-             .select("doc_a", "doc_b"))
-    nt = truth.agg(F.count(F.lit(1)).cast("bigint").alias("n_true"))
-    np_ = pred.agg(F.count(F.lit(1)).cast("bigint").alias("n_pred"))
-    nh = pred.join(truth, ["doc_a", "doc_b"]).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_hit"))
-    return (nt.crossJoin(F.broadcast(np_)).crossJoin(F.broadcast(nh))
-            .select(
-                "n_true", "n_pred", "n_hit",
-                F.when(F.col("n_true") > 0,
-                       F.expr("1000000 * n_hit DIV n_true"))
-                .cast("bigint").alias("recall_ppm"),
-                F.when(F.col("n_pred") > 0,
-                       F.expr("1000000 * n_hit DIV n_pred"))
-                .cast("bigint").alias("precision_ppm")))
+    return _recall_ppm(pred, _planted_pairs(spark, sf_dir))
 
 
 _N_FRAMES = 4
@@ -1581,34 +1577,7 @@ def mm_video_fp_recall_audit(spark, sf_dir):
             .agg(F.count(F.lit(1)).alias("_n"))
             .filter(F.col("_n") == _N_FRAMES)
             .select("doc_a", "doc_b"))
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    lab = docs.select(
-        "doc_id", (F.col("doc_id") % 100).alias("g"),
-        ((F.col("doc_id") / 100).cast("bigint") % 3).alias("v"))
-    a = lab.select(F.col("doc_id").alias("doc_a"), F.col("g").alias("g_a"),
-                   F.col("v").alias("v_a"))
-    b = lab.select(F.col("doc_id").alias("doc_b"), F.col("g").alias("g_b"),
-                   F.col("v").alias("v_b"))
-    truth = (a.join(b, (F.col("g_a") == F.col("g_b"))
-                    & (F.col("doc_a") < F.col("doc_b")))
-             .filter((F.col("v_a").isin(0, 1) & F.col("v_b").isin(0, 1))
-                     | (F.col("v_a") == F.col("v_b")))
-             .select("doc_a", "doc_b"))
-    nt = truth.agg(F.count(F.lit(1)).cast("bigint").alias("n_true"))
-    np_ = pred.agg(F.count(F.lit(1)).cast("bigint").alias("n_pred"))
-    nh = (pred.join(truth, ["doc_a", "doc_b"])
-          .agg(F.count(F.lit(1)).cast("bigint").alias("n_hit")))
-    # integer DIV on both engines — exact floor ppm, no float rounding
-    # (the round(x/y) oracle sites are the sf10 drift watch class)
-    return (nt.crossJoin(F.broadcast(np_)).crossJoin(F.broadcast(nh))
-            .select(
-                "n_true", "n_pred", "n_hit",
-                F.when(F.col("n_true") > 0,
-                       F.expr("1000000 * n_hit DIV n_true"))
-                .cast("bigint").alias("recall_ppm"),
-                F.when(F.col("n_pred") > 0,
-                       F.expr("1000000 * n_hit DIV n_pred"))
-                .cast("bigint").alias("precision_ppm")))
+    return _recall_ppm(pred, _planted_pairs(spark, sf_dir))
 
 
 # sample -> byte -> sample round-trip rebuilt independently in DuckDB
@@ -1761,14 +1730,7 @@ def mm_audio_snippet_recall_audit(spark, sf_dir):
     fps = _snippet_window_fps(spark, sf_dir)
     pred = (_snippet_pairs(fps)
             .select("doc_a", "doc_b").distinct())
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    lab = docs.select(
-        "doc_id", (F.col("doc_id") % 100).alias("g"),
-        ((F.col("doc_id") / 100).cast("bigint") % 3).alias("v"))
-    a = lab.select(F.col("doc_id").alias("doc_a"), F.col("g").alias("g_a"),
-                   F.col("v").alias("v_a"))
-    b = lab.select(F.col("doc_id").alias("doc_b"), F.col("g").alias("g_b"),
-                   F.col("v").alias("v_b"))
+    a, b = _planted_labels(spark, sf_dir)
     # three EQUI-joins, not one OR-condition theta join (which would
     # be a clip-pair-space BNLJ): same group; borrower->source; its
     # mirror.  The three are disjoint by construction (a group never
@@ -1787,16 +1749,4 @@ def mm_audio_snippet_recall_audit(spark, sf_dir):
     truth = (t_same.select("doc_a", "doc_b")
              .unionByName(t_fwd.select("doc_a", "doc_b"))
              .unionByName(t_rev.select("doc_a", "doc_b")))
-    nt = truth.agg(F.count(F.lit(1)).cast("bigint").alias("n_true"))
-    np_ = pred.agg(F.count(F.lit(1)).cast("bigint").alias("n_pred"))
-    nh = (pred.join(truth, ["doc_a", "doc_b"])
-          .agg(F.count(F.lit(1)).cast("bigint").alias("n_hit")))
-    return (nt.crossJoin(F.broadcast(np_)).crossJoin(F.broadcast(nh))
-            .select(
-                "n_true", "n_pred", "n_hit",
-                F.when(F.col("n_true") > 0,
-                       F.expr("1000000 * n_hit DIV n_true"))
-                .cast("bigint").alias("recall_ppm"),
-                F.when(F.col("n_pred") > 0,
-                       F.expr("1000000 * n_hit DIV n_pred"))
-                .cast("bigint").alias("precision_ppm")))
+    return _recall_ppm(pred, truth)

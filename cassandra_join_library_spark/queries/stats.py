@@ -34,7 +34,8 @@ from ..operators.stats import (
 from ..registry import _ORACLES, register
 from ..sources.catalog import load_events, load_table
 from ._shared import (
-    _DAILY_ORDER_VALUE, _EPRICE_CENTS, _rdiv_sql, _TP_CENTS, _VAL_CENTS,
+    _DAILY_ORDER_VALUE, _daily_order_value, _EPRICE_CENTS, _rdiv_sql,
+    _TP_CENTS, _VAL_CENTS,
 )
 # registers the two raters whose oracles stats_cohens_kappa embeds
 from .text import text_c4_line_filter, text_gopher_rules
@@ -104,12 +105,7 @@ def stats_autocorr_daily(spark, sf_dir):
     numerator/denominator — the one float op is the final division.
     The ordering window runs over the calendar-bounded daily rollup,
     never the fact table."""
-    daily = (
-        load_table(spark, sf_dir, "orders")
-        .groupBy(F.to_date("o_orderdate").alias("day"))
-        .agg(F.sum(F.floor("o_totalprice").cast("bigint"))
-             .cast("bigint").alias("v"))
-    )
+    daily = _daily_order_value(spark, sf_dir)
     return autocorr_integer(daily, "day", "v", max_lag=7)
 
 

@@ -13,7 +13,6 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ..functions.scalars import dsum
 from ..operators.sketch import (
     cms_counter_table, cms_counters_sql, hll_register_table, hll_registers_sql,
     hll_rollup,
@@ -99,14 +98,9 @@ def stream_tumbling(spark, sf_dir):
     """Tumbling-window aggregation executed through the streaming
     engine (AvailableNow), result identical to the batch twin."""
     stream = W.read_events_stream(spark, sf_dir)
-    agg = (
-        stream.groupBy(F.window("ts", "1 hour").alias("w"), F.col("event_type"))
-        .agg(F.count(F.lit(1)).alias("n_events"), dsum("value", "total_value"))
-        .select(
-            F.unix_timestamp("w.start").cast("bigint").alias("window_start"),
-            "event_type", "n_events", "total_value",
-        )
-    )
+    agg = W.event_totals(
+        stream, [F.window("ts", "1 hour").alias("w"), "event_type"],
+        "window_start")
     name, _ = W.run_to_memory(agg, output_mode="complete")
     return spark.table(name)
 

@@ -470,17 +470,23 @@ def ann_ivf_recall_audit(spark, sf_dir):
     ivf = S.ivf_topk(emb, queries, "vec_id", "embedding",
                      k=5, centroid_stride=32, nprobe=4) \
         .select("query_id", F.col("neighbor_id").alias("ivf_n"))
+    return _recall_at_5(emb, queries, ivf, "ivf_n")
+
+
+def _recall_at_5(emb, queries, approx, hit):
+    """Per-query recall in ppm of ``approx``'s neighbors (column
+    ``hit``) against the exact cosine top-5 of ``queries``."""
     brute = S.cosine_topk_bruteforce(emb, queries, "vec_id", "embedding",
                                      k=5) \
         .select("query_id", "neighbor_id")
     j = brute.join(
-        ivf,
-        (brute["query_id"] == ivf["query_id"])
-        & (F.col("neighbor_id") == F.col("ivf_n")),
-        "left").select(brute["query_id"], "neighbor_id", "ivf_n")
+        approx,
+        (brute["query_id"] == approx["query_id"])
+        & (F.col("neighbor_id") == F.col(hit)),
+        "left").select(brute["query_id"], "neighbor_id", hit)
     return j.groupBy("query_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("k_true"),
-        F.count("ivf_n").cast("bigint").alias("n_hits"),
+        F.count(hit).cast("bigint").alias("n_hits"),
     ).select(
         "query_id", "k_true", "n_hits",
         F.expr(_RDIV.format(a="1000000 * n_hits", b="k_true"))
@@ -547,28 +553,12 @@ def ann_hamming_recall_audit(spark, sf_dir):
     acceptable for a given corpus BEFORE the 100 TB index build; on
     near-orthogonal synthetic vectors it is the worst case, which is
     exactly why it must be measured, not assumed."""
-    from ..operators.stats import _RDIV
-
     emb = _emb(spark, sf_dir)
     queries = emb.filter(F.col("vec_id") < 10)
     ham = S.hamming_topk(emb, queries, "vec_id", "embedding",
                          k=5, dim=64) \
         .select("query_id", F.col("neighbor_id").alias("ham_n"))
-    brute = S.cosine_topk_bruteforce(emb, queries, "vec_id", "embedding",
-                                     k=5) \
-        .select("query_id", "neighbor_id")
-    j = brute.join(
-        ham,
-        (brute["query_id"] == ham["query_id"])
-        & (F.col("neighbor_id") == F.col("ham_n")),
-        "left").select(brute["query_id"], "neighbor_id", "ham_n")
-    return j.groupBy("query_id").agg(
-        F.count(F.lit(1)).cast("bigint").alias("k_true"),
-        F.count("ham_n").cast("bigint").alias("n_hits"),
-    ).select(
-        "query_id", "k_true", "n_hits",
-        F.expr(_RDIV.format(a="1000000 * n_hits", b="k_true"))
-        .cast("bigint").alias("recall_ppm"))
+    return _recall_at_5(emb, queries, ham, "ham_n")
 
 
 @register("embedding_label_centroids", oracle="""

@@ -68,6 +68,8 @@ from pyspark import SparkContext
 from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
 
+from .sources.catalog import RUNTIME_PARITY_CONFS
+
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "*")
 
@@ -100,13 +102,8 @@ def get_spark(app_name: str = "cassandra-join-library-spark",
         "spark.sql.adaptive.enabled": "true",
         "spark.sql.adaptive.coalescePartitions.enabled": "true",
         "spark.sql.adaptive.skewJoin.enabled": "true",
-        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        **RUNTIME_PARITY_CONFS,
         "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
-        "spark.sql.session.timeZone": "UTC",
-        # events.parquet carries nanosecond timestamps, which the
-        # vectorized reader rejects; read them as long and normalize in
-        # sources.catalog.load_events
-        "spark.sql.legacy.parquet.nanosAsLong": "true",
         "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
         "spark.sql.warehouse.dir":
             os.environ.get("SPARK_GRAFT_WAREHOUSE", "/tmp/spark_graft_warehouse"),

@@ -26,18 +26,16 @@ from pyspark.sql import functions as F
 from ..functions.scalars import dsum
 
 
-def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-based stream of the events table, one file per trigger
+def _table_stream(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """File-based stream of the ``name`` table, one file per trigger
     (schema pinned from the batch read — streaming sources require a
     declared schema)."""
-    from pyspark.sql.types import LongType, TimestampNTZType, TimestampType
+    import os
 
     from ..sources.catalog import ensure_session_confs
 
-    import os
-
     ensure_session_confs(spark)
-    path = f"{sf_dir}/events.parquet"
+    path = f"{sf_dir}/{name}.parquet"
     schema = spark.read.parquet(path).schema
     reader = (
         spark.readStream.schema(schema)
@@ -46,16 +44,25 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     if os.path.isdir(path):
         # Spark-written table: a DIRECTORY of part files — stream it
         # directly (a filename glob would match nothing)
-        stream = reader.parquet(path)
-    else:
-        # single-file table (the driver's testdata layout): the file
-        # source requires a directory, so stream the parent dir with a
-        # glob selecting just the events file
-        stream = reader.option("pathGlobFilter", "events.parquet").parquet(sf_dir)
-    if isinstance(schema["ts"].dataType, LongType):
+        return reader.parquet(path)
+    # single-file table (the test-data layout): the file source
+    # requires a directory, so stream the parent dir with a glob
+    # selecting just this table's file
+    return reader.option("pathGlobFilter", f"{name}.parquet").parquet(sf_dir)
+
+
+def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """File-based stream of the events table, one file per trigger
+    (schema pinned from the batch read — streaming sources require a
+    declared schema)."""
+    from pyspark.sql.types import LongType, TimestampNTZType, TimestampType
+
+    stream = _table_stream(spark, sf_dir, "events")
+    ts_type = stream.schema["ts"].dataType
+    if isinstance(ts_type, LongType):
         # nanosecond timestamps read as long (see sources.catalog.load_events)
         stream = stream.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    elif isinstance(schema["ts"].dataType, TimestampNTZType):
+    elif isinstance(ts_type, TimestampNTZType):
         # µs-no-tz parquet infers as TIMESTAMP_NTZ; watermarks require
         # TIMESTAMP — cast is value-preserving under the UTC session TZ.
         # Explicit TimestampType(): the "timestamp" string resolves via
@@ -64,33 +71,37 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stream
 
 
-def sliding_counts(stream: DataFrame, window: str = "1 hour",
-                   slide: str = "30 minutes", watermark: str = "2 hours") -> DataFrame:
+def event_totals(df: DataFrame, groups: list, start: str) -> DataFrame:
+    """Event count ``n_events`` and exact value total ``total_value``
+    per ``groups``: column names plus one time window aliased ``w``.
+    The result keeps the groups in order, the window as its start in
+    epoch seconds named ``start``."""
     return (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window, slide).alias("w"))
+        df.groupBy(*groups)
         .agg(F.count(F.lit(1)).alias("n_events"), dsum("value", "total_value"))
         .select(
-            F.unix_timestamp("w.start").cast("bigint").alias("window_start"),
+            *(g if isinstance(g, str)
+              else F.unix_timestamp("w.start").cast("bigint").alias(start)
+              for g in groups),
             "n_events", "total_value",
         )
     )
+
+
+def sliding_counts(stream: DataFrame, window: str = "1 hour",
+                   slide: str = "30 minutes", watermark: str = "2 hours") -> DataFrame:
+    return event_totals(stream.withWatermark("ts", watermark),
+                        [F.window("ts", window, slide).alias("w")],
+                        "window_start")
 
 
 def session_counts(stream: DataFrame, gap: str = "10 minutes",
                    watermark: str = "2 hours") -> DataFrame:
     """Session windows in streaming mode (state merges as events
     arrive; watermark closes sessions)."""
-    return (
-        stream.withWatermark("ts", watermark)
-        .groupBy("user_id", F.session_window("ts", gap).alias("w"))
-        .agg(F.count(F.lit(1)).alias("n_events"), dsum("value", "total_value"))
-        .select(
-            "user_id",
-            F.unix_timestamp("w.start").cast("bigint").alias("session_start_epoch"),
-            "n_events", "total_value",
-        )
-    )
+    return event_totals(stream.withWatermark("ts", watermark),
+                        ["user_id", F.session_window("ts", gap).alias("w")],
+                        "session_start_epoch")
 
 
 def dedup_stream(stream: DataFrame, keys: "list[str]",
@@ -274,17 +285,4 @@ def read_documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     (schema pinned from the batch read, glob-filtered like
     :func:`read_events_stream`) — the streaming-ingest twin of the
     batch corpus loader, for continuous-crawl pipelines."""
-    import os
-
-    from ..sources.catalog import ensure_session_confs
-
-    ensure_session_confs(spark)
-    path = f"{sf_dir}/documents.parquet"
-    schema = spark.read.parquet(path).schema
-    reader = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-    )
-    if os.path.isdir(path):  # directory-of-parts layout
-        return reader.parquet(path)
-    return reader.option("pathGlobFilter", "documents.parquet").parquet(sf_dir)
+    return _table_stream(spark, sf_dir, "documents")

@@ -16,6 +16,14 @@ re-optimization is visible only in the UI after execution — the shape
 facts we assert (exchange count upper bound, join strategy, pushdown)
 are all initial-plan facts).
 
+The files are normalized so that two runs of the same tree diff
+clean: expression ids (``#123``), exchange plan ids (``plan_id=57``)
+and RDD ids (``RDD[78]``), which count what ran before in the
+session, are stripped, and so is the Java
+call site a ``localCheckpoint`` leaf records, which reads
+``NativeMethodAccessorImpl.java:0`` in one run and ``<unknown>:0`` in
+another.
+
 Usage:
     python scripts/capture_plans.py --tag before --only a,b [--sf DIR] [--outdir DIR]
 """
@@ -33,11 +41,19 @@ from contextlib import redirect_stdout
 sys.path.insert(0, ".")
 
 
+_IDS = re.compile(r"#\d+|(?<=plan_id=)\d+|(?<=RDD)\[\d+\]")
+_CALL_SITE = re.compile(r"localCheckpoint at \S+:\d+")
+
+
+def normalize(txt: str) -> str:
+    return _CALL_SITE.sub("localCheckpoint", _IDS.sub("", txt))
+
+
 def plan_text(df) -> str:
     buf = io.StringIO()
     with redirect_stdout(buf):
         df.explain("formatted")
-    return buf.getvalue()
+    return normalize(buf.getvalue())
 
 
 def summarize(txt: str) -> dict:

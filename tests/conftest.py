@@ -1,10 +1,9 @@
 from __future__ import annotations
 
-import duckdb
 import pytest
 
 from cassandra_join_library_spark import get_spark
-from cassandra_join_library_spark.parity import TABLES
+from cassandra_join_library_spark.parity import duck_connection
 
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_ORACLE = "/root/testdata/sf0.01"
@@ -214,10 +213,6 @@ def pytest_terminal_summary(terminalreporter, exitstatus, config):
 @pytest.fixture(scope="session")
 def duck():
     """DuckDB connection with the same views the driver pre-registers."""
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{SF_ORACLE}/{t}.parquet'"
-        )
+    con = duck_connection(SF_ORACLE)
     yield con
     con.close()

@@ -354,7 +354,7 @@ def test_token_budget_plan_bounds(spark, docs):
     """Fractions in (0, 1]; expected tokens never exceed supply or
     (by more than rounding) the target; epochs >= 1 and > 1 only when
     the target exceeds the supply."""
-    out = C.token_budget_plan(docs, "doc_id", "text", "source",
+    out = C.token_budget_plan(docs, "text", "source",
                               budget_tokens=100_000).collect()
     assert len(out) == docs.select("source").distinct().count()
     total_weight = sum(r["target_weight"] for r in out)

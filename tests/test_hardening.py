@@ -80,7 +80,7 @@ def test_token_budget_plan_digitless_source(spark):
         "doc_id bigint, text string, source string",
     )
     rows = {r["source"]: r
-            for r in token_budget_plan(df, "doc_id", "text", "source",
+            for r in token_budget_plan(df, "text", "source",
                                        budget_tokens=100).collect()}
     assert set(rows) == {"wikipedia", "src7"}
     assert abs(sum(r["target_weight"] for r in rows.values()) - 1.0) < 1e-5
@@ -121,7 +121,7 @@ def test_pmi_has_no_forced_vocab_broadcast(spark):
         [(1, "new york new york city"), (2, "the of the of a")],
         "doc_id bigint, text string",
     )
-    plan = pmi_collocations(docs, "doc_id", "text", k=5, min_count=1)
+    plan = pmi_collocations(docs, "text", k=5, min_count=1)
     logical = plan._jdf.queryExecution().analyzed().toString()
     assert logical.count("ResolvedHint") <= 1  # the N scalar only
 

@@ -7,6 +7,10 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from cassandra_join_library_spark.operators import similarity as S
+from cassandra_join_library_spark.operators.similarity import (
+    hamming_topk, sign_signatures,
+)
+from cassandra_join_library_spark.sources.catalog import local_frame
 
 from .background import heavy_check
 from .conftest import SF_ORACLE
@@ -129,3 +133,46 @@ def test_pq_requires_enough_training_vectors(spark):
     emb = _emb(spark).filter(F.col("vec_id") < 30)
     with pytest.raises(ValueError, match="training vectors"):
         S.pq_topk(emb, emb.limit(2), ks=64, centroid_stride=7)
+
+
+# ---- sign-signature packing on hand vectors, null handling,
+# non-multiple-of-32 dims, and self-exclusion
+
+def test_sign_signatures_pack_known_bits(spark):
+    rows = [
+        (1, [1.0, -1.0, 0.0, 2.0]),   # bits 0 and 3 -> 0b1001 = 9
+        (2, [-1.0] * 4),              # no bits -> 0
+        (3, None),                    # dropped
+    ]
+    df = local_frame(spark, rows, "vec_id bigint, embedding array<double>")
+    got = {r["vec_id"]: r["sig_0"]
+           for r in sign_signatures(df, dim=4).collect()}
+    assert got == {1: 9, 2: 0}
+
+
+def test_sign_signatures_span_word_boundary(spark):
+    # dim 40: bit 39 lands in word 1 bit 7 (value 128), bit 0 in word 0
+    vec = [0.0] * 40
+    vec[0] = 1.0
+    vec[39] = 1.0
+    df = local_frame(spark, [(1, vec)],
+                     "vec_id bigint, embedding array<double>")
+    r = sign_signatures(df, dim=40).collect()[0]
+    assert (r["sig_0"], r["sig_1"]) == (1, 128)
+
+
+def test_hamming_topk_hand_checkable(spark):
+    rows = [
+        (0, [1.0, 1.0, 1.0, 1.0]),    # query
+        (1, [1.0, 1.0, 1.0, -1.0]),   # hamming 1
+        (2, [1.0, 1.0, -1.0, -1.0]),  # hamming 2
+        (3, [-1.0] * 4),              # hamming 4
+        (4, [1.0, 1.0, 1.0, -1.0]),   # hamming 1 (tie with 1 -> after)
+    ]
+    df = local_frame(spark, rows, "vec_id bigint, embedding array<double>")
+    q = df.filter("vec_id = 0")
+    got = [(r["neighbor_id"], r["hamming"], r["rank"])
+           for r in hamming_topk(df, q, k=3, dim=4)
+           .orderBy("rank").collect()]
+    # self excluded; ties break on neighbor_id ascending
+    assert got == [(1, 1, 1), (4, 1, 2), (2, 2, 3)]

@@ -1,5 +1,5 @@
-"""Wave-29 operator edges: hand-checkable boilerplate coverage —
-span overlap merging, sub-k docs, and the min_df threshold."""
+"""Text-operator edges: hand-checkable boilerplate coverage — span
+overlap merging, sub-k docs, and the min_df threshold."""
 
 from __future__ import annotations
 
