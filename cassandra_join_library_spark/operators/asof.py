@@ -2,7 +2,8 @@
 built-in (SURVEY task list names it explicitly).
 
 ``asof_join(left, right, ...)``: for each left row, the single right
-row with the greatest timestamp <= the left row's timestamp, per key.
+row with the greatest ``ts`` <= the left row's ``ts``, per key; right
+rows are identified by ``event_id``.
 
 Implementation is the scalable union+window pattern, NOT a range join:
 tag both sides, union, sort within each key by (ts, side, tiebreak),
@@ -26,9 +27,6 @@ def asof_join(
     left: DataFrame,
     right: DataFrame,
     key: str,
-    left_ts: str = "ts",
-    right_ts: str = "ts",
-    right_id: str = "event_id",
     right_payload: "list[str] | None" = None,
     direction: str = "backward",
     tolerance_seconds: "int | None" = None,
@@ -36,26 +34,27 @@ def asof_join(
     """Match each left row to the most recent right row at-or-before
     its timestamp, per ``key`` (``direction="backward"``), or the
     earliest right row at-or-after it (``direction="forward"``) —
-    the two pandas ``merge_asof`` directions.  Output: all left
-    columns + ``matched_<right_id>`` (+ matched payload columns),
+    the two pandas ``merge_asof`` directions, both sides timed by
+    ``ts``.  Output: all left columns + ``matched_event_id`` (+
+    matched payload columns),
     NULL when no right row qualifies.
 
     ``tolerance_seconds`` bounds the match distance: a nearest right
     row farther than the tolerance is nulled out (same one-window
     plan; the bound is applied to the carried match, not via an extra
     join).  In either direction, right rows sharing (key, ts) are
-    deduplicated keeping the max ``right_id`` — one documented
+    deduplicated keeping the max ``event_id`` — one documented
     deterministic tiebreak for both.
 
-    ``right_id`` must be an integral column: it doubles as the
+    ``event_id`` must be an integral column: it doubles as the
     deterministic tiebreak and is carried through a ``bigint`` cast —
     a string id would silently become NULL (every match lost), so we
     reject non-integral dtypes up front."""
     right_payload = right_payload or []
-    _rid_dtype = dict(right.dtypes).get(right_id)
+    _rid_dtype = dict(right.dtypes).get("event_id")
     if _rid_dtype not in ("tinyint", "smallint", "int", "bigint"):
         raise TypeError(
-            f"asof_join right_id column {right_id!r} has dtype {_rid_dtype!r}; "
+            f"asof_join right column 'event_id' has dtype {_rid_dtype!r}; "
             "an integral type is required (the id is cast to bigint for the "
             "window tiebreak — a lossy cast would NULL out every match). "
             "Pass a numeric surrogate id, or add one with xxhash64/row_number."
@@ -72,13 +71,13 @@ def asof_join(
     r = (
         right.filter(
             F.col(key).isNotNull()
-            & F.col(right_ts).isNotNull()
-            & F.col(right_id).isNotNull()
+            & F.col("ts").isNotNull()
+            & F.col("event_id").isNotNull()
         )
-        .groupBy(key, right_ts)
+        .groupBy(key, "ts")
         .agg(
-            F.max(right_id).alias(right_id),
-            *[F.max_by(c, right_id).alias(c) for c in right_payload],
+            F.max("event_id").alias("event_id"),
+            *[F.max_by(c, "event_id").alias(c) for c in right_payload],
         )
     )
     # ONE struct carries the matched row's id AND payloads atomically:
@@ -89,16 +88,16 @@ def asof_join(
         raise ValueError(f"direction must be backward|forward: {direction!r}")
 
     r_tagged = r.select(
-        F.col(key).alias("_k"), F.col(right_ts).alias("_ts"),
+        F.col(key).alias("_k"), F.col("ts").alias("_ts"),
         F.lit(0).alias("_is_left"),
         F.struct(
-            F.col(right_id).cast("long").alias("_rid"),
-            F.col(right_ts).alias("_rts"),
+            F.col("event_id").cast("long").alias("_rid"),
+            F.col("ts").alias("_rts"),
             *[F.col(c).alias(c) for c in right_payload],
         ).alias("_r"),
     )
     l_tagged = left.select(
-        F.col(key).alias("_k"), F.col(left_ts).alias("_ts"),
+        F.col(key).alias("_k"), F.col("ts").alias("_ts"),
         F.lit(1).alias("_is_left"),
         F.lit(None).cast(r_tagged.schema["_r"].dataType).alias("_r"),
         F.struct(*left.columns).alias("_l"),
@@ -143,7 +142,7 @@ def asof_join(
             F.when(gap <= tolerance_seconds * 1_000_000, F.col("_m")),
         )
     out_cols = [F.col(f"_l.{c}").alias(c) for c in left.columns]
-    out_cols.append(F.col("_m._rid").alias(f"matched_{right_id}"))
+    out_cols.append(F.col("_m._rid").alias("matched_event_id"))
     out_cols.extend(
         F.col(f"_m.{c}").alias(f"matched_{c}") for c in right_payload
     )
@@ -154,7 +153,6 @@ def asof_join_nearest(
     left: DataFrame,
     right: DataFrame,
     key: str,
-    right_id: str = "event_id",
     tolerance_seconds: "int | None" = None,
 ) -> DataFrame:
     """The third pandas ``merge_asof`` direction: match each left row
@@ -167,14 +165,13 @@ def asof_join_nearest(
     cross-checked against ``merge_asof(direction='nearest')`` on
     random frames in ``tests/test_timeseries.py``).
 
-    Output: all left columns + ``matched_<right_id>`` +
+    Output: all left columns + ``matched_event_id`` +
     ``matched_dt_us`` (signed: negative = right row before left)."""
     # duplicate the right ts under a private name so the matched
     # timestamp survives as a payload column (the ts column itself is
     # the as-of sort key and collides with the dedup groupBy)
     r = right.withColumn("_nts", F.col("ts"))
-    kw = dict(right_id=right_id, tolerance_seconds=tolerance_seconds,
-              right_payload=["_nts"])
+    kw = dict(tolerance_seconds=tolerance_seconds, right_payload=["_nts"])
     # CHAIN the passes instead of joining their outputs: asof_join
     # carries every left column through its window, so the backward
     # result (with its match renamed out of the way) IS the forward
@@ -182,10 +179,10 @@ def asof_join_nearest(
     # reliance on monotonically_increasing_id being stable across
     # plan branches (it is not)
     back = asof_join(left, r, key, direction="backward", **kw) \
-        .withColumnRenamed(f"matched_{right_id}", "_b_id") \
+        .withColumnRenamed("matched_event_id", "_b_id") \
         .withColumnRenamed("matched__nts", "_b_ts")
     both = asof_join(back, r, key, direction="forward", **kw) \
-        .withColumnRenamed(f"matched_{right_id}", "_f_id") \
+        .withColumnRenamed("matched_event_id", "_f_id") \
         .withColumnRenamed("matched__nts", "_f_ts")
     b_dt = F.unix_micros(F.col("ts")) - F.unix_micros("_b_ts")
     f_dt = F.unix_micros("_f_ts") - F.unix_micros(F.col("ts"))
@@ -194,7 +191,7 @@ def asof_join_nearest(
     out_cols = [F.col(c) for c in left.columns]
     out_cols.append(
         F.when(pick_b, F.col("_b_id")).otherwise(F.col("_f_id"))
-        .alias(f"matched_{right_id}"))
+        .alias("matched_event_id"))
     out_cols.append(
         F.when(pick_b, -b_dt)
         .otherwise(F.when(F.col("_f_id").isNotNull(), f_dt))
@@ -206,8 +203,6 @@ def asof_interpolate(
     left: DataFrame,
     right: DataFrame,
     key: str,
-    right_id: str = "event_id",
-    value_micro: str = "v_micro",
 ) -> DataFrame:
     """Linear-interpolation as-of (the 'lerp join' of time-series
     stores): each left row gets the right-side value interpolated
@@ -221,7 +216,8 @@ def asof_interpolate(
     one-window passes, zero extra joins against the fact table — and
     both sides timed by ``ts``.
 
-    ``value_micro`` must be an integer (micro-unit) column.  The
+    The interpolated value is the integer (micro-unit) ``v_micro``
+    column.  The
     interpolation itself is three IEEE double ops over exactly-known
     integers — deterministic and engine-portable, which is the repo's
     parity bar for unavoidable doubles.
@@ -229,15 +225,15 @@ def asof_interpolate(
     Output: all left columns + ``v_before`` / ``v_after`` (BIGINT,
     NULL at edges) + ``v_interp`` (DOUBLE)."""
     r = right.withColumn("_nts", F.col("ts"))
-    kw = dict(right_id=right_id, right_payload=["_nts", value_micro])
-    back = asof_join(left, r, key, direction="backward", **kw) \
-        .withColumnRenamed(f"matched_{right_id}", "_b_id") \
+    payload = ["_nts", "v_micro"]
+    back = asof_join(left, r, key, right_payload=payload, direction="backward") \
+        .withColumnRenamed("matched_event_id", "_b_id") \
         .withColumnRenamed("matched__nts", "_b_ts") \
-        .withColumnRenamed(f"matched_{value_micro}", "_b_v")
-    both = asof_join(back, r, key, direction="forward", **kw) \
-        .withColumnRenamed(f"matched_{right_id}", "_f_id") \
+        .withColumnRenamed("matched_v_micro", "_b_v")
+    both = asof_join(back, r, key, right_payload=payload, direction="forward") \
+        .withColumnRenamed("matched_event_id", "_f_id") \
         .withColumnRenamed("matched__nts", "_f_ts") \
-        .withColumnRenamed(f"matched_{value_micro}", "_f_v")
+        .withColumnRenamed("matched_v_micro", "_f_v")
     t = F.unix_micros(F.col("ts"))
     tb, tf = F.unix_micros("_b_ts"), F.unix_micros("_f_ts")
     vb, vf = F.col("_b_v").cast("bigint"), F.col("_f_v").cast("bigint")

@@ -266,21 +266,20 @@ def bloom_flag_keys(
     key_col: str,
     words: DataFrame,
     num_bits: int,
-    num_hashes: int = 5,
-    portable: bool = True,
-    flag_col: str = "_bloom_pass",
+    num_hashes: int,
+    portable: bool,
 ) -> DataFrame:
     """:func:`bloom_pass_keys`, but the membership test is APPENDED as
-    a boolean column instead of filtering — for consumers that need
+    the boolean column ``_bloom_pass`` instead of filtering — for consumers that need
     every input row downstream (e.g. a totals aggregate) and only want
     the Bloom verdict folded into a join condition.  Same probe
-    machinery, same no-false-negative guarantee: ``flag_col`` is true
+    machinery, same no-false-negative guarantee: ``_bloom_pass`` is true
     iff all ``num_hashes`` probed bits are set.  Every input column is
     kept; build parameters must match the store, as in
     :func:`bloom_pass_keys`."""
     out, passed = _bloom_probe(df, key_col, words, num_bits,
                                num_hashes, portable)
-    return out.select(*df.columns, passed.alias(flag_col))
+    return out.select(*df.columns, passed.alias("_bloom_pass"))
 
 
 def _bloom_probe(df, key_col, words, num_bits, num_hashes, portable):

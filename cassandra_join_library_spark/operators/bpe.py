@@ -33,6 +33,11 @@ from pyspark.sql import functions as F
 from ..sources.catalog import local_frame
 
 END_MARK = "</w>"
+#: merges learned and dictionary words kept by every registered
+#: tokenizer query, and the |drift| that flags a retrain (5 % of a
+#: token per word); the oracle builders in ``queries/_bpe_sql`` read
+#: the same constants
+BPE_MERGES, BPE_TOP_WORDS, RETRAIN_PPM = 8, 2000, 50_000
 
 
 def _alpha_words(df: DataFrame, text_col: str, *cols: Column) -> DataFrame:
@@ -45,8 +50,7 @@ def _alpha_words(df: DataFrame, text_col: str, *cols: Column) -> DataFrame:
     )
 
 
-def build_word_vocab(df: DataFrame, text_col: str,
-                     top_words: int = 2000) -> DataFrame:
+def build_word_vocab(df: DataFrame, text_col: str, top_words: int) -> DataFrame:
     """(word, freq) dictionary: lowercase, alphabetic words only,
     top-``top_words`` by frequency (ties broken by word) — the
     deterministic training dictionary.  At 100 TB apply a frequency
@@ -63,8 +67,8 @@ def bpe_train(
     spark: SparkSession,
     df: DataFrame,
     text_col: str,
-    n_merges: int = 8,
-    top_words: int = 2000,
+    n_merges: int = BPE_MERGES,
+    top_words: int = BPE_TOP_WORDS,
 ) -> DataFrame:
     """Learn ``n_merges`` BPE merges; returns (step, merge_left,
     merge_right, pair_count) — the merge table a tokenizer ships."""
@@ -110,8 +114,8 @@ def bpe_train_state(
     spark: SparkSession,
     df: DataFrame,
     text_col: str,
-    n_merges: int = 8,
-    top_words: int = 2000,
+    n_merges: int,
+    top_words: int,
 ) -> "tuple[DataFrame, DataFrame]":
     """Training returning BOTH artifacts: the merge table and the
     final (word, syms) symbol table — the trained tokenization of
@@ -178,11 +182,10 @@ def bpe_encode_counts(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    n_merges: int = 8,
-    top_words: int = 2000,
 ) -> DataFrame:
-    """Tokenize every document with the trained merges: per doc,
-    (n_words, n_bpe_tokens).
+    """Tokenize every document with ``BPE_MERGES`` merges trained on
+    its ``BPE_TOP_WORDS``-word dictionary: per doc, (n_words,
+    n_bpe_tokens).
 
     The trained symbol table already holds each vocabulary word's
     tokenization, so encoding is a plain equi-join of the corpus's
@@ -191,7 +194,7 @@ def bpe_encode_counts(
     expensive merge loop runs once on the vocab, never per document).
     Out-of-vocabulary words fall back to character tokens
     (len + 1 for the end mark), the untrained-BPE floor."""
-    _, vocab = bpe_train_state(spark, df, text_col, n_merges, top_words)
+    _, vocab = bpe_train_state(spark, df, text_col, BPE_MERGES, BPE_TOP_WORDS)
     doc_words = _alpha_words(df, text_col, F.col(id_col))
     return (
         _encode_words(doc_words, vocab)
@@ -230,13 +233,12 @@ def bpe_fertility_drift(
     tagged_df: DataFrame,
     text_col: str,
     class_col: str,
-    n_merges: int = 8,
-    top_words: int = 2000,
-    retrain_ppm: int = 50_000,
+    top_words: int = BPE_TOP_WORDS,
+    retrain_ppm: int = RETRAIN_PPM,
 ) -> DataFrame:
-    """Tokenizer-fertility drift across corpus snapshots: train BPE on
-    ``train_df`` (the PRIOR snapshot — the tokenizer that shipped),
-    encode BOTH snapshots of ``tagged_df`` (rows tagged 'a'/'b' in
+    """Tokenizer-fertility drift across corpus snapshots: train
+    ``BPE_MERGES`` BPE merges on ``train_df`` (the PRIOR snapshot —
+    the tokenizer that shipped), encode BOTH snapshots of ``tagged_df`` (rows tagged 'a'/'b' in
     ``snap``) with that frozen symbol table, and report per-class
     fertility (BPE tokens per word, rounded ppm) side by side with the
     signed drift — the audit that decides whether a new crawl's
@@ -256,7 +258,7 @@ def bpe_fertility_drift(
     (|drift| >= ``retrain_ppm``; NULL when a side is empty).
     """
     _, vocab = bpe_train_state(spark, train_df, text_col,
-                               n_merges, top_words)
+                               BPE_MERGES, top_words)
     words = _tagged_words(tagged_df, text_col, class_col)
     wide = _snap_pivot(
         _encode_words(words, vocab),
@@ -279,7 +281,7 @@ def vocab_oov_drift(
     tagged_df: DataFrame,
     text_col: str,
     class_col: str,
-    top_words: int = 2000,
+    top_words: int = BPE_TOP_WORDS,
 ) -> DataFrame:
     """Dictionary OOV-mass drift across snapshots: the fraction of
     word OCCURRENCES outside the prior snapshot's top-``top_words``

@@ -50,7 +50,6 @@ def merge_upsert(
     changes: DataFrame,
     keys: "list[str]",
     seq_cols: "list[str]",
-    op_col: str = "op",
 ) -> DataFrame:
     """Apply a changelog onto a snapshot (MERGE INTO semantics).
 
@@ -61,7 +60,7 @@ def merge_upsert(
     as a fresh insert instead — pinned by
     ``test_null_key_changes_insert_not_update``.  Scrub or surrogate
     NULL keys upstream if they can occur).
-    ``changes`` carries the same columns plus ``op_col`` ('U' upsert /
+    ``changes`` carries the same columns plus ``op`` ('U' upsert /
     'D' delete).  Winner per key is decided by lexicographic
     ``seq_cols`` comparison (change wins ties — idempotent
     re-application), making batch-wise application composition-safe in
@@ -98,7 +97,7 @@ def merge_upsert(
     # specialization of shared subtrees defeats exchange reuse)
     c = latest.select(
         *keys, F.struct(*payload).alias("_c"),
-        F.struct(*seq_cols).alias("_cseq"), F.col(op_col).alias("_op"),
+        F.struct(*seq_cols).alias("_cseq"), F.col("op").alias("_op"),
     ).localCheckpoint(eager=True)
     # untouched keys stream straight through (broadcast anti)
     kept = target.join(F.broadcast(c.select(*keys)), keys, "left_anti")

@@ -52,10 +52,8 @@ def _doc_terms(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def tfidf_top_terms(
-    df: DataFrame, id_col: str, text_col: str, k: int = 5
-) -> DataFrame:
-    """Top-k TF-IDF terms per document.
+def tfidf_top_terms(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """Top-5 TF-IDF terms per document.
 
     tf = in-document term count, idf = ln((N+1)/(df+1)) (smoothed),
     score rounded to 6 dp BEFORE ranking so the ranking is identical
@@ -94,7 +92,7 @@ def tfidf_top_terms(
     w = Window.partitionBy("doc_id").orderBy(F.desc("tfidf"), F.asc("term"))
     return (
         scored.withColumn("rk", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rk") <= k)
+        .filter(F.col("rk") <= 5)
         .select("doc_id", "term", "tf", "df", "tfidf", "rk")
     )
 
@@ -103,12 +101,11 @@ def stratified_split(
     df: DataFrame,
     id_col: str,
     strata_col: str,
-    test_per_mille: int = 100,
 ) -> DataFrame:
-    """Deterministic hash-based train/test split, stratified.
+    """Deterministic hash-based 90/10 train/test split, stratified.
 
     bucket = ((id·2654435761) + ascii(strata)·7919) mod (2^31-1) mod
-    1000 — a pure function of the row, so the split is reproducible
+    1000, test below 100 — a pure function of the row, so the split is reproducible
     across runs, engines, and cluster sizes (unlike Bernoulli
     TABLESAMPLE), and rows never migrate between splits when data is
     appended.  Map-only: zero shuffles.
@@ -123,7 +120,7 @@ def stratified_split(
         F.col(id_col),
         F.col(strata_col),
         bucket,
-        F.when(F.pmod(h, 1000) < test_per_mille, F.lit("test"))
+        F.when(F.pmod(h, 1000) < 100, F.lit("test"))
         .otherwise(F.lit("train"))
         .alias("split"),
     )
@@ -134,9 +131,8 @@ def quality_quantile_filter(
     id_col: str,
     text_col: str,
     group_col: str,
-    keep_frac: float = 0.5,
 ) -> DataFrame:
-    """Keep the top ``keep_frac`` of each group by token count.
+    """Keep the top half of each group by token count.
 
     percent_rank over a TOTAL order (n_tokens desc, id) is
     (row_number-1)/(n-1) — identical in any engine, so the kept set is
@@ -154,7 +150,7 @@ def quality_quantile_filter(
     pr = F.percent_rank().over(w)
     return (
         base.withColumn("_pr", pr)
-        .filter(F.col("_pr") <= keep_frac)
+        .filter(F.col("_pr") <= 0.5)
         .select(
             F.col(id_col),
             F.col(group_col),
@@ -168,10 +164,9 @@ def bench_shingle_index(
     bench: DataFrame,
     id_col: str,
     text_col: str,
-    n: int = 3,
     max_bench_doc_freq: "int | None" = None,
 ) -> DataFrame:
-    """The benchmark side's (shingle, bdoc) posting index, distinct,
+    """The benchmark side's (3-gram shingle, bdoc) posting index, distinct,
     optionally stop-shingle capped — THE store a decontamination
     screen persists once per benchmark suite.  Shared by
     :func:`contamination_overlap` (its join side) and the Bloom-store
@@ -180,7 +175,7 @@ def bench_shingle_index(
     never drift between the exact join and the filter built to prune
     it."""
     bench_sh = (
-        shingles(bench, id_col, text_col, n=n)
+        shingles(bench, id_col, text_col, n=3)
         .select(F.col("shingle"), F.col("doc").alias("bdoc"))
         .distinct()
     )
@@ -201,7 +196,6 @@ def contamination_overlap(
     id_col: str,
     text_col: str,
     bench: DataFrame,
-    n: int = 3,
     max_bench_doc_freq: "int | None" = None,
     bench_index: "DataFrame | None" = None,
     bench_bloom: "DataFrame | None" = None,
@@ -210,7 +204,7 @@ def contamination_overlap(
     bloom_portable: bool = True,
 ) -> DataFrame:
     """Benchmark-contamination check: fraction of a document's distinct
-    word n-grams that appear in a benchmark/eval set; a document is
+    word 3-grams that appear in a benchmark/eval set; a document is
     contaminated at a fraction of 0.5 or more.
 
     Standard decontamination step before training.  Inverted-index
@@ -284,9 +278,9 @@ def contamination_overlap(
     # remove shuffles/passes outright).  ``shingles`` emits DISTINCT
     # (doc, shingle) rows, so count(*) over the first-level groups ==
     # the old totals count and sum(hit) == the old count_distinct.
-    doc_sh = shingles(df, id_col, text_col, n=n)
+    doc_sh = shingles(df, id_col, text_col, n=3)
     bench_sh = bench_index if bench_index is not None else \
-        bench_shingle_index(bench, id_col, text_col, n=n,
+        bench_shingle_index(bench, id_col, text_col,
                             max_bench_doc_freq=max_bench_doc_freq)
     if bench_bloom is not None:
         from .bloom import bloom_flag_keys
@@ -300,9 +294,7 @@ def contamination_overlap(
         # bloom_portable must match the words table's build flag
         # (bloom_words_table contract)
         probe = bloom_flag_keys(doc_sh, "shingle", bench_bloom,
-                                bloom_bits, bloom_hashes,
-                                portable=bloom_portable,
-                                flag_col="_bloom_pass")
+                                bloom_bits, bloom_hashes, bloom_portable)
         pass_pred = probe["_bloom_pass"]
     else:
         probe = doc_sh
@@ -367,23 +359,22 @@ def chunk_documents(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    size: int = 200,
-    stride: int = 150,
 ) -> DataFrame:
-    """Split documents into fixed-size character chunks with overlap
-    (stride < size) — the sequence-packing precursor: long documents
+    """Split documents into 200-character chunks every 150 characters
+    (50 overlap) — the sequence-packing precursor: long documents
     become training-window-sized pieces, short tails kept.
 
     Row-expanding but map-only (explode of a per-row sequence): zero
     shuffles, and output partitioning follows input splits.  Chunk i
-    covers [i·stride, i·stride+size); starts range over
-    0..(len-1) div stride so every character is covered.  Empty
+    covers [150·i, 150·i+200); starts range over
+    0..(len-1) div 150 so every character is covered.  Empty
     documents produce no chunks (guarded — Spark's ``sequence`` counts
     backwards on a negative stop).
     """
     n = F.length(F.col(text_col)).cast("bigint")
-    starts = F.sequence(F.lit(0).cast("bigint"), (n - 1) - ((n - 1) % stride), F.lit(stride).cast("bigint"))
-    chunk = F.expr(f"substring({text_col}, cast(chunk_start + 1 as int), {size})")
+    starts = F.sequence(F.lit(0).cast("bigint"), (n - 1) - ((n - 1) % 150),
+                        F.lit(150).cast("bigint"))
+    chunk = F.expr(f"substring({text_col}, cast(chunk_start + 1 as int), 200)")
     return (
         df.filter(n >= 1)
         .select(
@@ -393,7 +384,7 @@ def chunk_documents(
         )
         .select(
             F.col(id_col),
-            (F.col("chunk_start") / stride).cast("bigint").alias("chunk_id"),
+            (F.col("chunk_start") / 150).cast("bigint").alias("chunk_id"),
             chunk.alias("chunk_text"),
             F.length(chunk).cast("bigint").alias("chunk_chars"),
         )
@@ -440,10 +431,10 @@ def mixture_rebalance(
 PACK_BUCKETS = 1024
 
 
-def pack_sequences(chunks: DataFrame, budget_tokens: int = 512) -> DataFrame:
-    """Assign chunks (doc_id, chunk_id, chunk_chars) to
-    fixed-token-budget training packs by global offset: pack_id =
-    (running_token_count - own_tokens) div budget in (doc, chunk)
+def pack_sequences(chunks: DataFrame) -> DataFrame:
+    """Assign chunks (doc_id, chunk_id, chunk_chars) to 512-token
+    training packs by global offset: pack_id =
+    (running_token_count - own_tokens) div 512 in (doc, chunk)
     order.
 
     The global prefix sum is computed scalably in THREE levels; the
@@ -573,7 +564,7 @@ def pack_sequences(chunks: DataFrame, budget_tokens: int = 512) -> DataFrame:
             "doc_id",
             "chunk_id",
             "n_tokens",
-            F.floor((cum - F.col("n_tokens")) / budget_tokens)
+            F.floor((cum - F.col("n_tokens")) / 512)
             .cast("bigint")
             .alias("pack_id"),
         )
@@ -799,11 +790,10 @@ def bm25_search(
     id_col: str,
     text_col: str,
     query_terms: List[str],
-    k1: float = 1.2,
-    b: float = 0.75,
     k: int = 10,
 ) -> DataFrame:
-    """BM25 retrieval: top-k documents for a bag of query terms.
+    """BM25 (k1 = 1.2, b = 0.75) retrieval: top-k documents for a bag
+    of query terms.
 
     Sparse lexical search over the corpus — the retrieval half of a
     dedup/decontamination review loop and the baseline for RAG-style
@@ -869,12 +859,12 @@ def bm25_search(
         + (F.col("n_docs") - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
     )
     norm = (
-        F.lit(1.0) - F.lit(b)
-        + F.lit(b) * F.col("dl") * F.col("n_docs") / F.col("total_len")
+        F.lit(1.0) - F.lit(0.75)
+        + F.lit(0.75) * F.col("dl") * F.col("n_docs") / F.col("total_len")
     )
     contrib = F.round(
-        idf * F.col("tf") * (F.lit(k1) + F.lit(1.0))
-        / (F.col("tf") + F.lit(k1) * norm),
+        idf * F.col("tf") * (F.lit(1.2) + F.lit(1.0))
+        / (F.col("tf") + F.lit(1.2) * norm),
         6,
     ).cast("decimal(18,6)")
     per_doc = scored.groupBy("doc_id").agg(
@@ -888,7 +878,6 @@ def global_row_numbers(
     df: DataFrame,
     order_cols: "List[Column]",
     range_cols: "List[str]",
-    out_col: str = "row_id",
 ) -> DataFrame:
     """Deterministic 0-based global sequence numbers in a total order,
     WITHOUT a global sort or unpartitioned window — the scale-safe way
@@ -909,7 +898,7 @@ def global_row_numbers(
 
     The assignment equals ``row_number() OVER (ORDER BY ...) - 1``
     exactly (range buckets are ordered and the key is total), which is
-    what the SQL oracle computes.  Appends ``out_col``.
+    what the SQL oracle computes.  Appends ``row_id``.
     """
     n = df.sparkSession.sparkContext.defaultParallelism
     bucketed = df.repartitionByRange(n, *range_cols).withColumn(
@@ -932,7 +921,7 @@ def global_row_numbers(
     return (
         bucketed.withColumn("_rn", F.row_number().over(in_w).cast("bigint"))
         .join(F.broadcast(offsets), "_pid")
-        .withColumn(out_col, F.col("_off") + F.col("_rn") - 1)
+        .withColumn("row_id", F.col("_off") + F.col("_rn") - 1)
         .drop("_pid", "_rn", "_off")
     )
 
@@ -1098,13 +1087,11 @@ def vocabulary_oov(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    min_df: int = 2,
-    max_df_ratio: float = 0.5,
 ) -> DataFrame:
     """Tokenizer-prep vocabulary build + per-document OOV audit.
 
     The vocabulary keeps terms whose document frequency lies in
-    ``[min_df, max_df_ratio · N]`` — the classic band that drops
+    ``[2, 0.8 · N]`` — the classic band that drops
     hapaxes (noise, PII fragments) and boilerplate stop-terms at the
     two ends.  Each document then reports how much of its token mass
     the vocabulary covers: high-OOV docs are what a fixed tokenizer
@@ -1126,8 +1113,8 @@ def vocabulary_oov(
         .crossJoin(F.broadcast(ndocs))
     )
     vocab = dfreq.filter(
-        (F.col("df") >= min_df)
-        & (F.col("df") <= F.col("_n") * F.lit(max_df_ratio))
+        (F.col("df") >= 2)
+        & (F.col("df") <= F.col("_n") * F.lit(0.8))
     ).select("term", F.lit(True).alias("_in_vocab"))
     cov = tok.join(vocab, "term", "left")
     return cov.groupBy("doc_id").agg(
@@ -1143,9 +1130,8 @@ def vocabulary_oov(
     )
 
 
-def topv_coverage(df: DataFrame, group_col: str, text_col: str,
-                  v: int = 500) -> DataFrame:
-    """Tokenizer-budget coverage audit: build the top-``v`` vocabulary
+def topv_coverage(df: DataFrame, group_col: str, text_col: str) -> DataFrame:
+    """Tokenizer-budget coverage audit: build the top-500 vocabulary
     by corpus frequency (ties broken on the term, so the cut is
     deterministic), then report per ``group_col`` how many token
     occurrences the budget covers — the number that tells you whether
@@ -1153,7 +1139,7 @@ def topv_coverage(df: DataFrame, group_col: str, text_col: str,
     ``vocabulary_oov``, which bands by document frequency instead of
     truncating by budget).
 
-    Scale: term-keyed count with map-side combine; the top-v is a
+    Scale: term-keyed count with map-side combine; the top-500 is a
     TakeOrdered (never a full sort); coverage is one broadcast join of
     the corpus-sized token stream against the constant-size vocab +
     one group-keyed aggregate.  The rate is a single integer division
@@ -1165,7 +1151,7 @@ def topv_coverage(df: DataFrame, group_col: str, text_col: str,
     vocab = (
         tok.groupBy("term").agg(F.count(F.lit(1)).alias("cnt"))
         .orderBy(F.desc("cnt"), F.asc("term"))
-        .limit(v)
+        .limit(500)
         .select("term", F.lit(True).alias("in_vocab"))
     )
     return (

@@ -13,12 +13,12 @@ Beyond the reference's surface (it has no dedup); designed for the
   shingle, so cost is proportional to actual overlap, and a
   document-frequency cap drops degenerate stop-shingles (the classic
   scale trick);
-- SimHash: 64-bit signatures + pigeonhole chunk-join for Hamming
+- SimHash: 60-bit signatures + pigeonhole chunk-join for Hamming
   radius search — exact for radius <= chunks-1, no cross product.
 
-``portable=True`` (MinHash and SimHash alike) swaps the JVM-only
-xxhash64 for 60-bit md5-prefix hashes that any SQL engine reproduces
-bit-for-bit, so a DuckDB oracle can check the full output.
+SimHash, and MinHash with ``portable=True``, hash with 60-bit
+md5-prefix hashes that any SQL engine reproduces bit-for-bit, so a
+DuckDB oracle can check the full output.
 
 All operators are pure DataFrame pipelines (JVM-side, no Python UDFs,
 no driver collects).
@@ -120,11 +120,9 @@ def jaccard_pairs_exact(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    n: int = 5,
-    threshold: float = 0.5,
     max_doc_freq: "int | None" = None,
 ) -> DataFrame:
-    """Exact n-gram Jaccard similar pairs via posting-list join.
+    """Exact 5-gram Jaccard >= 0.5 similar pairs via posting-list join.
 
     ``jaccard = |A ∩ B| / (|A| + |B| - |A ∩ B|)`` computed from the
     count of shared shingles (inverted-index self-join), never
@@ -134,10 +132,10 @@ def jaccard_pairs_exact(
 
     Returns (doc_a, doc_b, jaccard) with doc_a < doc_b.
     """
-    pairs = _cooccurrence(df, id_col, text_col, n, max_doc_freq)
+    pairs = _cooccurrence(df, id_col, text_col, 5, max_doc_freq)
     jac = (F.col("common") * F.lit(1.0)) / (F.col("na") + F.col("nb") - F.col("common"))
     return (
-        pairs.filter(jac >= threshold)
+        pairs.filter(jac >= 0.5)
         .select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
     )
 
@@ -269,15 +267,9 @@ def duplicate_passages(
     )
 
 
-def containment_pairs_exact(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int = 5,
-    threshold: float = 0.8,
-) -> DataFrame:
-    """Directional shingle containment: ``|A ∩ B| / |A|`` — the
-    subset-duplicate metric.  A short document pasted inside a longer
+def containment_pairs_exact(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """Directional 5-gram shingle containment ``|A ∩ B| / |A|`` >= 0.8
+    — the subset-duplicate metric.  A short document pasted inside a longer
     one scores near 1.0 here while its Jaccard (normalized by the
     UNION) stays low, so this catches the quote/excerpt duplicates
     :func:`jaccard_pairs_exact` is blind to.  Same posting-list
@@ -288,7 +280,7 @@ def containment_pairs_exact(
     ``containment``-contained in doc_b's (directional — both
     orientations of a pair can appear).  Both directions come from the
     one doc_a < doc_b co-occurrence row of the pair."""
-    pairs = _cooccurrence(df, id_col, text_col, n, None)
+    pairs = _cooccurrence(df, id_col, text_col, 5, None)
     c = F.col("common") * F.lit(1.0)
     directions = F.array(
         F.struct(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"),
@@ -298,7 +290,7 @@ def containment_pairs_exact(
     )
     return (
         pairs.select(F.explode(directions).alias("d"))
-        .filter(F.col("d.cont") >= threshold)
+        .filter(F.col("d.cont") >= 0.8)
         .select(F.col("d.a").alias("doc_a"), F.col("d.b").alias("doc_b"),
                 F.round("d.cont", 6).alias("containment"))
     )
@@ -308,14 +300,13 @@ def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    n: int = 5,
     num_hashes: int = 24,
     rows_per_band: int = 1,
-    threshold: float = 0.5,
     portable: bool = False,
     verify: bool = True,
 ) -> DataFrame:
-    """MinHash + LSH near-duplicate pairs, verified by exact Jaccard.
+    """MinHash + LSH near-duplicate pairs of 5-gram shingle sets,
+    verified by exact Jaccard >= 0.5.
 
     ``num_hashes`` min-hashes per document, computed JVM-side in one
     tall (doc, i, min-hash) aggregate.  Band ``b`` holds the
@@ -335,13 +326,13 @@ def minhash_lsh_pairs(
     and LSH quality can be audited against the exact pair set.
 
     ``verify=True`` checks every candidate against exact shingle-set
-    Jaccard >= ``threshold`` (no false positives) and returns (doc_a,
+    Jaccard >= 0.5 (no false positives) and returns (doc_a,
     doc_b, jaccard); ``verify=False`` returns the unverified candidate
     pairs (doc_a, doc_b).  Always doc_a < doc_b, distinct.
     """
     if num_hashes % rows_per_band:
         raise ValueError("num_hashes must be divisible by rows_per_band")
-    sh = shingles(df, id_col, text_col, n)
+    sh = shingles(df, id_col, text_col)
     if verify:
         # shingles feed both the band build and the verify join
         sh = sh.localCheckpoint(eager=True)
@@ -388,14 +379,12 @@ def minhash_lsh_pairs(
     # AND the final verify join — without the cut the band self-join
     # (the expensive stage) would run twice; candidates are
     # band-bounded, so the materialization is small by construction
-    return _verify_jaccard(cand.localCheckpoint(eager=True), sh, threshold)
+    return _verify_jaccard(cand.localCheckpoint(eager=True), sh)
 
 
-def _verify_jaccard(cand: DataFrame, sh: DataFrame,
-                    threshold: float) -> DataFrame:
+def _verify_jaccard(cand: DataFrame, sh: DataFrame) -> DataFrame:
     """Candidate pairs (doc_a, doc_b) whose exact shingle-set Jaccard
-    over ``sh`` (doc, shingle) is >= ``threshold``, as (doc_a, doc_b,
-    jaccard)."""
+    over ``sh`` (doc, shingle) is >= 0.5, as (doc_a, doc_b, jaccard)."""
     # Build shingle SETS for CANDIDATE docs only — the full-corpus
     # collect_set shuffled every doc's shingle strings through the
     # aggregate even though the verify join immediately discarded all
@@ -418,7 +407,7 @@ def _verify_jaccard(cand: DataFrame, sh: DataFrame,
     return (
         cand.join(sets_a.withColumnRenamed("doc", "doc_a"), "doc_a")
         .join(sets_b, F.col("doc_b") == F.col("doc_b_key"))
-        .filter(jac >= threshold)
+        .filter(jac >= 0.5)
         .select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
     )
 
@@ -537,26 +526,22 @@ def duplicate_clusters(pairs: DataFrame, max_iterations: int = 20) -> DataFrame:
     return labels.select(F.col("node").alias("doc_id"), F.col("label").alias("cluster_id"))
 
 
-def simhash_fingerprints(df: DataFrame, id_col: str, text_col: str,
-                         bits: int = 64, portable: bool = False) -> DataFrame:
-    """SimHash per document: sign-sum of word-hash bits, weighted by
-    term frequency (each occurrence votes).
+def simhash_fingerprints(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """60-bit SimHash per document: sign-sum of word-hash bits,
+    weighted by term frequency (each occurrence votes).
 
-    ``portable=False`` (default): 64-bit xxhash64 word hashes — the
-    fast JVM path.  ``portable=True``: 60-bit md5-prefix hashes
+    The word hashes are 60-bit md5 prefixes
     (``conv(substr(md5(word),1,15), 16, 10)``) that any SQL engine
     reproduces bit-for-bit (DuckDB:
-    ``('0x' || substr(md5(w),1,15))::BIGINT``) — the oracled path;
-    60 bits keeps the value inside a signed 64-bit integer."""
+    ``('0x' || substr(md5(w),1,15))::BIGINT``), so an oracle checks
+    every fingerprint; 60 bits keeps the value inside a signed 64-bit
+    integer."""
+    bits = 60
     w = tokenize(df, text_col).select(
         F.col(id_col).alias("doc"), F.explode("words").alias("word")
     )
-    if portable:
-        bits = 60
-        word_hash = F.conv(F.substring(F.md5("word"), 1, 15), 16, 10) \
-            .cast("bigint")
-    else:
-        word_hash = F.xxhash64("word")
+    word_hash = F.conv(F.substring(F.md5("word"), 1, 15), 16, 10) \
+        .cast("bigint")
     w = w.withColumn("h", word_hash)
     sums = w.groupBy("doc").agg(
         *[
@@ -790,19 +775,15 @@ def hamming_band_selfcheck(fps: DataFrame, bits: int, max_hamming: int,
 
 
 def simhash_pairs(df: DataFrame, id_col: str, text_col: str,
-                  max_hamming: int = 3,
-                  portable: bool = False) -> DataFrame:
+                  max_hamming: int = 3) -> DataFrame:
     """Near-dup pairs with Hamming(simhash) <= max_hamming via the
-    exact pigeonhole chunk join (:func:`hamming_band_pairs`) over
-    64-bit fingerprints.  ``portable=True`` uses the 60-bit md5-prefix
-    fingerprint (see :func:`simhash_fingerprints`) so a SQL oracle can
-    verify the full output."""
-    bits = 60 if portable else 64
-    fps = simhash_fingerprints(df, id_col, text_col, bits=bits,
-                               portable=portable)
+    exact pigeonhole chunk join (:func:`hamming_band_pairs`) over the
+    60-bit md5-prefix fingerprints (see :func:`simhash_fingerprints`),
+    so a SQL oracle can verify the full output."""
+    fps = simhash_fingerprints(df, id_col, text_col)
     return hamming_band_pairs(
         fps.select("doc", F.col("simhash").alias("fp")),
-        bits=bits, max_hamming=max_hamming)
+        bits=60, max_hamming=max_hamming)
 
 
 def incremental_dedup(
@@ -882,11 +863,9 @@ def dedup_survivors(
     )
 
 
-def ngram_novelty(
-    df: DataFrame, id_col: str, text_col: str, n: int = 5
-) -> DataFrame:
-    """Per-document n-gram novelty: the fraction of a document's
-    distinct n-gram shingles that occur in NO other document.
+def ngram_novelty(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """Per-document 5-gram novelty: the fraction of a document's
+    distinct 5-gram shingles that occur in NO other document.
 
     The content-originality quality signal — low novelty means the
     document is mostly assembled from text that exists elsewhere in
@@ -903,7 +882,7 @@ def ngram_novelty(
     oracle-checkable.  Returns (doc_id, n_shingles, n_novel, novelty)
     with novelty rounded to 6 dp.
     """
-    sh = shingles(df, id_col, text_col, n=n).localCheckpoint(eager=True)
+    sh = shingles(df, id_col, text_col).localCheckpoint(eager=True)
     totals = sh.groupBy(F.col("doc").alias("doc_id")).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_shingles")
     )
@@ -932,15 +911,9 @@ def ngram_novelty(
     )
 
 
-def overlap_pair_signals(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int = 5,
-    jaccard_threshold: float = 0.5,
-    containment_threshold: float = 0.8,
-) -> DataFrame:
-    """Jaccard OR containment pairs from ONE posting-list pass.
+def overlap_pair_signals(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """5-gram Jaccard >= 0.5 OR containment >= 0.8 pairs from ONE
+    posting-list pass.
 
     Both set-overlap detectors derive from the same (doc_a, doc_b,
     common, |A|, |B|) co-occurrence tuple, so computing them separately
@@ -955,12 +928,12 @@ def overlap_pair_signals(
     c = F.col("common") * F.lit(1.0)
     jac = c / (F.col("na") + F.col("nb") - F.col("common"))
     keep = (
-        (jac >= jaccard_threshold)
-        | (c / F.col("na") >= containment_threshold)
-        | (c / F.col("nb") >= containment_threshold)
+        (jac >= 0.5)
+        | (c / F.col("na") >= 0.8)
+        | (c / F.col("nb") >= 0.8)
     )
     return (
-        _cooccurrence(df, id_col, text_col, n, None)
+        _cooccurrence(df, id_col, text_col, 5, None)
         .filter(keep)
         .select("doc_a", "doc_b")
     )
@@ -970,12 +943,11 @@ def tf_cosine_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    n: int = 3,
     threshold: float = 0.5,
     max_doc_freq: "int | None" = None,
 ) -> DataFrame:
-    """Weighted near-duplicate pairs: n-gram term-frequency cosine via
-    an inverted-index join.
+    """Weighted near-duplicate pairs: word 3-gram term-frequency cosine
+    via an inverted-index join.
 
     The multiset cousin of :func:`jaccard_pairs_exact` — instead of
     set overlap, each doc is a sparse TF vector over its word n-grams
@@ -998,7 +970,7 @@ def tf_cosine_pairs(
     # gram extraction is positional_grams' (shared tokenization, guard,
     # and doc-repartition); collapsing positions into counts IS the TF
     tf = (
-        positional_grams(df, id_col, text_col, k=n)
+        positional_grams(df, id_col, text_col, k=3)
         .groupBy("doc", "gram")
         .agg(F.count(F.lit(1)).cast("bigint").alias("tf"))
         .localCheckpoint(eager=True)
@@ -1062,14 +1034,8 @@ def jaccard_prefix_lists(sh: "DataFrame", threshold: float):
     return pref, counts
 
 
-def prefix_filter_jaccard_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int = 5,
-    threshold: float = 0.5,
-) -> DataFrame:
-    """Exact n-gram Jaccard pairs via PREFIX FILTERING (PPJoin family,
+def prefix_filter_jaccard_pairs(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """Exact 5-gram Jaccard >= 0.5 pairs via PREFIX FILTERING (PPJoin family,
     Xiao et al.): order every document's shingles by a GLOBAL rarity
     order (document frequency asc, shingle asc), keep only the first
     ``p = n_doc - ceil(t * n_doc) + 1`` as the candidate-generating
@@ -1089,8 +1055,8 @@ def prefix_filter_jaccard_pairs(
     from pyspark.sql import Window
 
     # eager localCheckpoint (module docstring: materialization pattern)
-    sh = shingles(df, id_col, text_col, n).localCheckpoint(eager=True)
-    pref, _counts = jaccard_prefix_lists(sh, threshold)
+    sh = shingles(df, id_col, text_col).localCheckpoint(eager=True)
+    pref, _counts = jaccard_prefix_lists(sh, 0.5)
     # the prefix relations are corpus-sized, and the checkpointed
     # plans' estimated stats can sneak under the broadcast threshold —
     # at sf10 Spark tried to broadcast one and blew the 8g driver.
@@ -1132,20 +1098,19 @@ def prefix_filter_jaccard_pairs(
     jac = (common * F.lit(1.0)
            / (F.size("sa") + F.size("sb") - common))
     return (cand.hint("merge").join(sa, "doc_a").join(sb, "doc_b")
-            .filter(jac >= threshold)
+            .filter(jac >= 0.5)
             .select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard")))
 
 
 def cross_snapshot_containment(new_df: DataFrame,
                                prior_fingerprints: DataFrame,
                                id_col: str, text_col: str,
-                               n: int = 5,
                                store_bloom: "DataFrame | None" = None,
                                bloom_bits: "int | None" = None,
                                bloom_hashes: int = 5,
                                bloom_portable: bool = True) -> DataFrame:
     """Incremental (cross-snapshot) dedup: per-NEW-document containment
-    of its shingle set in a PRIOR-corpus fingerprint store.
+    of its 5-gram shingle set in a PRIOR-corpus fingerprint store.
 
     This is the production shape of crawl-over-crawl dedup at 100 TB:
     the prior corpus is never re-shingled — its distinct shingle set
@@ -1182,7 +1147,7 @@ def cross_snapshot_containment(new_df: DataFrame,
     """
     # eager localCheckpoint (module docstring: materialization
     # pattern) — the totals aggregate and the store join both read it
-    sh = shingles(new_df, id_col, text_col, n).localCheckpoint(eager=True)
+    sh = shingles(new_df, id_col, text_col).localCheckpoint(eager=True)
     totals = sh.groupBy(F.col("doc").alias("doc_id")).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_shingles"))
     probe = sh

@@ -30,41 +30,41 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 INIT_MICRO = 1_000_000
+#: iterations and damping percentage of :func:`pagerank_fixed_point`
+#: and its DuckDB twin :func:`pagerank_sql`
+PAGERANK_ITERS, DAMPING_PCT = 4, 85
+#: hop bound of :func:`bfs_sql` and the default of :func:`bfs_hops`
+BFS_HOPS = 3
 
 # rounded integer division on non-negative longs: q = a div b, +1 when
 # the remainder is at least half of b (half away from zero)
 _RDIV = "((({a}) div ({b})) + (CASE WHEN 2 * (({a}) % ({b})) >= ({b}) THEN 1 ELSE 0 END))"
 
 
-def pagerank_fixed_point(
-    nodes: DataFrame,
-    edges: DataFrame,
-    n_iter: int = 4,
-    damping_pct: int = 85,
-) -> DataFrame:
+def pagerank_fixed_point(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     """``nodes``: (nt string, id long).  ``edges``: (src_t, src,
     dst_t, dst) — directed; emit both directions for an undirected
-    graph.  Returns (nt, id, rank_micro) after ``n_iter`` exact
-    iterations."""
+    graph.  Returns (nt, id, rank_micro) after ``PAGERANK_ITERS``
+    exact iterations at ``DAMPING_PCT``."""
     deg = edges.groupBy("src_t", "src").agg(
         F.count(F.lit(1)).alias("deg"))
     # cache the degree-annotated edge list: the loop reuses it every
     # iteration, and without this the edge-building lineage (often a
-    # join+distinct over fact tables) re-executes n_iter times —
+    # join+distinct over fact tables) re-executes every iteration —
     # measured 23.6 s → ~8 s at sf1 for the co-purchase query
     e = edges.join(deg, ["src_t", "src"]).persist()
     e.count()  # materialize before the loop
 
-    base = (INIT_MICRO * (100 - damping_pct)) // 100
+    base = (INIT_MICRO * (100 - DAMPING_PCT)) // 100
     r = nodes.select(
         "nt", "id", F.lit(INIT_MICRO).cast("long").alias("rank_micro"))
 
     contrib = F.expr(_RDIV.format(a="rank_micro", b="deg"))
     damped = F.expr(
         str(base) + " + "
-        + _RDIV.format(a=f"{damping_pct} * inflow", b="100"))
+        + _RDIV.format(a=f"{DAMPING_PCT} * inflow", b="100"))
 
-    for _ in range(n_iter):
+    for _ in range(PAGERANK_ITERS):
         flow = (
             e.join(
                 r.select(F.col("nt").alias("src_t"),
@@ -251,7 +251,7 @@ def bfs_hops(
     nodes: DataFrame,
     edges: DataFrame,
     seeds: DataFrame,
-    max_hops: int = 3,
+    max_hops: int = BFS_HOPS,
 ) -> DataFrame:
     """Multi-source BFS hop histogram: minimum hop distance from any
     seed, bounded at ``max_hops`` frontier expansions, reported as
@@ -301,9 +301,9 @@ def bfs_hops(
     )
 
 
-def bfs_sql(seed_pred: str, max_hops: int = 3) -> str:
-    """Unrolled DuckDB twin of :func:`bfs_hops` over the co-purchase
-    graph (same node/edge CTEs as :func:`pagerank_sql`);
+def bfs_sql(seed_pred: str) -> str:
+    """Unrolled DuckDB twin of :func:`bfs_hops` (``BFS_HOPS`` hops) over
+    the co-purchase graph (same node/edge CTEs as :func:`pagerank_sql`);
     ``seed_pred`` filters the customer side, e.g. ``c_custkey % 50 =
     0``."""
     parts = [
@@ -324,7 +324,7 @@ def bfs_sql(seed_pred: str, max_hops: int = 3) -> str:
   FROM customer WHERE {seed_pred}
 )""",
     ]
-    for t in range(max_hops):
+    for t in range(BFS_HOPS):
         parts.append(f"""d{t + 1} AS MATERIALIZED (
   SELECT nt, id, MIN(hop) AS hop FROM (
     SELECT nt, id, hop FROM d{t}
@@ -338,15 +338,16 @@ def bfs_sql(seed_pred: str, max_hops: int = 3) -> str:
         + f"""
 SELECT CAST(coalesce(d.hop, -1) AS BIGINT) AS hop,
        CAST(COUNT(*) AS BIGINT) AS n_nodes
-FROM nodes n LEFT JOIN d{max_hops} d ON d.nt = n.nt AND d.id = n.id
+FROM nodes n LEFT JOIN d{BFS_HOPS} d ON d.nt = n.nt AND d.id = n.id
 GROUP BY 1 ORDER BY 1"""
     )
 
 
-def pagerank_sql(n_iter: int = 4, damping_pct: int = 85) -> str:
-    """Unrolled DuckDB twin over the co-purchase graph (customers ↔
-    suppliers linked through order lineitems, both directions)."""
-    base = (INIT_MICRO * (100 - damping_pct)) // 100
+def pagerank_sql() -> str:
+    """Unrolled DuckDB twin of :func:`pagerank_fixed_point` over the
+    co-purchase graph (customers ↔ suppliers linked through order
+    lineitems, both directions)."""
+    base = (INIT_MICRO * (100 - DAMPING_PCT)) // 100
     rdiv = "(({a}) // ({b})) + (CASE WHEN 2 * (({a}) % ({b})) >= ({b}) THEN 1 ELSE 0 END)"
     parts = [
         """nodes AS MATERIALIZED (
@@ -369,7 +370,7 @@ def pagerank_sql(n_iter: int = 4, damping_pct: int = 85) -> str:
   SELECT nt, id, CAST({INIT_MICRO} AS BIGINT) AS rank_micro FROM nodes
 )""",
     ]
-    for t in range(n_iter):
+    for t in range(PAGERANK_ITERS):
         c = rdiv.format(a="r.rank_micro", b="d.deg")
         parts.append(f"""flow{t} AS MATERIALIZED (
   SELECT e.dst_t AS nt, e.dst AS id, SUM({c}) AS inflow
@@ -378,7 +379,7 @@ def pagerank_sql(n_iter: int = 4, damping_pct: int = 85) -> str:
   JOIN deg d ON d.src_t = e.src_t AND d.src = e.src
   GROUP BY 1, 2
 )""")
-        damped = rdiv.format(a=f"{damping_pct} * f.inflow", b="100")
+        damped = rdiv.format(a=f"{DAMPING_PCT} * f.inflow", b="100")
         parts.append(f"""r{t + 1} AS MATERIALIZED (
   SELECT n.nt, n.id,
          CAST(coalesce({base} + ({damped}), {base}) AS BIGINT) AS rank_micro
@@ -386,7 +387,7 @@ def pagerank_sql(n_iter: int = 4, damping_pct: int = 85) -> str:
 )""")
     return (
         "WITH " + ",\n".join(parts)
-        + f"\nSELECT nt, id, rank_micro FROM r{n_iter}"
+        + f"\nSELECT nt, id, rank_micro FROM r{PAGERANK_ITERS}"
     )
 
 

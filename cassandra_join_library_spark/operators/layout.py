@@ -53,15 +53,15 @@ def zorder_value(cols: "list[Column | str]", bits: int = 16) -> Column:
     return reduce(lambda a, x: a.bitwiseOR(x), parts).alias("zval")
 
 
-def zorder_value_sql(cols: "list[str]", bits: int = 16) -> str:
-    """The same interleave as ``zorder_value`` as portable SQL text
-    (DuckDB/ANSI bit operators) — used by the oracle so both engines
-    evaluate the identical formula."""
+def zorder_value_sql(cols: "list[str]") -> str:
+    """The same interleave as ``zorder_value``, over the low 8 bits, as
+    portable SQL text (DuckDB/ANSI bit operators) — used by the oracle
+    so both engines evaluate the identical formula."""
     ndims = len(cols)
     parts = [
         f"(((CAST({c} AS BIGINT) >> {b}) & 1) << {b * ndims + d})"
         for d, c in enumerate(cols)
-        for b in range(bits)
+        for b in range(8)
     ]
     return " | ".join(parts)
 
@@ -69,10 +69,9 @@ def zorder_value_sql(cols: "list[str]", bits: int = 16) -> str:
 def zorder_layout(
     df: DataFrame,
     cols: "list[Column | str]",
-    bits: int = 16,
     num_partitions: "int | None" = None,
 ) -> DataFrame:
-    """Cluster ``df`` along the Z-curve of ``cols``.
+    """Cluster ``df`` along the Z-curve of the low 16 bits of ``cols``.
 
     Range-partitions on the Z-value (each output file covers a compact
     Z-range, i.e. a compact hyper-rectangle-ish region of the key
@@ -90,7 +89,7 @@ def zorder_layout(
     key need not survive the write; parquet min-max stats on the
     REAL columns are what pruning reads).
     """
-    z = zorder_value(cols, bits)
+    z = zorder_value(cols, 16)
     zcol = "__cjl_zval"
     with_z = df.withColumn(zcol, z)
     if num_partitions:
@@ -100,12 +99,10 @@ def zorder_layout(
     return parted.sortWithinPartitions(zcol).drop(zcol)
 
 
-def zonemap_report(df: DataFrame, key_col: str, val_col: str,
-                   bucket_size: int = 64,
-                   lo: int = 450, hi: int = 700) -> DataFrame:
-    """Zone-map / data-skipping report: per key-range bucket (the
-    stand-in for a parquet row-group or file), the min/max of
-    ``val_col`` plus whether a ``val BETWEEN lo AND hi`` scan could
+def zonemap_report(df: DataFrame, key_col: str, val_col: str) -> DataFrame:
+    """Zone-map / data-skipping report: per key-range bucket of 64 keys
+    (the stand-in for a parquet row-group or file), the min/max of
+    ``val_col`` plus whether a ``val BETWEEN 450 AND 700`` scan could
     PRUNE the whole bucket without reading it — the footer-statistics
     arithmetic every columnar reader runs, surfaced as a layout
     diagnostic (a table sorted on ``val_col`` prunes almost
@@ -114,7 +111,7 @@ def zonemap_report(df: DataFrame, key_col: str, val_col: str,
 
     Scale: one hash aggregate keyed on the bucket id — bucket-count
     output, map-side combined, no shuffle beyond it."""
-    b = F.expr(f"{key_col} div {bucket_size}")
+    b = F.expr(f"{key_col} div 64")
     return (
         df.groupBy(b.alias("bucket"))
         .agg(
@@ -127,7 +124,7 @@ def zonemap_report(df: DataFrame, key_col: str, val_col: str,
             F.col("n_rows").cast("bigint").alias("n_rows"),
             F.col("mn").cast("bigint").alias("min_val"),
             F.col("mx").cast("bigint").alias("max_val"),
-            ((F.col("mx") < lo) | (F.col("mn") > hi)).alias("prunable"),
+            ((F.col("mx") < 450) | (F.col("mn") > 700)).alias("prunable"),
         )
     )
 

@@ -128,11 +128,16 @@ def _pcm_samples(df: DataFrame, id_col: str) -> DataFrame:
     )
 
 
-def _group_variant_payloads(df: DataFrame, id_col: str, n_groups: int,
+#: content groups of the group/variant fixtures: g = id % CONTENT_GROUPS
+CONTENT_GROUPS = 100
+
+
+def _group_variant_payloads(df: DataFrame, id_col: str,
                             payload: "F.Column") -> DataFrame:
     """Shared fixture-synthesis dedup for the content-group
     synthesizers (BMP pixels, WAV PCM): payload content depends only
-    on (g = id % n_groups, v = (id // n_groups) % 3), so build the
+    on (g = id % n_groups, v = (id // n_groups) % 3), n_groups =
+    ``CONTENT_GROUPS``, so build the
     distinct byte strings once and broadcast-join them back instead of
     running the byte build per doc (measured 7 s -> ~0.5 s for 5k docs
     at sf0.1).  ``payload`` is a Column over the (g, v) key frame.
@@ -148,6 +153,7 @@ def _group_variant_payloads(df: DataFrame, id_col: str, n_groups: int,
     real corpora read real bytes — so its cost must not drown the
     per-item decode+fingerprint the queries measure.
     Returns (id, payload)."""
+    n_groups = CONTENT_GROUPS
     keyed = df.select(
         F.col(id_col),
         (F.col(id_col) % n_groups).alias("g"),
@@ -246,9 +252,9 @@ def _map_docs(df: DataFrame, id_col: str, text_col: str, per_doc,
     return src.mapInPandas(batches, schema)
 
 
-def resize_images(df: DataFrame, id_col: str, text_col: str,
-                  target_w: int = 224, target_h: int = 224) -> DataFrame:
-    """Image-resize step over opaque payloads via ``mapInPandas``.
+def resize_images(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """Image-resize step to 224x224 over opaque payloads via
+    ``mapInPandas``.
 
     REAL CODEC NOT AVAILABLE HERE — production swaps the body for
     ``PIL.Image.open(io.BytesIO(payload)).resize(...)``; the Spark
@@ -258,28 +264,28 @@ def resize_images(df: DataFrame, id_col: str, text_col: str,
     def letterbox(i: int, t: str) -> list:
         _, w, h, _, _ = _fake_decode(i, t)
         w, h = max(w, 1), max(h, 1)
-        # integer letterbox: scale = min(tw/w, th/h) as a ratio
-        if target_w * h <= target_h * w:
-            num, den = target_w, w
+        # integer letterbox: scale = 224 / max(w, h) as a ratio
+        if h <= w:
+            num, den = 224, w
         else:
-            num, den = target_h, h
+            num, den = 224, h
         return [(i, w * num // den, h * num // den, num, den)]
 
     return _map_docs(df, id_col, text_col, letterbox, RESIZED_SCHEMA)
 
 
-def sample_frames(df: DataFrame, id_col: str, text_col: str,
-                  every_n: int = 10, max_frames: int = 8) -> DataFrame:
-    """Video frame-sampling step: one output row per sampled frame.
+def sample_frames(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """Video frame-sampling step: one output row per sampled frame, at
+    most 8.
 
     REAL CODEC NOT AVAILABLE HERE — production decodes with pyav/ffmpeg;
-    the stub treats every ``every_n`` bytes of payload as a "frame" and
+    the stub treats every 10 bytes of payload as a "frame" and
     emits a deterministic checksum per frame.  Demonstrates the 1→N
     row-expanding UDF shape (mapInPandas yields more rows than input)."""
     def frames(i: int, t: str) -> list:
         data = t.encode("utf-8")
-        n_frames = min(max_frames, max(len(data) // every_n, 0))
-        rows = [(i, f, sum(data[f * every_n:(f + 1) * every_n]) % 997)
+        n_frames = min(8, len(data) // 10)
+        rows = [(i, f, sum(data[f * 10:(f + 1) * 10]) % 997)
                 for f in range(n_frames)]
         if n_frames == 0 and len(data):
             # short payload: emit one whole-payload frame
@@ -347,8 +353,7 @@ def synthesize_bmp(df: DataFrame, id_col: str) -> DataFrame:
     return _with_header(df, id_col, wid, hei, header_hex)
 
 
-def parse_bmp_metadata(df: DataFrame, id_col: str,
-                       payload_col: str = "payload") -> DataFrame:
+def parse_bmp_metadata(df: DataFrame, id_col: str) -> DataFrame:
     """REAL binary-format decode with zero codec libraries: parse the
     BMP header fields (magic, width, height, bits-per-pixel) from the
     payload bytes by offset arithmetic over the hex view — pure
@@ -357,9 +362,9 @@ def parse_bmp_metadata(df: DataFrame, id_col: str,
     and NULL fields instead of an error (corrupt inputs are data, not
     exceptions, at 100 TB).  Returns (id, is_bmp, bmp_width,
     bmp_height, bpp)."""
-    hx = F.hex(F.col(payload_col))
+    hx = F.hex(F.col("payload"))
 
-    is_bmp = (F.octet_length(payload_col) >= 54) & \
+    is_bmp = (F.octet_length("payload") >= 54) & \
         (F.substring(hx, 1, 4) == F.lit("424D"))
     guard = lambda c: F.when(is_bmp, c)
     return df.select(
@@ -371,16 +376,15 @@ def parse_bmp_metadata(df: DataFrame, id_col: str,
     )
 
 
-def synthesize_bmp_pixels(df: DataFrame, id_col: str,
-                          n_groups: int = 200) -> DataFrame:
+def synthesize_bmp_pixels(df: DataFrame, id_col: str) -> DataFrame:
     """Spec-conformant 8x8 24bpp BMP with a REAL pixel-data chunk
     (:func:`synthesize_bmp` stops at the header): 246 bytes = 54-byte
     header + 64 grayscale pixels (B=G=R=luma), rows already 4-byte
     aligned (8 px x 3 B = 24).  Luma is a deterministic function of a
     CONTENT GROUP so duplicate and near-duplicate images exist:
 
-      g = id % n_groups                    (the image's visual content)
-      v = (id // n_groups) % 3             (variant within the group)
+      g = id % 100                         (the image's visual content)
+      v = (id // 100) % 3                  (variant within the group)
       luma(i) = (g*37 + i*29) % 160 + 40   (base image, i = 0..63)
       v=1: pixel 0 luma += 56              (small retouch -> near-dup)
       v=2: pixels 0..3 luma += 56 each     (heavier edit -> distinct)
@@ -420,7 +424,7 @@ def synthesize_bmp_pixels(df: DataFrame, id_col: str,
         F.repeat(F.lpad(F.hex(luma(i)), 2, "0"), 3) for i in range(64)
     ])
     return _group_variant_payloads(
-        df, id_col, n_groups, F.unhex(F.concat(header_hex, pixels_hex)))
+        df, id_col, F.unhex(F.concat(header_hex, pixels_hex)))
 
 
 def bmp_ahash(df: DataFrame, id_col: str) -> DataFrame:
@@ -500,17 +504,16 @@ def synthesize_wav(df: DataFrame, id_col: str) -> DataFrame:
     )
 
 
-def parse_wav_metadata(df: DataFrame, id_col: str,
-                       payload_col: str = "payload") -> DataFrame:
+def parse_wav_metadata(df: DataFrame, id_col: str) -> DataFrame:
     """Parse RIFF/WAV header fields (channels, sample rate, bits per
     sample) from the payload bytes — same zero-library offset
     arithmetic as :func:`parse_bmp_metadata`; non-WAV payloads come
     back ``is_wav=false`` with NULL fields.  Returns (id, is_wav,
     wav_channels, wav_sample_rate, wav_bps)."""
-    hx = F.hex(F.col(payload_col))
+    hx = F.hex(F.col("payload"))
 
     is_wav = (
-        (F.octet_length(payload_col) >= 44)
+        (F.octet_length("payload") >= 44)
         & (F.substring(hx, 1, 8) == F.lit("52494646"))
         & (F.substring(hx, 17, 8) == F.lit("57415645"))
     )
@@ -588,8 +591,7 @@ def synthesize_wav_pcm_groups(df: DataFrame, id_col: str) -> DataFrame:
     # sample range (-80..119) keeps s + 65536 positive, so one mod
     # suffices
     u16 = f"(({base} + {bump}) + 65536) % 65536"
-    return _group_variant_payloads(
-        df, id_col, 100, _mono_wav(u16, PCM_FP_SAMPLES))
+    return _group_variant_payloads(df, id_col, _mono_wav(u16, PCM_FP_SAMPLES))
 
 
 def pcm_energy_diff_fingerprint(df: DataFrame, id_col: str) -> DataFrame:
@@ -719,14 +721,13 @@ def synthesize_png(df: DataFrame, id_col: str) -> DataFrame:
     )
 
 
-def parse_png_metadata(df: DataFrame, id_col: str,
-                       payload_col: str = "payload") -> DataFrame:
+def parse_png_metadata(df: DataFrame, id_col: str) -> DataFrame:
     """Parse PNG IHDR fields (width, height, bit depth, color type)
     from the payload bytes — BIG-endian offset arithmetic, same
     zero-library pattern as the BMP/WAV parsers; non-PNG payloads
     come back ``is_png=false`` with NULL fields.  Returns (id,
     is_png, png_width, png_height, bit_depth, color_type)."""
-    hx = F.hex(F.col(payload_col))
+    hx = F.hex(F.col("payload"))
 
     def be_at(byte_off, nbytes):  # 1-based byte offset, big-endian
         return F.conv(
@@ -734,7 +735,7 @@ def parse_png_metadata(df: DataFrame, id_col: str,
         ).cast("bigint")
 
     is_png = (
-        (F.octet_length(payload_col) >= 33)
+        (F.octet_length("payload") >= 33)
         & (F.substring(hx, 1, 16) == F.lit("89504E470D0A1A0A"))
         & (F.substring(hx, 25, 8) == F.lit("49484452"))
     )
@@ -749,10 +750,9 @@ def parse_png_metadata(df: DataFrame, id_col: str,
     )
 
 
-def pcm_silence_runs(df: DataFrame, id_col: str,
-                     threshold: int = 4096) -> DataFrame:
+def pcm_silence_runs(df: DataFrame, id_col: str) -> DataFrame:
     """Silence segmentation over the WAV data chunk: run-length
-    statistics of samples with ``|v| < threshold`` — count of silent
+    statistics of samples with ``|v| < 4096`` — count of silent
     samples, number of silence runs, and the longest run, straight
     from the bytes (the voice-activity-detection front end of an audio
     curation pipeline, minus the codec).
@@ -767,17 +767,16 @@ def pcm_silence_runs(df: DataFrame, id_col: str,
     pcm = _pcm_samples(df, id_col)
     # cur' = sil ? cur + 1 : 0 appears twice (cur and best); the fold
     # state is 4 small integers regardless of sample count
-    cur_new = (f"(CASE WHEN abs(v) < {threshold} "
-               "THEN acc.cur + 1 ELSE 0 END)")
+    cur_new = "(CASE WHEN abs(v) < 4096 THEN acc.cur + 1 ELSE 0 END)"
     agg = (
         "aggregate(_sm, "
         " named_struct('cur', 0L, 'best', 0L, 'runs', 0L, 'tot', 0L), "
         " (acc, v) -> named_struct("
         f"  'cur', {cur_new}, "
         f"  'best', greatest(acc.best, {cur_new}), "
-        f"  'runs', acc.runs + (CASE WHEN abs(v) < {threshold} "
+        "  'runs', acc.runs + (CASE WHEN abs(v) < 4096 "
         "            AND acc.cur = 0 THEN 1 ELSE 0 END), "
-        f"  'tot', acc.tot + (CASE WHEN abs(v) < {threshold} "
+        "  'tot', acc.tot + (CASE WHEN abs(v) < 4096 "
         "            THEN 1 ELSE 0 END)))"
     )
     return (
@@ -1175,7 +1174,6 @@ _MP4_MDAT = 1835295092   # u32('mdat')
 
 
 def synthesize_mp4_keyframes(df: DataFrame, id_col: str,
-                             n_groups: int = 100,
                              n_frames: int = 4) -> DataFrame:
     """ISO-BMFF (MP4) streams whose `mdat` carries REAL keyframe
     pixels: a variable-size `ftyp` (0-2 extra compatible brands), an
@@ -1187,8 +1185,8 @@ def synthesize_mp4_keyframes(df: DataFrame, id_col: str,
     model as the image fixture (synthesize_bmp_pixels), extended with
     a frame axis so video-level semantics exist:
 
-      g = id % n_groups                (the clip's visual content)
-      v = (id // n_groups) % 3         (variant within the group)
+      g = id % 100                     (the clip's visual content)
+      v = (id // 100) % 3              (variant within the group)
       luma(f, i) = md5("g_f_i")[:2] % 160 + 40
                                        (hex-prefix of the md5 of the
                                         "g_f_i" string — any SQL
@@ -1251,7 +1249,7 @@ def synthesize_mp4_keyframes(df: DataFrame, id_col: str,
         frames_hex,
     )
     return _group_variant_payloads(
-        df, id_col, n_groups, F.unhex(F.concat(ftyp, free, mdat)))
+        df, id_col, F.unhex(F.concat(ftyp, free, mdat)))
 
 
 def mp4_keyframe_ahash(df: DataFrame, id_col: str,
@@ -1369,8 +1367,7 @@ def synthesize_wav_pcm_snippets(df: DataFrame, id_col: str) -> DataFrame:
             f"THEN {borrowed} ELSE {own} END)")
     bump = "(CASE WHEN v = 1 AND i IN (14, 15) THEN 40 ELSE 0 END)"
     u16 = f"(({base} + {bump}) + 65536) % 65536"
-    return _group_variant_payloads(
-        df, id_col, 100, _mono_wav(u16, 305))
+    return _group_variant_payloads(df, id_col, _mono_wav(u16, 305))
 
 
 def pcm_window_fingerprints(df: DataFrame, id_col: str) -> DataFrame:

@@ -124,12 +124,11 @@ def value_outliers(
     id_col: str,
     group_col: str,
     value_col: str,
-    n_sigma: float = 3.0,
 ) -> DataFrame:
-    """Per-group n-sigma outlier detection (population moments).
+    """Per-group 3-sigma outlier detection (population moments).
 
     Data-quality staple: flag rows whose value deviates more than
-    ``n_sigma`` standard deviations from their group's mean.  The
+    3 standard deviations from their group's mean.  The
     moments are DECIMAL-exact (values rounded to 6 dp, sums exact, so
     mean/std are identical under any partitioning and in the SQL
     oracle); the per-group stats table is one row per group —
@@ -163,7 +162,7 @@ def value_outliers(
     # raises DIVIDE_BY_ZERO under ANSI mode (the default on Spark 4)
     return (
         df.join(F.broadcast(stats), group_col)
-        .filter((F.col("_std") > 0) & (F.abs(z) > n_sigma))
+        .filter((F.col("_std") > 0) & (F.abs(z) > 3.0))
         .select(
             F.col(id_col),
             F.col(group_col),
@@ -200,14 +199,13 @@ def mad_outliers(
     id_col: str,
     group_col: str,
     value_col: str,
-    k: float = 3.5,
 ) -> DataFrame:
     """Per-group robust outliers via median absolute deviation.
 
     The breakdown-resistant twin of :func:`value_outliers`: moments
     move with the outliers they hunt, medians don't.  Flags rows with
-    ``|0.6745 · (x − median) / MAD| > k`` (0.6745 ≈ Φ⁻¹(0.75) makes
-    the score ≈ a z-score under normality; k=3.5 is the standard
+    ``|0.6745 · (x − median) / MAD| > 3.5`` (0.6745 ≈ Φ⁻¹(0.75) makes
+    the score ≈ a z-score under normality; 3.5 is the standard
     Iglewicz–Hoban cut).  Values and both medians are rounded to 6 dp
     so the double arithmetic downstream is identical in the oracle.
 
@@ -237,7 +235,7 @@ def mad_outliers(
     # robust-scale information — skip them rather than emit garbage.
     return (
         dev.join(F.broadcast(mad), group_col)
-        .filter((F.col("_mad") > 0) & (F.abs(z) > k))
+        .filter((F.col("_mad") > 0) & (F.abs(z) > 3.5))
         .select(
             F.col(id_col),
             F.col(group_col),
@@ -247,11 +245,10 @@ def mad_outliers(
     )
 
 
-def k_anonymity(df: DataFrame, quasi_cols: "list[str]",
-                k: int = 5) -> DataFrame:
-    """K-anonymity audit over quasi-identifier columns: every
+def k_anonymity(df: DataFrame, quasi_cols: "list[str]") -> DataFrame:
+    """5-anonymity audit over quasi-identifier columns: every
     equivalence class (distinct quasi-id combination) with its size,
-    an ``at_risk`` flag (size < k), and the share of the table's rows
+    an ``at_risk`` flag (size < 5), and the share of the table's rows
     it represents — the release-gate report a privacy review consumes
     before publishing a dataset.
 
@@ -264,19 +261,19 @@ def k_anonymity(df: DataFrame, quasi_cols: "list[str]",
     return classes.select(
         *quasi_cols,
         F.col("n").cast("bigint").alias("class_size"),
-        (F.col("n") < k).alias("at_risk"),
+        (F.col("n") < 5).alias("at_risk"),
         (F.col("n").cast("double") / F.lit(total)).alias("row_share"),
     )
 
 
 def l_diversity(df: DataFrame, quasi_cols: "list[str]",
-                sensitive_col: str, l: int = 3) -> DataFrame:
+                sensitive_col: str) -> DataFrame:
     """L-diversity audit — the refinement of :func:`k_anonymity` that
     catches homogeneity attacks: an equivalence class can be large
     (k-anonymous) yet still leak if every member shares the same
     SENSITIVE value.  Per quasi-identifier class: row count, distinct
     sensitive values, the dominant value's share, and an ``at_risk``
-    flag (diversity < l).
+    flag (diversity < 3).
 
     Scale: two hash aggregations on the quasi-id(+sensitive) key, both
     map-side combined; the per-class join is class-cardinality sized,
@@ -295,7 +292,7 @@ def l_diversity(df: DataFrame, quasi_cols: "list[str]",
         F.col("l_diversity").cast("bigint").alias("l_diversity"),
         (F.col("dom").cast("double") / F.col("class_size"))
         .alias("dominant_share"),
-        (F.col("l_diversity") < l).alias("at_risk"),
+        (F.col("l_diversity") < 3).alias("at_risk"),
     )
 
 
@@ -336,9 +333,8 @@ def snapshot_drift(a: DataFrame, b: DataFrame,
     )
 
 
-def key_skew_report(df: DataFrame, key_cols: "list[str]",
-                    top: int = 10) -> DataFrame:
-    """Join-planning skew diagnostic: the ``top`` heaviest key values
+def key_skew_report(df: DataFrame, key_cols: "list[str]") -> DataFrame:
+    """Join-planning skew diagnostic: the 10 heaviest key values
     with their row counts, share of the table, and the ratio to the
     MEAN key weight (the salting trigger — a ratio of b means the hot
     key's partition does b× the average work).  Two bounded aggregates
@@ -357,7 +353,7 @@ def key_skew_report(df: DataFrame, key_cols: "list[str]",
             .alias("skew_ratio"),
         )
         .orderBy(F.desc("rows"), *key_cols)
-        .limit(top)
+        .limit(10)
     )
     return ranked
 

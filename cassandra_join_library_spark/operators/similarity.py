@@ -34,17 +34,16 @@ def _dot(a: Column, b: Column) -> Column:
     )
 
 
-def with_norm(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
-    v = _as_double(vec_col)
+def with_norm(df: DataFrame) -> DataFrame:
+    v = _as_double("embedding")
     return df.withColumn("_vec", v).withColumn("_norm", F.sqrt(_dot(v, v)))
 
 
-def _id_vec_norm(df: DataFrame, id_col: str, vec_col: str,
-                 *extra: Column) -> DataFrame:
-    """``df`` as ``(id, vec, norm, *extra)``: its id, its vector as
-    doubles and the vector's norm."""
-    return with_norm(df, vec_col).select(
-        F.col(id_col).alias("id"), F.col("_vec").alias("vec"),
+def _id_vec_norm(df: DataFrame, *extra: Column) -> DataFrame:
+    """``df`` as ``(id, vec, norm, *extra)``: its ``vec_id``, its
+    ``embedding`` as doubles and the vector's norm."""
+    return with_norm(df).select(
+        F.col("vec_id").alias("id"), F.col("_vec").alias("vec"),
         F.col("_norm").alias("norm"), *extra,
     )
 
@@ -61,11 +60,10 @@ def cosine(a_vec: Column, b_vec: Column, a_norm: Column, b_norm: Column) -> Colu
 def cosine_topk_bruteforce(
     corpus: DataFrame,
     queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 5,
 ) -> DataFrame:
-    """Exact top-k cosine neighbors for each query vector.
+    """Exact top-k cosine neighbors for each query vector (``vec_id``,
+    ``embedding``).
 
     The (small) query side is broadcast against the corpus — a map-only
     pass over the corpus with per-partition partial top-k folded by the
@@ -73,7 +71,7 @@ def cosine_topk_bruteforce(
     for a total order.  Returns (query_id, neighbor_id, rank, cosine_sim).
     """
     scored = (
-        _scored_against_queries(corpus, queries, id_col, vec_col)
+        _scored_against_queries(corpus, queries)
         # zero-norm vectors (NULL cosine, see cosine()) are not
         # neighbors — drop them before ranking so they never pad the
         # top-k tail
@@ -83,12 +81,11 @@ def cosine_topk_bruteforce(
         "query_id", "neighbor_id", "rank", "cosine_sim")
 
 
-def _side(df: DataFrame, id_col: str, vec_col: str, id_as: str,
-          prefix: str, *extra: Column) -> DataFrame:
+def _side(df: DataFrame, id_as: str, prefix: str, *extra: Column) -> DataFrame:
     """``df`` as ``(id_as, *extra, <prefix>_vec, <prefix>_norm)``: its
-    id, its vector as doubles and the vector's norm."""
-    return with_norm(df, vec_col).select(
-        F.col(id_col).alias(id_as), *extra,
+    ``vec_id``, its ``embedding`` as doubles and the vector's norm."""
+    return with_norm(df).select(
+        F.col("vec_id").alias(id_as), *extra,
         F.col("_vec").alias(f"{prefix}_vec"),
         F.col("_norm").alias(f"{prefix}_norm"),
     )
@@ -103,13 +100,12 @@ def _qc_cosine() -> Column:
     )
 
 
-def _scored_against_queries(corpus: DataFrame, queries: DataFrame,
-                            id_col: str, vec_col: str) -> DataFrame:
+def _scored_against_queries(corpus: DataFrame, queries: DataFrame) -> DataFrame:
     """``(query_id, neighbor_id, cosine_sim)`` for every query and every
     other corpus vector: the small query side is broadcast and the
     corpus streamed map-only."""
-    c = _side(corpus, id_col, vec_col, "neighbor_id", "c")
-    q = _side(queries, id_col, vec_col, "query_id", "q")
+    c = _side(corpus, "neighbor_id", "c")
+    q = _side(queries, "query_id", "q")
     return (
         c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
         .select("query_id", "neighbor_id", _qc_cosine().alias("cosine_sim"))
@@ -130,21 +126,21 @@ def _top_k(scored: DataFrame, k: int) -> DataFrame:
     )
 
 
-def cosine_pairs(df: DataFrame, threshold: float = 0.9) -> DataFrame:
-    """All pairs of ``vec_id`` with ``embedding`` cosine >= threshold
+def cosine_pairs(df: DataFrame) -> DataFrame:
+    """All pairs of ``vec_id`` with ``embedding`` cosine >= 0.4
     (embedding near-dup check).
 
     O(n^2) pair space — correctness baseline for small n; use
     :func:`lsh_cosine_pairs` at scale.  Returns (id_a, id_b, cosine_sim)
     with id_a < id_b."""
-    n = _id_vec_norm(df, "vec_id", "embedding")
+    n = _id_vec_norm(df)
     a = n.select(F.col("id").alias("id_a"), F.col("vec").alias("va"), F.col("norm").alias("na"))
     b = n.select(F.col("id").alias("id_b"), F.col("vec").alias("vb"), F.col("norm").alias("nb"))
     sim = F.round(cosine(F.col("va"), F.col("vb"), F.col("na"), F.col("nb")), _DP)
     return (
         a.join(b, F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b", sim.alias("cosine_sim"))
-        .filter(F.col("cosine_sim") >= threshold)
+        .filter(F.col("cosine_sim") >= 0.4)
     )
 
 
@@ -152,13 +148,8 @@ def cosine_pairs(df: DataFrame, threshold: float = 0.9) -> DataFrame:
 COSINE_BLOCKS = 16
 
 
-def cosine_pairs_blocked(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.9,
-) -> DataFrame:
-    """Exact all-pairs cosine >= threshold via BLOCKED pair-space
+def cosine_pairs_blocked(df: DataFrame) -> DataFrame:
+    """Exact all-pairs ``embedding`` cosine >= 0.4 via BLOCKED pair-space
     enumeration — the distributed-exact plan, no cartesian/BNLJ.
 
     Exact all-pairs is Θ(n²) dot products no matter the plan; what
@@ -188,8 +179,8 @@ def cosine_pairs_blocked(
          for i in range(n_blocks) for j in range(i, n_blocks)],
         "pid bigint, bi int, bj int",
     )
-    n = _id_vec_norm(df, id_col, vec_col,
-                     F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_blocks))
+    n = _id_vec_norm(df,
+                     F.pmod(F.xxhash64(F.col("vec_id")), F.lit(n_blocks))
                      .cast("int").alias("blk"))
     left = n.join(F.broadcast(pairs), n["blk"] == pairs["bi"]).select(
         "pid", "bi", "bj",
@@ -218,27 +209,23 @@ def cosine_pairs_blocked(
             F.greatest("ida", "idb").alias("id_b"),
             sim.alias("cosine_sim"),
         )
-        .filter(F.col("cosine_sim") >= threshold)
+        .filter(F.col("cosine_sim") >= 0.4)
     )
 
 
 def ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-    centroid_stride: int = 32,
     nprobe: int = 4,
     centroids_df: "DataFrame | None" = None,
 ) -> DataFrame:
-    """IVF-style approximate top-k: partition the corpus into inverted
+    """IVF-style approximate top-5: partition the corpus into inverted
     lists by nearest centroid, search only the query's ``nprobe``
     closest lists.
 
     By default centroids are chosen deterministically (every
-    ``centroid_stride``-th vector by id) — no RNG, no iteration.  Pass
-    ``centroids_df`` (columns ``cent_id``, ``<vec_col>``) to use
+    32nd vector by ``vec_id``) — no RNG, no iteration.  Pass
+    ``centroids_df`` (columns ``cent_id``, ``embedding``) to use
     TRAINED centroids instead — e.g. :func:`..corpus.kmeans_fit`
     output — which is exactly the "precompute real centroids offline
     and broadcast them" path the stride default stands in for.
@@ -251,15 +238,13 @@ def ivf_topk(
     from pyspark.sql import Window
 
     if centroids_df is not None:
-        cent = with_norm(centroids_df, vec_col).select(
+        cent = with_norm(centroids_df).select(
             F.col("cent_id"),
             F.col("_vec").alias("cent_vec"), F.col("_norm").alias("cent_norm"),
         )
     else:
-        cent = with_norm(
-            corpus.filter((F.col(id_col) % centroid_stride) == 0), vec_col
-        ).select(
-            F.col(id_col).alias("cent_id"),
+        cent = with_norm(corpus.filter((F.col("vec_id") % 32) == 0)).select(
+            F.col("vec_id").alias("cent_id"),
             F.col("_vec").alias("cent_vec"), F.col("_norm").alias("cent_norm"),
         )
 
@@ -307,16 +292,16 @@ def ivf_topk(
             .drop("_csim", "_crank", "cent_vec", "cent_norm")
         )
 
-    c = with_norm(corpus, vec_col).select(
-        F.col(id_col).alias("neighbor_id"),
+    c = with_norm(corpus).select(
+        F.col("vec_id").alias("neighbor_id"),
         F.col("_vec"), F.col("_norm"),
     )
     c_assigned = assign(c, "neighbor_id", 1).select(
         "neighbor_id", F.col("_vec").alias("c_vec"),
         F.col("_norm").alias("c_norm"), F.col("cent_id").alias("list_id"),
     )
-    q = with_norm(queries, vec_col).select(
-        F.col(id_col).alias("query_id"), F.col("_vec"), F.col("_norm"),
+    q = with_norm(queries).select(
+        F.col("vec_id").alias("query_id"), F.col("_vec"), F.col("_norm"),
     )
     q_assigned = assign(q, "query_id", nprobe).select(
         "query_id", F.col("_vec").alias("q_vec"),
@@ -329,7 +314,7 @@ def ivf_topk(
         .select("query_id", "neighbor_id", _qc_cosine().alias("cosine_sim"))
         .dropDuplicates(["query_id", "neighbor_id"])
     )
-    return _top_k(scored, k).select(
+    return _top_k(scored, 5).select(
         "query_id", "neighbor_id", "rank", "cosine_sim")
 
 
@@ -366,14 +351,12 @@ def _hyperplane(plane: int, dim: int) -> Column:
 
 def lsh_cosine_pairs(
     df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
     n_planes: int = 12,
     n_tables: int = 4,
     threshold: float = 0.9,
 ) -> DataFrame:
-    """Random-hyperplane (SimHash-for-vectors) LSH near-dup pairs.
+    """Random-hyperplane (SimHash-for-vectors) LSH near-dup pairs of
+    the 64-dim ``embedding`` vectors, by ``vec_id``.
 
     ``n_tables`` independent signatures of ``n_planes`` sign bits each;
     vectors sharing any full signature become candidates, verified with
@@ -394,7 +377,8 @@ def lsh_cosine_pairs(
     work and LSH stops paying vs blocked brute-force; run the
     recall-audit queries before committing to an index shape.
     """
-    n = _id_vec_norm(df, id_col, vec_col)
+    dim = 64
+    n = _id_vec_norm(df)
     # a dim mismatch would NULL every signature (zip_with pads with
     # NULL) and the sig-equality join would silently return ZERO pairs
     # — a wrong answer for a pure parameter mistake; fail loudly on the
@@ -442,13 +426,9 @@ def lsh_cosine_pairs(
 def pq_topk(
     corpus: DataFrame,
     queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 5,
     m: int = 8,
     ks: int = 16,
-    centroid_stride: int = 7,
-    refine: int = 4,
 ) -> DataFrame:
     """Product-quantization (PQ) approximate top-k with asymmetric
     distance + exact re-rank — the memory-bound ANN path.
@@ -460,10 +440,11 @@ def pq_topk(
     vectors and is the ONLY thing the search scans).  A query
     precomputes per-subspace distance tables to all codebook entries;
     the approximate distance to any corpus vector is ``m`` table
-    lookups (ADC).  The best ``k*refine`` candidates per query are
+    lookups (ADC).  The best ``4*k`` candidates per query are
     re-ranked with exact cosine for the final top-k.
 
-    Spark shape: the codebook is stride-sampled deterministically (no
+    Spark shape: the codebook is the first ``ks`` of every 7th
+    ``vec_id``'s ``embedding``, sampled deterministically (no
     RNG; swap in k-means-trained codebooks offline exactly like
     ivf_topk's ``centroids_df``) and is CONSTANT-size driver state
     (m x ks x dim/m doubles) baked into the plan as literals —
@@ -477,10 +458,8 @@ def pq_topk(
     from pyspark.sql import Window
 
     train = (
-        with_norm(
-            corpus.filter((F.col(id_col) % centroid_stride) == 0), vec_col
-        )
-        .orderBy(id_col)
+        with_norm(corpus.filter((F.col("vec_id") % 7) == 0))
+        .orderBy("vec_id")
         .limit(ks)
         .select(
             F.when(
@@ -524,8 +503,8 @@ def pq_topk(
         )
 
     def normed(df):
-        return with_norm(df, vec_col).select(
-            F.col(id_col).alias("id"),
+        return with_norm(df).select(
+            F.col("vec_id").alias("id"),
             F.when(
                 F.col("_norm") > 0,
                 F.transform(F.col("_vec"), lambda x: x / F.col("_norm")),
@@ -582,7 +561,7 @@ def pq_topk(
     )
     short = (
         scored.withColumn("_r", F.row_number().over(w_short))
-        .filter(F.col("_r") <= k * refine)
+        .filter(F.col("_r") <= k * 4)
     )
     # exact re-rank of the shortlist (vectors already unit-norm)
     sim = F.round(_dot(F.col("q_vec"), F.col("c_vec")), _DP)
@@ -590,12 +569,8 @@ def pq_topk(
         "query_id", "neighbor_id", "rank", "cosine_sim")
 
 
-def label_centroids(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    label_col: str = "label",
-) -> DataFrame:
-    """Per-label embedding centroids (class means), one row per
+def label_centroids(df: DataFrame) -> DataFrame:
+    """Per-``label`` ``embedding`` centroids (class means), one row per
     (label, dimension).
 
     The offline half of centroid-based classification / clustering
@@ -623,8 +598,8 @@ def label_centroids(
     scale = 10 ** _DP
     dec = f"decimal({21 + _DP},{_DP})"
     el = df.select(
-        F.col(label_col).alias("label"),
-        F.posexplode(_as_double(vec_col)).alias("pos", "val"),
+        F.col("label").alias("label"),
+        F.posexplode(_as_double("embedding")).alias("pos", "val"),
     )
     agg = (
         el.groupBy(F.col("label"), F.col("pos").cast("bigint").alias("pos"))
@@ -647,14 +622,11 @@ def label_centroids(
 def hard_negatives(
     corpus: DataFrame,
     queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
     k: int = 5,
 ) -> DataFrame:
     """Hard-negative mining for contrastive training: for each query
     vector, the top-k most-similar corpus vectors with a DIFFERENT
-    label — the near-misses a retrieval/embedding model must learn to
+    ``label`` — the near-misses a retrieval/embedding model must learn to
     separate.
 
     Identical plan shape to :func:`cosine_topk_bruteforce` (broadcast
@@ -663,10 +635,8 @@ def hard_negatives(
     same-label pairs are dropped BEFORE scoring.  Returns (query_id,
     query_label, neighbor_id, neighbor_label, rank, cosine_sim).
     """
-    c = _side(corpus, id_col, vec_col, "neighbor_id", "c",
-              F.col(label_col).alias("neighbor_label"))
-    q = _side(queries, id_col, vec_col, "query_id", "q",
-              F.col(label_col).alias("query_label"))
+    c = _side(corpus, "neighbor_id", "c", F.col("label").alias("neighbor_label"))
+    q = _side(queries, "query_id", "q", F.col("label").alias("query_label"))
     scored = c.join(
         F.broadcast(q), F.col("query_label") != F.col("neighbor_label")
     ).select("query_id", "query_label", "neighbor_id", "neighbor_label",
@@ -674,53 +644,39 @@ def hard_negatives(
     return _top_k(scored, k)
 
 
-def rrf_fuse(
-    sparse: DataFrame,
-    dense: DataFrame,
-    id_col: str = "doc_id",
-    rank_col: str = "rank",
-    k_const: int = 60,
-    k: int = 20,
-) -> DataFrame:
-    """Reciprocal-rank fusion of two rankers: score(d) = Σ 1/(k_const +
-    rank_r(d)) over the rankers that returned d — the standard hybrid
-    (sparse lexical ⊕ dense vector) retrieval combiner; rank-based, so
+def rrf_fuse(sparse: DataFrame, dense: DataFrame) -> DataFrame:
+    """Reciprocal-rank fusion of two rankers of ``doc_id`` by ``rank``:
+    score(d) = Σ 1/(60 + rank_r(d)) over the rankers that returned d —
+    the standard hybrid (sparse lexical ⊕ dense vector) retrieval combiner; rank-based, so
     no score normalization across incomparable scales is needed.
 
     One FULL OUTER join on the doc id (both inputs are top-N slices —
     bounded), contributions rounded to 9 dp and summed as DECIMAL (the
     engine's order-independent float discipline), final top-k via
-    orderBy+limit.  Returns (id, rrf_score, in_sparse, in_dense).
+    orderBy+limit: the top 20.  Returns (doc_id, rrf_score, in_sparse,
+    in_dense).
     """
-    s = sparse.select(F.col(id_col).alias("_id"),
-                      F.col(rank_col).alias("_rs"))
-    d = dense.select(F.col(id_col).alias("_id"),
-                     F.col(rank_col).alias("_rd"))
+    s = sparse.select(F.col("doc_id").alias("_id"), F.col("rank").alias("_rs"))
+    d = dense.select(F.col("doc_id").alias("_id"), F.col("rank").alias("_rd"))
     contrib = lambda r: F.coalesce(
-        F.round(F.lit(1.0) / (F.lit(k_const) + r), 9), F.lit(0.0)
+        F.round(F.lit(1.0) / (F.lit(60) + r), 9), F.lit(0.0)
     ).cast("decimal(18,9)")
     fused = (
         s.join(d, "_id", "full_outer")
         .select(
-            F.col("_id").alias(id_col),
+            F.col("_id").alias("doc_id"),
             (contrib(F.col("_rs")) + contrib(F.col("_rd")))
             .cast("double").alias("rrf_score"),
             F.col("_rs").isNotNull().alias("in_sparse"),
             F.col("_rd").isNotNull().alias("in_dense"),
         )
     )
-    return fused.orderBy(F.desc("rrf_score"), F.asc(id_col)).limit(k)
+    return fused.orderBy(F.desc("rrf_score"), F.asc("doc_id")).limit(20)
 
 
-def radius_search(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.4,
-) -> DataFrame:
+def radius_search(corpus: DataFrame, queries: DataFrame) -> DataFrame:
     """Radius (range) search: every corpus vector with cosine >=
-    threshold of each query — the vector-DB "range query" twin of
+    0.35 of each query — the vector-DB "range query" twin of
     :func:`cosine_topk_bruteforce` (fixed similarity bar instead of a
     fixed result count, so callers see ALL sufficiently-close matches,
     e.g. for recall-critical contamination checks).
@@ -732,20 +688,14 @@ def radius_search(
     Returns (query_id, neighbor_id, cosine_sim).
     """
     return (
-        _scored_against_queries(corpus, queries, id_col, vec_col)
-        .filter(F.col("cosine_sim") >= threshold)
+        _scored_against_queries(corpus, queries)
+        .filter(F.col("cosine_sim") >= 0.35)
     )
 
 
-def semantic_dedup(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
-    n_planes: int = 6,
-    threshold: float = 0.4,
-) -> DataFrame:
-    """SemDeDup-style semantic deduplication over an embedding column
+def semantic_dedup(df: DataFrame) -> DataFrame:
+    """SemDeDup-style semantic deduplication over the 64-dim
+    ``embedding`` column
     (Abbas et al. 2023 shape: partition the space, drop all-but-one of
     each within-partition near-duplicate group).
 
@@ -755,18 +705,19 @@ def semantic_dedup(
     pipeline replayable in the SQL oracle — bucket assignment, exact
     within-bucket cosine, and the keep/drop verdict are all
     value-checked, not just recall-bounded.  A vector is DROPPED when
-    a lower-id vector in its bucket is within the threshold (keep-
+    a lower-id vector in its bucket has cosine >= 0.4 (keep-
     first policy, the deterministic stand-in for SemDeDup's
     keep-closest-to-centroid).
 
     Scale shape: bucket assignment is one map-only pass (literal plane
     arrays, constant-folded); the pair join is equi on bucket_id —
     candidates never leave their bucket, so the quadratic term is
-    bounded by the largest bucket, not the corpus (2^n_planes buckets;
-    at 100 TB raise n_planes so mean bucket size stays O(10^3)).
+    bounded by the largest bucket, not the corpus (2^6 buckets from 6
+    planes; at 100 TB use more planes so mean bucket size stays
+    O(10^3)).
     Returns (vec_id, bucket_id, n_close, dropped).
     """
-    n = _id_vec_norm(df, id_col, vec_col)
+    n = _id_vec_norm(df)
     # one SQL string for all planes (the left-fold dot product of
     # _dot against each literal plane); built Column by Column it costs
     # ~125 py4j round trips per plane.  A k/1000 coefficient prints as
@@ -774,8 +725,8 @@ def semantic_dedup(
     bits = F.expr(" + ".join(
         "shiftleft(CAST(aggregate(zip_with(vec, array({}), (x, y) -> x * y), "
         "0D, (acc, x) -> acc + x) > 0 AS BIGINT), {})".format(
-            ", ".join(f"{c!r}D" for c in _plane_coeffs(p, dim)), p)
-        for p in range(n_planes)))
+            ", ".join(f"{c!r}D" for c in _plane_coeffs(p, 64)), p)
+        for p in range(6)))
     # three consumers (both pair-join sides + the final readout join)
     # with different column pruning — exchange reuse can't fire, so an
     # unmaterialized b re-scans the embeddings per consumer (7 scans in
@@ -803,7 +754,7 @@ def semantic_dedup(
         a_side.join(b_side, "bucket_id")
         .filter(F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b", sim.alias("cosine_sim"))
-        .filter(F.col("cosine_sim") >= threshold)
+        .filter(F.col("cosine_sim") >= 0.4)
         .localCheckpoint(eager=True)
     )
     counts = (
@@ -818,7 +769,7 @@ def semantic_dedup(
         b.join(counts, "id", "left")
         .join(dropped, "id", "left")
         .select(
-            F.col("id").alias(id_col),
+            F.col("id").alias("vec_id"),
             "bucket_id",
             F.coalesce(F.col("n_close"), F.lit(0)).cast("bigint")
             .alias("n_close"),
@@ -827,11 +778,9 @@ def semantic_dedup(
     )
 
 
-def dim_stats(
-    df: DataFrame,
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Per-dimension distribution statistics over an embedding column.
+def dim_stats(df: DataFrame) -> DataFrame:
+    """Per-dimension distribution statistics over the ``embedding``
+    column.
 
     The profiling step before whitening / normalization / quantizer
     training: one row per vector position with count, mean, population
@@ -844,7 +793,7 @@ def dim_stats(
     per task regardless of corpus size.  Returns
     (pos, n, mean_val, std_val, min_val, max_val).
     """
-    el = df.select(F.posexplode(_as_double(vec_col)).alias("pos", "val"))
+    el = df.select(F.posexplode(_as_double("embedding")).alias("pos", "val"))
     d6 = F.round("val", _DP).cast("decimal(18,6)")
     agg = el.groupBy(F.col("pos").cast("bigint").alias("pos")).agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
@@ -869,13 +818,9 @@ def dim_stats(
     )
 
 
-def quantize_int8(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Per-dimension affine int8 quantization with reconstruction-error
-    audit.
+def quantize_int8(df: DataFrame) -> DataFrame:
+    """Per-dimension affine int8 quantization of the ``embedding``
+    column with reconstruction-error audit.
 
     The embedding-compression step of a retrieval index build: each
     dimension gets an affine code ``round((x - lo) / step)`` with
@@ -887,11 +832,11 @@ def quantize_int8(
     rows, broadcast back) → map-only code+error → one aggregate on the
     vector id.  At 100 TB the only wide ops are the dim-keyed range
     aggregate and the id-keyed error aggregate, both with map-side
-    combine.  Returns (``id_col``, n_dims, mse, max_abs_err).
+    combine.  Returns (vec_id, n_dims, mse, max_abs_err).
     """
     el = df.select(
-        F.col(id_col).alias("_vid"),
-        F.posexplode(_as_double(vec_col)).alias("pos", "val"),
+        F.col("vec_id").alias("_vid"),
+        F.posexplode(_as_double("embedding")).alias("pos", "val"),
     ).withColumn("v6", F.round("val", _DP))
     rng = el.groupBy("pos").agg(
         F.min("v6").alias("_lo"), F.max("v6").alias("_hi")
@@ -916,36 +861,34 @@ def quantize_int8(
             ).alias("mse"),
             F.round(F.max(F.abs("_err")), _DP).alias("max_abs_err"),
         )
-        .withColumnRenamed("_vid", id_col)
+        .withColumnRenamed("_vid", "vec_id")
     )
 
 
-def sign_signatures(df: DataFrame, id_col: str = "vec_id",
-                    vec_col: str = "embedding",
-                    dim: int = 64) -> DataFrame:
-    """Bit-packed binary sign signatures: bit i of word w is set when
-    ``vec[32*w + i] > 0``.  The binary-embedding retrieval rung: a
-    64-dim float vector collapses to two BIGINT words, so a corpus's
+def sign_signatures(df: DataFrame, dim: int = 64) -> DataFrame:
+    """Bit-packed binary sign signatures of the ``embedding`` column:
+    bit i of word w is set when ``embedding[32*w + i] > 0``.  The
+    binary-embedding retrieval rung: a 64-dim float vector collapses to two BIGINT words, so a corpus's
     signature table is ~16 bytes/vector — small enough to sit hot at
     100 TB corpus scale, and Hamming distance is two XOR+popcount
     instructions inside whole-stage codegen (no array math at query
     time).  Rows with NULL vectors are dropped (they have no sign).
 
-    Returns (``id_col``, sig_0..sig_{ceil(dim/32)-1}), each word a
+    Returns (vec_id, sig_0..sig_{ceil(dim/32)-1}), each word a
     BIGINT holding 32 sign bits (never bit 63, so ANSI arithmetic
     can't overflow)."""
-    df = df.filter(F.col(vec_col).isNotNull())
+    df = df.filter(F.col("embedding").isNotNull())
     # a ragged vector would silently pack missing dims as 0-bits and a
     # NULL element would score as "negative sign" — both silent wrong
     # answers for a data/parameter mistake; fail loudly per row (the
     # lsh_cosine_pairs guard pattern)
     df = df.filter(F.assert_true(
-        (F.size(vec_col) == dim)
-        & ~F.expr(f"exists({vec_col}, x -> x IS NULL)"),
+        (F.size("embedding") == dim)
+        & ~F.expr("exists(embedding, x -> x IS NULL)"),
         F.format_string(
             "sign_signatures: vector length %s != dim=%s or NULL "
             "element — pass the embedding's true dimension",
-            F.size(vec_col).cast("string"), F.lit(str(dim)),
+            F.size("embedding").cast("string"), F.lit(str(dim)),
         ),
     ).isNull())
     words = []
@@ -953,10 +896,10 @@ def sign_signatures(df: DataFrame, id_col: str = "vec_id",
         hi = min(dim, w + 32)
         words.append(F.expr(
             f"aggregate(sequence({w}, {hi - 1}), 0L, "
-            f"(acc, i) -> acc + IF({vec_col}[i] > 0D, "
+            "(acc, i) -> acc + IF(embedding[i] > 0D, "
             f"shiftleft(1L, i - {w}), 0L))"
         ).alias(f"sig_{w // 32}"))
-    return df.select(F.col(id_col), *words)
+    return df.select(F.col("vec_id"), *words)
 
 
 #: most probe vectors :func:`hamming_topk` broadcasts (≈ 10 MB)
@@ -964,7 +907,6 @@ HAMMING_MAX_QUERIES = 100_000
 
 
 def hamming_topk(df: DataFrame, queries: DataFrame,
-                 id_col: str = "vec_id", vec_col: str = "embedding",
                  k: int = 5, dim: int = 64) -> DataFrame:
     """Exact Hamming top-k over binary sign signatures.
 
@@ -989,9 +931,9 @@ def hamming_topk(df: DataFrame, queries: DataFrame,
     from pyspark.sql import Window
 
     n_words = (dim + 31) // 32
-    corpus = sign_signatures(df, id_col, vec_col, dim)
-    qsig = sign_signatures(queries, id_col, vec_col, dim).select(
-        F.col(id_col).alias("query_id"),
+    corpus = sign_signatures(df, dim)
+    qsig = sign_signatures(queries, dim).select(
+        F.col("vec_id").alias("query_id"),
         *[F.col(f"sig_{w}").alias(f"q_{w}") for w in range(n_words)])
     # bounded by construction AFTER this guard — and the guard itself
     # is bounded: limit(max+1) stops the scan at the threshold, so a
@@ -1011,7 +953,7 @@ def hamming_topk(df: DataFrame, queries: DataFrame,
         ham = term if ham is None else ham + term
     w_rank = Window.partitionBy("query_id").orderBy(
         "hamming", F.col("neighbor_id"))
-    return (corpus.withColumnRenamed(id_col, "neighbor_id")
+    return (corpus.withColumnRenamed("vec_id", "neighbor_id")
             .crossJoin(F.broadcast(qsig))
             .filter(F.col("neighbor_id") != F.col("query_id"))
             .select("query_id", "neighbor_id",

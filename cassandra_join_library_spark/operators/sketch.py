@@ -101,17 +101,16 @@ def sampled_percentiles(
     group_col: str,
     value_col: str,
     id_col: str,
-    rate: int = 8,
     percentiles: "tuple[float, ...]" = (0.5, 0.9, 0.99),
 ) -> DataFrame:
     """Per-group approximate percentiles from a deterministic
     hash-Bernoulli sample.
 
-    Rows whose 60-bit hash of (id) falls below ``2^60 / rate`` form a
-    1/rate sample — a pure function of the row, so any engine (and any
+    Rows whose 60-bit hash of (id) falls below ``2^60 / 8`` form a
+    1/8 sample — a pure function of the row, so any engine (and any
     re-run, at any parallelism) draws the IDENTICAL sample; exact
     percentiles of the sample then approximate the population's.  The
-    1/rate scan-output reduction is the point at 100 TB: the exact
+    1/8 scan-output reduction is the point at 100 TB: the exact
     sort only ever sees the sample.  Returns one row per group WITH AT
     LEAST ONE SAMPLED ROW (a tiny group can miss the sample entirely —
     left-join the output back if every group key must appear), with
@@ -125,7 +124,7 @@ def sampled_percentiles(
             f"percentiles {percentiles} collide after whole-percent "
             f"naming ({names}) — use distinct whole-percent values"
         )
-    thresh = HASH_SPACE // rate
+    thresh = HASH_SPACE // 8
     sample = df.filter(_h60(F.col(id_col)) < thresh)
     v6 = F.round(F.col(value_col).cast("double"), MAX_PARITY_DECIMAL_SCALE)
     aggs = [F.count(F.lit(1)).cast("bigint").alias("n_sampled")]

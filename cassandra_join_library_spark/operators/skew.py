@@ -84,14 +84,14 @@ def salted_join(
     return big_s.join(small_s, cond, how).drop("_salt")
 
 
-def key_histogram(df: DataFrame, key_cols: "list[str]", top: int = 20) -> DataFrame:
-    """Hot-key diagnostic: per-key row counts, heaviest first — run
-    this before choosing salt_buckets."""
+def key_histogram(df: DataFrame, key_cols: "list[str]") -> DataFrame:
+    """Hot-key diagnostic: the 5 heaviest keys' row counts, heaviest
+    first — run this before choosing salt_buckets."""
     return (
         df.groupBy(*key_cols)
         .agg(F.count(F.lit(1)).alias("rows"))
         .orderBy(F.col("rows").desc())
-        .limit(top)
+        .limit(5)
     )
 
 

@@ -529,9 +529,8 @@ def nearest_value_topk(
     group_col: str,
     id_col: str,
     value_col: str,
-    k: int = 3,
 ) -> DataFrame:
-    """For each row, its ``k`` nearest OTHER rows by value within the
+    """For each row, its k = 3 nearest OTHER rows by value within the
     group — EXACT via the sorted-neighborhood identity: in value
     order, the k nearest values of a row are always among its 2k
     positional neighbors, so 2k LAG/LEADs per row replace the
@@ -543,6 +542,7 @@ def nearest_value_topk(
     deterministic, identical in SQL.  Integer values; distance stays
     BIGINT.  Returns (grp, id, value, neighbor_id, neighbor_value,
     dist, rk)."""
+    k = 3
     w = Window.partitionBy("grp").orderBy("v", "id")
     base = df.select(
         F.col(group_col).alias("grp"),

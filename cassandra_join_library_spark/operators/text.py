@@ -877,9 +877,9 @@ def logistic_quality_score(df, id_col: str, text_col: str,
 
 
 def boilerplate_span_coverage(df, id_col: str, text_col: str,
-                              k: int = 8, min_df: int = 2):
+                              min_df: int = 2):
     """Cross-document boilerplate detection by span coverage: word
-    k-grams appearing in >= ``min_df`` distinct documents are
+    k-grams (k = 8) appearing in >= ``min_df`` distinct documents are
     "boilerplate spans" (templated headers/footers, licence blocks,
     navigation text — the RefinedWeb/C4-style strip step generalized
     to span level), and each document reports how many of its token
@@ -898,6 +898,7 @@ def boilerplate_span_coverage(df, id_col: str, text_col: str,
     partitions the corpus."""
     from .dedup import positional_grams
 
+    k = 8
     base = df.filter(F.col(text_col).isNotNull())
     toks = base.select(
         F.col(id_col).alias("doc_id"),

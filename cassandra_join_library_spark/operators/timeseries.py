@@ -152,10 +152,9 @@ def ewma_dyadic(
     ts_col: str,
     tiebreak_col: str,
     value_micro_col: str,
-    k: int = 8,
 ) -> DataFrame:
     """Exponentially-weighted moving average with DYADIC weights over
-    the last ``k`` observations per key: weight 2^(k-1) for the newest
+    the last k = 8 observations per key: weight 2^(k-1) for the newest
     down to 2^0 for the oldest in frame, normalized by the sum of the
     weights actually present.  Power-of-two weights keep every product
     and the divisor in exact BIGINT, and the result is ONE integer
@@ -167,6 +166,7 @@ def ewma_dyadic(
     — no shuffle beyond the window's, state bounded by k.
 
     Output: key, ts, tiebreak, value_micro, ewma_micro (BIGINT)."""
+    k = 8
     w = (
         Window.partitionBy(key_col)
         .orderBy(ts_col, tiebreak_col)
@@ -208,7 +208,6 @@ def cusum_integer(
     series: DataFrame,
     order_col: str,
     value_col: str,
-    slack_div: int = 20,
 ) -> DataFrame:
     """Two-sided CUSUM drift detection over an INTEGER series,
     exactly — via the closed form ``S_t = P_t - min_{j<=t} P_j``
@@ -217,7 +216,7 @@ def cusum_integer(
     no window function can express directly.
 
     Deviations use the rounded integer mean m and an allowance
-    (slack) of ``m div slack_div``: upward drift accumulates
+    (slack) of ``m div 20``: upward drift accumulates
     ``x - m - k``, downward drift ``m - x - k``.  Alarm when either
     side exceeds its own mean-sized threshold h = m.
 
@@ -229,7 +228,7 @@ def cusum_integer(
     m = F.expr(
         "((s) div (n)) + (CASE WHEN 2 * ((s) % (n)) >= (n) "
         "THEN 1 ELSE 0 END)")
-    k = F.expr(f"m div {slack_div}")
+    k = F.expr("m div 20")
     base = _with_sum_count(series, value_col).select(
         F.col(order_col).alias("ord"),
         F.col(value_col).cast("bigint").alias("v"),

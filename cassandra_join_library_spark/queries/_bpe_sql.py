@@ -13,10 +13,17 @@ which is equivalent for ascending occurrence positions).
 
 from __future__ import annotations
 
+from ..operators.bpe import BPE_MERGES, BPE_TOP_WORDS, RETRAIN_PPM
 
-def bpe_train_sql(n_merges: int = 8, top_words: int = 2000,
-                  table: str = "documents", text_col: str = "text") -> str:
-    parts = _bpe_ctes(n_merges, top_words, table, text_col)
+#: the snapshot split of the drift oracles: prior corpus = even
+#: doc_ids, new crawl = odd doc_ids (the dedup_cross_snapshot convention)
+_A_WHERE = "doc_id % 2 = 0"
+_B_WHERE = "doc_id % 2 = 1"
+
+
+def bpe_train_sql(n_merges: int = BPE_MERGES,
+                  top_words: int = BPE_TOP_WORDS) -> str:
+    parts = _bpe_ctes(n_merges, top_words, "documents")
     selects = [
         f"SELECT CAST({t + 1} AS BIGINT) AS step, la AS merge_left,"
         f" lb AS merge_right, cnt AS pair_count FROM best{t}"
@@ -30,54 +37,51 @@ def bpe_train_sql(n_merges: int = 8, top_words: int = 2000,
     )
 
 
-def bpe_encode_sql(n_merges: int = 8, top_words: int = 2000,
-                   table: str = "documents", id_col: str = "doc_id",
-                   text_col: str = "text") -> str:
+def bpe_encode_sql() -> str:
     """Oracle for ``bpe_encode_counts``: per doc (n_words,
     n_bpe_tokens) under the trained symbol table; OOV words cost
     len + 1 character tokens."""
-    parts = _bpe_ctes(n_merges, top_words, table, text_col)
+    parts = _bpe_ctes(BPE_MERGES, BPE_TOP_WORDS, "documents")
     parts.append(f"""vocab_tok AS MATERIALIZED (
   SELECT wd.word, CAST(COUNT(*) AS BIGINT) AS n_sym
-  FROM w{n_merges} w JOIN wids wd ON wd.wid = w.wid
+  FROM w{BPE_MERGES} w JOIN wids wd ON wd.wid = w.wid
   GROUP BY wd.word
 )""")
-    parts.append(f"""doc_words AS MATERIALIZED (
-  SELECT {id_col}, word FROM (
-    SELECT {id_col},
-           unnest(string_split(lower({text_col}), ' ')) AS word
-    FROM {table})
+    parts.append("""doc_words AS MATERIALIZED (
+  SELECT doc_id, word FROM (
+    SELECT doc_id,
+           unnest(string_split(lower(text), ' ')) AS word
+    FROM documents)
   WHERE regexp_matches(word, '^[a-z]+$')
 )""")
     return (
         "WITH " + ",\n".join(parts)
-        + f"""
-SELECT d.{id_col},
+        + """
+SELECT d.doc_id,
        CAST(COUNT(*) AS BIGINT) AS n_words,
        CAST(SUM(coalesce(v.n_sym, length(d.word) + 1)) AS BIGINT)
          AS n_bpe_tokens
 FROM doc_words d LEFT JOIN vocab_tok v ON v.word = d.word
-GROUP BY d.{id_col}"""
+GROUP BY d.doc_id"""
     )
 
 
-def _word_vocab_sql(table: str, text_col: str, top_words: int) -> str:
-    """The top-N training-dictionary SQL — the ONE copy of the
-    tokenization + tie-break convention (mirrors
+def _word_vocab_sql(table: str, top_words: int) -> str:
+    """The top-N training-dictionary SQL over ``table``'s ``text`` —
+    the ONE copy of the tokenization + tie-break convention (mirrors
     ``operators.bpe.build_word_vocab``), shared by the merge-training
     CTE chain and the merge-free OOV oracle."""
     return f"""SELECT word, CAST(COUNT(*) AS BIGINT) AS freq
-  FROM (SELECT unnest(string_split(lower({text_col}), ' ')) AS word
+  FROM (SELECT unnest(string_split(lower(text), ' ')) AS word
         FROM {table})
   WHERE regexp_matches(word, '^[a-z]+$')
   GROUP BY word ORDER BY freq DESC, word ASC LIMIT {top_words}"""
 
 
-def _bpe_ctes(n_merges: int, top_words: int,
-              table: str, text_col: str) -> "list[str]":
+def _bpe_ctes(n_merges: int, top_words: int, table: str) -> "list[str]":
     parts = [
         f"""words AS MATERIALIZED (
-  {_word_vocab_sql(table, text_col, top_words)}
+  {_word_vocab_sql(table, top_words)}
 )""",
         """wids AS MATERIALIZED (
   SELECT row_number() OVER (ORDER BY word) AS wid, word, freq FROM words
@@ -129,24 +133,21 @@ def _bpe_ctes(n_merges: int, top_words: int,
     return parts
 
 
-def bpe_fertility_sql(n_merges: int = 8, top_words: int = 2000,
-                      table: str = "documents", id_col: str = "doc_id",
-                      text_col: str = "text",
-                      class_col: str = "lang") -> str:
+def bpe_fertility_sql() -> str:
     """Oracle for per-class BPE fertility: tokens-per-word under the
-    trained symbol table, aggregated by ``class_col`` (rounded ppm
+    trained symbol table, aggregated by ``lang`` (rounded ppm
     ratio — the tokenizer-efficiency readout per language)."""
-    parts = _bpe_ctes(n_merges, top_words, table, text_col)
+    parts = _bpe_ctes(BPE_MERGES, BPE_TOP_WORDS, "documents")
     parts.append(f"""vocab_tok AS MATERIALIZED (
   SELECT wd.word, CAST(COUNT(*) AS BIGINT) AS n_sym
-  FROM w{n_merges} w JOIN wids wd ON wd.wid = w.wid
+  FROM w{BPE_MERGES} w JOIN wids wd ON wd.wid = w.wid
   GROUP BY wd.word
 )""")
-    parts.append(f"""doc_words AS MATERIALIZED (
-  SELECT {id_col}, {class_col}, word FROM (
-    SELECT {id_col}, {class_col},
-           unnest(string_split(lower({text_col}), ' ')) AS word
-    FROM {table})
+    parts.append("""doc_words AS MATERIALIZED (
+  SELECT doc_id, lang, word FROM (
+    SELECT doc_id, lang,
+           unnest(string_split(lower(text), ' ')) AS word
+    FROM documents)
   WHERE regexp_matches(word, '^[a-z]+$')
 )""")
     # per_class rows exist only for classes with >= 1 word, so the
@@ -157,7 +158,7 @@ def bpe_fertility_sql(n_merges: int = 8, top_words: int = 2000,
         "WITH " + ",\n".join(parts)
         + f"""
 , per_class AS (
-  SELECT d.{class_col} AS class,
+  SELECT d.lang AS class,
          CAST(COUNT(*) AS BIGINT) AS n_words,
          CAST(SUM(coalesce(v.n_sym, length(d.word) + 1)) AS BIGINT)
            AS n_bpe_tokens
@@ -194,40 +195,31 @@ def _wide_pivot_sql(measures: "list[str]") -> str:
             + "\n  FROM per_side GROUP BY 1\n)")
 
 
-def _tagged_words_cte(table: str, text_col: str, class_col: str,
-                      a_where: str, b_where: str) -> str:
-    return f"""tagged_words AS MATERIALIZED (
+_TAGGED_WORDS_CTE = f"""tagged_words AS MATERIALIZED (
   SELECT snap, class, word FROM (
-    SELECT 'a' AS snap, {class_col} AS class,
-           unnest(string_split(lower({text_col}), ' ')) AS word
-    FROM {table} WHERE {a_where}
+    SELECT 'a' AS snap, lang AS class,
+           unnest(string_split(lower(text), ' ')) AS word
+    FROM documents WHERE {_A_WHERE}
     UNION ALL
-    SELECT 'b' AS snap, {class_col} AS class,
-           unnest(string_split(lower({text_col}), ' ')) AS word
-    FROM {table} WHERE {b_where})
+    SELECT 'b' AS snap, lang AS class,
+           unnest(string_split(lower(text), ' ')) AS word
+    FROM documents WHERE {_B_WHERE})
   WHERE regexp_matches(word, '^[a-z]+$')
 )"""
 
 
-def bpe_fertility_drift_sql(n_merges: int = 8, top_words: int = 2000,
-                            table: str = "documents",
-                            text_col: str = "text",
-                            class_col: str = "lang",
-                            a_where: str = "doc_id % 2 = 0",
-                            b_where: str = "doc_id % 2 = 1",
-                            retrain_ppm: int = 50000) -> str:
+def bpe_fertility_drift_sql() -> str:
     """Oracle for ``operators.bpe.bpe_fertility_drift``: train on the
-    ``a_where`` snapshot, encode both snapshots with the frozen symbol
+    ``_A_WHERE`` snapshot, encode both snapshots with the frozen symbol
     table, per-class side-by-side fertility + signed drift."""
-    parts = _bpe_ctes(n_merges, top_words,
-                      f"(SELECT * FROM {table} WHERE {a_where})", text_col)
+    parts = _bpe_ctes(BPE_MERGES, BPE_TOP_WORDS,
+                      f"(SELECT * FROM documents WHERE {_A_WHERE})")
     parts.append(f"""vocab_tok AS MATERIALIZED (
   SELECT wd.word, CAST(COUNT(*) AS BIGINT) AS n_sym
-  FROM w{n_merges} w JOIN wids wd ON wd.wid = w.wid
+  FROM w{BPE_MERGES} w JOIN wids wd ON wd.wid = w.wid
   GROUP BY wd.word
 )""")
-    parts.append(_tagged_words_cte(table, text_col, class_col,
-                                   a_where, b_where))
+    parts.append(_TAGGED_WORDS_CTE)
     fa = _ppm_safe_sql("n_bpe_tokens_a", "n_words_a")
     fb = _ppm_safe_sql("n_bpe_tokens_b", "n_words_b")
     return (
@@ -248,27 +240,22 @@ def bpe_fertility_drift_sql(n_merges: int = 8, top_words: int = 2000,
 SELECT class, n_words_a, n_bpe_tokens_a, CAST(fa AS BIGINT) AS fert_a_ppm,
        n_words_b, n_bpe_tokens_b, CAST(fb AS BIGINT) AS fert_b_ppm,
        CAST(fb - fa AS BIGINT) AS drift_ppm,
-       abs(fb - fa) >= {retrain_ppm} AS needs_retrain
+       abs(fb - fa) >= {RETRAIN_PPM} AS needs_retrain
 FROM scored"""
     )
 
 
-def vocab_oov_drift_sql(top_words: int = 2000,
-                        table: str = "documents",
-                        text_col: str = "text",
-                        class_col: str = "lang",
-                        a_where: str = "doc_id % 2 = 0",
-                        b_where: str = "doc_id % 2 = 1") -> str:
-    """Oracle for ``operators.bpe.vocab_oov_drift``: top-``top_words``
-    dictionary from the ``a_where`` snapshot, per-class OOV occurrence
+def vocab_oov_drift_sql() -> str:
+    """Oracle for ``operators.bpe.vocab_oov_drift``: top-``BPE_TOP_WORDS``
+    dictionary from the ``_A_WHERE`` snapshot, per-class OOV occurrence
     mass on both snapshots + signed drift."""
     oa = _ppm_safe_sql("n_oov_a", "n_words_a")
     ob = _ppm_safe_sql("n_oov_b", "n_words_b")
     return f"""WITH vocab AS MATERIALIZED (
   SELECT word FROM (
-  {_word_vocab_sql(f"{table} WHERE {a_where}", text_col, top_words)})
+  {_word_vocab_sql(f"documents WHERE {_A_WHERE}", BPE_TOP_WORDS)})
 ),
-{_tagged_words_cte(table, text_col, class_col, a_where, b_where)}
+{_TAGGED_WORDS_CTE}
 , per_side AS (
   SELECT t.snap, t.class,
          CAST(COUNT(*) AS BIGINT) AS n_words,

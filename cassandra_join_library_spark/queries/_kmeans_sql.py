@@ -26,22 +26,17 @@ from __future__ import annotations
 from ..operators.corpus import KMEANS_SCALE
 
 
-def kmeans_ctes(
-    k: int,
-    n_iter: int,
-    table: str = "embeddings",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> str:
-    """Return the WITH-clause body (no ``WITH`` keyword) whose final
-    CTE ``a{n_iter - 1}`` is the (vid, cl) assignment table and
-    ``c{n_iter}`` the final (cl, pos, cx) microunit centroids."""
+def kmeans_ctes(k: int, n_iter: int) -> str:
+    """Return the WITH-clause body (no ``WITH`` keyword) over the
+    ``embeddings`` table whose final CTE ``a{n_iter - 1}`` is the
+    (vid, cl) assignment table and ``c{n_iter}`` the final (cl, pos,
+    cx) microunit centroids."""
     parts = [
         f"""v AS (
-  SELECT {id_col} AS vid, i - 1 AS pos,
-         CAST(round(CAST({vec_col}[i] AS DOUBLE) * {KMEANS_SCALE}, 0)
+  SELECT vec_id AS vid, i - 1 AS pos,
+         CAST(round(CAST(embedding[i] AS DOUBLE) * {KMEANS_SCALE}, 0)
               AS BIGINT) AS x
-  FROM {table}, UNNEST(generate_series(1, len({vec_col}))) AS t(i)
+  FROM embeddings, UNNEST(generate_series(1, len(embedding))) AS t(i)
 )""",
         f"""ids AS (
   SELECT vid, CAST(row_number() OVER (ORDER BY vid) - 1 AS BIGINT) AS cl

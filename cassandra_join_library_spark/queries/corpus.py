@@ -170,7 +170,7 @@ def corpus_split(spark, sf_dir):
     """Deterministic stratified train/test split (hash-mod buckets —
     reproducible across engines, runs, and appends; map-only)."""
     return C.stratified_split(
-        load_table(spark, sf_dir, "documents"), "doc_id", "lang", test_per_mille=100
+        load_table(spark, sf_dir, "documents"), "doc_id", "lang"
     )
 
 
@@ -191,7 +191,7 @@ def corpus_quality_quantile(spark, sf_dir):
     """Keep the longest half of each language (percent_rank over a
     total order — deterministic per-group quantile filter)."""
     return C.quality_quantile_filter(
-        load_table(spark, sf_dir, "documents"), "doc_id", "text", "lang", keep_frac=0.5
+        load_table(spark, sf_dir, "documents"), "doc_id", "text", "lang"
     )
 
 
@@ -216,7 +216,7 @@ def _contamination(docs, max_bench_doc_freq):
     """3-gram contamination of ``docs`` against their benchmark subset
     ``doc_id % 20 = 0``."""
     bench = docs.filter(F.col("doc_id") % 20 == 0)
-    return C.contamination_overlap(docs, "doc_id", "text", bench, n=3,
+    return C.contamination_overlap(docs, "doc_id", "text", bench,
                                    max_bench_doc_freq=max_bench_doc_freq)
 
 
@@ -269,8 +269,7 @@ FROM s
 def corpus_chunks(spark, sf_dir):
     """Fixed-size overlapping character chunks (size 200 / stride 150)
     — sequence-window preparation; map-only row expansion."""
-    return C.chunk_documents(load_table(spark, sf_dir, "documents"), "doc_id", "text",
-                             size=200, stride=150)
+    return C.chunk_documents(load_table(spark, sf_dir, "documents"), "doc_id", "text")
 
 
 @register("corpus_mixture", oracle="""
@@ -314,9 +313,8 @@ def corpus_pack_sequences(spark, sf_dir):
     """Pack document chunks into 512-token training sequences by
     global offset — two-level distributed prefix sum, oracle-checked
     against the flat window-sum definition."""
-    chunks = C.chunk_documents(load_table(spark, sf_dir, "documents"), "doc_id", "text",
-                               size=200, stride=150)
-    return C.pack_sequences(chunks, budget_tokens=512)
+    chunks = C.chunk_documents(load_table(spark, sf_dir, "documents"), "doc_id", "text")
+    return C.pack_sequences(chunks)
 
 
 @register("corpus_e2e_pipeline", oracle="""
@@ -410,8 +408,7 @@ def corpus_e2e_pipeline(spark, sf_dir):
     from pyspark.sql import Window
 
     docs = load_table(spark, sf_dir, "documents")
-    kept = C.quality_quantile_filter(docs, "doc_id", "text", "lang",
-                                     keep_frac=0.5)
+    kept = C.quality_quantile_filter(docs, "doc_id", "text", "lang")
     surv = docs.join(kept.select("doc_id"), "doc_id", "semi")
     # exact dedup: keep the min-id copy per 256-bit text digest.  ONE
     # row_number window over the digest — identical row set to the
@@ -443,11 +440,11 @@ def corpus_e2e_pipeline(spark, sf_dir):
         .localCheckpoint(eager=True)
     )
     bench = docs.filter(F.col("doc_id") % 20 == 0)
-    overlap = C.contamination_overlap(deduped, "doc_id", "text", bench, n=3)
+    overlap = C.contamination_overlap(deduped, "doc_id", "text", bench)
     contaminated = overlap.filter(F.col("is_contaminated")).select("doc_id")
     clean = deduped.join(contaminated, "doc_id", "left_anti")
-    chunks = C.chunk_documents(clean, "doc_id", "text", size=200, stride=150)
-    return C.pack_sequences(chunks, budget_tokens=512)
+    chunks = C.chunk_documents(clean, "doc_id", "text")
+    return C.pack_sequences(chunks)
 
 
 @register("corpus_shuffle_shards", oracle="""
@@ -506,8 +503,7 @@ def corpus_bm25_topk(spark, sf_dir):
     order-independent and oracle-exact."""
     return C.bm25_search(
         load_table(spark, sf_dir, "documents"), "doc_id", "text",
-        query_terms=["join", "hash", "vector", "spark"],
-        k1=1.2, b=0.75, k=20,
+        query_terms=["join", "hash", "vector", "spark"], k=20,
     )
 
 
@@ -528,7 +524,6 @@ def corpus_global_index(spark, sf_dir):
         docs,
         order_cols=[F.desc("n_chars"), F.asc("doc_id")],
         range_cols=[F.desc("n_chars"), F.asc("doc_id")],
-        out_col="row_id",
     )
 
 
@@ -552,7 +547,7 @@ def _curation_report(spark, sf_dir, max_bench_doc_freq):
     quality = T.quality_scores(docs, "doc_id", "text").select(
         "doc_id", "n_tokens", "uniq_ratio", "stopword_ratio", "is_quality"
     )
-    novelty = D.ngram_novelty(docs, "doc_id", "text", n=5).select(
+    novelty = D.ngram_novelty(docs, "doc_id", "text").select(
         "doc_id", "novelty"
     )
     contam = _contamination(docs, max_bench_doc_freq).select(
@@ -709,9 +704,9 @@ def corpus_hybrid_rrf(spark, sf_dir):
     ).select("doc_id", "rank")
     emb = load_table(spark, sf_dir, "embeddings")
     dense = S.cosine_topk_bruteforce(
-        emb, emb.filter(F.col("vec_id") == 0), "vec_id", "embedding", k=100
+        emb, emb.filter(F.col("vec_id") == 0), k=100
     ).select(F.col("neighbor_id").alias("doc_id"), "rank")
-    return S.rrf_fuse(sparse_r, dense, "doc_id", "rank", k_const=60, k=20)
+    return S.rrf_fuse(sparse_r, dense)
 
 
 @register("corpus_token_budget_plan", oracle="""
@@ -792,14 +787,14 @@ def corpus_vocabulary(spark, sf_dir):
     from ..operators.corpus import vocabulary_oov
 
     return vocabulary_oov(
-        load_table(spark, sf_dir, "documents"), "doc_id", "text", min_df=2, max_df_ratio=0.8
+        load_table(spark, sf_dir, "documents"), "doc_id", "text"
     )
 
 
 def _bpe_oracle():
     from ._bpe_sql import bpe_train_sql
 
-    return bpe_train_sql(n_merges=8, top_words=2000)
+    return bpe_train_sql()
 
 
 @register("corpus_bpe_merges", oracle=_bpe_oracle())
@@ -816,13 +811,13 @@ def corpus_bpe_merges(spark, sf_dir):
     from ..operators.bpe import bpe_train
 
     docs = load_table(spark, sf_dir, "documents")
-    return bpe_train(spark, docs, "text", n_merges=8, top_words=2000)
+    return bpe_train(spark, docs, "text")
 
 
 def _bpe_encode_oracle():
     from ._bpe_sql import bpe_encode_sql
 
-    return bpe_encode_sql(n_merges=8, top_words=2000)
+    return bpe_encode_sql()
 
 
 @register("corpus_bpe_encode", oracle=_bpe_encode_oracle())
@@ -836,8 +831,7 @@ def corpus_bpe_encode(spark, sf_dir):
     from ..operators.bpe import bpe_encode_counts
 
     docs = load_table(spark, sf_dir, "documents")
-    return bpe_encode_counts(spark, docs, "doc_id", "text",
-                             n_merges=8, top_words=2000)
+    return bpe_encode_counts(spark, docs, "doc_id", "text")
 
 
 def _cluster_balance_oracle():
@@ -991,8 +985,7 @@ def corpus_leakage_safe_split(spark, sf_dir):
     pair step swaps to the MinHash-LSH generator; the split logic is
     unchanged."""
     docs = load_table(spark, sf_dir, "documents")
-    pairs = D.jaccard_pairs_exact(docs, "doc_id", "text",
-                                  n=5, threshold=0.5)
+    pairs = D.jaccard_pairs_exact(docs, "doc_id", "text")
     clusters = D.duplicate_clusters(pairs)
     reps = (
         docs.select("doc_id")
@@ -1074,7 +1067,7 @@ def corpus_vocab_coverage(spark, sf_dir):
     Term-keyed count + TakeOrdered top-V + broadcast join; single
     integer division for the rate."""
     return topv_coverage(
-        load_table(spark, sf_dir, "documents"), "source", "text", v=500)
+        load_table(spark, sf_dir, "documents"), "source", "text")
 
 
 @register("corpus_rendezvous_shards", oracle="""
@@ -1366,8 +1359,7 @@ def corpus_quality_calibration(spark, sf_dir):
     )
 
 
-@register("corpus_bpe_fertility", oracle=bpe_fertility_sql(
-    n_merges=8, top_words=2000))
+@register("corpus_bpe_fertility", oracle=bpe_fertility_sql())
 def corpus_bpe_fertility(spark, sf_dir):
     """Tokenizer fertility by language: BPE tokens per word under the
     corpus-trained 8-merge symbol table (operators/bpe.py), rounded
@@ -1377,8 +1369,7 @@ def corpus_bpe_fertility(spark, sf_dir):
     the <=2000-row vocab, never per document); the oracle replays the
     whole training unrolled."""
     docs = load_table(spark, sf_dir, "documents")
-    per_doc = bpe_encode_counts(
-        spark, docs, "doc_id", "text", n_merges=8, top_words=2000)
+    per_doc = bpe_encode_counts(spark, docs, "doc_id", "text")
     out = (
         per_doc.join(docs.select("doc_id", "lang"), "doc_id")
         .groupBy(F.col("lang").alias("class"))
@@ -1606,7 +1597,7 @@ def corpus_contamination_bloom(spark, sf_dir):
     from pyspark.sql import Observation
 
     obs = Observation()
-    idx = (C.bench_shingle_index(bench, "doc_id", "text", n=3,
+    idx = (C.bench_shingle_index(bench, "doc_id", "text",
                                  max_bench_doc_freq=1)
            .observe(obs, F.count(F.lit(1)).alias("n_keys"))
            .localCheckpoint(eager=True))
@@ -1628,22 +1619,9 @@ def corpus_contamination_bloom(spark, sf_dir):
     words = bloom_words_table(idx, "shingle", bits, _K,
                               portable=False)
     return C.contamination_overlap(
-        new, "doc_id", "text", bench, n=3,
+        new, "doc_id", "text", bench,
         bench_index=idx, bench_bloom=words,
         bloom_bits=bits, bloom_hashes=_K, bloom_portable=False)
-
-
-#: the dedup_cross_snapshot convention: prior corpus = even doc_ids, new
-#: crawl = odd doc_ids
-_A_WHERE = "doc_id % 2 = 0"
-
-
-_B_WHERE = "doc_id % 2 = 1"
-
-
-#: |drift| >= 5% of a token-per-word (50k ppm) flags a retrain — the
-#: knob a real pipeline tunes against its retrain budget
-_RETRAIN_PPM = 50_000
 
 
 def _tagged(docs):
@@ -1653,9 +1631,7 @@ def _tagged(docs):
     )
 
 
-@register("tokenizer_fertility_drift", oracle=bpe_fertility_drift_sql(
-    n_merges=8, top_words=2000, a_where=_A_WHERE, b_where=_B_WHERE,
-    retrain_ppm=_RETRAIN_PPM))
+@register("tokenizer_fertility_drift", oracle=bpe_fertility_drift_sql())
 def tokenizer_fertility_drift(spark, sf_dir):
     """Per-language BPE fertility drift, prior snapshot vs new crawl,
     under the prior snapshot's frozen 8-merge symbol table
@@ -1672,12 +1648,10 @@ def tokenizer_fertility_drift(spark, sf_dir):
     return bpe_fertility_drift(
         spark,
         docs.filter(F.col("doc_id") % 2 == 0),
-        _tagged(docs), "text", "lang",
-        n_merges=8, top_words=2000, retrain_ppm=_RETRAIN_PPM)
+        _tagged(docs), "text", "lang")
 
 
-@register("tokenizer_oov_drift", oracle=vocab_oov_drift_sql(
-    top_words=2000, a_where=_A_WHERE, b_where=_B_WHERE))
+@register("tokenizer_oov_drift", oracle=vocab_oov_drift_sql())
 def tokenizer_oov_drift(spark, sf_dir):
     """Per-language OOV-mass drift against the prior snapshot's
     top-2000 dictionary (operators/bpe.py vocab_oov_drift) — the
@@ -1685,7 +1659,7 @@ def tokenizer_oov_drift(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     return vocab_oov_drift(
         docs.filter(F.col("doc_id") % 2 == 0),
-        _tagged(docs), "text", "lang", top_words=2000)
+        _tagged(docs), "text", "lang")
 
 
 @register("tfidf_top_terms", oracle="""
@@ -1712,7 +1686,7 @@ def tfidf_top_terms(spark, sf_dir):
     """Top-5 TF-IDF terms per document (smoothed idf, rounded-then-
     ranked so ordering is engine-portable)."""
     return C.tfidf_top_terms(
-        load_table(spark, sf_dir, "documents"), "doc_id", "text", k=5)
+        load_table(spark, sf_dir, "documents"), "doc_id", "text")
 
 
 def _kmeans_oracle():
@@ -1807,7 +1781,7 @@ def contamination_bloom_cut_audit(spark, sf_dir):
     # consumers: probe, flags join
     news = rows.select("shingle").distinct().localCheckpoint(eager=True)
     # consumers: words build, flags join, n_bench_shingles count
-    store = (C.bench_shingle_index(bench, "doc_id", "text", n=3,
+    store = (C.bench_shingle_index(bench, "doc_id", "text",
                                    max_bench_doc_freq=1)
              .select("shingle").distinct()
              .localCheckpoint(eager=True))

@@ -97,7 +97,7 @@ def dedup_survivors(spark, sf_dir):
     pipeline actually runs after near-dup detection; oracle recomputes
     clusters via a recursive transitive-closure CTE."""
     docs = load_table(spark, sf_dir, "documents")
-    pairs = D.jaccard_pairs_exact(docs, "doc_id", "text", n=5, threshold=0.5)
+    pairs = D.jaccard_pairs_exact(docs, "doc_id", "text")
     clusters = D.duplicate_clusters(pairs)
     surv = D.dedup_survivors(
         docs.select("doc_id", "n_chars"), clusters, "doc_id", "n_chars"
@@ -210,10 +210,9 @@ def dedup_multi_signal(spark, sf_dir):
     # Jaccard + containment share one posting-list pass (the expensive
     # stages would otherwise run twice); SimHash is the third signal
     overlap = D.overlap_pair_signals(
-        docs, "doc_id", "text", n=5,
-        jaccard_threshold=0.5, containment_threshold=0.8,
+        docs, "doc_id", "text",
     )
-    simh = D.simhash_pairs(docs, "doc_id", "text", max_hamming=3, portable=True)
+    simh = D.simhash_pairs(docs, "doc_id", "text", max_hamming=3)
     pairs = overlap.union(simh.select("doc_a", "doc_b")).distinct()
     return D.duplicate_clusters(pairs)
 
@@ -255,7 +254,7 @@ def dedup_minhash_lsh_r2(spark, sf_dir):
     tests/test_dedup_edges.py."""
     return D.minhash_lsh_pairs(
         load_table(spark, sf_dir, "documents"), "doc_id", "text",
-        n=5, num_hashes=24, rows_per_band=2, threshold=0.5, portable=True)
+        num_hashes=24, rows_per_band=2, portable=True)
 
 
 @register("dedup_simhash", oracle=_SIMHASH_PAIRS + """\
@@ -271,7 +270,7 @@ def dedup_simhash(spark, sf_dir):
     recomputes fingerprints bit-by-bit and brute-forces pairs, while
     the Spark side stays pigeonhole-banded — never O(n²)."""
     return D.simhash_pairs(load_table(spark, sf_dir, "documents"), "doc_id", "text",
-                           max_hamming=2, portable=True)
+                           max_hamming=2)
 
 
 @register("dedup_semantic", oracle="""
@@ -322,8 +321,7 @@ def dedup_semantic(spark, sf_dir):
     largest bucket, never the corpus; bucket assignment, pair scores,
     and verdicts are all replayed in SQL — a full value oracle."""
     emb = load_table(spark, sf_dir, "embeddings")
-    return S.semantic_dedup(emb, "vec_id", "embedding",
-                            dim=64, n_planes=6, threshold=0.4)
+    return S.semantic_dedup(emb)
 
 
 @register("dedup_exact", oracle="""
@@ -353,8 +351,7 @@ WHERE common * 1.0 / (ca.n + cb.n - common) >= 0.5
 def dedup_jaccard_exact(spark, sf_dir):
     """Exact 5-gram Jaccard near-dup pairs via posting-list join."""
     return D.jaccard_pairs_exact(
-        load_table(spark, sf_dir, "documents"), "doc_id", "text",
-        n=5, threshold=0.5)
+        load_table(spark, sf_dir, "documents"), "doc_id", "text")
 
 
 @register("dedup_jaccard_capped", oracle="""
@@ -389,16 +386,14 @@ def dedup_jaccard_capped(spark, sf_dir):
     mirrors the cap with a COUNT(*) OVER (PARTITION BY shingle)
     prefilter."""
     return D.jaccard_pairs_exact(
-        load_table(spark, sf_dir, "documents"), "doc_id", "text",
-        n=5, threshold=0.5, max_doc_freq=2)
+        load_table(spark, sf_dir, "documents"), "doc_id", "text", max_doc_freq=2)
 
 
 @register("dedup_minhash_lsh", oracle=_JACCARD_ORACLE)
 def dedup_minhash_lsh(spark, sf_dir):
     """MinHash-LSH candidates (24 hashes, 1-row bands) + exact verify."""
-    return D.minhash_lsh_pairs(load_table(spark, sf_dir, "documents"), "doc_id", "text",
-                               n=5, num_hashes=24, rows_per_band=1,
-                               threshold=0.5)
+    return D.minhash_lsh_pairs(load_table(spark, sf_dir, "documents"),
+                               "doc_id", "text", num_hashes=24, rows_per_band=1)
 
 
 @register("dedup_simhash_md5", oracle=_SIMHASH_PAIRS + """\
@@ -412,7 +407,7 @@ def dedup_simhash_md5(spark, sf_dir):
     brute-forces all pairs; the Spark side still never goes O(n²)).
     Upgrades SimHash from rows-only to hash-verified evidence."""
     return D.simhash_pairs(load_table(spark, sf_dir, "documents"), "doc_id", "text",
-                           max_hamming=3, portable=True)
+                           max_hamming=3)
 
 
 _CLUSTERS_ORACLE = _SHINGLE_REACH + """
@@ -427,8 +422,7 @@ def dedup_clusters(spark, sf_dir):
     components (iterative min-label propagation); the oracle computes
     the same components via a recursive transitive-closure CTE."""
     pairs = D.jaccard_pairs_exact(
-        load_table(spark, sf_dir, "documents"), "doc_id", "text",
-        n=5, threshold=0.5)
+        load_table(spark, sf_dir, "documents"), "doc_id", "text")
     return D.duplicate_clusters(pairs)
 
 
@@ -506,8 +500,7 @@ def dedup_containment(spark, sf_dir):
     subset-duplicate metric catching excerpts/quotes that Jaccard's
     union normalization hides; same posting-list join shape."""
     return D.containment_pairs_exact(
-        load_table(spark, sf_dir, "documents"), "doc_id", "text",
-        n=5, threshold=0.8)
+        load_table(spark, sf_dir, "documents"), "doc_id", "text")
 
 
 @register("dedup_embedding_cosine", oracle="""
@@ -533,7 +526,7 @@ def dedup_embedding_cosine(spark, sf_dir):
     from ..operators import dedup as D
 
     pairs = S.cosine_pairs_blocked(
-        _emb(spark, sf_dir), "vec_id", "embedding", threshold=0.4
+        _emb(spark, sf_dir)
     ).select(F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"))
     return D.duplicate_clusters(pairs).select(
         F.col("doc_id").alias("vec_id"), "cluster_id"
@@ -574,7 +567,7 @@ def dedup_tf_cosine(spark, sf_dir):
 
     return tf_cosine_pairs(
         load_table(spark, sf_dir, "documents"), "doc_id", "text",
-        n=3, threshold=0.5, max_doc_freq=20,
+        threshold=0.5, max_doc_freq=20,
     )
 
 
@@ -648,8 +641,7 @@ def dedup_threshold_sweep(spark, sf_dir):
     re-run per threshold), then a 5-row explode + aggregate over the
     pair set."""
     pairs = D.jaccard_pairs_exact(
-        load_table(spark, sf_dir, "documents"), "doc_id", "text",
-        n=5, threshold=0.5)
+        load_table(spark, sf_dir, "documents"), "doc_id", "text")
     swept = pairs.select(
         "doc_b", F.expr(_JMICRO).alias("jm"),
         F.explode(F.array(*[F.lit(t) for t in _SWEEP_T])).alias("t_micro"))
@@ -679,8 +671,7 @@ def dedup_cluster_size_histogram(spark, sf_dir):
     (operators/dedup.py duplicate_clusters, pointer-jumping) -> two
     bounded aggregates.  Singleton docs count as size-1 clusters."""
     pairs = D.jaccard_pairs_exact(
-        load_table(spark, sf_dir, "documents"), "doc_id", "text",
-        n=5, threshold=0.5)
+        load_table(spark, sf_dir, "documents"), "doc_id", "text")
     clusters = D.duplicate_clusters(pairs)
     sizes = clusters.groupBy("cluster_id").agg(
         F.count(F.lit(1)).alias("sz"))
@@ -731,10 +722,10 @@ def dedup_lsh_recall_audit(spark, sf_dir):
     both pair generators are posting-list/band joins, never n²."""
     docs = load_table(spark, sf_dir, "documents")
     exact = D.jaccard_pairs_exact(
-        docs, "doc_id", "text", n=5, threshold=0.5
+        docs, "doc_id", "text"
     ).select("doc_a", "doc_b")
     cand = D.minhash_lsh_pairs(
-        docs, "doc_id", "text", n=5, num_hashes=24, rows_per_band=2,
+        docs, "doc_id", "text", num_hashes=24, rows_per_band=2,
         portable=True, verify=False)
     ne = exact.agg(F.count(F.lit(1)).cast("bigint").alias("n_exact"))
     nc = cand.agg(F.count(F.lit(1)).cast("bigint").alias("n_cand"))
@@ -786,7 +777,7 @@ def dedup_survivor_bias_audit(spark, sf_dir):
     components machinery; the audit itself is one bounded aggregate."""
     docs = load_table(spark, sf_dir, "documents")
     pairs = D.jaccard_pairs_exact(
-        docs, "doc_id", "text", n=5, threshold=0.5)
+        docs, "doc_id", "text")
     cc = D.duplicate_clusters(pairs).withColumnRenamed(
         "doc_id", "cid").withColumnRenamed("cluster_id", "cl")
     st = (
@@ -1001,7 +992,7 @@ def dedup_prefix_filter_jaccard(spark, sf_dir):
     acceptable: the rare-first order makes the joined lists the
     SHORTEST ones (the funnel audit below grades the pruning power)."""
     return D.prefix_filter_jaccard_pairs(
-        load_table(spark, sf_dir, "documents"), "doc_id", "text", n=5, threshold=0.5)
+        load_table(spark, sf_dir, "documents"), "doc_id", "text")
 
 
 @register("dedup_prefix_filter_funnel", oracle=f"""
@@ -1158,7 +1149,7 @@ def dedup_cross_snapshot(spark, sf_dir):
     prior, new = _snapshots(spark, sf_dir)
     store = (D.shingles(prior, "doc_id", "text", 5)
              .select("shingle").distinct())
-    out = D.cross_snapshot_containment(new, store, "doc_id", "text", n=5)
+    out = D.cross_snapshot_containment(new, store, "doc_id", "text")
     return out.withColumn("is_dup", F.col("containment_ppm") >= 800000)
 
 
@@ -1179,8 +1170,7 @@ def dedup_cross_snapshot_funnel(spark, sf_dir):
     store = (D.shingles(prior, "doc_id", "text", 5)
              .select("shingle").distinct()
              .localCheckpoint(eager=True))  # two consumers below
-    contain = D.cross_snapshot_containment(new, store, "doc_id", "text",
-                                           n=5)
+    contain = D.cross_snapshot_containment(new, store, "doc_id", "text")
     n_store = store.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_store"))
     rollup = contain.agg(
@@ -1242,7 +1232,7 @@ def dedup_cross_snapshot_bloom(spark, sf_dir):
     words = bloom_words_table(store, "shingle", bits, _K,
                               portable=False)
     out = D.cross_snapshot_containment(
-        new, store, "doc_id", "text", n=5,
+        new, store, "doc_id", "text",
         store_bloom=words, bloom_bits=bits, bloom_hashes=_K,
         bloom_portable=False)
     return out.withColumn("is_dup", F.col("containment_ppm") >= 800000)

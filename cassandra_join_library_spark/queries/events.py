@@ -109,7 +109,7 @@ def events_value_outliers(spark, sf_dir):
     from ..sources.catalog import load_events
 
     ev = load_events(spark, sf_dir).select("event_id", "event_type", "value")
-    return value_outliers(ev, "event_id", "event_type", "value", n_sigma=3.0)
+    return value_outliers(ev, "event_id", "event_type", "value")
 
 
 @register("events_tumbling", oracle=_TUMBLING_1H)
@@ -384,7 +384,7 @@ def events_mad_outliers(spark, sf_dir):
     from ..sources.catalog import load_events
 
     ev = load_events(spark, sf_dir).select("event_id", "event_type", "value")
-    return mad_outliers(ev, "event_id", "event_type", "value", k=3.5)
+    return mad_outliers(ev, "event_id", "event_type", "value")
 
 
 @register("events_first_touch", oracle="""
@@ -656,7 +656,7 @@ def events_ewma_exact(spark, sf_dir):
         & F.col("value").isNotNull())
     p = ev.select("user_id", "ts", "event_id",
                   F.expr(_VMICRO).alias("v_micro"))
-    out = ewma_dyadic(p, "user_id", "ts", "event_id", "v_micro", k=8)
+    out = ewma_dyadic(p, "user_id", "ts", "event_id", "v_micro")
     return out.select(
         "user_id",
         F.unix_timestamp("ts").cast("bigint").alias("ts_epoch"),
@@ -915,7 +915,7 @@ def events_cusum_drift(spark, sf_dir):
     All BIGINT; the ordering windows run over the calendar-bounded
     daily rollup, never the fact table."""
     daily = _daily_order_value(spark, sf_dir)
-    out = cusum_integer(daily, "day", "v", slack_div=20)
+    out = cusum_integer(daily, "day", "v")
     return out.select(
         F.datediff("ord", F.lit("1970-01-01")).cast("bigint")
         .alias("day_num"),
@@ -1437,8 +1437,7 @@ def asof_purchase_click(spark, sf_dir):
     clicks = e.filter(F.col("event_type") == "click").select(
         "event_id", "user_id", "ts"
     )
-    out = asof_join(purchases, clicks, key="user_id",
-                    left_ts="ts", right_ts="ts", right_id="event_id")
+    out = asof_join(purchases, clicks, key="user_id")
     return out.select(
         "event_id", "user_id",
         F.unix_timestamp("ts").cast("bigint").alias("purchase_epoch"),
@@ -1512,8 +1511,7 @@ def asof_nearest_event(spark, sf_dir):
     from ..operators.asof import asof_join_nearest
 
     clicks, purchases = _clicks_purchases(spark, sf_dir)
-    out = asof_join_nearest(clicks, purchases, "user_id",
-                            right_id="event_id", tolerance_seconds=1800)
+    out = asof_join_nearest(clicks, purchases, "user_id", tolerance_seconds=1800)
     return _per_event(out, "matched_event_id", "matched_dt_us")
 
 
@@ -1573,8 +1571,7 @@ def asof_interpolate_value(spark, sf_dir):
         (F.col("event_type") == "purchase") & F.col("value").isNotNull()
     ).select("user_id", "ts", "event_id",
              F.expr(_VMICRO).alias("v_micro"))
-    out = asof_interpolate(l, r, "user_id", right_id="event_id",
-                           value_micro="v_micro")
+    out = asof_interpolate(l, r, "user_id")
     return _per_event(out, "v_before", "v_after", "v_interp")
 
 
@@ -1590,7 +1587,7 @@ def cdc_merge_upsert(spark, sf_dir):
 
     target, changes = _cdc_target_and_changes(spark, sf_dir)
     return CD.merge_upsert(target, changes, ["user_id"],
-                           ["ts_us", "event_id"], "op")
+                           ["ts_us", "event_id"])
 
 
 @register("ivm_orders_by_month_refresh", oracle="""

@@ -22,7 +22,7 @@ from ._shared import _rdiv_sql
 def _pagerank_oracle():
     from ..operators.graph import pagerank_sql
 
-    return pagerank_sql(n_iter=4, damping_pct=85)
+    return pagerank_sql()
 
 
 @register("graph_pagerank_copurchase", oracle=_pagerank_oracle())
@@ -35,8 +35,7 @@ def graph_pagerank_copurchase(spark, sf_dir):
     a marketplace risk/recommendation pipeline consumes."""
     from ..operators.graph import pagerank_fixed_point
 
-    return pagerank_fixed_point(*_customer_supplier_graph(spark, sf_dir),
-                                n_iter=4, damping_pct=85)
+    return pagerank_fixed_point(*_customer_supplier_graph(spark, sf_dir))
 
 
 def _customer_supplier_graph(spark, sf_dir):
@@ -171,7 +170,7 @@ def graph_degree_distribution(spark, sf_dir):
     )
 
 
-@register("graph_bfs_hops", oracle=bfs_sql("c_custkey % 50 = 0", 3))
+@register("graph_bfs_hops", oracle=bfs_sql("c_custkey % 50 = 0"))
 def graph_bfs_hops(spark, sf_dir):
     """Multi-source BFS over the customer↔supplier co-purchase graph
     (operators/graph.py bfs_hops): minimum hop distance from every

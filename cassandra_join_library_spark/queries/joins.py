@@ -593,10 +593,10 @@ GROUP BY sn.n_name, cn.n_name, year(l.l_shipdate)
 
 def _sql(name, tables, sql, doc):
     @register(name, oracle=sql)
-    def q(spark, sf_dir, _tables=tables, _sql=sql):
-        for t in _tables:
+    def q(spark, sf_dir):
+        for t in tables:
             _view(spark, sf_dir, t)
-        return spark.sql(_sql)
+        return spark.sql(sql)
 
     q.__name__ = name
     q.__doc__ = doc

@@ -60,8 +60,8 @@ def _planted_labels(spark, sf_dir):
     ``doc_b/g_b/v_b``."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     lab = docs.select(
-        "doc_id", (F.col("doc_id") % 100).alias("g"),
-        ((F.col("doc_id") / 100).cast("bigint") % 3).alias("v"))
+        "doc_id", (F.col("doc_id") % M.CONTENT_GROUPS).alias("g"),
+        ((F.col("doc_id") / M.CONTENT_GROUPS).cast("bigint") % 3).alias("v"))
     a = lab.select(F.col("doc_id").alias("doc_a"), F.col("g").alias("g_a"),
                    F.col("v").alias("v_a"))
     b = lab.select(F.col("doc_id").alias("doc_b"), F.col("g").alias("g_b"),
@@ -147,7 +147,7 @@ def mm_bmp_parse(spark, sf_dir):
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     built = M.synthesize_bmp(docs, "doc_id")
-    return M.parse_bmp_metadata(built, "doc_id", "payload")
+    return M.parse_bmp_metadata(built, "doc_id")
 
 
 @register("mm_wav_parse", oracle="""
@@ -201,7 +201,7 @@ def mm_wav_parse(spark, sf_dir):
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     built = M.synthesize_wav(docs, "doc_id")
-    return M.parse_wav_metadata(built, "doc_id", "payload")
+    return M.parse_wav_metadata(built, "doc_id")
 
 
 @register("mm_png_parse", oracle="""
@@ -240,7 +240,7 @@ def mm_png_parse(spark, sf_dir):
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     built = M.synthesize_png(docs, "doc_id")
-    return M.parse_png_metadata(built, "doc_id", "payload")
+    return M.parse_png_metadata(built, "doc_id")
 
 
 @register("mm_binary_metadata", oracle="""
@@ -291,8 +291,7 @@ FROM dims
 def mm_resize(spark, sf_dir):
     """Stubbed image-resize (letterbox to 224x224) via mapInPandas —
     integer-ratio math so the oracle is exact."""
-    return M.resize_images(load_table(spark, sf_dir, "documents"), "doc_id", "text",
-                           target_w=224, target_h=224)
+    return M.resize_images(load_table(spark, sf_dir, "documents"), "doc_id", "text")
 
 
 @register("mm_frame_sample", oracle="""
@@ -318,8 +317,7 @@ def mm_frame_sample(spark, sf_dir):
     """Stubbed video frame sampling (every 10 bytes = one 'frame',
     max 8) — demonstrates the row-expanding 1->N mapInPandas shape;
     documents are ASCII so the char-indexed oracle is byte-exact."""
-    return M.sample_frames(load_table(spark, sf_dir, "documents"), "doc_id", "text",
-                           every_n=10, max_frames=8)
+    return M.sample_frames(load_table(spark, sf_dir, "documents"), "doc_id", "text")
 
 
 @register("mm_image_patch_plan", oracle="""
@@ -542,7 +540,7 @@ def mm_pcm_silence_runs(spark, sf_dir):
     unnested samples — different plans, identical integers."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     built = M.synthesize_wav_pcm(docs, "doc_id", n_samples=_PCM_N)
-    return M.pcm_silence_runs(built, "doc_id", threshold=4096)
+    return M.pcm_silence_runs(built, "doc_id")
 
 
 @register("mm_gif_parse", oracle="""
@@ -1140,7 +1138,7 @@ def _phash_fingerprints(spark, sf_dir):
     file splits — the explicit repartition stands in for that."""
     docs = spread_input(
         load_table(spark, sf_dir, "documents").select("doc_id"))
-    imgs = M.synthesize_bmp_pixels(docs, "doc_id", n_groups=100)
+    imgs = M.synthesize_bmp_pixels(docs, "doc_id")
     fps = M.bmp_ahash(imgs, "doc_id")
     return (fps.filter(F.col("is_bmp"))
             .select(F.col("doc_id").alias("doc"),
@@ -1490,7 +1488,7 @@ def _video_fingerprints(spark, sf_dir):
     repartition stands in for that."""
     docs = spread_input(
         load_table(spark, sf_dir, "documents").select("doc_id"))
-    clips = M.synthesize_mp4_keyframes(docs, "doc_id", n_groups=100,
+    clips = M.synthesize_mp4_keyframes(docs, "doc_id",
                                        n_frames=_N_FRAMES)
     fps = M.mp4_keyframe_ahash(clips, "doc_id", n_frames=_N_FRAMES)
     return (fps.select(F.col("doc_id").alias("doc"), "frame", "fp")

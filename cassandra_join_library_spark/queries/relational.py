@@ -794,7 +794,7 @@ def orders_nearest_price_topk(spark, sf_dir):
     out = nearest_value_topk(
         o.select("o_orderpriority", "o_orderkey",
                  F.expr(_TP_CENTS).alias("cents")),
-        "o_orderpriority", "o_orderkey", "cents", k=3)
+        "o_orderpriority", "o_orderkey", "cents")
     return out.filter(F.col("id") % 199 == 0)
 
 
@@ -886,7 +886,6 @@ def _zorder_oracle():
 
     zsql = zorder_value_sql(
         ["o_custkey", "CAST(floor(epoch(o_orderdate) / 86400) AS BIGINT)"],
-        bits=8,
     )
     return f"""
 SELECT o_orderkey, {zsql} AS zval
@@ -926,8 +925,7 @@ def layout_zonemap_skipping(spark, sf_dir):
     could prune the bucket from its footer stats alone.  The
     diagnostic that says when to re-cluster (see ``layout_zorder``).
     One bucket-keyed aggregate."""
-    return zonemap_report(load_table(spark, sf_dir, "documents"), "doc_id", "n_chars",
-                          bucket_size=64, lo=450, hi=700)
+    return zonemap_report(load_table(spark, sf_dir, "documents"), "doc_id", "n_chars")
 
 
 _BIN_TARGET = 32768

@@ -1192,8 +1192,7 @@ def approx_percentiles_sampled(spark, sf_dir):
 
     ev = load_events(spark, sf_dir).select("event_id", "event_type", "value")
     return sampled_percentiles(
-        ev, "event_type", "value", "event_id",
-        rate=8, percentiles=(0.5, 0.9, 0.99),
+        ev, "event_type", "value", "event_id", percentiles=(0.5, 0.9, 0.99),
     )
 
 
@@ -1506,8 +1505,7 @@ def profile_key_skew(spark, sf_dir):
     customers with row share and ratio-to-mean-key-weight — the
     diagnostic that decides whether a join needs salting
     (operators/profiling.py key_skew_report)."""
-    return P.key_skew_report(load_table(spark, sf_dir, "orders"), ["o_custkey"],
-                             top=10)
+    return P.key_skew_report(load_table(spark, sf_dir, "orders"), ["o_custkey"])
 
 
 @register("profile_fk_integrity", oracle="""
@@ -1891,7 +1889,7 @@ def privacy_k_anonymity(spark, sf_dir):
     quasi-identifier pair: equivalence-class sizes, at-risk flags,
     and row shares — operators/profiling.py k_anonymity."""
     return P.k_anonymity(
-        load_table(spark, sf_dir, "customer"), ["c_nationkey", "c_mktsegment"], k=5)
+        load_table(spark, sf_dir, "customer"), ["c_nationkey", "c_mktsegment"])
 
 
 @register("privacy_l_diversity", oracle="""
@@ -1924,7 +1922,7 @@ def privacy_l_diversity(spark, sf_dir):
     j = cust.join(orders, cust.c_custkey == orders.o_custkey).select(
         "c_nationkey", "c_mktsegment", "o_orderpriority")
     return P.l_diversity(
-        j, ["c_nationkey", "c_mktsegment"], "o_orderpriority", l=3)
+        j, ["c_nationkey", "c_mktsegment"], "o_orderpriority")
 
 
 @register("privacy_t_closeness", oracle="""

@@ -77,7 +77,7 @@ def stream_upsert_foreachbatch(spark, sf_dir):
 
     def apply_batch(bdf, _bid):
         merged = CD.merge_upsert(held["snap"], bdf, ["user_id"],
-                                 ["ts_us", "event_id"], "op")
+                                 ["ts_us", "event_id"])
         # materialize: cut lineage so N batches don't stack N joins
         held["snap"] = merged.localCheckpoint(eager=True)
 
@@ -110,8 +110,7 @@ def stream_dedup(spark, sf_dir):
     """Streaming exact dedup on (user_id, event_type) with watermarked
     state eviction."""
     stream = W.read_events_stream(spark, sf_dir)
-    deduped = W.dedup_stream(stream, ["user_id", "event_type"],
-                             watermark="2 hours", within_watermark=True)
+    deduped = W.dedup_stream(stream, ["user_id", "event_type"])
     out = deduped.select("event_id", "user_id", "event_type")
     name, _ = W.run_to_memory(out, output_mode="append")
     return spark.table(name)
@@ -134,8 +133,7 @@ def stream_stream_join(spark, sf_dir):
     oracle applies exactly."""
     l = W.read_events_stream(spark, sf_dir)
     r = W.read_events_stream(spark, sf_dir)
-    joined = W.stream_stream_interval_join(l, r, watermark="2 hours",
-                                           max_lag="5 minutes")
+    joined = W.stream_stream_interval_join(l, r)
     out = joined.select(
         F.col("l_user").alias("user_id"),
         F.col("l_event").alias("l_event"), F.col("r_event").alias("r_event"),
@@ -256,7 +254,7 @@ def stream_session(spark, sf_dir):
     streaming engine — same gaps-and-islands oracle as the batch twin
     ``events_session``."""
     stream = W.read_events_stream(spark, sf_dir)
-    out = W.session_counts(stream, gap="10 minutes", watermark="2 hours")
+    out = W.session_counts(stream)
     name, _ = W.run_to_memory(out, output_mode="complete")
     return spark.table(name)
 
@@ -267,8 +265,7 @@ def stream_sliding(spark, sf_dir):
     overlap factor length/slide = 2; oracle shared with the batch twin
     ``events_sliding``."""
     stream = W.read_events_stream(spark, sf_dir)
-    out = W.sliding_counts(stream, window="1 hour", slide="30 minutes",
-                           watermark="2 hours")
+    out = W.sliding_counts(stream)
     name, _ = W.run_to_memory(out, output_mode="complete")
     return spark.table(name)
 

@@ -38,7 +38,7 @@ def text_ngram_novelty(spark, sf_dir):
     — the content-originality signal; posting-list shape, exact BIGINT
     counts, ratio rounded to 6 dp."""
     return D.ngram_novelty(
-        load_table(spark, sf_dir, "documents"), "doc_id", "text", n=5)
+        load_table(spark, sf_dir, "documents"), "doc_id", "text")
 
 
 @register("text_word_entropy", oracle="""
@@ -893,8 +893,7 @@ def text_boilerplate_coverage(spark, sf_dir):
     boilerplate is the repeated k-gram span, which is also the form
     that survives reflowed HTML at crawl scale."""
     return boilerplate_span_coverage(
-        load_table(spark, sf_dir, "documents"), "doc_id", "text",
-        k=8, min_df=2)
+        load_table(spark, sf_dir, "documents"), "doc_id", "text", min_df=2)
 
 
 @register("string_similarity", oracle="""

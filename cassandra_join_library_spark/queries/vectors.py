@@ -101,7 +101,7 @@ def ann_hard_negatives(spark, sf_dir):
     map-only corpus pass, label filter folded into the join."""
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
-    return S.hard_negatives(emb, queries, "vec_id", "embedding", "label", k=5)
+    return S.hard_negatives(emb, queries, k=5)
 
 
 @register("ann_range_search", oracle="""
@@ -121,8 +121,7 @@ def ann_range_search(spark, sf_dir):
     no window."""
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
-    return S.radius_search(emb, queries, "vec_id", "embedding",
-                           threshold=0.35)
+    return S.radius_search(emb, queries)
 
 
 @register("ann_topk_bruteforce", oracle="""
@@ -147,7 +146,7 @@ def ann_topk_bruteforce(spark, sf_dir):
     broadcast queries x streamed corpus, no corpus shuffle."""
     emb = _emb(spark, sf_dir)
     queries = emb.filter(F.col("vec_id") < 10)
-    return S.cosine_topk_bruteforce(emb, queries, "vec_id", "embedding", k=5)
+    return S.cosine_topk_bruteforce(emb, queries, k=5)
 
 
 @register("ann_ivf_topk", oracle=_IVF_CANDIDATES + """, scored AS (
@@ -174,8 +173,7 @@ def ann_ivf_topk(spark, sf_dir):
     value check, not a recall bound."""
     emb = _emb(spark, sf_dir)
     queries = emb.filter(F.col("vec_id") < 10)
-    return S.ivf_topk(emb, queries, "vec_id", "embedding",
-                      k=5, centroid_stride=32, nprobe=4)
+    return S.ivf_topk(emb, queries, nprobe=4)
 
 
 def _guarded_cos(a: str, b: str) -> str:
@@ -262,8 +260,7 @@ def ann_ivf_kmeans_topk(spark, sf_dir):
         "cent_id BIGINT, embedding ARRAY<DOUBLE>",
     )
     queries = emb.filter(F.col("vec_id") < 10)
-    return S.ivf_topk(emb, queries, "vec_id", "embedding",
-                      k=5, nprobe=3, centroids_df=cent_df)
+    return S.ivf_topk(emb, queries, nprobe=3, centroids_df=cent_df)
 
 
 @register("ann_lsh_cosine", oracle="""
@@ -305,8 +302,7 @@ def ann_lsh_cosine(spark, sf_dir):
     bucket join, exact verify — is replayed in SQL, so this carries a
     FULL value oracle, not just a recall bound."""
     return S.lsh_cosine_pairs(
-        _emb(spark, sf_dir), "vec_id", "embedding",
-        dim=64, n_planes=6, n_tables=8, threshold=0.4,
+        _emb(spark, sf_dir), n_planes=6, n_tables=8, threshold=0.4,
     )
 
 
@@ -380,8 +376,7 @@ def ann_pq_topk(spark, sf_dir):
     asserted in tests/test_similarity.py."""
     emb = _emb(spark, sf_dir)
     queries = emb.filter(F.col("vec_id") < 10)
-    return S.pq_topk(emb, queries, "vec_id", "embedding",
-                     k=5, m=8, ks=16, centroid_stride=7, refine=4)
+    return S.pq_topk(emb, queries, k=5, m=8, ks=16)
 
 
 @register("ann_mutual_knn", oracle="""
@@ -411,8 +406,7 @@ def ann_mutual_knn(spark, sf_dir):
     generators and this same mutual join runs on their output."""
     emb = load_table(spark, sf_dir, "embeddings")
     universe = emb.filter(F.col("vec_id") % 4 == 0)
-    knn = S.cosine_topk_bruteforce(universe, universe, "vec_id",
-                                   "embedding", k=5)
+    knn = S.cosine_topk_bruteforce(universe, universe, k=5)
     k1 = knn.select(F.col("query_id").alias("id_a"),
                     F.col("neighbor_id").alias("id_b"),
                     F.col("cosine_sim"))
@@ -467,8 +461,7 @@ def ann_ivf_recall_audit(spark, sf_dir):
     themselves carry the full oracle."""
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
-    ivf = S.ivf_topk(emb, queries, "vec_id", "embedding",
-                     k=5, centroid_stride=32, nprobe=4) \
+    ivf = S.ivf_topk(emb, queries, nprobe=4) \
         .select("query_id", F.col("neighbor_id").alias("ivf_n"))
     return _recall_at_5(emb, queries, ivf, "ivf_n")
 
@@ -476,7 +469,7 @@ def ann_ivf_recall_audit(spark, sf_dir):
 def _recall_at_5(emb, queries, approx, hit):
     """Per-query recall in ppm of ``approx``'s neighbors (column
     ``hit``) against the exact cosine top-5 of ``queries``."""
-    brute = S.cosine_topk_bruteforce(emb, queries, "vec_id", "embedding",
+    brute = S.cosine_topk_bruteforce(emb, queries,
                                      k=5) \
         .select("query_id", "neighbor_id")
     j = brute.join(
@@ -517,7 +510,7 @@ def ann_hamming_topk(spark, sf_dir):
     correctness claim."""
     emb = _emb(spark, sf_dir)
     queries = emb.filter(F.col("vec_id") < 10)
-    return S.hamming_topk(emb, queries, "vec_id", "embedding",
+    return S.hamming_topk(emb, queries,
                           k=5, dim=64)
 
 
@@ -555,7 +548,7 @@ def ann_hamming_recall_audit(spark, sf_dir):
     exactly why it must be measured, not assumed."""
     emb = _emb(spark, sf_dir)
     queries = emb.filter(F.col("vec_id") < 10)
-    ham = S.hamming_topk(emb, queries, "vec_id", "embedding",
+    ham = S.hamming_topk(emb, queries,
                          k=5, dim=64) \
         .select("query_id", F.col("neighbor_id").alias("ham_n"))
     return _recall_at_5(emb, queries, ham, "ham_n")
@@ -590,7 +583,7 @@ def embedding_label_centroids(spark, sf_dir):
     diverged between engines at sf0.1) keep the means bit-stable and
     fully value-oracled."""
     emb = load_table(spark, sf_dir, "embeddings")
-    return S.label_centroids(emb, "embedding", "label")
+    return S.label_centroids(emb)
 
 
 @register("embedding_cosine_pairs", oracle="""
@@ -608,7 +601,7 @@ def embedding_cosine_pairs(spark, sf_dir):
     tasks with bounded memory.  LSH variant below is the sub-quadratic
     near-dup path."""
     return S.cosine_pairs_blocked(
-        _emb(spark, sf_dir), "vec_id", "embedding", threshold=0.4
+        _emb(spark, sf_dir)
     )
 
 
@@ -641,7 +634,7 @@ def embedding_dim_stats(spark, sf_dir):
     ``pos`` key."""
     from ..operators.similarity import dim_stats
 
-    return dim_stats(load_table(spark, sf_dir, "embeddings"), "embedding")
+    return dim_stats(load_table(spark, sf_dir, "embeddings"))
 
 
 @register("embedding_quantize_int8", oracle="""
@@ -674,7 +667,7 @@ def embedding_quantize_int8(spark, sf_dir):
     from ..operators.similarity import quantize_int8
 
     return quantize_int8(
-        load_table(spark, sf_dir, "embeddings"), "vec_id", "embedding"
+        load_table(spark, sf_dir, "embeddings")
     )
 
 

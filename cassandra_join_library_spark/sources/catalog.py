@@ -36,8 +36,7 @@ class ParquetCatalog(Catalog):
         self.directory = directory
 
     def load(self, spark: SparkSession, table: str) -> DataFrame:
-        path = os.path.join(self.directory, f"{table}.parquet")
-        return read_parquet_cached(spark, path)
+        return load_table(spark, self.directory, table)
 
     def table_names(self) -> "list[str]":
         return sorted(

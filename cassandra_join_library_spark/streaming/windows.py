@@ -88,36 +88,31 @@ def event_totals(df: DataFrame, groups: list, start: str) -> DataFrame:
     )
 
 
-def sliding_counts(stream: DataFrame, window: str = "1 hour",
-                   slide: str = "30 minutes", watermark: str = "2 hours") -> DataFrame:
-    return event_totals(stream.withWatermark("ts", watermark),
-                        [F.window("ts", window, slide).alias("w")],
+#: event-time lateness every watermarked stream of this module tolerates
+WATERMARK = "2 hours"
+
+
+def sliding_counts(stream: DataFrame) -> DataFrame:
+    """1-hour windows sliding every 30 minutes in streaming mode."""
+    return event_totals(stream.withWatermark("ts", WATERMARK),
+                        [F.window("ts", "1 hour", "30 minutes").alias("w")],
                         "window_start")
 
 
-def session_counts(stream: DataFrame, gap: str = "10 minutes",
-                   watermark: str = "2 hours") -> DataFrame:
-    """Session windows in streaming mode (state merges as events
-    arrive; watermark closes sessions)."""
-    return event_totals(stream.withWatermark("ts", watermark),
-                        ["user_id", F.session_window("ts", gap).alias("w")],
+def session_counts(stream: DataFrame) -> DataFrame:
+    """Per-user session windows with a 10-minute gap in streaming mode
+    (state merges as events arrive; watermark closes sessions)."""
+    return event_totals(stream.withWatermark("ts", WATERMARK),
+                        ["user_id", F.session_window("ts", "10 minutes").alias("w")],
                         "session_start_epoch")
 
 
-def dedup_stream(stream: DataFrame, keys: "list[str]",
-                 watermark: "str | None" = "2 hours",
-                 within_watermark: bool = True) -> DataFrame:
+def dedup_stream(stream: DataFrame, keys: "list[str]") -> DataFrame:
     """Streaming exact dedup on key columns.
 
-    ``within_watermark=True`` uses ``dropDuplicatesWithinWatermark`` so
-    state is evicted once the watermark passes — the only sane mode for
-    an unbounded 100 TB stream.  ``False`` falls back to global
-    ``dropDuplicates`` (unbounded state; bounded replays only)."""
-    if watermark is not None:
-        stream = stream.withWatermark("ts", watermark)
-        if within_watermark:
-            return stream.dropDuplicatesWithinWatermark(keys)
-    return stream.dropDuplicates(keys)
+    ``dropDuplicatesWithinWatermark`` evicts state once the watermark
+    passes — the only sane mode for an unbounded 100 TB stream."""
+    return stream.withWatermark("ts", WATERMARK).dropDuplicatesWithinWatermark(keys)
 
 
 def run_to_memory(result: DataFrame,
@@ -146,20 +141,18 @@ def run_to_memory(result: DataFrame,
     return name, q
 
 
-def stream_stream_interval_join(left: DataFrame, right: DataFrame,
-                                watermark: str = "2 hours",
-                                max_lag: str = "5 minutes") -> DataFrame:
+def stream_stream_interval_join(left: DataFrame, right: DataFrame) -> DataFrame:
     """Stream-stream inner join: pair each left event with the same
-    user's right events that happen within ``max_lag`` AFTER it.
+    user's right events that happen within 5 minutes AFTER it.
 
     Both sides carry watermarks and the join condition bounds the
     event-time range — that's what lets the engine evict join state
     (unbounded-range stream joins would keep everything forever)."""
-    l = left.withWatermark("ts", watermark).select(
+    l = left.withWatermark("ts", WATERMARK).select(
         F.col("user_id").alias("l_user"), F.col("event_id").alias("l_event"),
         F.col("ts").alias("l_ts"), F.col("event_type").alias("l_type"),
     )
-    r = right.withWatermark("ts", watermark).select(
+    r = right.withWatermark("ts", WATERMARK).select(
         F.col("user_id").alias("r_user"), F.col("event_id").alias("r_event"),
         F.col("ts").alias("r_ts"), F.col("event_type").alias("r_type"),
     )
@@ -168,7 +161,7 @@ def stream_stream_interval_join(left: DataFrame, right: DataFrame,
         (F.col("l_user") == F.col("r_user"))
         & (F.col("l_event") != F.col("r_event"))
         & (F.col("r_ts") >= F.col("l_ts"))
-        & (F.col("r_ts") <= F.col("l_ts") + F.expr(f"INTERVAL {max_lag}")),
+        & (F.col("r_ts") <= F.col("l_ts") + F.expr("INTERVAL 5 minutes")),
         "inner",
     )
 

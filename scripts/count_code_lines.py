@@ -19,14 +19,18 @@ run of repeated lines with one place its first window also appears.
 
 ``--options`` counts defaulted parameters instead: every parameter with
 a default (positional or keyword-only) of every ``def`` under PATH.  It
-then reads every call in the package, ``scripts/``, ``perfbench/``,
-``tests/`` and ``__spark_entry__.py`` and lists the parameters that no
-call sets.  A call sets a parameter when it passes it by keyword or by
-position, or when it splats ``*args`` / ``**kwargs`` (counted as setting
-every positional / every parameter).  Calls are matched to a ``def`` by
-the called name alone, and to a class's ``__init__`` by the class name
-as well, so a call to another function of the same name counts too:
-the list errs toward "set".
+then reads every call in the package, ``scripts/``, ``perfbench/`` and
+``__spark_entry__.py`` (calls under ``tests/`` are not callers) and
+lists the parameters that have one value in use: every call passes the
+same text, by keyword or by position, where a call that passes nothing
+passes the default's text (so restating the default sets nothing).  A
+``**name`` splat of a ``dict(...)`` built in the calling function
+passes its keys; any other ``*``/``**`` splat passes a value
+unlike every other.  Each listed parameter that a test sets to a second
+value is marked.  Calls are matched to a ``def`` by the called name
+alone, and to a class's ``__init__`` by the class name as well, so a
+call to another function of the same name counts too: the list errs
+toward "two values".
 """
 
 from __future__ import annotations
@@ -84,10 +88,11 @@ def _py_files(p: Path) -> "list[Path]":
 
 
 def defaulted(tree: ast.AST):
-    """Yield ``(names a call may use, parameter, position or None)`` for
-    every defaulted parameter; position counts from the first parameter
-    a caller passes (``self``/``cls`` of a method is skipped).  A
-    class's ``__init__`` is called by the class name."""
+    """Yield ``(names a call may use, parameter, position or None,
+    default's text)`` for every defaulted parameter; position counts
+    from the first parameter a caller passes (``self``/``cls`` of a
+    method is skipped).  A class's ``__init__`` is called by the class
+    name."""
     methods = {id(f): c.name for c in ast.walk(tree) if isinstance(c, ast.ClassDef)
                for f in c.body if isinstance(f, ast.FunctionDef)}
     for f in ast.walk(tree):
@@ -96,64 +101,141 @@ def defaulted(tree: ast.AST):
         names = (f.name, methods[id(f)]) if f.name == "__init__" else (f.name,)
         pos = f.args.posonlyargs + f.args.args
         skip = 1 if id(f) in methods and pos and pos[0].arg in ("self", "cls") else 0
-        for i, a in enumerate(pos[len(pos) - len(f.args.defaults):],
-                              len(pos) - len(f.args.defaults)):
-            yield names, a.arg, i - skip
+        first = len(pos) - len(f.args.defaults)
+        for i, (a, d) in enumerate(zip(pos[first:], f.args.defaults), first):
+            yield names, a.arg, i - skip, ast.unparse(d)
         for a, d in zip(f.args.kwonlyargs, f.args.kw_defaults):
             if d is not None:
-                yield names, a.arg, None
+                yield names, a.arg, None, ast.unparse(d)
 
 
-def calls_setting(files: "list[Path]") -> "dict[str, tuple[set, int, bool]]":
-    """Map each name called in ``files`` to (keywords passed, most
-    positional args passed, whether some call splats ``**``)."""
-    seen = defaultdict(lambda: [set(), 0, False])
+def _dict_splats(scope: ast.AST) -> "dict[str, dict[str, str]]":
+    """``name -> {key: value text}`` for each ``name = dict(k=v, ...)``
+    in ``scope``, so that a call's ``**name`` is read as the keywords
+    it forwards."""
+    out = {}
+    for a in ast.walk(scope):
+        if (isinstance(a, ast.Assign) and len(a.targets) == 1
+                and isinstance(a.targets[0], ast.Name)
+                and isinstance(a.value, ast.Call)
+                and getattr(a.value.func, "id", None) == "dict"
+                and not a.value.args and all(k.arg for k in a.value.keywords)):
+            out[a.targets[0].id] = {k.arg: ast.unparse(k.value)
+                                    for k in a.value.keywords}
+    return out
+
+
+def calls_setting(files: "list[Path]") -> "dict[str, list[tuple[list, dict]]]":
+    """Map each name called in ``files`` to one ``(positional values,
+    keyword values)`` per call, each value the text of its expression.
+    A ``**name`` splat of a ``dict`` built in the calling function adds
+    its keys; any other ``**`` splat, and a ``*args`` splat for every
+    position from it on, passes an unknown value (``None``)."""
+    seen = defaultdict(list)
     for path in files:
-        for c in ast.walk(ast.parse(path.read_text())):
+        tree = ast.parse(path.read_text())
+        scopes = [s for s in ast.walk(tree)
+                  if isinstance(s, (ast.FunctionDef, ast.AsyncFunctionDef))]
+        splats = {}
+        for s in [tree] + scopes:  # an inner function's dicts win
+            d = _dict_splats(s)
+            for c in ast.walk(s):
+                if isinstance(c, ast.Call):
+                    splats[id(c)] = d
+        for c in ast.walk(tree):
             if not isinstance(c, ast.Call):
                 continue
             name = (c.func.attr if isinstance(c.func, ast.Attribute)
                     else getattr(c.func, "id", None))
             if name is None:
                 continue
-            s = seen[name]
-            s[0].update(k.arg for k in c.keywords if k.arg)
-            star = any(isinstance(a, ast.Starred) for a in c.args)
-            s[1] = max(s[1], 1 << 30 if star else len(c.args))
-            s[2] |= any(k.arg is None for k in c.keywords)
+            pos = []
+            for a in c.args:
+                if isinstance(a, ast.Starred):
+                    pos.append(None)
+                    break
+                pos.append(ast.unparse(a))
+            kw = {}
+            for k in c.keywords:
+                if k.arg:
+                    kw[k.arg] = ast.unparse(k.value)
+                elif getattr(k.value, "id", None) in splats[id(c)]:
+                    kw.update(splats[id(c)][k.value.id])
+                else:
+                    kw[None] = None
+            seen[name].append((pos, kw))
     return seen
+
+
+def option_values(path: Path, seen) -> "list[tuple[str, str, set]]":
+    """``(name(parameter), default's text, values in use)`` of every
+    defaulted parameter in ``path``.  Each call in ``seen`` to one of
+    the parameter's names passes a value: the text of its argument, by
+    keyword or position, or the default's text when it passes none.  A
+    parameter no call reaches has its default as its one value.  An
+    unknown value (from a splat) differs from every other value."""
+    out = []
+    for names, arg, i, default in defaulted(ast.parse(path.read_text())):
+        values = set()
+        for pos, kw in (call for name in names for call in seen.get(name, ())):
+            if arg in kw:
+                v = kw[arg]
+            elif None in kw or (i is not None and None in pos[:i + 1]):
+                v = None
+            elif i is not None and i < len(pos):
+                v = pos[i]
+            else:
+                v = default
+            values.add(object() if v is None else v)
+        out.append((f"{names[-1]}({arg})", default, values or {default}))
+    return out
 
 
 def unset_options(path: Path, seen) -> "tuple[int, list[str]]":
     """The number of defaulted parameters in ``path`` and the
-    ``name(parameter)`` of each that no call in ``seen`` sets."""
-    n, unset = 0, []
-    for names, arg, i in defaulted(ast.parse(path.read_text())):
-        n += 1
-        if not any(
-            arg in kw or splat or (i is not None and npos > i)
-            for kw, npos, splat in (seen.get(name, (set(), 0, False))
-                                    for name in names)
-        ):
-            unset.append(f"{names[-1]}({arg})")
-    return n, unset
+    ``name(parameter)`` of each that no call in ``seen`` sets to
+    anything but its default."""
+    opts = option_values(path, seen)
+    return len(opts), [n for n, d, v in opts if v == {d}]
+
+
+def one_value_options(path: Path, seen) -> "list[str]":
+    """``name(parameter) = value`` of each defaulted parameter in
+    ``path`` that every call in ``seen`` gives the same value."""
+    return [f"{n} = {next(iter(v))}" for n, d, v in option_values(path, seen)
+            if len(v) == 1]
+
+
+def caller_files(root: Path, with_tests: bool) -> "list[Path]":
+    """The ``.py`` files of ``CALLERS`` under ``root``; those under
+    ``tests/`` only ``with_tests``."""
+    files = [f for c in CALLERS if (root / c).exists() for f in _py_files(root / c)]
+    return [f for f in files
+            if with_tests or "tests" not in f.relative_to(root).parts]
 
 
 def options(paths: "list[str]") -> None:
-    seen = calls_setting([f for root in CALLERS for f in _py_files(REPO / root)])
-    total = unset_total = 0
+    seen = calls_setting(caller_files(REPO, with_tests=False))
+    with_tests = calls_setting(caller_files(REPO, with_tests=True))
+    total = one_total = test_total = 0
     for p in map(Path, paths):
-        n, unset = 0, []
+        n, one, by_tests = 0, [], 0
         for f in _py_files(p):
-            k, names = unset_options(f, seen)
-            n += k
-            unset.extend(f"{f}:{u}" for u in names)
+            n += len(option_values(f, seen))
+            tested = set(one_value_options(f, with_tests))
+            for o in one_value_options(f, seen):
+                by_tests += o not in tested
+                one.append(f"{f}:{o}"
+                           + ("" if o in tested else "  (tests set another)"))
         total += n
-        unset_total += len(unset)
-        print(f"{n:8d}  {p}  ({len(unset)} set by no call)")
-        for u in unset:
-            print(f"          {u}")
-    print(f"{total:8d}  total  ({unset_total} set by no call)")
+        one_total += len(one)
+        test_total += by_tests
+        print(f"{n:8d}  {p}  ({len(one)} with one value, {by_tests} of them"
+              f" set to another only by tests)")
+        for o in one:
+            print(f"          {o}")
+    print(f"{total:8d}  total  ({one_total} with one value, {test_total} of them"
+          f" set to another only by tests)")
 
 
 DUP_WINDOW, DUP_MIN_CHARS = 4, 100

@@ -96,8 +96,7 @@ def _fingerprints(family: str, spark, sf_dir: str):
     from cassandra_join_library_spark.sources.catalog import load_table
 
     docs = load_table(spark, sf_dir, "documents")
-    return (simhash_fingerprints(docs, "doc_id", "text",
-                                 bits=60, portable=True)
+    return (simhash_fingerprints(docs, "doc_id", "text")
             .select(F.col("doc"), F.col("simhash").alias("fp"))
             .localCheckpoint(eager=True))
 

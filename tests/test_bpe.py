@@ -118,8 +118,8 @@ def test_fertility_drift_frozen_vocab(spark):
         ("b", "en", "aa zz"),
     ])
     row = bpe_fertility_drift(
-        spark, train, tagged, "text", "lang",
-        n_merges=8, top_words=10, retrain_ppm=400_000).collect()[0]
+        spark, train, tagged, "text", "lang", top_words=10,
+        retrain_ppm=400_000).collect()[0]
     # training on 'aa': merges collapse to a single symbol per word
     assert (row["n_words_a"], row["n_bpe_tokens_a"]) == (2, 2)
     # side b: 'aa' -> 1 token, OOV 'zz' -> len+1 = 3 tokens

@@ -93,7 +93,7 @@ def test_kmeans_improves_inertia(heavy_results):
 def test_chunks_reconstruct_text(spark, docs):
     """Concatenating each chunk's first `stride` chars (plus the last
     chunk's remainder) reproduces the original document exactly."""
-    chunks = C.chunk_documents(docs, "doc_id", "text", size=200, stride=150)
+    chunks = C.chunk_documents(docs, "doc_id", "text")
     rebuilt = (
         chunks.withColumn(
             "piece",
@@ -121,7 +121,7 @@ def test_chunks_reconstruct_text(spark, docs):
 
 
 def test_split_is_stable_and_stratified(docs):
-    out = C.stratified_split(docs, "doc_id", "lang", test_per_mille=100)
+    out = C.stratified_split(docs, "doc_id", "lang")
     rows = out.collect()
     assert len(rows) == docs.count()
     frac = sum(1 for r in rows if r["split"] == "test") / len(rows)
@@ -137,7 +137,7 @@ def test_contamination_benchmark_members_flagged(docs):
     bench = docs.filter(F.col("doc_id") % 20 == 0)
     clone = bench.limit(1).withColumn("doc_id", F.col("doc_id") + 1_000_000)
     out = C.contamination_overlap(
-        docs.unionByName(clone), "doc_id", "text", bench, n=3
+        docs.unionByName(clone), "doc_id", "text", bench
     )
     flagged = {r["doc_id"]: r for r in out.collect()}
     cid = clone.collect()[0]["doc_id"]
@@ -146,8 +146,8 @@ def test_contamination_benchmark_members_flagged(docs):
 
 
 def test_pack_sequences_contiguous_and_bounded(docs):
-    chunks = C.chunk_documents(docs, "doc_id", "text", size=200, stride=150)
-    packs = C.pack_sequences(chunks, budget_tokens=512)
+    chunks = C.chunk_documents(docs, "doc_id", "text")
+    packs = C.pack_sequences(chunks)
     rows = sorted(
         ((r["doc_id"], r["chunk_id"], r["n_tokens"], r["pack_id"])
          for r in packs.collect())
@@ -211,7 +211,7 @@ def test_mixture_flattens_source_skew(docs):
 
 
 def test_quantile_filter_keeps_top_half(docs):
-    out = C.quality_quantile_filter(docs, "doc_id", "text", "lang", 0.5)
+    out = C.quality_quantile_filter(docs, "doc_id", "text", "lang")
     per_lang_total = {
         r["lang"]: r["c"]
         for r in docs.groupBy("lang").agg(F.count("*").alias("c")).collect()

@@ -27,7 +27,7 @@ def docs(spark):
 @heavy_check("curation_survivors_payload")
 def _survivors_payload(spark):
     docs = load_table(spark, SF_SMOKE, "documents")
-    pairs = D.jaccard_pairs_exact(docs, "doc_id", "text", n=5, threshold=0.5)
+    pairs = D.jaccard_pairs_exact(docs, "doc_id", "text")
     clusters = D.duplicate_clusters(pairs).persist()
     surv = D.dedup_survivors(
         docs.select("doc_id", "n_chars"), clusters, "doc_id", "n_chars"
@@ -56,13 +56,12 @@ def _survivors_payload(spark):
 @heavy_check("curation_semantic_dedup_payload")
 def _semantic_dedup_payload(spark):
     emb = load_table(spark, SF_SMOKE, "embeddings")
-    out = S.semantic_dedup(emb, "vec_id", "embedding",
-                           dim=64, n_planes=6, threshold=0.4)
+    out = S.semantic_dedup(emb)
     rows = {r["vec_id"]: r.asDict() for r in out.collect()}
     exact = {
         frozenset((r["id_a"], r["id_b"]))
         for r in S.cosine_pairs_blocked(
-            emb, "vec_id", "embedding", threshold=0.4
+            emb
         ).collect()
     }
     return rows, exact, emb.count()
@@ -120,7 +119,7 @@ def test_bm25_scores_positive_and_tf_monotonic(spark, docs):
 
 
 def test_label_centroids_shape_and_bounds(spark, emb):
-    cent = S.label_centroids(emb, "embedding", "label").persist()
+    cent = S.label_centroids(emb).persist()
     dims = emb.select(F.size("embedding").alias("d")).distinct().collect()
     assert len(dims) == 1
     d = dims[0]["d"]
@@ -170,7 +169,7 @@ def test_normalized_dedup_collapses_variants(spark, docs):
 def test_ngram_novelty_bounds_and_short_docs(spark, docs):
     from cassandra_join_library_spark.operators import dedup as D
 
-    nov = D.ngram_novelty(docs, "doc_id", "text", n=5).collect()
+    nov = D.ngram_novelty(docs, "doc_id", "text").collect()
     assert all(0.0 <= r["novelty"] <= 1.0 for r in nov)
     assert all(0 <= r["n_novel"] <= r["n_shingles"] for r in nov)
     # docs with >= 5 words all appear; shorter ones never do
@@ -337,12 +336,12 @@ def test_radius_search_consistent_with_topk(spark, emb):
     radius = {
         (r["query_id"], r["neighbor_id"]): r["cosine_sim"]
         for r in S.radius_search(
-            emb, queries, "vec_id", "embedding", threshold=0.35
+            emb, queries
         ).collect()
     }
     assert all(v >= 0.35 for v in radius.values())
     topk = S.cosine_topk_bruteforce(
-        emb, queries, "vec_id", "embedding", k=5
+        emb, queries, k=5
     ).collect()
     for r in topk:
         if r["cosine_sim"] >= 0.35:
@@ -436,7 +435,7 @@ def test_label_centroids_integer_mean_half_away(spark):
         [(0, "a", [0.000001]), (1, "a", [0.000002])],
         "vec_id bigint, label string, embedding array<double>",
     )
-    row = S.label_centroids(emb, "embedding", "label").collect()[0]
+    row = S.label_centroids(emb).collect()[0]
     assert row["n_vecs"] == 2
     assert row["mean_val"] == 0.000002
     # and a negative-sum boundary rounds AWAY from zero, not toward
@@ -445,5 +444,5 @@ def test_label_centroids_integer_mean_half_away(spark):
         [(0, "a", [-0.000001]), (1, "a", [-0.000002])],
         "vec_id bigint, label string, embedding array<double>",
     )
-    nrow = S.label_centroids(neg, "embedding", "label").collect()[0]
+    nrow = S.label_centroids(neg).collect()[0]
     assert nrow["mean_val"] == -0.000002

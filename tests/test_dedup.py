@@ -25,10 +25,10 @@ def test_prefix_filter_equals_posting_join(spark):
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     exact = {(r["doc_a"], r["doc_b"], r["jaccard"])
              for r in jaccard_pairs_exact(
-                 docs, "doc_id", "text", n=5, threshold=0.5).collect()}
+                 docs, "doc_id", "text").collect()}
     pf = {(r["doc_a"], r["doc_b"], r["jaccard"])
           for r in prefix_filter_jaccard_pairs(
-              docs, "doc_id", "text", n=5, threshold=0.5).collect()}
+              docs, "doc_id", "text").collect()}
     assert pf == exact
     assert exact  # the corpus has near-dup pairs by construction
 

@@ -20,10 +20,9 @@ from .conftest import SF_ORACLE
 def _minhash_r2_sets(spark):
     docs = spark.read.parquet(f"{SF_ORACLE}/documents.parquet")
     exact = {(r["doc_a"], r["doc_b"]) for r in jaccard_pairs_exact(
-        docs, "doc_id", "text", n=5, threshold=0.5).collect()}
+        docs, "doc_id", "text").collect()}
     banded = {(r["doc_a"], r["doc_b"]) for r in minhash_lsh_pairs(
-        docs, "doc_id", "text", n=5, num_hashes=24, rows_per_band=2,
-        threshold=0.5).collect()}
+        docs, "doc_id", "text", num_hashes=24, rows_per_band=2).collect()}
     return exact, banded
 
 

@@ -26,7 +26,7 @@ def test_value_outliers_zero_variance_group(spark):
          (4, "h", 0.0)] + [(10 + i, "h", 1.0) for i in range(30)],
         "id bigint, grp string, v double",
     )
-    out = value_outliers(df, "id", "grp", "v", n_sigma=3.0).collect()
+    out = value_outliers(df, "id", "grp", "v").collect()
     assert all(r["grp"] != "g" for r in out)
     assert all(math.isfinite(r["zscore"]) for r in out)
 
@@ -140,7 +140,7 @@ def test_cosine_zero_vector_is_excluded_not_crash(spark):
         "vec_id bigint, embedding array<double>",
     )
     queries = emb.filter(F.col("vec_id") == 0)
-    out = cosine_topk_bruteforce(emb, queries, "vec_id", "embedding", k=3)
+    out = cosine_topk_bruteforce(emb, queries, k=3)
     rows = out.collect()
     assert {r["neighbor_id"] for r in rows} == {1, 3}  # 2 excluded
     assert all(r["cosine_sim"] is not None for r in rows)
@@ -157,8 +157,7 @@ def test_asof_null_payload_not_stitched_from_older_row(spark):
         "k bigint, ts bigint, event_id bigint, price double",
     )
     left = local_frame(spark, [(7, 3)], "k bigint, ts bigint")
-    r = asof_join(left, right, "k", "ts", "ts", "event_id",
-                  right_payload=["price"]).collect()[0]
+    r = asof_join(left, right, "k", right_payload=["price"]).collect()[0]
     assert r["matched_event_id"] == 2
     assert r["matched_price"] is None  # NOT 100.0 from the older row
 
@@ -175,8 +174,7 @@ def test_asof_null_right_ts_and_null_keys_never_match(spark):
     )
     left = local_frame(spark, [(7, 5), (None, 5)], "k bigint, ts bigint")
     rows = {r["k"]: r["matched_event_id"]
-            for r in asof_join(left, right, "k", "ts", "ts",
-                               "event_id").collect()}
+            for r in asof_join(left, right, "k").collect()}
     assert rows == {7: None, None: None}
 
 
@@ -451,7 +449,7 @@ def _lsh_dim_mismatch(spark):
     emb = local_frame(spark, [(1, [1.0, 2.0, 3.0]), (2, [1.0, 2.0, 3.1])],
                       "vec_id bigint, embedding array<double>")
     try:
-        lsh_cosine_pairs(emb, "vec_id", "embedding", dim=64).collect()
+        lsh_cosine_pairs(emb).collect()
     except Exception as exc:  # noqa: BLE001 - payload IS the exception
         return f"{type(exc).__name__}: {exc}"
     return None
@@ -473,7 +471,7 @@ def test_pq_shortlist_excludes_null_approx(spark):
     rows.append((99, [None, 1.0, 1.0, 1.0]))
     emb = local_frame(spark, rows, "vec_id bigint, embedding array<double>")
     queries = emb.filter(F.col("vec_id") == 0)
-    out = pq_topk(emb, queries, "vec_id", "embedding", k=3, m=2, ks=4)
+    out = pq_topk(emb, queries, k=3, m=2, ks=4)
     rows = out.collect()
     assert all(r["neighbor_id"] != 99 for r in rows)
     assert all(r["cosine_sim"] is not None for r in rows)

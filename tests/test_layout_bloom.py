@@ -55,8 +55,7 @@ def test_zorder_clusters_quadrants(spark):
 
 def test_zorder_layout_plan_range_partitions_and_sorts(spark):
     df = spark.read.parquet(f"{SF_SMOKE}/orders.parquet")
-    out = zorder_layout(df, ["o_orderkey", "o_custkey"], bits=16,
-                        num_partitions=8)
+    out = zorder_layout(df, ["o_orderkey", "o_custkey"], num_partitions=8)
     plan = out._jdf.queryExecution().executedPlan().toString().lower()
     assert "rangepartitioning" in plan
     assert "sort" in plan
@@ -110,6 +109,5 @@ def test_zorder_layout_schema_unchanged(spark):
     """The internal Z-value sort key must NOT leak into the result —
     writing the layout directly must reproduce the source schema."""
     df = spark.read.parquet(f"{SF_SMOKE}/orders.parquet")
-    out = zorder_layout(df, ["o_orderkey", "o_custkey"], bits=16,
-                        num_partitions=4)
+    out = zorder_layout(df, ["o_orderkey", "o_custkey"], num_partitions=4)
     assert out.columns == df.columns

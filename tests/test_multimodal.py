@@ -1,4 +1,4 @@
-"""Wave-38 operator edges: audio snippet detection — snippet-fixture
+"""Multimodal-domain tests: audio snippet detection — snippet-fixture
 byte round-trip (incl. the window-aligned borrow), windowed
 sub-fingerprint semantics, corrupt-input drops, and the cross-clip
 composite-key pair semantics."""

@@ -177,7 +177,7 @@ def test_pack_sequences_computes_input_once(spark):
 
     base = spark.createDataFrame(rows, schema)
     counted = spark.createDataFrame(base.rdd.mapPartitions(bump), schema)
-    out = C.pack_sequences(counted, budget_tokens=512)
+    out = C.pack_sequences(counted)
     assert out.count() == len(rows)
     assert acc.value == len(rows), (
         f"input computed {acc.value / len(rows):.1f}x — "
@@ -397,7 +397,7 @@ def test_tf_cosine_no_cartesian_and_equi_posting_join(spark):
     from cassandra_join_library_spark.sources.catalog import load_table
 
     docs = load_table(spark, SF_ORACLE, "documents")
-    df = tf_cosine_pairs(docs, "doc_id", "text", n=3, threshold=0.5,
+    df = tf_cosine_pairs(docs, "doc_id", "text", threshold=0.5,
                          max_doc_freq=20)
     plan = _plan(df)
     assert "CartesianProduct" not in plan
@@ -413,7 +413,7 @@ def test_quantize_int8_broadcasts_dim_ranges(spark):
     from cassandra_join_library_spark.sources.catalog import load_table
 
     emb = load_table(spark, SF_ORACLE, "embeddings")
-    plan = _plan(quantize_int8(emb, "vec_id", "embedding"))
+    plan = _plan(quantize_int8(emb))
     assert "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
 

@@ -36,7 +36,7 @@ def _ivf_kmeans_sets(spark):
         [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
         "cent_id BIGINT, embedding ARRAY<DOUBLE>",
     )
-    approx = S.ivf_topk(emb, queries, k=5, nprobe=3, centroids_df=cent_df)
+    approx = S.ivf_topk(emb, queries, nprobe=3, centroids_df=cent_df)
     e = {(r["query_id"], r["neighbor_id"]) for r in exact.collect()}
     a = {(r["query_id"], r["neighbor_id"]) for r in approx.collect()}
     return e, a
@@ -46,7 +46,7 @@ def _ivf_kmeans_sets(spark):
 def _lsh_vs_exact_sets(spark):
     emb = _emb(spark)
     lsh = S.lsh_cosine_pairs(emb, threshold=0.4, n_planes=6, n_tables=8)
-    exact = S.cosine_pairs(emb, threshold=0.4)
+    exact = S.cosine_pairs(emb)
     l = {(r["id_a"], r["id_b"]) for r in lsh.collect()}
     e = {(r["id_a"], r["id_b"]) for r in exact.collect()}
     return l, e
@@ -57,8 +57,7 @@ def _pq_rows(spark):
     emb = _emb(spark)
     queries = emb.filter(F.col("vec_id") < 20)
     exact = S.cosine_topk_bruteforce(emb, queries, k=5).collect()
-    rows = S.pq_topk(emb, queries, k=5, m=8, ks=16,
-                     centroid_stride=7, refine=4).collect()
+    rows = S.pq_topk(emb, queries, k=5, m=8, ks=16).collect()
     return exact, rows
 
 
@@ -66,7 +65,7 @@ def test_ivf_recall_floor(spark):
     emb = _emb(spark)
     queries = emb.filter(F.col("vec_id") < 20)
     exact = S.cosine_topk_bruteforce(emb, queries, k=5)
-    approx = S.ivf_topk(emb, queries, k=5, centroid_stride=32, nprobe=4)
+    approx = S.ivf_topk(emb, queries, nprobe=4)
     e = {(r["query_id"], r["neighbor_id"]) for r in exact.collect()}
     a = {(r["query_id"], r["neighbor_id"]) for r in approx.collect()}
     recall = len(e & a) / len(e)
@@ -132,7 +131,7 @@ def test_pq_requires_enough_training_vectors(spark):
 
     emb = _emb(spark).filter(F.col("vec_id") < 30)
     with pytest.raises(ValueError, match="training vectors"):
-        S.pq_topk(emb, emb.limit(2), ks=64, centroid_stride=7)
+        S.pq_topk(emb, emb.limit(2), ks=64)
 
 
 # ---- sign-signature packing on hand vectors, null handling,

@@ -69,7 +69,7 @@ def test_salted_left_join_preserves_unmatched(spark):
 
 def test_key_histogram_orders(spark):
     l = spark.read.parquet(f"{SF_SMOKE}/lineitem.parquet")
-    hist = key_histogram(l, ["l_suppkey"], top=5).collect()
+    hist = key_histogram(l, ["l_suppkey"]).collect()
     assert len(hist) == 5
     assert hist[0]["rows"] >= hist[-1]["rows"]
 

@@ -322,3 +322,15 @@ def test_binary_file_catalog(spark, tmp_path):
         "media_id",
     )
     assert meta.count() == 2
+
+
+def test_parquet_catalog_loads_events_like_load_table(spark):
+    """The façade's default catalog reads ``events.ts`` as TIMESTAMP,
+    the type ``load_table`` gives every query and that event-time
+    operators require, not the TIMESTAMP_NTZ the raw parquet infers."""
+    from cassandra_join_library_spark import ParquetCatalog
+    from cassandra_join_library_spark.sources.catalog import load_table
+
+    cat = ParquetCatalog(SF_SMOKE).load(spark, "events")
+    assert cat.schema == load_table(spark, SF_SMOKE, "events").schema
+    assert cat.schema["ts"].dataType.typeName() == "timestamp"

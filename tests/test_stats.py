@@ -1,4 +1,4 @@
-"""Wave-25 unit tests: deterministic resampling — Poisson weight
+"""Stats-domain tests: deterministic resampling — Poisson weight
 distribution, CI sanity, and the randomization test replayed in
 Python."""
 

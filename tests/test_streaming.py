@@ -39,7 +39,7 @@ def test_stream_tumbling_equals_batch(spark):
 
 def test_stream_session_counts_run(spark):
     stream = W.read_events_stream(spark, SF_SMOKE)
-    out = W.session_counts(stream, gap="10 minutes")
+    out = W.session_counts(stream)
     name, q = W.run_to_memory(out, output_mode="complete")
     rows = spark.table(name)
     assert rows.count() > 0
@@ -50,7 +50,7 @@ def test_stream_session_counts_run(spark):
 
 def test_stream_sliding_double_counts(spark):
     stream = W.read_events_stream(spark, SF_SMOKE)
-    out = W.sliding_counts(stream, window="1 hour", slide="30 minutes")
+    out = W.sliding_counts(stream)
     name, q = W.run_to_memory(out, output_mode="complete")
     rows = spark.table(name)
     # each event lands in exactly length/slide = 2 windows
@@ -60,8 +60,7 @@ def test_stream_sliding_double_counts(spark):
 
 def test_stream_dedup_within_watermark(spark):
     stream = W.read_events_stream(spark, SF_SMOKE)
-    deduped = W.dedup_stream(stream, ["user_id", "event_type"],
-                             watermark="2 hours", within_watermark=True)
+    deduped = W.dedup_stream(stream, ["user_id", "event_type"])
     name, q = W.run_to_memory(deduped.select("user_id", "event_type"),
                               output_mode="append")
     got = spark.table(name)
@@ -105,7 +104,7 @@ def test_stream_stream_interval_join_equals_batch(spark):
     must equal the batch interval join."""
     s1 = W.read_events_stream(spark, SF_SMOKE)
     s2 = W.read_events_stream(spark, SF_SMOKE)
-    joined = W.stream_stream_interval_join(s1, s2, max_lag="5 minutes")
+    joined = W.stream_stream_interval_join(s1, s2)
     name, q = W.run_to_memory(
         joined.select("l_event", "r_event"), output_mode="append"
     )

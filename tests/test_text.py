@@ -20,7 +20,7 @@ def test_boilerplate_coverage_hand_corpus(spark):
     df = local_frame(spark, rows, "doc_id bigint, text string")
     got = {r["doc_id"]: (r["n_tokens"], r["n_covered"], r["boiler_ppm"])
            for r in boilerplate_span_coverage(
-               df, "doc_id", "text", k=8, min_df=2).collect()}
+               df, "doc_id", "text", min_df=2).collect()}
     assert got == {
         1: (10, 8, 800000),
         2: (9, 8, 888888),
@@ -36,7 +36,7 @@ def test_boilerplate_overlapping_occurrences_merge(spark):
     df = local_frame(spark, rows, "doc_id bigint, text string")
     got = {r["doc_id"]: r["n_covered"]
            for r in boilerplate_span_coverage(
-               df, "doc_id", "text", k=8, min_df=2).collect()}
+               df, "doc_id", "text", min_df=2).collect()}
     assert got == {1: 9, 2: 9}
 
 
@@ -47,5 +47,5 @@ def test_boilerplate_min_df_threshold(spark):
     # min_df=3: two docs are not enough — nothing is boilerplate
     got = {r["doc_id"]: r["n_covered"]
            for r in boilerplate_span_coverage(
-               df, "doc_id", "text", k=8, min_df=3).collect()}
+               df, "doc_id", "text", min_df=3).collect()}
     assert got == {1: 0, 2: 0}

@@ -27,7 +27,7 @@ def test_cusum_matches_textbook_recursion(spark):
     df = spark.createDataFrame(
         list(enumerate(vals)), "t bigint, v bigint")
     out = {r["ord"]: r for r in
-           cusum_integer(df, "t", "v", slack_div=20).collect()}
+           cusum_integer(df, "t", "v").collect()}
 
     s = sum(vals)
     n = len(vals)

@@ -87,7 +87,7 @@ def test_pcm_silence_runs_matches_python_replay(spark):
         [Row(doc_id=i) for i in (0, 3, 17)])
     built = synthesize_wav_pcm(docs, "doc_id", n_samples=n)
     out = {r["doc_id"]: r for r in
-           pcm_silence_runs(built, "doc_id", threshold=4096).collect()}
+           pcm_silence_runs(built, "doc_id").collect()}
     for d in (0, 3, 17):
         sams = [((d * 31 + i * 17) % 65536) - 32768 for i in range(n)]
         sil = [abs(v) < 4096 for v in sams]

@@ -52,7 +52,7 @@ def test_nearest_value_topk_matches_bruteforce(spark):
     rows = [(chr(103 + i % 2), i, rng.randrange(0, 40))
             for i in range(30)]
     df = spark.createDataFrame(rows, "g string, id bigint, v bigint")
-    out = nearest_value_topk(df, "g", "id", "v", k=3).collect()
+    out = nearest_value_topk(df, "g", "id", "v").collect()
     got = {(r["grp"], r["id"]): [] for r in out}
     for r in sorted(out, key=lambda r: (r["grp"], r["id"], r["rk"])):
         got[(r["grp"], r["id"])].append(
@@ -76,12 +76,12 @@ def test_portable_lsh_candidates_are_sound_and_catch_exact_dups(spark):
          (3, "one two three four five six seven eight nine ten")],
         "doc_id bigint, text string")
     cand = minhash_lsh_pairs(
-        docs, "doc_id", "text", n=5, num_hashes=8, rows_per_band=2,
+        docs, "doc_id", "text", num_hashes=8, rows_per_band=2,
         portable=True, verify=False)
     pairs = {(r["doc_a"], r["doc_b"]) for r in cand.collect()}
     assert (1, 2) in pairs
     assert (1, 3) not in pairs and (2, 3) not in pairs
     exact = {(r["doc_a"], r["doc_b"]) for r in jaccard_pairs_exact(
-        docs, "doc_id", "text", n=5, threshold=0.5).collect()}
+        docs, "doc_id", "text").collect()}
     assert (1, 2) in exact
     assert len(pairs & exact) <= min(len(pairs), len(exact))

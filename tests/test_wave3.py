@@ -60,7 +60,7 @@ def _pagerank_star(spark):
         "src_t string, src long, dst_t string, dst long",
     )
     return {row["id"]: row["rank_micro"]
-            for row in pagerank_fixed_point(nodes, edges, n_iter=4).collect()}
+            for row in pagerank_fixed_point(nodes, edges).collect()}
 
 
 def test_quantize_int8_error_bounded_by_half_step(spark):
@@ -83,7 +83,7 @@ def test_quantize_int8_error_bounded_by_half_step(spark):
         .agg(F.max("step").alias("max_step"))
         .collect()[0]
     )
-    out = quantize_int8(emb, "vec_id", "embedding")
+    out = quantize_int8(emb)
     worst = out.agg(F.max("max_abs_err").alias("m")).collect()[0]["m"]
     assert worst <= rng["max_step"] / 2 + 1e-6
 
@@ -95,7 +95,7 @@ def test_quantize_int8_covers_every_vector(spark):
     from cassandra_join_library_spark.sources.catalog import load_table
 
     emb = load_table(spark, SF_ORACLE, "embeddings")
-    out = quantize_int8(emb, "vec_id", "embedding")
+    out = quantize_int8(emb)
     assert out.count() == emb.count()
     assert out.filter(F.col("n_dims") != 64).count() == 0
 
@@ -105,7 +105,7 @@ def test_dim_stats_bounds(spark):
     from cassandra_join_library_spark.operators.similarity import dim_stats
     from cassandra_join_library_spark.sources.catalog import load_table
 
-    out = dim_stats(load_table(spark, SF_ORACLE, "embeddings"), "embedding")
+    out = dim_stats(load_table(spark, SF_ORACLE, "embeddings"))
     bad = out.filter(
         (F.col("mean_val") < F.col("min_val"))
         | (F.col("mean_val") > F.col("max_val"))
@@ -121,7 +121,7 @@ def test_tf_cosine_bounds_and_symmetric_ids(spark):
     from cassandra_join_library_spark.sources.catalog import load_table
 
     docs = load_table(spark, SF_ORACLE, "documents")
-    out = tf_cosine_pairs(docs, "doc_id", "text", n=3, threshold=0.5,
+    out = tf_cosine_pairs(docs, "doc_id", "text", threshold=0.5,
                           max_doc_freq=20)
     rows = out.collect()
     assert rows, "expected near-dup pairs in the oracle corpus"
@@ -141,7 +141,7 @@ def test_tf_cosine_exact_duplicates_score_one(spark):
         "doc_id bigint, text string",
     )
     out = {(r["doc_a"], r["doc_b"]): r["cosine_tf"]
-           for r in tf_cosine_pairs(df, "doc_id", "text", n=3,
+           for r in tf_cosine_pairs(df, "doc_id", "text",
                                     threshold=0.1).collect()}
     assert out == {(1, 2): 1.0}
 
@@ -196,7 +196,7 @@ def test_mad_outliers_robust_to_extremes(spark):
 
     vals = [(i, "g", float(i % 7)) for i in range(100)] + [(999, "g", 1e6)]
     df = local_frame(spark, vals, "id bigint, grp string, v double")
-    out = mad_outliers(df, "id", "grp", "v", k=3.5).collect()
+    out = mad_outliers(df, "id", "grp", "v").collect()
     assert any(r["id"] == 999 for r in out)
     assert all(abs(r["robust_z"]) > 3.5 for r in out)
 
@@ -206,7 +206,7 @@ def test_vocabulary_oov_rates_well_formed(spark):
     from cassandra_join_library_spark.sources.catalog import load_table
 
     docs = load_table(spark, SF_ORACLE, "documents")
-    out = vocabulary_oov(docs, "doc_id", "text", min_df=2, max_df_ratio=0.8)
+    out = vocabulary_oov(docs, "doc_id", "text")
     assert out.count() == docs.count()
     bad = out.filter(
         (F.col("oov_rate") < 0) | (F.col("oov_rate") > 1)
@@ -232,7 +232,7 @@ def test_mad_outliers_skips_zero_mad_groups(spark):
          (5, "h", 1.0), (6, "h", 2.0), (7, "h", 3.0), (8, "h", 50.0)],
         "id bigint, grp string, v double",
     )
-    out = mad_outliers(df, "id", "grp", "v", k=3.5).collect()
+    out = mad_outliers(df, "id", "grp", "v").collect()
     assert all(r["grp"] != "g" for r in out)  # degenerate group skipped
     assert all(math.isfinite(r["robust_z"]) for r in out)
     assert any(r["id"] == 8 for r in out)  # healthy group still flags
@@ -249,7 +249,7 @@ def test_dim_stats_constant_dimension_std_zero(spark):
         [(1, [0.1, 7.0]), (2, [0.1, 9.0]), (3, [0.1, 11.0])],
         "vec_id bigint, embedding array<double>",
     )
-    rows = {r["pos"]: r for r in dim_stats(df, "embedding").collect()}
+    rows = {r["pos"]: r for r in dim_stats(df).collect()}
     assert rows[0]["std_val"] == 0.0
     assert rows[1]["std_val"] > 0
 
@@ -338,7 +338,7 @@ def test_tf_cosine_matches_bruteforce_on_random_docs(spark):
             expected[(ia, ib)] = round(cos, 6)
     df = local_frame(spark, docs, "doc_id bigint, text string")
     got = {(r["doc_a"], r["doc_b"]): r["cosine_tf"]
-           for r in tf_cosine_pairs(df, "doc_id", "text", n=3,
+           for r in tf_cosine_pairs(df, "doc_id", "text",
                                     threshold=0.3).collect()}
     assert got == expected
 

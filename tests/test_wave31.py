@@ -146,13 +146,13 @@ def _cross_snapshot_parity(spark):
     store = (shingles(prior, "doc_id", "text", 5)
              .select("shingle").distinct().localCheckpoint(eager=True))
     plain = cross_snapshot_containment(
-        new, store, "doc_id", "text", n=5)
+        new, store, "doc_id", "text")
     # deliberately UNDERSIZED filter (2^16 bits vs ~50k store keys,
     # heavy fp rate): parity must hold no matter how saturated the
     # filter is — fp only weakens pruning, never the answer
     words = bloom_words_table(store, "shingle", 1 << 16, _K)
     bloomed = cross_snapshot_containment(
-        new, store, "doc_id", "text", n=5,
+        new, store, "doc_id", "text",
         store_bloom=words, bloom_bits=1 << 16, bloom_hashes=_K)
     a = {tuple(r) for r in plain.collect()}
     b = {tuple(r) for r in bloomed.collect()}

@@ -21,8 +21,7 @@ def _ids(spark, ids):
 def test_bmp_pixels_roundtrip_bytes(spark):
     """The synthesized payload is a spec-conformant 246-byte BMP and
     the decoded lumas equal the synthesis formula."""
-    out = synthesize_bmp_pixels(_ids(spark, [7]), "doc_id",
-                                n_groups=100).collect()[0]
+    out = synthesize_bmp_pixels(_ids(spark, [7]), "doc_id").collect()[0]
     payload = bytes(out["payload"])
     assert len(payload) == 246
     assert payload[:2] == b"BM"
@@ -41,7 +40,7 @@ def test_ahash_matches_python_reference(spark):
     """The integer aHash equals a driver-side reference for exact,
     retouched, and heavily-edited variants."""
     df = synthesize_bmp_pixels(_ids(spark, [3, 103, 203, 303]),
-                               "doc_id", n_groups=100)
+                               "doc_id")
     got = {r["doc_id"]: r["ahash"]
            for r in bmp_ahash(df, "doc_id").collect()}
 

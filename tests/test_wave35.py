@@ -30,7 +30,7 @@ def test_contamination_bloom_matches_exact(spark):
     new = docs.filter(F.col("doc_id") % 2 == 1)
     bench = docs.filter(F.col("doc_id") % 20 == 0)
     exact = contamination_overlap(
-        new, "doc_id", "text", bench, n=3, max_bench_doc_freq=1)
+        new, "doc_id", "text", bench, max_bench_doc_freq=1)
     got = all_queries()["corpus_contamination_bloom"](spark, SF_TINY)
     a = {tuple(r) for r in exact.collect()}
     b = {tuple(r) for r in got.collect()}
@@ -49,9 +49,9 @@ def test_bench_shingle_index_cap_semantics(spark):
     ]
     bench = local_frame(spark, rows, "doc_id bigint, text string")
     uncapped = {(r["shingle"], r["bdoc"]) for r in bench_shingle_index(
-        bench, "doc_id", "text", n=3).collect()}
+        bench, "doc_id", "text").collect()}
     capped = {(r["shingle"], r["bdoc"]) for r in bench_shingle_index(
-        bench, "doc_id", "text", n=3, max_bench_doc_freq=1).collect()}
+        bench, "doc_id", "text", max_bench_doc_freq=1).collect()}
     # "a b c" appears in docs 1 and 2 -> capped out entirely
     assert ("a b c", 1) in uncapped and ("a b c", 2) in uncapped
     assert not any(s == "a b c" for s, _ in capped)
@@ -89,14 +89,14 @@ def test_contamination_overlap_bloom_guards(spark):
     the exact join must match), and bench_bloom without bloom_bits
     (a defaulted size would probe the wrong words)."""
     docs = load_table(spark, SF_TINY, "documents").limit(10)
-    idx = bench_shingle_index(docs, "doc_id", "text", n=3)
+    idx = bench_shingle_index(docs, "doc_id", "text")
     store = idx.select("shingle").distinct()
     words = bloom_words_table(store, "shingle", 1 << 16, 5)
     with pytest.raises(ValueError, match="bench_index"):
-        contamination_overlap(docs, "doc_id", "text", docs, n=3,
+        contamination_overlap(docs, "doc_id", "text", docs,
                               bench_bloom=words, bloom_bits=1 << 16)
     with pytest.raises(ValueError, match="bloom_bits"):
-        contamination_overlap(docs, "doc_id", "text", docs, n=3,
+        contamination_overlap(docs, "doc_id", "text", docs,
                               bench_index=idx, bench_bloom=words)
 
 
@@ -107,11 +107,11 @@ def test_contamination_overlap_prebuilt_index_matches_rebuild(spark):
     docs = load_table(spark, SF_TINY, "documents")
     new = docs.filter(F.col("doc_id") % 2 == 1)
     bench = docs.filter(F.col("doc_id") % 20 == 0)
-    idx = bench_shingle_index(bench, "doc_id", "text", n=3,
+    idx = bench_shingle_index(bench, "doc_id", "text",
                               max_bench_doc_freq=1)
     via_rebuild = contamination_overlap(
-        new, "doc_id", "text", bench, n=3, max_bench_doc_freq=1)
+        new, "doc_id", "text", bench, max_bench_doc_freq=1)
     via_index = contamination_overlap(
-        new, "doc_id", "text", bench, n=3, bench_index=idx)
+        new, "doc_id", "text", bench, bench_index=idx)
     assert {tuple(r) for r in via_rebuild.collect()} \
         == {tuple(r) for r in via_index.collect()}

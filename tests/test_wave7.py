@@ -118,7 +118,7 @@ def test_l_diversity_flags_homogeneous_class(spark):
         + [Row(qa="b", s="x"), Row(qa="b", s="y"), Row(qa="b", s="z")]
     )
     out = {r.qa: r for r in
-           l_diversity(spark.createDataFrame(rows), ["qa"], "s", l=3)
+           l_diversity(spark.createDataFrame(rows), ["qa"], "s")
            .collect()}
     assert out["a"].class_size == 5 and out["a"].l_diversity == 1
     assert out["a"].at_risk and out["a"].dominant_share == 1.0

@@ -31,7 +31,7 @@ def test_ewma_dyadic_matches_python_reference(spark):
     df = spark.createDataFrame(rows)
     got = {
         (r.k, r.i): r.ewma_micro
-        for r in ewma_dyadic(df, "k", "ts", "i", "v", k=8).collect()
+        for r in ewma_dyadic(df, "k", "ts", "i", "v").collect()
     }
     series = {k: [r.v for r in rows if r.k == k] for k in ("a", "b")}
     for k, vs in series.items():
@@ -57,8 +57,7 @@ def test_asof_interpolate_hand_values(spark):
         Row(lid=3, user="u", ts=_ts(25)),   # after last -> backward only
     ])
     out = {r.lid: r for r in asof_interpolate(
-        left, right, "user", right_id="event_id",
-        value_micro="v_micro").collect()}
+        left, right, "user").collect()}
     assert out[0].v_before is None and out[0].v_interp == 1_000_000.0
     assert out[1].v_interp == 1_000_000.0
     assert out[2].v_interp == 2_000_000.0
